@@ -14,6 +14,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 16g. A heap as large as
+    the host lets the JVM grow into memory it cannot keep before it
+    collects, and the host's OOM killer then ends the session."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{max(1024, min(half_mb, 16 * 1024))}m"
+
+
 def get_spark(app_name: str = "hyper_storage_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         try:
@@ -30,7 +41,7 @@ def get_spark(app_name: str = "hyper_storage_spark", cpus: int | None = None) ->
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -2,12 +2,14 @@
 
 SURVEY.md §3.2's Spark shape for the reference's primary/secondary
 worker machinery: commands arrive on a topic (here: an append-only
-parquet directory; on a cluster: Kafka), a Structured Streaming job
-groups each micro-batch by ``document_uri`` and applies the writes
-serially per document through the DocumentStore — which yields the
-same single-writer/gapless-revision/feed-publication semantics as the
-reference's ShardProcessor + PrimaryWorker + BackgroundContentTaskCompleter
-pipeline, with the streaming checkpoint replacing hot/stale recovery.
+parquet directory; on a cluster: Kafka), and every micro-batch takes
+ONE path: ``groupBy(key).applyInPandas`` applies each group's commands
+serially per document through the DocumentStore on an executor, then
+the driver publishes the staged result in one pinned manifest flip.
+That yields the same single-writer/gapless-revision/feed-publication
+semantics as the reference's ShardProcessor + PrimaryWorker +
+BackgroundContentTaskCompleter pipeline, with the streaming checkpoint
+replacing hot/stale recovery.
 """
 
 from __future__ import annotations
@@ -72,8 +74,7 @@ def write_commands(commands_dir: str, commands: list[dict]) -> str:
 
 def _dispatch(ds: DocumentStore, method: str, path: str, raw_body: Optional[str]) -> Optional[str]:
     """Decode + apply ONE command; returns None on success/benign-skip,
-    else the dead-letter reason. Shared by the serial and distributed
-    paths so their skip semantics cannot drift apart.
+    else the dead-letter reason.
 
     - NotFoundError (replay of an already-applied delete within a
       batch) is the benign skip, as in the reference's idempotent
@@ -103,29 +104,18 @@ def _dispatch(ds: DocumentStore, method: str, path: str, raw_body: Optional[str]
         return f"{type(e).__name__}: {e}"
 
 
-def _dead_letter_row(seq, method, path, body, error) -> dict:
-    return {
-        "seq": int(seq) if seq is not None else None,
-        "method": method,
-        "path": path,
-        "body": body,
-        "error": error,
-        "ts": int(time.time() * 1000),
-    }
-
-
 # applyInPandas result rows: staged bucket files, feed events to
 # append, and table drops — everything the driver needs for one commit
 _RESULT_SCHEMA = "kind string, table string, bucket int, path string, payload string"
 
 
 def _apply_bucket_commands(root: str, n_buckets: int, auto_complete: bool, batch_id: int):
-    """Returns the executor-side applyInPandas function for one bucket
-    group: apply the bucket's commands (per-document, seq order) through
-    the REAL DocumentStore write path against a copy-on-write overlay,
+    """Returns the executor-side applyInPandas function for one group:
+    apply the group's commands (per-document, seq order) through the
+    REAL DocumentStore write path against a copy-on-write overlay,
     stage the resulting bucket datasets as parquet files, and emit their
-    paths (plus feed events and dead letters) for the driver's atomic
-    commit.
+    paths (plus feed events, dead letters and table drops) for the
+    driver's atomic commit.
 
     The single-writer guarantee holds because commands are
     hash-partitioned by bucket = bucket_of(document_uri) (the
@@ -134,9 +124,9 @@ def _apply_bucket_commands(root: str, n_buckets: int, auto_complete: bool, batch
     exactly one task, applied serially in seq order — gapless revisions
     with no driver-side row loop. Index-table maintenance is also
     conflict-free: an index table is touched only by its collection's
-    own bucket group (template-mandated indexes are instantiated
-    DRIVER-side before the fan-out for the same reason — two groups
-    must never both stage the global INDEX_DEFS bucket)."""
+    own bucket group. The global INDEX_DEFS bucket is the exception —
+    see :func:`apply_commands_distributed` for how two groups are kept
+    from both staging it."""
 
     def apply_group(pdf):
         import pandas as pd
@@ -149,15 +139,23 @@ def _apply_bucket_commands(root: str, n_buckets: int, auto_complete: bool, batch
             base = Storage(root, n_buckets)
             overlay = OverlayStorage(base)
             ds = _DS(root, auto_complete=auto_complete, storage=overlay)
-            pdf = pdf.sort_values(["document_uri", "seq"])
+            # a null seq (NaN in pandas) orders FIRST in its document,
+            # deterministically; pandas would put it last by default
+            pdf = pdf.sort_values(["document_uri", "seq"], na_position="first")
             for r in pdf.itertuples():
                 err = _dispatch(ds, r.method, r.path, r.body)
                 if err is not None:
-                    overlay.append(
-                        DEAD_LETTER,
-                        [_dead_letter_row(r.seq, r.method, r.path, r.body, err)],
-                        DEAD_LETTER_SCHEMA,
-                    )
+                    row = {
+                        # int(NaN) raises: a null seq must not turn the
+                        # dead-letter write itself into a poison pill
+                        "seq": None if pd.isna(r.seq) else int(r.seq),
+                        "method": r.method,
+                        "path": r.path,
+                        "body": r.body,
+                        "error": err,
+                        "ts": int(time.time() * 1000),
+                    }
+                    overlay.append(DEAD_LETTER, [row], DEAD_LETTER_SCHEMA)
             for (table, bucket), rows in overlay.overlay.items():
                 rel = os.path.join(
                     "data",
@@ -172,7 +170,10 @@ def _apply_bucket_commands(root: str, n_buckets: int, auto_complete: bool, batch
             for table, rows in overlay.appended.items():
                 for row in rows:
                     out.append(("append", table, 0, None, json.dumps(row)))
-            for table in overlay.dropped:
+            # EVER-dropped, not still-dropped: the flip drops before it
+            # registers, so a drop-and-recreate keeps the staged
+            # recreation while stale base buckets of the old table go
+            for table in sorted(overlay.ever_dropped):
                 out.append(("drop", table, 0, None, None))
         return pd.DataFrame(out, columns=["kind", "table", "bucket", "path", "payload"])
 
@@ -182,24 +183,24 @@ def _apply_bucket_commands(root: str, n_buckets: int, auto_complete: bool, batch
 def apply_commands_distributed(
     store: DocumentStore, batch_df, batch_id: int, commit_meta: Optional[dict] = None
 ) -> None:
-    """Apply one micro-batch executor-side: group by storage bucket,
-    run each group through the overlayed DocumentStore on its executor,
+    """Apply one micro-batch executor-side: group the commands, run
+    each group through the overlayed DocumentStore on its executor,
     then publish feed events and flip the manifest ONCE on the driver
     (``commit_meta`` — e.g. the batch watermark — rides in that flip,
-    making it atomic with the data).
+    making it atomic with the data). This is the only apply path.
 
-    Batches containing a collection-document delete fall back to the
-    serial-STAGED path: dropping a collection's index tables rewrites
-    the global INDEX_DEFS bucket, which two groups could otherwise both
-    stage (rare, metadata-only — correctness over parallelism there).
-    The fallback keeps the distributed path's atomicity: one overlay,
-    one manifest flip carrying data + drops + watermark. Template
-    instantiation has the same global-bucket hazard, so it runs
-    driver-side on the real store BEFORE the fan-out."""
+    The grouping key is the storage bucket, except for a batch that
+    contains a collection-document delete: dropping a collection's
+    index tables rewrites the global INDEX_DEFS bucket, which two
+    groups could otherwise both stage, so such a batch is applied as
+    ONE group (rare, metadata-only — correctness over parallelism
+    there). Template instantiation has the same global-bucket hazard:
+    for a bucket-grouped batch it runs driver-side on the real store
+    BEFORE the fan-out; a single-group batch instantiates inside its
+    overlay, so the DDL lands in the batch's own flip."""
     from pyspark.sql import functions as F
 
     from ..paths import is_collection_uri, split_path as _sp
-    from ..store.documents import FEED, FEED_SCHEMA
     from ..store.storage import bucket_of
 
     n_buckets = store.storage.n_buckets
@@ -225,18 +226,16 @@ def apply_commands_distributed(
 
     # collection-document delete = delete of a path that IS a
     # collection uri (ends with '~', no item segment) — a pure Column
-    # predicate on the raw batch, so the fallback check costs no
-    # route-UDF pass over the data
-    if (
+    # predicate on the raw batch, so the check costs no route-UDF pass
+    # over the data
+    one_group = (
         batch_df.filter((F.col("method") == "delete") & F.col("path").endswith("~"))
         .limit(1)
         .count()
         > 0
-    ):
-        _apply_serial_staged(store, batch_df.collect(), batch_id, commit_meta)
-        return
+    )
 
-    if store.index_templates():
+    if not one_group and store.index_templates():
         # instantiate template indexes on the driver's store (under its
         # lock) for every collection this batch writes: executor groups
         # each skip the already-existing index instead of two of them
@@ -255,6 +254,9 @@ def apply_commands_distributed(
                 store.instantiate_templates(uri)
 
     ann = batch_df.withColumn("r", route("path")).select("*", "r.document_uri", "r.bucket").drop("r")
+    # a constant key puts the whole batch in one group (a string: an
+    # integer literal in groupBy would resolve as a column ordinal)
+    groups = ann.groupBy(F.lit("batch") if one_group else F.col("bucket"))
     func = _apply_bucket_commands(
         store.storage.root, n_buckets, store.auto_complete, batch_id
     )
@@ -273,49 +275,62 @@ def apply_commands_distributed(
     last: Optional[BaseException] = None
     for _attempt in range(store.WRITE_CAS_RETRIES):
         v0 = store.storage.current_version()
-        results = ann.groupBy("bucket").applyInPandas(func, _RESULT_SCHEMA).collect()
-
-        feed_rows = sorted(
-            (json.loads(r.payload) for r in results if r.kind == "append" and r.table == FEED),
-            key=lambda d: (d["document_uri"], d["revision"]),
-        )
-        dead_rows = [
-            json.loads(r.payload) for r in results if r.kind == "append" and r.table == DEAD_LETTER
-        ]
-        files: dict[str, dict[int, list[str]]] = {}
-        drops: list[str] = []
-        for r in results:
-            if r.kind == "file":
-                files.setdefault(r.table, {})[r.bucket] = [os.path.join(store.storage.root, r.path)]
-            elif r.kind == "drop":
-                drops.append(r.table)
-        # store._lock excludes in-process writers during the publish;
-        # the version chain below excludes cross-process ones.
-        # Feed first, manifest flip second: a crash in between
-        # re-applies the whole batch (the watermark rides INSIDE the
-        # flip, so it has not advanced) — store state stays
-        # exactly-once, feed delivery is at-least-once.
-        with store._lock:
-            try:
-                expected = v0
-                if feed_rows:
-                    expected = _chained_append(
-                        store, FEED, feed_rows, FEED_SCHEMA, expected
-                    )
-                if dead_rows:
-                    expected = _chained_append(
-                        store, DEAD_LETTER, dead_rows, DEAD_LETTER_SCHEMA, expected
-                    )
-                if files or drops or commit_meta:
-                    store.storage.commit_external_many(
-                        files, drop_tables=drops, meta=commit_meta,
-                        expected_version=expected,
-                    )
-            except ManifestConflict as e:
-                last = e
-                continue
+        results = groups.applyInPandas(func, _RESULT_SCHEMA).collect()
+        try:
+            _publish(store, results, v0, commit_meta)
+        except ManifestConflict as e:
+            last = e
+            continue
+        if one_group:
+            # the overlay store's memo discard doesn't reach the REAL
+            # store object: forget its template memo so a re-created
+            # collection gets template indexes back on its next write
+            with store._lock:
+                store._templated_uris.clear()
         return
     raise last  # type: ignore[misc]
+
+
+def _publish(store: DocumentStore, results, v0: int, commit_meta: Optional[dict]) -> None:
+    """Driver side of one apply attempt: append the staged feed events
+    and dead letters, then register the staged files, table drops and
+    ``commit_meta`` in ONE manifest flip pinned on ``v0``, the version
+    read before the groups staged. Raises ManifestConflict when any
+    foreign flip landed since ``v0``.
+
+    store._lock excludes in-process writers during the publish; the
+    version chain excludes cross-process ones. Feed first, manifest
+    flip second: a crash in between re-applies the whole batch (the
+    watermark rides INSIDE the flip, so it has not advanced) — store
+    state stays exactly-once, feed delivery is at-least-once."""
+    from ..store.documents import FEED, FEED_SCHEMA
+
+    feed_rows = sorted(
+        (json.loads(r.payload) for r in results if r.kind == "append" and r.table == FEED),
+        key=lambda d: (d["document_uri"], d["revision"]),
+    )
+    dead_rows = [
+        json.loads(r.payload) for r in results if r.kind == "append" and r.table == DEAD_LETTER
+    ]
+    files: dict[str, dict[int, list[str]]] = {}
+    drops: list[str] = []
+    for r in results:
+        if r.kind == "file":
+            files.setdefault(r.table, {})[r.bucket] = [os.path.join(store.storage.root, r.path)]
+        elif r.kind == "drop":
+            drops.append(r.table)
+    with store._lock:
+        expected = v0
+        if feed_rows:
+            expected = _chained_append(store, FEED, feed_rows, FEED_SCHEMA, expected)
+        if dead_rows:
+            expected = _chained_append(
+                store, DEAD_LETTER, dead_rows, DEAD_LETTER_SCHEMA, expected
+            )
+        if files or drops or commit_meta:
+            store.storage.commit_external_many(
+                files, drop_tables=drops, meta=commit_meta, expected_version=expected
+            )
 
 
 def _chained_append(store, table, rows, schema, expected: int) -> int:
@@ -333,99 +348,6 @@ def _chained_append(store, table, rows, schema, expected: int) -> int:
             f"(expected v{expected + 1}, append landed at v{v})"
         )
     return v
-
-
-def _apply_serial_staged(
-    store: DocumentStore, rows, batch_id: int, commit_meta: Optional[dict] = None
-) -> None:
-    """Apply a command batch serially on the driver with the SAME
-    atomicity as the distributed path: every write goes through a
-    copy-on-write OverlayStorage, and the staged bucket files, feed
-    events, table drops, and ``commit_meta`` (the batch watermark)
-    publish in ONE ``commit_external_many`` flip.
-
-    Exactly-once for store state: a crash anywhere before the flip
-    leaves the base snapshot untouched (replay re-applies the whole
-    batch against unchanged state and stages the same result); a crash
-    after the flip finds the watermark advanced and skips the batch.
-    Feed publication stays at-least-once (its append precedes the flip;
-    consumers dedup by (uri, revision) — the reference's model)."""
-    from ..paths import split_path
-    from ..store.documents import DocumentStore as _DS, FEED
-    from ..store.storage import ManifestConflict, OverlayStorage, _sanitize, write_bucket_file
-
-    def _key(r):
-        # null seq must not poison the sort (review r12: None vs int
-        # comparison raised out of foreachBatch and the stream retried
-        # the batch forever) — order it first, deterministically
-        seq = r.seq if r.seq is not None else -1
-        try:
-            return (split_path(r.path).document_uri, seq)
-        except Exception:  # malformed/None path: order stably, dead-letter below
-            return (str(r.path), seq)
-
-    # the flip is pinned on the version read before the overlay's base
-    # reads (review r12) — same discipline as the distributed path
-    last: Optional[BaseException] = None
-    for _attempt in range(store.WRITE_CAS_RETRIES):
-        v0 = store.storage.current_version()
-        overlay = OverlayStorage(store.storage)
-        ds = _DS(store.storage.root, auto_complete=store.auto_complete, storage=overlay)
-
-        collection_deleted = False
-        for r in sorted(rows, key=_key):
-            err = _dispatch(ds, r.method, r.path, r.body)
-            if err is not None:
-                overlay.append(
-                    DEAD_LETTER,
-                    [_dead_letter_row(r.seq, r.method, r.path, r.body, err)],
-                    DEAD_LETTER_SCHEMA,
-                )
-            elif r.method == "delete" and str(r.path).endswith("~"):
-                collection_deleted = True
-
-        files: dict[str, dict[int, list[str]]] = {}
-        for (table, bucket), bucket_rows in overlay.overlay.items():
-            rel = os.path.join(
-                "data",
-                _sanitize(table),
-                f"b{bucket:04d}-stream-{batch_id}-{uuid.uuid4().hex[:8]}.parquet",
-            )
-            write_bucket_file(bucket_rows, overlay.schemas[table], os.path.join(store.storage.root, rel))
-            files.setdefault(table, {})[int(bucket)] = [os.path.join(store.storage.root, rel)]
-        # drop EVER-dropped tables (not just still-dropped): the flip drops
-        # before registering, so a drop-and-recreate keeps the staged
-        # recreation while stale base buckets of the old table disappear
-        drops = sorted(overlay.ever_dropped)
-
-        with store._lock:
-            try:
-                expected = v0
-                for table, appended in overlay.appended.items():
-                    if not appended:
-                        continue
-                    if table == FEED:
-                        appended = sorted(
-                            appended, key=lambda d: (d["document_uri"], d["revision"])
-                        )
-                    expected = _chained_append(
-                        store, table, appended, overlay.append_schemas[table], expected
-                    )
-                if files or drops or commit_meta:
-                    store.storage.commit_external_many(
-                        files, drop_tables=drops, meta=commit_meta,
-                        expected_version=expected,
-                    )
-            except ManifestConflict as e:
-                last = e
-                continue
-            if collection_deleted:
-                # the overlay store's memo discard doesn't reach the REAL
-                # store object: forget its template memo so a re-created
-                # collection gets template indexes back on its next write
-                store._templated_uris.clear()
-        return
-    raise last  # type: ignore[misc]
 
 
 def _watermark_key(checkpoint_dir: str) -> str:
@@ -449,7 +371,6 @@ def run_command_stream(
     commands_dir: Optional[str],
     checkpoint_dir: str,
     available_now: bool = True,
-    distributed: bool = True,
     source: Optional["object"] = None,
     vacuum_every: int = 64,
     vacuum_grace: float = 3600.0,
@@ -459,20 +380,21 @@ def run_command_stream(
 
     Each micro-batch is hash-partitioned by document bucket and applied
     ON EXECUTORS (per-key serialization ⇒ gapless revisions, exactly
-    the reference's ShardProcessor ownership model); the driver's only
-    work per batch is publishing feed events and one atomic manifest
-    flip. The checkpoint makes restarts resume after the last
-    fully-applied batch (recovery parity without RecoveryWorker).
+    the reference's ShardProcessor ownership model); a batch with a
+    collection-document delete runs as one group on the same path
+    (:func:`apply_commands_distributed`). The driver's only work per
+    batch is publishing feed events and one atomic manifest flip. The
+    checkpoint makes restarts resume after the last fully-applied
+    batch (recovery parity without RecoveryWorker).
 
     foreachBatch is at-least-once: a crash between apply and the
     checkpoint commit re-delivers the batch, and re-applying writes
     would mint NEW revisions (not revision-idempotent). The remedy is a
     batch-id watermark that rides IN the manifest flip itself — marker
-    and data commit atomically, so store state is exactly-once on BOTH
-    paths: the distributed path stages executor-side, and the serial
-    fallback (collection-delete batches) stages through the same
-    OverlayStorage + single-flip mechanism on the driver
-    (:func:`_apply_serial_staged`). The watermark is keyed by
+    and data commit atomically, so store state is exactly-once: a crash
+    anywhere before the flip leaves the base snapshot untouched and the
+    replay stages the batch afresh; a crash after it finds the
+    watermark advanced and skips the batch. The watermark is keyed by
     checkpoint path: if you DELETE a checkpoint to reprocess from
     scratch, call :func:`reset_stream_watermark` first, or every
     replayed batch is silently skipped.
@@ -501,10 +423,7 @@ def run_command_stream(
         if batch_id <= last_applied():
             return
         meta = {wm_key: batch_id}
-        if distributed:
-            apply_commands_distributed(store, batch_df, batch_id, commit_meta=meta)
-        else:
-            _apply_serial_staged(store, batch_df.collect(), batch_id, commit_meta=meta)
+        apply_commands_distributed(store, batch_df, batch_id, commit_meta=meta)
         if compact_every and (batch_id + 1) % compact_every == 0:
             store.compact_appends()
         if vacuum_every and (batch_id + 1) % vacuum_every == 0:

@@ -212,8 +212,8 @@ def test_distributed_batch_applies_on_executors(spark, tmp_path):
     i_body, i_rev = store.get("kol~/i1")
     assert i_body["v"] == 10 and i_rev == 1
 
-    # the executor path stages per-bucket files; the serial path never
-    # creates these
+    # the executor path stages per-bucket files; a driver-side row
+    # loop would never create these
     staged = glob.glob(str(tmp_path / "store" / "data" / "*" / "*-stream-*.parquet"))
     assert staged, "distributed write path did not run"
 
@@ -226,7 +226,7 @@ def test_distributed_batch_applies_on_executors(spark, tmp_path):
 
 def test_collection_delete_falls_back_to_serial(spark, tmp_path):
     """A batch containing a collection-document delete must still apply
-    correctly (serial fallback: INDEX_DEFS is a global bucket)."""
+    correctly (it runs as ONE group: INDEX_DEFS is a global bucket)."""
     from hyper_storage_spark.plans import SortItem
 
     store = DocumentStore(str(tmp_path / "store"), spark=spark)
@@ -251,7 +251,7 @@ def test_collection_delete_falls_back_to_serial(spark, tmp_path):
 
 
 def test_serial_fallback_crash_replay_exactly_once(spark, tmp_path):
-    """Crash-injection for the serial-staged fallback: kill the batch AT
+    """Crash-injection for a collection-delete (one-group) batch: kill the batch AT
     the manifest flip (after the per-command writes are staged and the
     feed append landed), then replay. Exactly-once for store state means
     the replay must not double-apply the already-staged prefix: document
@@ -633,7 +633,7 @@ def test_streaming_vacuum_reclaims_crash_orphans(spark, tmp_path, monkeypatch):
 
 
 def test_serial_staged_batch_instantiates_templates(spark, tmp_path):
-    """A collection-delete batch (serial-staged fallback) that ALSO
+    """A collection-delete batch (applied as one group) that ALSO
     creates a template-matched collection must instantiate the concrete
     index through the overlay store — DDL, backfill, and the delete all
     land in the one staged flip."""
@@ -660,6 +660,40 @@ def test_serial_staged_batch_instantiates_templates(spark, tmp_path):
     res = store.query("tpl/a~", sort=[SortBy("v")], size=10)
     assert [i["id"] for i in res.items] == ["i2", "i1"]
     assert res.plan.index_id == "by_v"
+
+
+def test_collection_delete_batch_recreate_and_template_memo(spark, tmp_path):
+    """A collection deleted and re-created inside ONE batch must come
+    back with a fresh index that agrees with its content (re-creation
+    resurrects the pre-delete items — reference parity, see
+    test_collection_recreate_resurrects_items_reference_parity). A
+    collection the batch only deletes must get its template index again
+    on the driver store's next write (the batch clears the driver
+    store's template memo)."""
+    from hyper_storage_spark.plans.model import SortBy, SortItem
+
+    store = DocumentStore(str(tmp_path / "store"), spark=spark)
+    store.create_index_template("tpl/*~", "by_v", [SortItem("v", "decimal", "asc")])
+    for i in range(12):
+        store.put(f"tpl/a~/old{i}", {"v": i})
+    store.put("tpl/b~/old", {"v": 1})
+    cmds = str(tmp_path / "commands")
+    write_commands(
+        cmds,
+        [
+            {"seq": 1, "method": "delete", "path": "tpl/a~", "body": None},
+            {"seq": 2, "method": "put", "path": "tpl/a~/new", "body": {"v": 100}},
+            {"seq": 3, "method": "delete", "path": "tpl/b~", "body": None},
+        ],
+    )
+    run_command_stream(spark, store, cmds, str(tmp_path / "ckpt"))
+
+    res = store.query("tpl/a~", sort=[SortBy("v")], size=50)
+    assert res.plan.index_id == "by_v"
+    assert [i["id"] for i in res.items] == [f"old{i}" for i in range(12)] + ["new"]
+    assert store.index_defs("tpl/b~") == []
+    store.put("tpl/b~/z", {"v": 2})
+    assert [d.index_id for d in store.index_defs("tpl/b~")] == ["by_v"]
 
 
 def test_streaming_compaction_hook_bounds_feed_files(spark, tmp_path):
@@ -1981,40 +2015,136 @@ def test_heavy_hitters_migration_seed_mass_capped(spark, tmp_path):
     assert "fresh" in served  # 30/230 = 13% >> phi
 
 
-def test_stream_flip_pinned_against_foreign_write(spark, tmp_path):
-    """review r12: a foreign (second-handle) write landing between the
-    stream's staging reads and its manifest flip must conflict and
-    re-stage, not be silently overwritten by the stale full-bucket
-    staged file. Also covers the null-seq command (previously a
-    TypeError poison pill in the serial sort)."""
-    from types import SimpleNamespace
+def test_stream_flip_pinned_against_foreign_write(tmp_path):
+    """A foreign (second-handle) write landing between a batch's staging
+    reads and its manifest flip must make the pinned flip refuse; the
+    re-staged batch then lands beside it instead of overwriting it with
+    the stale full-bucket staged file. Drives the executor-side group
+    function and the driver publish in-process, without Spark (the
+    retry loop through run_command_stream is covered by
+    test_stream_flip_conflict_restages_through_run_command_stream).
+    Also covers a null-seq put, which applies like any other command."""
+    import pandas as pd
 
-    from hyper_storage_spark.store import DocumentStore
+    from hyper_storage_spark.store.storage import ManifestConflict, bucket_of
     from hyper_storage_spark.streaming import ingest as ing
 
-    store = DocumentStore(str(tmp_path / "s"), spark=spark)
+    store = DocumentStore(str(tmp_path / "s"))
     store.put("col~/seed", {"v": 0})
-    writer = DocumentStore(store.storage.root, spark=spark)
+    writer = DocumentStore(store.storage.root)
+    n = store.storage.n_buckets
+    # one bucket group as the executor receives it (a null seq is NaN)
+    group = pd.DataFrame(
+        {
+            "seq": [float("nan"), 2.0],
+            "method": ["put", "put"],
+            "path": ["col~/itemA", "col~/itemB"],
+            "body": ['{"v": 1}', '{"v": 2}'],
+            "document_uri": ["col~", "col~"],
+            "bucket": [bucket_of("col~", n)] * 2,
+        }
+    )
+    stage = ing._apply_bucket_commands(store.storage.root, n, store.auto_complete, 7)
 
-    hits = {"n": 0}
-    orig = ing._dispatch
-
-    def hooked(ds, method, path, body):
-        if hits["n"] == 0:
-            hits["n"] += 1
-            writer.put("col~/foreign", {"v": 99})  # same content bucket
-        return orig(ds, method, path, body)
-
-    rows = [
-        SimpleNamespace(seq=None, method="put", path="col~/itemA", body='{"v": 1}'),
-        SimpleNamespace(seq=2, method="put", path="col~/itemB", body='{"v": 2}'),
-    ]
-    ing._dispatch = hooked
-    try:
-        ing._apply_serial_staged(store, rows, batch_id=7)
-    finally:
-        ing._dispatch = orig
-    assert hits["n"] == 1  # the window was exercised exactly once
+    v0 = store.storage.current_version()
+    results = list(stage(group).itertuples(index=False))
+    writer.put("col~/foreign", {"v": 99})  # same content bucket, inside the window
+    with pytest.raises(ManifestConflict):
+        ing._publish(store, results, v0, None)
+    v0 = store.storage.current_version()
+    ing._publish(store, list(stage(group).itertuples(index=False)), v0, None)
     assert store.get("col~/foreign")[0]["v"] == 99  # foreign write survived
     assert store.get("col~/itemA")[0]["v"] == 1  # and the batch landed
     assert store.get("col~/itemB")[0]["v"] == 2
+    # gapless: seed, foreign, then the batch's two puts
+    assert store.get("col~/seed") == ({"v": 0, "id": "seed"}, 4)
+
+
+def test_stream_flip_conflict_restages_through_run_command_stream(spark, tmp_path):
+    """The foreign-write pin end to end: a second handle writes the same
+    content bucket just before the stream's first flip, which must
+    conflict; run_command_stream re-stages and lands the batch — for a
+    bucket-grouped batch and for a collection-delete batch (one
+    group)."""
+    from hyper_storage_spark.store.storage import ManifestConflict
+
+    for collection_delete in (False, True):
+        root = tmp_path / f"delete={collection_delete}"
+        store = DocumentStore(str(root / "s"), spark=spark)
+        store.put("col~/seed", {"v": 0})
+        store.put("gone~/x", {"g": 1})
+        writer = DocumentStore(store.storage.root, spark=spark)
+        commands = [
+            {"seq": None, "method": "put", "path": "col~/itemA", "body": {"v": 1}},
+            {"seq": 2, "method": "put", "path": "col~/itemB", "body": {"v": 2}},
+        ]
+        if collection_delete:
+            commands.append({"seq": 3, "method": "delete", "path": "gone~", "body": None})
+        write_commands(str(root / "commands"), commands)
+
+        real_flip = store.storage.commit_external_many
+        outcomes = []
+
+        def flip(*a, **k):
+            if not outcomes:
+                writer.put("col~/foreign", {"v": 99})  # same content bucket
+            try:
+                v = real_flip(*a, **k)
+            except ManifestConflict:
+                outcomes.append("conflict")
+                raise
+            outcomes.append("flip")
+            return v
+
+        store.storage.commit_external_many = flip
+        try:
+            run_command_stream(spark, store, str(root / "commands"), str(root / "ckpt"))
+        finally:
+            store.storage.commit_external_many = real_flip
+        # the stale flip was refused once, then the batch re-staged and landed
+        assert outcomes == ["conflict", "flip"], collection_delete
+        assert store.get("col~/foreign")[0]["v"] == 99  # foreign write survived
+        assert store.get("col~/itemA")[0]["v"] == 1  # and the batch landed
+        assert store.get("col~/itemB")[0]["v"] == 2
+        # gapless: seed, foreign, then the batch's two puts
+        assert store.get("col~/seed") == ({"v": 0, "id": "seed"}, 4)
+        if collection_delete:
+            with pytest.raises(KeyError):
+                store.get("gone~/x")
+        else:
+            assert store.get("gone~/x")[0]["g"] == 1
+
+
+@pytest.mark.parametrize("collection_delete", [False, True])
+def test_null_seq_command_dead_letters_not_poison(spark, tmp_path, collection_delete):
+    """A command with a null seq reaches the apply stage as a NaN seq.
+    It must order FIRST within its document and, when malformed, land in
+    dead_letter with seq=None — int(NaN) raising there would fail the
+    batch, which Structured Streaming retries forever. Both groupings
+    (by bucket, and one group for a collection-delete batch) are
+    covered."""
+    from hyper_storage_spark.streaming.ingest import DEAD_LETTER
+
+    store = DocumentStore(str(tmp_path / "store"), spark=spark)
+    store.put("gone~/x", {"a": 1})
+    commands = [
+        {"seq": None, "method": "bogus", "path": "nul", "body": {"n": 1}},
+        {"seq": 1, "method": "patch", "path": "ord", "body": {"w": 1}},
+        {"seq": None, "method": "put", "path": "ord", "body": {"v": 0}},
+        {"seq": 2, "method": "put", "path": "ok", "body": {"k": 1}},
+    ]
+    if collection_delete:
+        commands.append({"seq": 3, "method": "delete", "path": "gone~", "body": None})
+    cmds = str(tmp_path / "commands")
+    write_commands(cmds, commands)
+    run_command_stream(spark, store, cmds, str(tmp_path / "ckpt"))
+
+    dead = store.storage.all_rows(DEAD_LETTER)
+    assert [(d["seq"], d["method"], d["path"]) for d in dead] == [(None, "bogus", "nul")]
+    assert store.get("ok")[0] == {"k": 1}
+    assert store.get("ord") == ({"v": 0, "w": 1}, 2)  # null-seq put first
+    if collection_delete:
+        with pytest.raises(KeyError):
+            store.get("gone~/x")
+    else:
+        assert store.get("gone~/x")[0]["a"] == 1

@@ -12,7 +12,8 @@ min over alternations is then comparable.
 Env: SPARK_GRAFT_AB_ALTERNATIONS (default 3) pairs of invocations,
 SPARK_GRAFT_BENCH_RUNS (default 3) timed runs inside each invocation.
 Prints one JSON line: per entry, each tree's min/all samples plus the
-B/A ratio of mins, and each invocation's sentinel noise factor.
+B/A ratio of mins, and each invocation's sentinel noise factor. Exits
+non-zero when any entry has no sample from one of the trees.
 """
 
 from __future__ import annotations
@@ -25,16 +26,21 @@ import sys
 
 def run_tree(tree: str, names: list[str]) -> dict:
     out = subprocess.run(
-        [sys.executable, os.path.join(tree, "tools", "bench_entries.py"), *names],
+        # absolute: the child runs with cwd=tree, so a relative script
+        # path would resolve against the tree twice
+        [sys.executable, os.path.join(os.path.abspath(tree), "tools", "bench_entries.py"), *names],
         capture_output=True,
         text=True,
         cwd=tree,
         check=False,
     )
     last = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
+    # bench_entries.py exits non-zero when ANY entry failed but still
+    # prints the valid entries' timings: keep those
+    res = json.loads(last[-1]) if last else {}
     if out.returncode != 0 or not last:
-        return {"error": (out.stderr or out.stdout)[-400:]}
-    return json.loads(last[-1])
+        res["error"] = (out.stderr or out.stdout)[-400:]
+    return res
 
 
 def main() -> int:
@@ -52,6 +58,7 @@ def main() -> int:
             res = run_tree(tree, names)
             if "error" in res:
                 print(f"# alternation {i} tree {label}: {res['error']}", file=sys.stderr)
+            if "entries" not in res:
                 continue
             noise[label].append(res.get("noise_factor"))
             for n in names:
@@ -70,7 +77,7 @@ def main() -> int:
         table[n] = {
             "tree_a_min": min(a) if a else None,
             "tree_b_min": min(b) if b else None,
-            "b_over_a": round(min(b) / min(a), 3) if a and b else None,
+            "b_over_a": round(min(b) / min(a), 3) if a and b and min(a) > 0 else None,
             "tree_a_runs": a,
             "tree_b_runs": b,
         }
@@ -85,8 +92,8 @@ def main() -> int:
             }
         )
     )
-    return 0
+    return 0 if all(t["tree_a_runs"] and t["tree_b_runs"] for t in table.values()) else 1
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())
