@@ -2378,10 +2378,12 @@ class DocumentStore:
 
     def info(self) -> dict:
         """Operational snapshot of the store: manifest version, retained
-        time-travel versions, and per-table file/byte/bucket counts —
-        the numbers an operator needs to size vacuum/compaction and to
-        watch growth. Reads only the manifest + file metadata (no data
-        decode), so it is safe to poll."""
+        time-travel versions, per-table file/byte/bucket counts — the
+        numbers an operator needs to size vacuum/compaction and to
+        watch growth — and this handle's decoded-row cache counters
+        (``read_cache``: hits, misses, rows and buckets held, row cap).
+        Reads only the manifest + file metadata (no data decode), so it
+        is safe to poll."""
         import os
 
         manifest = self.storage._read_manifest()
@@ -2408,6 +2410,7 @@ class DocumentStore:
             "retained_versions": self.storage.versions(),
             "meta": dict(manifest.get("meta", {})),
             "tables": tables,
+            "read_cache": self.storage.read_cache_stats(),
         }
 
     def at_version(self, version: int) -> "DocumentStore":

@@ -14,6 +14,20 @@ Scale note: bucket count is configurable (default 16 for local tests,
 reads address the bucket *files* directly, so a single-document lookup
 touches exactly one bucket and collection scans parallelize across
 buckets.
+
+Decoded-row cache: an unfiltered :meth:`Storage.bucket_rows` keeps the
+rows it decoded, keyed by (table, bucket) and stamped with the file
+paths the manifest named, and a successful :meth:`Storage.commit`
+keeps the rows it wrote in the form a re-read returns them. Bucket
+files are immutable — every name carries a fresh uuid, appends are
+staged under a tmp name and renamed, and nothing ever rewrites a path —
+so rows remembered for a path are that file's content for as long as
+the file exists. Every read still reads the manifest first and serves
+from memory only when the current manifest names exactly the cached
+paths: a foreign process's commit, a rollback or a vacuum changes the
+paths, never a path's content, so a cached entry can be missed but
+never be stale. Filtered (point) reads skip the cache and keep parquet
+row-group pruning.
 """
 
 from __future__ import annotations
@@ -30,7 +44,10 @@ import threading as _threading
 import time
 import uuid
 import zlib
-from typing import Any, Iterable, Optional
+from collections import OrderedDict
+from decimal import Decimal
+from operator import itemgetter
+from typing import Any, Callable, Iterable, Optional
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -54,16 +71,135 @@ def _sanitize(name: str) -> str:
     return re.sub(r"[^A-Za-z0-9_.\-]", "_", name)
 
 
-def write_bucket_file(rows: list[dict], schema: pa.Schema, abspath: str) -> None:
+def write_bucket_file(rows: list[dict], schema: pa.Schema, abspath: str) -> list[dict]:
     """THE bucket-file writer — every path that materializes a bucket
     (driver commits AND executor-staged streaming files) goes through
     it, so the key-sort + bounded row groups that make point-read
-    row-group pruning selective hold for every bucket on disk."""
+    row-group pruning selective hold for every bucket on disk. Returns
+    the rows in the order they were written."""
     key = [k for k in ("document_uri", "item_id") if k in schema.names]
     if key:
         rows = sorted(rows, key=lambda r: tuple(r.get(k) or "" for k in key))
     os.makedirs(os.path.dirname(abspath), exist_ok=True)
     pq.write_table(pa.Table.from_pylist(rows, schema=schema), abspath, row_group_size=ROW_GROUP_SIZE)
+    return rows
+
+
+# arrow types whose to_pylist value is exactly one Python type
+_PLAIN_TYPES = {
+    pa.string(): str,
+    pa.int64(): int,
+    pa.int32(): int,
+    pa.bool_(): bool,
+    pa.float64(): float,
+}
+
+
+def _read_form(arrow_type: pa.DataType) -> Callable[[Any], bool]:
+    """Predicate: is a non-null value already what ``to_pylist`` returns
+    for a column of ``arrow_type``? False for types it does not know,
+    which then always go through arrow."""
+    plain = _PLAIN_TYPES.get(arrow_type)
+    if plain is not None:
+        return lambda v: type(v) is plain
+    if pa.types.is_decimal(arrow_type):
+        quantum = Decimal(1).scaleb(-arrow_type.scale)
+        # at the column scale already; arrow never returns a negative zero
+        return lambda v: type(v) is Decimal and v.same_quantum(quantum) and (v or not v.is_signed())
+    return lambda v: False
+
+
+def _rows_as_read(rows: list[dict], schema: pa.Schema) -> list[dict]:
+    """New dicts holding ``rows`` exactly as ``pq.read_table(path)
+    .to_pylist()`` returns them after :func:`write_bucket_file` wrote
+    them with ``schema``: keys in schema order, absent keys as None,
+    every value converted the way arrow converts it (decimals quantized
+    to the column scale, ints in a float column as floats, ...). Values
+    already in that form — every row that came from the read cache —
+    are kept as they are; only the others go through arrow, one value
+    at a time, which is the conversion the write itself made. When
+    every row already is in read form it is copied as it is, which is
+    the common case for a bucket rewrite and avoids rebuilding dicts."""
+    names = tuple(schema.names)
+    if not rows:
+        return []
+    values = None
+    if len(names) > 1:  # itemgetter of a single name returns a bare value
+        try:
+            values = list(map(itemgetter(*names), rows))
+        except KeyError:  # a row lacks a column, which the write stored as null
+            pass
+    if values is None:
+        values = [tuple(r.get(n) for n in names) for r in rows]
+    cols = list(zip(*values))
+    fixed = False
+    for j, field in enumerate(schema):
+        plain = _PLAIN_TYPES.get(field.type)
+        if plain is not None and set(map(type, cols[j])) <= {plain, type(None)}:
+            continue
+        ok = _read_form(field.type)
+        col = cols[j] = list(cols[j])
+        bad = [i for i, v in enumerate(col) if v is not None and not ok(v)]
+        if bad:
+            for i, v in zip(bad, pa.array([col[i] for i in bad], type=field.type).to_pylist()):
+                col[i] = v
+            fixed = True
+    if fixed:
+        values = zip(*cols)
+    elif set(map(tuple, rows)) == {names}:
+        return list(map(dict, rows))
+    return [dict(zip(names, v)) for v in values]
+
+
+class _RowCache:
+    """Decoded bucket rows, one entry per (table, bucket), each stamped
+    with the file paths it was read from (see the module docstring for
+    why such an entry can never be stale). A newer file for a bucket
+    replaces the bucket's entry; least-recently-used entries are evicted
+    once the cached rows exceed ``cap_rows``. Entries are never mutated:
+    readers get shallow copies. One lock guards the bookkeeping, since a
+    streaming micro-batch thread and a user thread may share a Storage."""
+
+    def __init__(self, cap_rows: int):
+        self.cap_rows = cap_rows
+        self._lock = _threading.Lock()
+        self._entries: OrderedDict[tuple[str, int], tuple[tuple[str, ...], list[dict]]] = OrderedDict()
+        self.rows = 0
+        self.hits = 0
+        self.misses = 0
+
+    def get(self, key: tuple[str, int], rels: tuple[str, ...]) -> Optional[list[dict]]:
+        with self._lock:
+            entry = self._entries.get(key)
+            if entry is None or entry[0] != rels:
+                self.misses += 1
+                return None
+            self._entries.move_to_end(key)
+            self.hits += 1
+        return [dict(r) for r in entry[1]]
+
+    def put(self, key: tuple[str, int], rels: tuple[str, ...], rows: list[dict]) -> None:
+        with self._lock:
+            old = self._entries.pop(key, None)
+            if old is not None:
+                self.rows -= len(old[1])
+            if len(rows) > self.cap_rows:
+                return
+            self._entries[key] = (rels, rows)
+            self.rows += len(rows)
+            while self.rows > self.cap_rows:
+                _, (_, evicted) = self._entries.popitem(last=False)
+                self.rows -= len(evicted)
+
+    def stats(self) -> dict:
+        with self._lock:
+            return {
+                "hits": self.hits,
+                "misses": self.misses,
+                "rows": self.rows,
+                "buckets": len(self._entries),
+                "cap_rows": self.cap_rows,
+            }
 
 
 # At cluster scale, size the bucket modulus like the reference's shard
@@ -79,6 +215,13 @@ ROW_GROUP_SIZE = 8192
 
 class Storage:
     """Versioned, bucketed parquet tables under one root directory."""
+
+    # decoded-row cache bound, in rows across all cached buckets: it
+    # holds the buckets a write path keeps re-reading (a collection's
+    # content bucket, its WAL and statics buckets, its index tables),
+    # and keeps a whole-store scan such as recover(scan_all=True) from
+    # pinning every bucket of a large store in memory
+    READ_CACHE_ROWS = 100_000
 
     def __init__(self, root: str, n_buckets: Optional[int] = None):
         self.root = root
@@ -112,6 +255,7 @@ class Storage:
         self._flock_depth = 0
         self._flock_owner: Optional[int] = None
         self._flock_mutex = _threading.Lock()
+        self._row_cache = _RowCache(self.READ_CACHE_ROWS)
         if not os.path.exists(self._manifest_path):
             self._write_manifest(
                 {"version": 0, "n_buckets": self.n_buckets, "tables": {}}
@@ -298,18 +442,36 @@ class Storage:
         parquet read — row groups whose min/max stats exclude the key
         are never decoded, so a point GET reads one row group instead of
         materializing the whole bucket (commit() writes buckets sorted
-        by key with bounded row groups to make the stats selective)."""
+        by key with bounded row groups to make the stats selective).
+
+        An unfiltered read is served from the decoded-row cache when
+        the manifest still names the files it was cached from (see the
+        module docstring); the caller always gets dicts of its own to
+        mutate."""
         manifest = self._read_manifest()
         rel = manifest["tables"].get(table, {}).get(str(bucket))
         if rel is None:
             return []
-        rels = rel if isinstance(rel, list) else [rel]
+        rels = tuple(rel) if isinstance(rel, list) else (rel,)
+        if not filters:
+            cached = self._row_cache.get((table, bucket), rels)
+            if cached is not None:
+                return cached
         out: list[dict] = []
         for r in rels:
             out.extend(
-                pq.read_table(os.path.join(self.root, r), filters=filters).to_pylist()
+                pq.read_table(os.path.join(self.root, r), filters=filters or None).to_pylist()
             )
+        if not filters:
+            self._row_cache.put((table, bucket), rels, out)
+            return [dict(r) for r in out]
         return out
+
+    def read_cache_stats(self) -> dict:
+        """Decoded-row cache counters: unfiltered reads served from
+        memory (hits) and from parquet (misses), rows and buckets held,
+        and the row cap."""
+        return self._row_cache.stats()
 
     def bucket_files(self, table: str, bucket: int) -> list[str]:
         manifest = self._read_manifest()
@@ -338,15 +500,17 @@ class Storage:
         drop_tables: Iterable[str] = (),
         meta: Optional[dict] = None,
         expected_version: Optional[int] = None,
+        appends: Optional[dict[str, tuple[list[dict], pa.Schema]]] = None,
     ) -> int:
         """Register externally-written files across MANY tables (and/or
         drop tables) in ONE atomic manifest flip — the commit point of
         the distributed write path, where executors stage bucket files
         and the driver publishes them all-or-nothing. ``meta`` entries
         ride in the same flip (e.g. the streaming batch watermark — a
-        marker that must be atomic with the data it marks). Drops apply
-        BEFORE registrations, so a drop-and-recreate in one commit
-        keeps the recreated content.
+        marker that must be atomic with the data it marks), and so do
+        ``appends`` (e.g. the batch's feed events), exactly as in
+        :meth:`commit`. Drops apply BEFORE registrations, so a
+        drop-and-recreate in one commit keeps the recreated content.
 
         ``expected_version`` pins the caller's whole read-stage-flip
         window, exactly like :meth:`commit`: callers whose registered
@@ -354,7 +518,8 @@ class Storage:
         full-bucket row file) pass it, and the flip refuses if ANY
         foreign flip landed since — without it this method's own
         manifest re-read would silently publish the stale rewrite over
-        the foreign commit (lost update)."""
+        the foreign commit (lost update). A refused flip registers
+        none of the appends."""
         manifest = self._read_manifest()
         if expected_version is not None and manifest["version"] != expected_version:
             raise ManifestConflict(
@@ -368,6 +533,10 @@ class Storage:
             for bucket, paths in bucket_files.items():
                 rels = [os.path.relpath(p, self.root) for p in paths]
                 manifest["tables"].setdefault(table, {})[str(bucket)] = rels
+        for table, (rows, schema) in (appends or {}).items():
+            manifest["tables"].setdefault(table, {})[f"a{version}"] = self._stage_append(
+                table, rows, schema
+            )
         if meta:
             manifest.setdefault("meta", {}).update(meta)
         manifest["version"] = version
@@ -427,6 +596,7 @@ class Storage:
         version = manifest["version"] + 1
         for table in drop_tables:  # drops first: drop-and-recreate keeps the recreate
             manifest["tables"].pop(table, None)
+        written: dict[tuple[str, int], tuple[str, list[dict]]] = {}
         for (table, bucket), rows in updates.items():
             # uuid suffix: two PROCESSES racing at the same version must
             # not write the same path — the CAS flip rejects the loser,
@@ -436,23 +606,36 @@ class Storage:
                 _sanitize(table),
                 f"b{bucket:04d}-v{version:08d}-{uuid.uuid4().hex[:6]}.parquet",
             )
-            write_bucket_file(rows, schemas[table], os.path.join(self.root, rel))
+            rows = write_bucket_file(rows, schemas[table], os.path.join(self.root, rel))
+            written[(table, bucket)] = (rel, _rows_as_read(rows, schemas[table]))
             manifest["tables"].setdefault(table, {})[str(bucket)] = rel
         for table, (rows, schema) in (appends or {}).items():
-            rel = os.path.join(
-                "data", _sanitize(table), f"append-{uuid.uuid4().hex[:12]}.parquet"
+            manifest["tables"].setdefault(table, {})[f"a{version}"] = self._stage_append(
+                table, rows, schema
             )
-            abspath = os.path.join(self.root, rel)
-            os.makedirs(os.path.dirname(abspath), exist_ok=True)
-            # tmp + rename: the directory doubles as a streaming file
-            # source — no reader may see a footerless parquet
-            tmp = abspath + f".tmp.{uuid.uuid4().hex[:8]}"
-            pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
-            os.replace(tmp, abspath)
-            manifest["tables"].setdefault(table, {})[f"a{version}"] = rel
         manifest["version"] = version
         self._cas_write_manifest(manifest, version - 1)
+        # only a flip that won may seed the cache: a loser's files are
+        # never named by any manifest
+        for key, (rel, rows) in written.items():
+            self._row_cache.put(key, (rel,), rows)
         return version
+
+    def _stage_append(self, table: str, rows: list[dict], schema: pa.Schema) -> str:
+        """Write one append-only file of ``table`` and return its path
+        relative to the root, for the caller's flip to register."""
+        rel = os.path.join(
+            "data", _sanitize(table), f"append-{uuid.uuid4().hex[:12]}.parquet"
+        )
+        abspath = os.path.join(self.root, rel)
+        os.makedirs(os.path.dirname(abspath), exist_ok=True)
+        # tmp + rename: append-only tables double as Structured
+        # Streaming file-source dirs (the feed) — a reader listing the
+        # directory mid-write would see a footerless parquet and die
+        tmp = abspath + f".tmp.{uuid.uuid4().hex[:8]}"
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
+        os.replace(tmp, abspath)
+        return rel
 
     # bounded CAS retry for append-only commit paths: losing the flip
     # race there never invalidates the staged content (re-reading the
@@ -471,17 +654,7 @@ class Storage:
         A lost CAS race re-reads the fresh manifest and re-registers the
         already-staged file under the next version key (bounded retries)
         — two concurrent appenders both land, neither fails."""
-        rel = os.path.join(
-            "data", _sanitize(table), f"append-{uuid.uuid4().hex[:12]}.parquet"
-        )
-        abspath = os.path.join(self.root, rel)
-        os.makedirs(os.path.dirname(abspath), exist_ok=True)
-        # tmp + rename: append-only tables double as Structured
-        # Streaming file-source dirs (the feed) — a reader listing the
-        # directory mid-write would see a footerless parquet and die
-        tmp = abspath + f".tmp.{uuid.uuid4().hex[:8]}"
-        pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
-        os.replace(tmp, abspath)
+        rel = self._stage_append(table, rows, schema)
         for attempt in range(self.APPEND_CAS_RETRIES):
             manifest = self._read_manifest()
             version = manifest["version"] + 1
@@ -643,6 +816,9 @@ class SnapshotStorage(Storage):
                 f"of the {Storage.SNAPSHOT_KEEP}-version retention window "
                 f"(available: {base.versions()!r})"
             ) from None
+        # a cache of its own: historical paths must not evict the live
+        # store's entries (one entry per bucket)
+        self._row_cache = _RowCache(self.READ_CACHE_ROWS)
 
     def _read_manifest(self) -> dict:
         return self._pinned
@@ -661,7 +837,9 @@ class SnapshotStorage(Storage):
     def commit(self, updates, schemas, drop_tables=(), expected_version=None, appends=None):
         raise RuntimeError("SnapshotStorage is read-only (time-travel view)")
 
-    def commit_external_many(self, table_bucket_files, drop_tables=(), meta=None):
+    def commit_external_many(
+        self, table_bucket_files, drop_tables=(), meta=None, expected_version=None, appends=None
+    ):
         raise RuntimeError("SnapshotStorage is read-only (time-travel view)")
 
     def append(self, table, rows, schema):
@@ -693,6 +871,9 @@ class OverlayStorage(Storage):
         self.base = base
         self.root = base.root
         self.n_buckets = base.n_buckets
+        # reads of untouched buckets fall through to the base, and so
+        # does their cache
+        self._row_cache = base._row_cache
         self.overlay: dict[tuple[str, int], list[dict]] = {}
         self.schemas: dict[str, pa.Schema] = {}
         self.appended: dict[str, list[dict]] = {}
@@ -763,6 +944,12 @@ class OverlayStorage(Storage):
         self.appended.setdefault(table, []).extend(dict(r) for r in rows)
         self.append_schemas[table] = schema
         return 0
+
+    def commit_external_many(
+        self, table_bucket_files, drop_tables=(), meta=None, expected_version=None, appends=None
+    ):
+        # registering files is the driver's flip, never an overlay's
+        raise RuntimeError("OverlayStorage never writes the manifest")
 
     def _write_manifest(self, manifest):  # pragma: no cover - guard
         raise RuntimeError("OverlayStorage never writes the manifest")

@@ -185,9 +185,10 @@ def apply_commands_distributed(
 ) -> None:
     """Apply one micro-batch executor-side: group the commands, run
     each group through the overlayed DocumentStore on its executor,
-    then publish feed events and flip the manifest ONCE on the driver
-    (``commit_meta`` — e.g. the batch watermark — rides in that flip,
-    making it atomic with the data). This is the only apply path.
+    then flip the manifest ONCE on the driver: the staged files, the
+    feed events, the dead letters and ``commit_meta`` (e.g. the batch
+    watermark) all ride in that flip, atomic with each other. This is
+    the only apply path.
 
     The grouping key is the storage bucket, except for a batch that
     contains a collection-document delete: dropping a collection's
@@ -269,9 +270,8 @@ def apply_commands_distributed(
     # silently overwritten by the full-bucket staged files — the exact
     # lost update commit_external_many's docstring warns about. On
     # conflict the whole batch re-stages against fresh state (bounded
-    # retries); a crash/retry after the feed append duplicates feed
-    # events, which is the documented at-least-once floor (consumers
-    # dedup by uuid).
+    # retries); the feed events ride in the refused flip, so none of
+    # the failed attempt's events is published.
     last: Optional[BaseException] = None
     for _attempt in range(store.WRITE_CAS_RETRIES):
         v0 = store.storage.current_version()
@@ -292,17 +292,19 @@ def apply_commands_distributed(
 
 
 def _publish(store: DocumentStore, results, v0: int, commit_meta: Optional[dict]) -> None:
-    """Driver side of one apply attempt: append the staged feed events
-    and dead letters, then register the staged files, table drops and
-    ``commit_meta`` in ONE manifest flip pinned on ``v0``, the version
-    read before the groups staged. Raises ManifestConflict when any
-    foreign flip landed since ``v0``.
+    """Driver side of one apply attempt: register the staged files,
+    table drops, ``commit_meta``, feed events and dead letters in ONE
+    manifest flip pinned on ``v0``, the version read before the groups
+    staged. Raises ManifestConflict when any foreign flip landed since
+    ``v0``; the refused flip registers nothing, so the re-staged retry
+    publishes each event once, under the revision it finally got.
 
     store._lock excludes in-process writers during the publish; the
-    version chain excludes cross-process ones. Feed first, manifest
-    flip second: a crash in between re-applies the whole batch (the
-    watermark rides INSIDE the flip, so it has not advanced) — store
-    state stays exactly-once, feed delivery is at-least-once."""
+    version chain excludes cross-process ones. A crash before the flip
+    re-applies the whole batch (the watermark rides INSIDE the flip, so
+    it has not advanced) — store state and the manifest-backed feed stay
+    exactly-once; only a file-source reader of the feed directory may
+    see a refused attempt's staged feed file (at-least-once)."""
     from ..store.documents import FEED, FEED_SCHEMA
 
     feed_rows = sorted(
@@ -312,6 +314,11 @@ def _publish(store: DocumentStore, results, v0: int, commit_meta: Optional[dict]
     dead_rows = [
         json.loads(r.payload) for r in results if r.kind == "append" and r.table == DEAD_LETTER
     ]
+    appends = {}
+    if feed_rows:
+        appends[FEED] = (feed_rows, FEED_SCHEMA)
+    if dead_rows:
+        appends[DEAD_LETTER] = (dead_rows, DEAD_LETTER_SCHEMA)
     files: dict[str, dict[int, list[str]]] = {}
     drops: list[str] = []
     for r in results:
@@ -319,35 +326,11 @@ def _publish(store: DocumentStore, results, v0: int, commit_meta: Optional[dict]
             files.setdefault(r.table, {})[r.bucket] = [os.path.join(store.storage.root, r.path)]
         elif r.kind == "drop":
             drops.append(r.table)
-    with store._lock:
-        expected = v0
-        if feed_rows:
-            expected = _chained_append(store, FEED, feed_rows, FEED_SCHEMA, expected)
-        if dead_rows:
-            expected = _chained_append(
-                store, DEAD_LETTER, dead_rows, DEAD_LETTER_SCHEMA, expected
-            )
-        if files or drops or commit_meta:
+    if files or drops or commit_meta or appends:
+        with store._lock:
             store.storage.commit_external_many(
-                files, drop_tables=drops, meta=commit_meta, expected_version=expected
+                files, drop_tables=drops, meta=commit_meta, expected_version=v0, appends=appends
             )
-
-
-def _chained_append(store, table, rows, schema, expected: int) -> int:
-    """Append that extends the caller's version pin: returns the new
-    manifest version, raising ManifestConflict if any FOREIGN flip
-    landed since ``expected`` (the append itself is append-only-safe,
-    but a silent version jump means the caller's staged bucket files
-    embed stale reads)."""
-    from ..store.storage import ManifestConflict
-
-    v = store.storage.append(table, rows, schema)
-    if v != expected + 1:
-        raise ManifestConflict(
-            f"foreign flip interleaved with the stream publish "
-            f"(expected v{expected + 1}, append landed at v{v})"
-        )
-    return v
 
 
 def _watermark_key(checkpoint_dir: str) -> str:
@@ -383,9 +366,9 @@ def run_command_stream(
     the reference's ShardProcessor ownership model); a batch with a
     collection-document delete runs as one group on the same path
     (:func:`apply_commands_distributed`). The driver's only work per
-    batch is publishing feed events and one atomic manifest flip. The
-    checkpoint makes restarts resume after the last fully-applied
-    batch (recovery parity without RecoveryWorker).
+    batch is one atomic manifest flip, which also publishes the batch's
+    feed events. The checkpoint makes restarts resume after the last
+    fully-applied batch (recovery parity without RecoveryWorker).
 
     foreachBatch is at-least-once: a crash between apply and the
     checkpoint commit re-delivers the batch, and re-applying writes

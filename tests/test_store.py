@@ -2369,3 +2369,353 @@ def test_snapshot_storage_replace_append_is_readonly(tmp_path):
         for f in fs
     )
     assert before == after
+
+
+# -- decoded-row cache --------------------------------------------------------
+
+
+def _parquet_rows(storage, table, bucket):
+    """What a fresh parquet read of the files the manifest names gives."""
+    import pyarrow.parquet as pq
+
+    return [r for p in storage.bucket_files(table, bucket) for r in pq.read_table(p).to_pylist()]
+
+
+def _exact(rows):
+    # repr per (key, value) pair: key order, value types and decimal
+    # scale all count (Decimal("1.5") == Decimal("1.500000000000"))
+    return [repr(list(r.items())) for r in rows]
+
+
+def _assert_reads_exact(storage):
+    """Every bucket of every table reads back exactly as parquet has it."""
+    manifest = storage._read_manifest()
+    checked = 0
+    for table, entry in manifest["tables"].items():
+        for key in entry:
+            if key.startswith("a"):  # append segments are not buckets
+                continue
+            bucket = int(key)
+            assert _exact(storage.bucket_rows(table, bucket)) == _exact(
+                _parquet_rows(storage, table, bucket)
+            ), (table, bucket)
+            checked += 1
+    return checked
+
+
+def _write_path_store(root):
+    """A Spark-free store whose writes touch every table of the item
+    write path: content, statics and WAL buckets, INDEX_DEFS, and two
+    index tables — one with a decimal sort field fed ints, floats and
+    strings, one filtered, and items lacking the sort field (absent
+    keys in the index rows)."""
+    from hyper_storage_spark.plans import SortItem
+
+    store = DocumentStore(root)
+    for i in range(12):
+        body = {"a": i, "name": f"n{i}"}
+        if i % 4:
+            body["price"] = [i, i + 0.25, str(i * 7)][i % 3]
+        store.put(f"coll~/i{i:02d}", body)
+    store.create_index("coll~", "by_price", [SortItem("price", "decimal", "desc")], None)
+    store.create_index("coll~", "big_a", [SortItem("name", "text", "asc")], "a > 5")
+    for i in range(5):
+        store.put(f"doc{i}", {"v": i})
+    store.patch("coll~/i04", {"price": 1.5})
+    store.delete("coll~/i07")
+    store.put("coll~/i13", {"a": 13, "price": -0.0})
+    return store
+
+
+def test_read_cache_reads_equal_parquet_reread_on_the_write_path(tmp_path):
+    from hyper_storage_spark.store.documents import CONTENT, INDEX_DEFS, STATICS, TRANSACTIONS
+
+    store = _write_path_store(str(tmp_path / "s"))
+    st = store.storage
+    tables = set(st.tables())
+    assert {CONTENT, STATICS, TRANSACTIONS, INDEX_DEFS} <= tables
+    index_tables = {t for t in tables if t.startswith("index::")}
+    assert len(index_tables) == 2
+    before = st.read_cache_stats()
+    # the first pass is served by entries the write path's own commits
+    # seeded, so it checks the commit-side normalization too
+    assert _assert_reads_exact(st) >= 6
+    after = st.read_cache_stats()
+    assert after["hits"] > before["hits"]
+    assert _assert_reads_exact(st) >= 6  # and again, from read-seeded entries
+    by_price = next(t for t in index_tables if t.endswith("::by_price"))
+    prices = [r["d0"] for r in st.bucket_rows(by_price, 0)]
+    assert None in prices and all(p is None or p.as_tuple().exponent == -12 for p in prices)
+
+
+def test_read_cache_commit_normalizes_like_a_reread(tmp_path):
+    """Storage-level: rows committed with absent keys, extra keys,
+    shuffled key order, ints in float and decimal columns and short
+    decimals read back from the cache exactly as from parquet."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    from hyper_storage_spark.store.storage import Storage
+
+    schema = pa.schema(
+        [
+            ("document_uri", pa.string()),
+            ("item_id", pa.string()),
+            ("n", pa.int64()),
+            ("s", pa.int32()),
+            ("ok", pa.bool_()),
+            ("f", pa.float64()),
+            ("d", pa.decimal128(38, 12)),
+            ("ts", pa.timestamp("ms")),
+        ]
+    )
+    rows = [
+        {"item_id": "b", "document_uri": "u", "f": 3, "d": 7, "extra": "x"},
+        {"document_uri": "u", "item_id": "a", "n": 5, "s": 2, "ok": True, "f": 0.5,
+         "d": Decimal("1.5"), "ts": 1_700_000_000_000},
+        {"document_uri": "u", "item_id": "c", "d": Decimal("-0")},
+        {"document_uri": "t", "item_id": None, "d": Decimal("2.000000000000")},
+    ]
+    st = Storage(str(tmp_path / "s"))
+    st.commit({("t", 3): rows}, {"t": schema})
+    hits = st.read_cache_stats()["hits"]
+    got = st.bucket_rows("t", 3)
+    assert st.read_cache_stats()["hits"] == hits + 1
+    assert _exact(got) == _exact(_parquet_rows(st, "t", 3))
+    assert [r["item_id"] for r in got] == [None, "a", "b", "c"]  # the file's sorted order
+
+    # every value already in read form, but one row's keys out of
+    # schema order and one row with a key the schema lacks
+    plain = pa.schema([("document_uri", pa.string()), ("n", pa.int64()), ("d", pa.decimal128(38, 12))])
+    rows = [{"document_uri": u, "n": i, "d": Decimal("1.000000000000")} for i, u in enumerate("abc")]
+    rows[1] = dict(reversed(list(rows[1].items())))
+    rows[2]["extra"] = 1
+    st.commit({("p", 0): rows}, {"p": plain})
+    assert _exact(st.bucket_rows("p", 0)) == _exact(_parquet_rows(st, "p", 0))
+
+
+def test_read_cache_returns_rows_the_caller_may_mutate(tmp_path):
+    store = _write_path_store(str(tmp_path / "s"))
+    st = store.storage
+    from hyper_storage_spark.store.documents import CONTENT, TRANSACTIONS
+
+    bucket = store._bucket("coll~")
+    for table in (CONTENT, TRANSACTIONS):
+        rows = st.bucket_rows(table, bucket)
+        for r in rows:
+            r["revision"] = -1
+            r.pop("document_uri")
+        rows.clear()
+        assert _exact(st.bucket_rows(table, bucket)) == _exact(_parquet_rows(st, table, bucket))
+
+
+def test_read_cache_sees_a_second_handles_commit(tmp_path):
+    import pyarrow as pa
+
+    from hyper_storage_spark.store.storage import Storage
+
+    schema = pa.schema([("document_uri", pa.string()), ("v", pa.int64())])
+    first = Storage(str(tmp_path / "s"))
+    first.commit({("t", 0): [{"document_uri": "a", "v": 1}]}, {"t": schema})
+    assert first.bucket_rows("t", 0) == [{"document_uri": "a", "v": 1}]
+    second = Storage(first.root)
+    second.commit({("t", 0): [{"document_uri": "a", "v": 2}]}, {"t": schema})
+    assert first.bucket_rows("t", 0) == [{"document_uri": "a", "v": 2}]
+
+    # the same through two DocumentStore handles on one root
+    one = DocumentStore(str(tmp_path / "d"))
+    one.put("c~/x", {"v": 1})
+    assert one.get("c~/x")[0]["v"] == 1
+    DocumentStore(one.storage.root).put("c~/x", {"v": 2})
+    one.put("c~/y", {"v": 3})  # rewrites the content bucket from a fresh read
+    assert one.get("c~/x") == ({"v": 2, "id": "x"}, 3)
+    assert one.get("c~/y")[0]["v"] == 3
+
+
+def test_read_cache_lost_cas_race_caches_nothing(tmp_path, monkeypatch):
+    import pyarrow as pa
+
+    from hyper_storage_spark.store import storage as storage_mod
+    from hyper_storage_spark.store.storage import ManifestConflict, Storage
+
+    schema = pa.schema([("document_uri", pa.string()), ("v", pa.int64())])
+    loser = Storage(str(tmp_path / "s"))
+    winner = Storage(loser.root)
+    real_write = storage_mod.write_bucket_file
+    raced = []
+
+    def write_then_race(rows, sch, abspath):
+        out = real_write(rows, sch, abspath)
+        if not raced:  # a foreign flip between the loser's read and CAS
+            raced.append(1)
+            winner.commit({("t", 0): [{"document_uri": "w", "v": 2}]}, {"t": schema})
+        return out
+
+    monkeypatch.setattr(storage_mod, "write_bucket_file", write_then_race)
+    with pytest.raises(ManifestConflict):
+        loser.commit({("t", 0): [{"document_uri": "l", "v": 1}]}, {"t": schema})
+    monkeypatch.setattr(storage_mod, "write_bucket_file", real_write)
+    assert loser.read_cache_stats()["buckets"] == 0
+    assert loser.bucket_rows("t", 0) == [{"document_uri": "w", "v": 2}]
+
+    # a pinned commit refused before staging caches nothing either
+    v = loser.current_version()
+    winner.commit({("t", 1): [{"document_uri": "w", "v": 3}]}, {"t": schema})
+    with pytest.raises(ManifestConflict):
+        loser.commit({("t", 1): [{"document_uri": "l", "v": 4}]}, {"t": schema}, expected_version=v)
+    assert loser.read_cache_stats()["buckets"] == 1
+    assert loser.bucket_rows("t", 1) == [{"document_uri": "w", "v": 3}]
+
+
+def test_read_cache_lru_cap_evicts(tmp_path, monkeypatch):
+    import pyarrow as pa
+
+    from hyper_storage_spark.store.storage import Storage
+
+    monkeypatch.setattr(Storage, "READ_CACHE_ROWS", 5)
+    schema = pa.schema([("document_uri", pa.string()), ("v", pa.int64())])
+    st = Storage(str(tmp_path / "s"))
+
+    def rows(b, n):
+        return [{"document_uri": f"u{b}-{i}", "v": i} for i in range(n)]
+
+    for b in range(3):
+        st.commit({("t", b): rows(b, 2)}, {"t": schema})
+    stats = st.read_cache_stats()
+    assert stats["cap_rows"] == 5 and stats["rows"] == 4 and stats["buckets"] == 2
+    misses = stats["misses"]
+    assert st.bucket_rows("t", 0) == rows(0, 2)  # evicted first: read from parquet
+    assert st.read_cache_stats()["misses"] == misses + 1
+    assert st.bucket_rows("t", 2) == rows(2, 2)  # bucket 1 is now least recent
+    assert st.read_cache_stats()["misses"] == misses + 1
+    assert st.bucket_rows("t", 1) == rows(1, 2)
+    assert st.read_cache_stats()["misses"] == misses + 2
+    st.commit({("t", 0): rows(0, 6)}, {"t": schema})  # larger than the cap: not kept
+    assert st.read_cache_stats()["rows"] <= 5
+    assert st.bucket_rows("t", 0) == rows(0, 6)
+
+
+def test_read_cache_exact_across_time_travel_restore_and_vacuum(tmp_path):
+    store = _write_path_store(str(tmp_path / "s"))
+    st = store.storage
+    early = st.versions()[len(st.versions()) // 2]
+    old = store.at_version(early)
+    _assert_reads_exact(st)  # warm the live cache
+    assert _assert_reads_exact(old.storage) >= 3
+    assert _assert_reads_exact(old.storage) >= 3  # second pass served from memory
+    assert old.storage.read_cache_stats()["hits"] > 0
+    old_content = {
+        (r["document_uri"], r["item_id"]): r["revision"]
+        for b in range(st.n_buckets)
+        for r in old.storage.bucket_rows("content", b)
+    }
+    store.restore_version(early)
+    _assert_reads_exact(st)
+    restored = {
+        (r["document_uri"], r["item_id"]): r["revision"]
+        for b in range(st.n_buckets)
+        for r in st.bucket_rows("content", b)
+    }
+    assert restored == old_content
+    store.put("coll~/after", {"a": 1, "price": 2})
+    store.vacuum(grace_seconds=0, keep_versions=0)
+    _assert_reads_exact(st)
+    assert store.get("coll~/after")[0]["price"] == 2
+
+
+def test_info_reports_read_cache_counters(tmp_path):
+    store = DocumentStore(str(tmp_path / "s"))
+    store.put("c~/x", {"v": 1})
+    store.put("c~/y", {"v": 2})
+    cache = store.info()["read_cache"]
+    assert set(cache) == {"hits", "misses", "rows", "buckets", "cap_rows"}
+    assert cache["hits"] > 0 and cache["rows"] > 0 and cache["buckets"] > 0
+
+
+def test_read_only_views_refuse_external_commits_as_read_only(tmp_path):
+    """The time-travel view and the executor overlay accept the base
+    commit_external_many signature (pin and appends included) and fail
+    as what they are, staging nothing."""
+    import os
+
+    import pyarrow as pa
+
+    from hyper_storage_spark.store.storage import OverlayStorage, SnapshotStorage, Storage
+
+    s = Storage(str(tmp_path / "s"))
+    schema = pa.schema([("v", pa.string())])
+    s.append("t", [{"v": "a"}], schema)
+    v = s.current_version()
+
+    def data_files():
+        return sorted(
+            os.path.join(dp, f) for dp, _, fs in os.walk(os.path.join(s.root, "data")) for f in fs
+        )
+
+    before = data_files()
+    kwargs = dict(drop_tables=["t"], meta={"k": 1}, expected_version=v,
+                  appends={"t": ([{"v": "b"}], schema)})
+    with pytest.raises(RuntimeError, match="read-only"):
+        SnapshotStorage(s, v).commit_external_many({}, **kwargs)
+    with pytest.raises(RuntimeError, match="never writes the manifest"):
+        OverlayStorage(s).commit_external_many({}, **kwargs)
+    assert data_files() == before and s.current_version() == v
+
+
+def test_read_cache_threads_lose_no_update(tmp_path):
+    """Threads on two Storage handles of one root run pinned
+    read-modify-write cycles on three buckets through the caches. A
+    stale or torn cached read would let a pinned commit overwrite a
+    newer bucket and lose a row; each cache's row count must also match
+    what it holds."""
+    import sys
+    import threading
+
+    import pyarrow as pa
+
+    from hyper_storage_spark.store.storage import ManifestConflict, Storage
+
+    schema = pa.schema([("document_uri", pa.string()), ("v", pa.int64())])
+    st = Storage(str(tmp_path / "s"))
+    handles = [st, Storage(st.root)]
+    n_threads, per_thread = 8, 12
+    errors = []
+
+    def worker(t):
+        st = handles[t % 2]
+        try:
+            for i in range(per_thread):
+                while True:
+                    v = st.current_version()
+                    rows = st.bucket_rows("t", t % 3)
+                    rows.append({"document_uri": f"w{t}-{i}", "v": i})
+                    try:
+                        st.commit({("t", t % 3): rows}, {"t": schema}, expected_version=v)
+                        break
+                    except ManifestConflict:
+                        continue
+        except Exception as e:  # reported below, with the thread that raised it
+            errors.append((t, repr(e)))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    for b in range(3):
+        got = sorted(r["document_uri"] for r in st.bucket_rows("t", b))
+        assert got == sorted(
+            f"w{t}-{i}" for t in range(n_threads) if t % 3 == b for i in range(per_thread)
+        )
+        assert _exact(st.bucket_rows("t", b)) == _exact(_parquet_rows(st, "t", b))
+    for h in handles:
+        cache = h._row_cache
+        assert cache.rows == sum(len(rows) for _, rows in cache._entries.values())

@@ -252,8 +252,8 @@ def test_collection_delete_falls_back_to_serial(spark, tmp_path):
 
 def test_serial_fallback_crash_replay_exactly_once(spark, tmp_path):
     """Crash-injection for a collection-delete (one-group) batch: kill the batch AT
-    the manifest flip (after the per-command writes are staged and the
-    feed append landed), then replay. Exactly-once for store state means
+    the manifest flip (after the per-command writes are staged; the
+    feed events ride in that flip), then replay. Exactly-once for store state means
     the replay must not double-apply the already-staged prefix: document
     revisions come out gapless and unduplicated, the collection delete
     lands once, and no command or feed event is lost."""
@@ -2066,6 +2066,7 @@ def test_stream_flip_conflict_restages_through_run_command_stream(spark, tmp_pat
     conflict; run_command_stream re-stages and lands the batch — for a
     bucket-grouped batch and for a collection-delete batch (one
     group)."""
+    from hyper_storage_spark.store.documents import FEED
     from hyper_storage_spark.store.storage import ManifestConflict
 
     for collection_delete in (False, True):
@@ -2113,6 +2114,19 @@ def test_stream_flip_conflict_restages_through_run_command_stream(spark, tmp_pat
                 store.get("gone~/x")
         else:
             assert store.get("gone~/x")[0]["g"] == 1
+        # the feed holds exactly one event per acknowledged (uri,
+        # revision): the refused attempt's events (itemA at 2, itemB at
+        # 3) were never published beside the foreign write's and the
+        # retry's
+        events = sorted(
+            (e["document_uri"], e["revision"], e["item_id"])
+            for e in store.storage.all_rows(FEED)
+        )
+        expected = [("col~", 1, "seed"), ("col~", 2, "foreign"), ("col~", 3, "itemA"),
+                    ("col~", 4, "itemB"), ("gone~", 1, "x")]
+        if collection_delete:
+            expected.append(("gone~", 2, ""))
+        assert events == expected, collection_delete
 
 
 @pytest.mark.parametrize("collection_delete", [False, True])
