@@ -22,9 +22,12 @@ Semantics mirrored from the reference (citations inline):
   static-column mechanics (deleteContent keeps Some(static) live,
   PrimaryWorker.scala:315-328; verified by the model-based random CRUD
   differential in tests/test_store.py);
-- write-ahead transactions + background completion publishing
-  ``feed:*`` events with the revision header, at-least-once,
-  idempotent by revision (BackgroundContentTaskCompleter.scala:75-113);
+- write-ahead transactions + completion publishing ``feed:*`` events
+  with the revision header, at-least-once, idempotent by revision
+  (BackgroundContentTaskCompleter.scala:75-113). The reference
+  completes in the background because Cassandra has no multi-table
+  atomicity; here a write's completion rides in its own manifest flip,
+  and recovery completes only rows a write left incomplete;
 - index lifecycle INDEXING→NORMAL / DELETING with backfill and
   incremental maintenance on every write (IndexContentTaskWorker.scala,
   IndexDefTaskWorker.scala). The reference must track obsolete sort
@@ -449,9 +452,10 @@ class DocumentStore:
     def _submit(self, method: str, path: str, body: Any) -> "_PendingWrite":
         """Single-op front door with GROUP COMMIT: the op is queued and
         whichever caller next holds the writer lock drains the queue and
-        applies every queued op in ONE staged manifest flip (plus one
-        completion flip). Under concurrency, N ops cost ~2 flips instead
-        of ~2N; a lone writer degenerates to the old one-op batch.
+        applies every queued op in ONE staged manifest flip, which also
+        carries their completion (WAL stamps, index rows, feed events).
+        Under concurrency, N ops cost one flip instead of N; a lone
+        writer degenerates to a one-op batch.
         Per-op semantics (revision order, per-op errors) are unchanged —
         ops are staged sequentially exactly as the serial path did."""
         err = self._prepare_op(method, path)
@@ -550,9 +554,9 @@ class DocumentStore:
 
     def _apply_write_batch(self, batch: list) -> None:
         """Stage every op of the batch against cached bucket state, then
-        publish all touched buckets in ONE manifest flip and complete
-        the successful ops' documents in one batched completion flip.
-        Caller holds ``self._lock``."""
+        publish all touched buckets, the batch's WAL rows and (with
+        ``auto_complete``) the successful ops' completion in ONE
+        manifest flip. Caller holds ``self._lock``."""
         try:
             self._apply_write_batch_guarded(batch)
         finally:
@@ -599,10 +603,21 @@ class DocumentStore:
             op.done = True
 
     def _attempt_write_batch(self, batch: list) -> bool:
-        """One LOCKED attempt at the batch. Returns True when the batch
-        reached a terminal state (every op marked done, with result or
-        error); False to request a re-stage after a lost data-flip race
-        — in that case nothing was exposed and nothing is marked."""
+        """One LOCKED attempt at the batch, published in ONE pinned
+        manifest flip. Returns True when the batch reached a terminal
+        state (every op marked done, with result or error); False to
+        request a re-stage after a lost flip race — in that case nothing
+        was exposed and nothing is marked.
+
+        The batch's WAL rows are appended to their buckets as one new
+        file each (``bucket_appends``); a bucket is rewritten only when
+        _stage_wal says so, which also bounds its file list. With
+        ``auto_complete`` the rows are already stamped ``completed_at``
+        and the same flip carries the index rows, a collection delete's
+        index drops and the feed events: the manifest flip is atomic
+        across tables, so data and completion need no second flip.
+        Without it the rows stay incomplete for
+        complete_transactions()/recover()."""
         from .storage import ManifestConflict
 
         # version pinned BEFORE the staging reads (defense-in-depth:
@@ -610,6 +625,8 @@ class DocumentStore:
         # but an unlocked writer path added later would still be
         # caught by the expected_version check instead of erased)
         staged_version = self.storage.current_version()
+        # CONTENT/STATICS: bucket → the bucket's staged rows;
+        # TRANSACTIONS: bucket → this batch's new WAL rows only
         cache: dict = {CONTENT: {}, STATICS: {}, TRANSACTIONS: {}}
         dirty: set = set()
         ok_uris: list[str] = []
@@ -628,60 +645,77 @@ class DocumentStore:
                 uri = split_path(op.path).document_uri
                 if uri not in ok_uris:
                     ok_uris.append(uri)
-        data_committed = False
+        updates = {(table, b): cache[table][b] for (table, b) in dirty}
+        schemas = {CONTENT: CONTENT_SCHEMA, STATICS: STATICS_SCHEMA, TRANSACTIONS: TRANSACTIONS_SCHEMA}
+        drop_tables: list[str] = []
         try:
-            if dirty:
+            wal, rewrite = self._stage_wal(cache[TRANSACTIONS], ok_uris if self.auto_complete else [])
+            feed_rows = (
+                self._stage_completion(
+                    ok_uris, wal, now, updates, schemas, drop_tables, content=cache[CONTENT]
+                )
+                if self.auto_complete
+                else []
+            )
+            for b in rewrite:
+                updates[(TRANSACTIONS, b)] = self._wal_retained(wal[b], now)
+            wal_appends = {(TRANSACTIONS, b): rows for b, rows in wal.items() if b not in rewrite}
+            if updates or wal_appends:
                 self.storage.commit(
-                    {(table, b): cache[table][b] for (table, b) in dirty},
-                    {CONTENT: CONTENT_SCHEMA, STATICS: STATICS_SCHEMA, TRANSACTIONS: TRANSACTIONS_SCHEMA},
+                    updates,
+                    schemas,
+                    drop_tables=drop_tables,
                     expected_version=staged_version,
+                    appends={FEED: (feed_rows, FEED_SCHEMA)} if feed_rows else None,
+                    bucket_appends=wal_appends,
                 )
-            data_committed = True
-            if self.auto_complete and ok_uris:
-                self._complete_uris(ok_uris)
         except ManifestConflict:
-            if not data_committed:
-                return False  # lost the data flip: re-stage, mark nothing
-            # a completion conflict AFTER the durable data commit must
-            # NOT re-stage (double-apply) and must NOT fail the ops (a
-            # caller told "failed" would retry an applied write):
-            # completion lagging a durable write is the reference's own
-            # accepted state (its faulty-publish test) — the WAL
-            # carries it to the next recover(). Ops keep their results.
-        except BaseException as e:
-            if data_committed:
-                # ANY completion failure after the durable data commit
-                # keeps the ops successful — same double-apply
-                # argument; surface the fault to operators without
-                # corrupting caller semantics.
-                import warnings
-
-                warnings.warn(
-                    f"completion failed after durable commit "
-                    f"(recover() will re-drive): {type(e).__name__}: {e}",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                if not isinstance(e, Exception):
-                    # KeyboardInterrupt / SystemExit must propagate —
-                    # but the results ARE durable, so mark every op
-                    # done with its result first
-                    for op in batch:
-                        op.done = True
-                    raise
-            else:
-                # the data flip itself failed: nothing is durable —
-                # every drained op must carry the error (a drained op
-                # is applied by nobody else, so leaving done unset
-                # would hang its caller's wait loop forever)
-                for op in batch:
-                    if op.error is None:
-                        op.error = e
-        # ``done`` flips only now — after the flip(s) — so no waiter
-        # can observe a success that isn't durable yet
+            return False  # lost the flip: re-stage, mark nothing
+        except Exception as e:  # noqa: BLE001
+            # the flip (or its staging) failed: nothing is durable —
+            # every drained op must carry the error (a drained op is
+            # applied by nobody else, so leaving done unset would hang
+            # its caller's wait loop forever)
+            for op in batch:
+                if op.error is None:
+                    op.error = e
+        # ``done`` flips only now — after the flip — so no waiter can
+        # observe a success that isn't durable yet
         for op in batch:
             op.done = True
         return True
+
+    def _stage_wal(self, new_rows: dict, uris: list) -> tuple[dict, set]:
+        """Decide how a batch's new WAL rows (bucket → rows) reach their
+        buckets. Returns (bucket → the rows the flip writes, the buckets
+        it rewrites): a rewritten bucket maps to its current rows plus
+        the new ones, any other bucket to the new rows alone, appended
+        as one file.
+
+        A bucket is rewritten (folded into one file, its completed
+        entries past WAL_KEEP_MS pruned) when its file list already
+        holds WAL_MAX_FILES files, when the storage stages whole buckets
+        anyway (the executor overlay), or when it holds an INCOMPLETE
+        row of one of ``uris`` — left by a crashed writer or an
+        ``auto_complete=False`` handle — which the completion then
+        stamps in the same flip, before the batch's own rows, keeping
+        per-document feed order. So no write path needs maintenance to
+        keep a WAL bucket's files and expired rows bounded."""
+        touched = set(uris)
+        wal: dict[int, list[dict]] = {}
+        rewrite: set[int] = set()
+        for b, new in new_rows.items():
+            full = (
+                self.storage.stages_whole_buckets
+                or len(self.storage.bucket_files(TRANSACTIONS, b)) >= self.WAL_MAX_FILES
+            )
+            old = self.storage.bucket_rows(TRANSACTIONS, b) if full or touched else []
+            if full or any(t["completed_at"] is None and t["document_uri"] in touched for t in old):
+                rewrite.add(b)
+                wal[b] = old + new
+            else:
+                wal[b] = new
+        return wal, rewrite
 
     def _stage_op(
         self, method: str, path: str, body: Any, cache: dict, dirty: set, now: int
@@ -702,8 +736,6 @@ class DocumentStore:
             statics_rows = cache[STATICS][bucket]
         else:
             statics_rows = cache[STATICS][bucket] = self.storage.bucket_rows(STATICS, bucket)
-        if bucket not in cache[TRANSACTIONS]:
-            cache[TRANSACTIONS][bucket] = self.storage.bucket_rows(TRANSACTIONS, bucket)
         static = next((r for r in statics_rows if r["document_uri"] == uri), None)
         existing = next(
             (r for r in content_rows if r["document_uri"] == uri and r["item_id"] == item_id),
@@ -796,10 +828,8 @@ class DocumentStore:
         }
         cache[CONTENT][bucket] = new_content
         cache[STATICS][bucket] = new_statics
-        cache[TRANSACTIONS][bucket].append(txn)
-        dirty.update(
-            {(CONTENT, bucket), (STATICS, bucket), (TRANSACTIONS, bucket)}
-        )
+        cache[TRANSACTIONS].setdefault(bucket, []).append(txn)
+        dirty.update({(CONTENT, bucket), (STATICS, bucket)})
 
         if method == "delete" and not item_id:
             # collection delete drops its indexes (completion path);
@@ -811,10 +841,22 @@ class DocumentStore:
 
     # -- background completion (BackgroundContentTaskCompleter analog) --------
 
-    # completed WAL entries older than this are pruned on the next
+    # completed WAL entries older than this are pruned by any WAL
     # bucket rewrite (the reference's stale-recovery horizon,
     # application.conf:10 — recovery never looks further back)
     WAL_KEEP_MS = 24 * 3600 * 1000
+    # an item write appends its WAL rows as one new file while the
+    # bucket's list holds fewer files than this; the write that finds
+    # it full rewrites the bucket as one file, pruned (see _stage_wal).
+    # Bounds the files a read opens and the manifest's size, at one
+    # whole-bucket rewrite per this many writes to a bucket
+    WAL_MAX_FILES = 8
+
+    def _wal_retained(self, rows: list[dict], now: int) -> list[dict]:
+        """``rows`` without the completed entries past WAL_KEEP_MS
+        (removeCompleteTransactionsFromList analog)."""
+        horizon = now - self.WAL_KEEP_MS
+        return [t for t in rows if t["completed_at"] is None or t["completed_at"] >= horizon]
 
     def complete_transactions(self, uri: str) -> int:
         """Complete incomplete WAL entries for a document: maintain
@@ -826,13 +868,15 @@ class DocumentStore:
         return self._complete_uris([uri])
 
     def _complete_uris(self, uris: list) -> int:
-        """Batched completion: gather every named document's incomplete
-        WAL entries, then publish ALL their feed events in one append
-        and all index/WAL updates in ONE manifest flip — the group-
-        commit tail (per-uri completion would pay 2 flips per document).
-        Per-document event order is preserved (entries sort by revision
-        within a uri); cross-document feed order is unconstrained, as in
-        the serial path.
+        """Batched completion of rows a write did NOT complete in its
+        own flip (``auto_complete=False`` handles, crashed or foreign
+        writers; recover() and complete_transactions() call this):
+        gather every named document's incomplete WAL entries, then
+        publish ALL their feed events and all index/WAL updates in ONE
+        manifest flip. Each WAL bucket holding a stamped row is
+        rewritten, which folds its appended files into one. Per-document
+        event order is preserved (entries sort by revision within a
+        uri); cross-document feed order is unconstrained.
 
         Cross-process safe (r7): if a concurrent process wins the flip
         race, the whole computation re-runs against fresh reads —
@@ -865,78 +909,16 @@ class DocumentStore:
     def _complete_uris_once(self, uris: list) -> int:
         with self._lock:
             staged_version = self.storage.current_version()
-            feed_rows: list[dict] = []  # append-only: new events only
             now = _now_ms()
+            wal = {b: self.storage.bucket_rows(TRANSACTIONS, b) for b in {self._bucket(u) for u in uris}}
             updates: dict = {}
             drop_tables: list[str] = []
-            schemas = {
-                TRANSACTIONS: TRANSACTIONS_SCHEMA,
-                INDEX_DEFS: INDEX_DEFS_SCHEMA,
-            }
-            # shared caches so multiple uris in one bucket (or multiple
-            # collection deletes touching INDEX_DEFS) compose instead of
-            # clobbering each other's rewrites
-            txn_cache: dict[int, list] = {}
-            defs_rows: Optional[list] = None
-            total = 0
-            seen: set = set()
-            for uri in uris:
-                if uri in seen:
-                    continue
-                seen.add(uri)
-                bucket = self._bucket(uri)
-                if bucket not in txn_cache:
-                    txn_cache[bucket] = self.storage.bucket_rows(TRANSACTIONS, bucket)
-                txn_rows = txn_cache[bucket]
-                incomplete = sorted(
-                    (t for t in txn_rows if t["document_uri"] == uri and t["completed_at"] is None),
-                    key=lambda t: t["revision"],
-                )
-                if not incomplete:
-                    continue
-                collection_deleted = any(
-                    t["method"] == "feed:delete" and t["item_id"] == "" for t in incomplete
-                )
-                if collection_deleted and is_collection_uri(uri):
-                    # collection delete drops its indexes
-                    # (BackgroundContentTaskCompleter.scala:128-139)
-                    for idef in self.index_defs(uri):
-                        drop_tables.append(idef.storage_table)
-                    if defs_rows is None:
-                        defs_rows = self.storage.bucket_rows(INDEX_DEFS, 0)
-                    defs_rows = [r for r in defs_rows if r["document_uri"] != uri]
-                    updates[(INDEX_DEFS, 0)] = defs_rows
-                else:
-                    self._refresh_indexes(uri, [t["item_id"] for t in incomplete], updates)
-
-                for t in incomplete:
-                    feed_rows.append(
-                        {
-                            "uuid": t["uuid"],
-                            "document_uri": uri,
-                            "item_id": t["item_id"],
-                            "revision": t["revision"],
-                            "method": t["method"],
-                            "body": t["body"],
-                            "ts": now,
-                        }
-                    )
-                    t["completed_at"] = now
-                for idef in self.index_defs(uri):
-                    schemas[idef.storage_table] = _index_schema(idef.sort_by)
-                total += len(incomplete)
-
-            if total == 0:
+            schemas = {TRANSACTIONS: TRANSACTIONS_SCHEMA}
+            feed_rows = self._stage_completion(uris, wal, now, updates, schemas, drop_tables)
+            if not feed_rows:
                 return 0
-            # prune old completed entries so the WAL buckets stay
-            # bounded (removeCompleteTransactionsFromList analog)
-            horizon = now - self.WAL_KEEP_MS
-            for bucket, txn_rows in txn_cache.items():
-                updates[(TRANSACTIONS, bucket)] = [
-                    t
-                    for t in txn_rows
-                    if t["completed_at"] is None or t["completed_at"] >= horizon
-                ]
+            for b in {self._bucket(e["document_uri"]) for e in feed_rows}:
+                updates[(TRANSACTIONS, b)] = self._wal_retained(wal[b], now)
             # the feed events ride IN the same flip as the completion
             # stamps/index updates (r7): atomic for manifest readers —
             # a crash can no longer publish without stamping or vice
@@ -947,9 +929,65 @@ class DocumentStore:
                 schemas,
                 drop_tables=drop_tables,
                 expected_version=staged_version,
-                appends={FEED: (feed_rows, FEED_SCHEMA)} if feed_rows else None,
+                appends={FEED: (feed_rows, FEED_SCHEMA)},
             )
-            return total
+            return len(feed_rows)
+
+    def _stage_completion(
+        self, uris: list, wal: dict, now: int, updates: dict, schemas: dict,
+        drop_tables: list, content: Optional[dict] = None,
+    ) -> list[dict]:
+        """Stage the completion of every incomplete row of ``uris`` held
+        in ``wal`` (bucket → WAL rows; each completed row is stamped
+        ``completed_at = now`` in place) into the caller's flip: index
+        rows for the touched items or, for a collection delete, its
+        index tables dropped and its INDEX_DEFS rows removed
+        (BackgroundContentTaskCompleter.scala:128-139). ``content``
+        (bucket → staged content rows) spares the index refresh a
+        re-read. Returns the feed events, each document's in revision
+        order."""
+        feed_rows: list[dict] = []
+        for uri in dict.fromkeys(uris):
+            bucket = self._bucket(uri)
+            incomplete = sorted(
+                (t for t in wal.get(bucket, ()) if t["document_uri"] == uri and t["completed_at"] is None),
+                key=lambda t: t["revision"],
+            )
+            if not incomplete:
+                continue
+            idefs = self.index_defs(uri)
+            if is_collection_uri(uri) and any(
+                t["method"] == "feed:delete" and t["item_id"] == "" for t in incomplete
+            ):
+                drop_tables.extend(idef.storage_table for idef in idefs)
+                defs = updates.get((INDEX_DEFS, 0))
+                if defs is None:
+                    defs = self.storage.bucket_rows(INDEX_DEFS, 0)
+                updates[(INDEX_DEFS, 0)] = [r for r in defs if r["document_uri"] != uri]
+                schemas[INDEX_DEFS] = INDEX_DEFS_SCHEMA
+            else:
+                self._refresh_indexes(
+                    uri,
+                    [t["item_id"] for t in incomplete],
+                    updates,
+                    None if content is None else content.get(bucket),
+                )
+            for idef in idefs:
+                schemas[idef.storage_table] = _index_schema(idef.sort_by)
+            for t in incomplete:
+                feed_rows.append(
+                    {
+                        "uuid": t["uuid"],
+                        "document_uri": uri,
+                        "item_id": t["item_id"],
+                        "revision": t["revision"],
+                        "method": t["method"],
+                        "body": t["body"],
+                        "ts": now,
+                    }
+                )
+                t["completed_at"] = now
+        return feed_rows
 
     def recover(self, scan_all: bool = False) -> int:
         """Re-drive incomplete transactions (RecoveryWorker analog).
@@ -1084,13 +1122,19 @@ class DocumentStore:
             row[name] = _sort_value(item, value)
         return row
 
-    def _refresh_indexes(self, uri: str, item_ids: list[str], updates: dict) -> None:
+    def _refresh_indexes(
+        self, uri: str, item_ids: list[str], updates: dict, content_rows: Optional[list] = None
+    ) -> None:
         """Delete-then-insert maintenance for the touched items across
-        all of the document's indexes (L17/L18 subsumed by rewrite)."""
+        all of the document's indexes (L17/L18 subsumed by rewrite).
+        ``content_rows`` is the document's content bucket as the caller
+        staged it; None reads it."""
         idefs = [d for d in self.index_defs(uri) if d.status != STATUS_DELETING]
         if not idefs:
             return
-        content = {r["item_id"]: r for r in self._content_bucket(uri) if r["document_uri"] == uri}
+        if content_rows is None:
+            content_rows = self._content_bucket(uri)
+        content = {r["item_id"]: r for r in content_rows if r["document_uri"] == uri}
         touched = set(item_ids)
         for idef in idefs:
             rows = self.storage.bucket_rows(idef.storage_table, 0)
@@ -2380,7 +2424,9 @@ class DocumentStore:
         """Operational snapshot of the store: manifest version, retained
         time-travel versions, per-table file/byte/bucket counts — the
         numbers an operator needs to size vacuum/compaction and to
-        watch growth — and this handle's decoded-row cache counters
+        watch growth; ``bucket_segments`` counts the files in bucket
+        lists beyond one per bucket, which for the WAL is the backlog
+        compact_appends folds — and this handle's decoded-row cache counters
         (``read_cache``: hits, misses, rows and buckets held, row cap).
         Reads only the manifest + file metadata (no data decode), so it
         is safe to poll."""
@@ -2402,6 +2448,11 @@ class DocumentStore:
                 "bytes": size,
                 "buckets": sum(1 for k in entry if not k.startswith("a")),
                 "append_segments": sum(1 for k in entry if k.startswith("a")),
+                # files in bucket lists beyond one per bucket: for the
+                # WAL, the appended files compact_appends will fold
+                "bucket_segments": sum(
+                    len(v) - 1 for k, v in entry.items() if not k.startswith("a") and isinstance(v, list) and v
+                ),
             }
         return {
             "root": self.storage.root,
@@ -2517,9 +2568,18 @@ class DocumentStore:
         """Compact every append-only table holding ≥ ``min_files``
         append files (the feed and dead-letter logs grow one parquet
         per streaming batch) into one file each; returns
-        {table: files merged}. Superseded files are reclaimed by the
-        next :meth:`vacuum`. See Storage.compact_append_table for the
-        feed-readStream re-delivery caveat."""
+        {table: files merged}. See Storage.compact_append_table for the
+        feed-readStream re-delivery caveat.
+
+        It also folds the write-ahead log: every WAL bucket that item
+        writes grew into a list of files becomes one file again, its
+        completed entries older than WAL_KEEP_MS dropped. Item writes
+        fold a bucket on their own once its list holds WAL_MAX_FILES
+        files (see _stage_wal), so this only clears the backlog early;
+        single-file buckets are not read. The fold is one pinned flip
+        and is not counted in the returned dict; ``info()``'s
+        ``bucket_segments`` shows the backlog it clears. Superseded
+        files are reclaimed by the next :meth:`vacuum`."""
         with self._lock:
             out: dict[str, int] = {}
             for table, entry in self.storage._read_manifest()["tables"].items():
@@ -2527,7 +2587,24 @@ class DocumentStore:
                     merged = self.storage.compact_append_table(table)
                     if merged:
                         out[table] = merged
+            self._fold_wal()
             return out
+
+    def _fold_wal(self) -> None:
+        def fold():
+            v0 = self.storage.current_version()
+            now = _now_ms()
+            updates = {
+                (TRANSACTIONS, int(key)): self._wal_retained(
+                    self.storage.bucket_rows(TRANSACTIONS, int(key)), now
+                )
+                for key, rel in self.storage._read_manifest()["tables"].get(TRANSACTIONS, {}).items()
+                if isinstance(rel, list) and len(rel) > 1
+            }
+            if updates:
+                self.storage.commit(updates, {TRANSACTIONS: TRANSACTIONS_SCHEMA}, expected_version=v0)
+
+        self._admin_commit(fold)
 
     def truncate_feed(self, older_than_ms: int) -> int:
         """Feed retention — the embedded log's Kafka-topic-retention

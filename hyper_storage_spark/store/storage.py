@@ -9,6 +9,14 @@ atomically (``os.replace``), so readers always see a consistent
 snapshot — the same ACID role Delta's transaction log would play, with
 zero dependencies.
 
+A bucket is one file or a LIST of files read in order. Bulk paths
+register lists, and a commit's ``bucket_appends`` adds one file to the
+end of a bucket's list instead of rewriting the bucket: the item write
+path appends its write-ahead-log rows that way, so most writes cost
+their own WAL rows, not the bucket's. The document layer folds such a
+list back into one file when it reaches a fixed length
+(``DocumentStore.WAL_MAX_FILES``) and in ``compact_appends``.
+
 Scale note: bucket count is configurable (default 16 for local tests,
 1024 at cluster scale to mirror the reference's shard constant); Spark
 reads address the bucket *files* directly, so a single-document lookup
@@ -26,8 +34,10 @@ the file exists. Every read still reads the manifest first and serves
 from memory only when the current manifest names exactly the cached
 paths: a foreign process's commit, a rollback or a vacuum changes the
 paths, never a path's content, so a cached entry can be missed but
-never be stale. Filtered (point) reads skip the cache and keep parquet
-row-group pruning.
+never be stale. A commit that appends a file to a bucket extends the
+bucket's entry only when the entry was cached from exactly the
+pre-flip file list; otherwise it drops the entry. Filtered (point)
+reads skip the cache and keep parquet row-group pruning.
 """
 
 from __future__ import annotations
@@ -78,8 +88,11 @@ def write_bucket_file(rows: list[dict], schema: pa.Schema, abspath: str) -> list
     row-group pruning selective hold for every bucket on disk. Returns
     the rows in the order they were written."""
     key = [k for k in ("document_uri", "item_id") if k in schema.names]
-    if key:
-        rows = sorted(rows, key=lambda r: tuple(r.get(k) or "" for k in key))
+    if len(key) == 2:
+        rows = sorted(rows, key=lambda r: (r.get("document_uri") or "", r.get("item_id") or ""))
+    elif key:
+        (k,) = key
+        rows = sorted(rows, key=lambda r: r.get(k) or "")
     os.makedirs(os.path.dirname(abspath), exist_ok=True)
     pq.write_table(pa.Table.from_pylist(rows, schema=schema), abspath, row_group_size=ROW_GROUP_SIZE)
     return rows
@@ -191,6 +204,22 @@ class _RowCache:
                 _, (_, evicted) = self._entries.popitem(last=False)
                 self.rows -= len(evicted)
 
+    def extend(
+        self, key: tuple[str, int], old_rels: tuple[str, ...], rels: tuple[str, ...], rows: list[dict]
+    ) -> None:
+        """A flip added the file holding ``rows`` to a bucket whose file
+        list was ``old_rels`` and now is ``rels``. An entry cached from
+        exactly ``old_rels`` (or an empty bucket) grows by the new rows;
+        any other entry is dropped, so the next read goes to parquet."""
+        with self._lock:
+            entry = self._entries.get(key)
+            if old_rels and (entry is None or entry[0] != old_rels):
+                if entry is not None:
+                    del self._entries[key]
+                    self.rows -= len(entry[1])
+                return
+        self.put(key, rels, (entry[1] if old_rels else []) + rows)
+
     def stats(self) -> dict:
         with self._lock:
             return {
@@ -222,6 +251,11 @@ class Storage:
     # and keeps a whole-store scan such as recover(scan_all=True) from
     # pinning every bucket of a large store in memory
     READ_CACHE_ROWS = 100_000
+
+    # True when a commit stages a ``bucket_appends`` bucket as a whole
+    # rewrite anyway (the executor overlay): a caller that would rather
+    # prune the bucket while it is rewritten hands it the whole bucket
+    stages_whole_buckets = False
 
     def __init__(self, root: str, n_buckets: Optional[int] = None):
         self.root = root
@@ -567,6 +601,7 @@ class Storage:
         drop_tables: Iterable[str] = (),
         expected_version: Optional[int] = None,
         appends: Optional[dict[str, tuple[list[dict], pa.Schema]]] = None,
+        bucket_appends: Optional[dict[tuple[str, int], list[dict]]] = None,
     ) -> int:
         """Atomically replace the given (table, bucket) datasets (and/or
         drop whole tables). One manifest flip = one commit.
@@ -586,7 +621,14 @@ class Storage:
         marks. The file is written before the flip, so directory-based
         readers (the streaming file-source face) may glimpse it even if
         the flip then loses — the documented at-least-once floor for
-        that face; manifest-based readers get exact atomicity."""
+        that face; manifest-based readers get exact atomicity.
+
+        ``bucket_appends`` adds rows to a bucket without rewriting it:
+        each (table, bucket) gets ONE new file (schema ``schemas[table]``)
+        at the end of its file list, in the same flip. This is how the
+        write-ahead log grows by a write's own rows; the bucket's older
+        files stay as they are until a caller rewrites the bucket
+        through ``updates`` (which replaces the whole list)."""
         manifest = self._read_manifest()
         if expected_version is not None and manifest["version"] != expected_version:
             raise ManifestConflict(
@@ -596,8 +638,7 @@ class Storage:
         version = manifest["version"] + 1
         for table in drop_tables:  # drops first: drop-and-recreate keeps the recreate
             manifest["tables"].pop(table, None)
-        written: dict[tuple[str, int], tuple[str, list[dict]]] = {}
-        for (table, bucket), rows in updates.items():
+        def write(table: str, bucket: int, rows: list[dict]) -> tuple[str, list[dict]]:
             # uuid suffix: two PROCESSES racing at the same version must
             # not write the same path — the CAS flip rejects the loser,
             # but only if the winner's file wasn't overwritten first
@@ -607,8 +648,20 @@ class Storage:
                 f"b{bucket:04d}-v{version:08d}-{uuid.uuid4().hex[:6]}.parquet",
             )
             rows = write_bucket_file(rows, schemas[table], os.path.join(self.root, rel))
-            written[(table, bucket)] = (rel, _rows_as_read(rows, schemas[table]))
-            manifest["tables"].setdefault(table, {})[str(bucket)] = rel
+            return rel, _rows_as_read(rows, schemas[table])
+
+        written: dict[tuple[str, int], tuple[str, list[dict]]] = {}
+        for (table, bucket), rows in updates.items():
+            written[(table, bucket)] = write(table, bucket, rows)
+            manifest["tables"].setdefault(table, {})[str(bucket)] = written[(table, bucket)][0]
+        added: dict[tuple[str, int], tuple[tuple[str, ...], str, list[dict]]] = {}
+        for (table, bucket), rows in (bucket_appends or {}).items():
+            entry = manifest["tables"].setdefault(table, {})
+            cur = entry.get(str(bucket))
+            old = () if cur is None else tuple(cur) if isinstance(cur, list) else (cur,)
+            rel, rows = write(table, bucket, rows)
+            entry[str(bucket)] = [*old, rel]
+            added[(table, bucket)] = (old, rel, rows)
         for table, (rows, schema) in (appends or {}).items():
             manifest["tables"].setdefault(table, {})[f"a{version}"] = self._stage_append(
                 table, rows, schema
@@ -619,6 +672,8 @@ class Storage:
         # never named by any manifest
         for key, (rel, rows) in written.items():
             self._row_cache.put(key, (rel,), rows)
+        for key, (old, rel, rows) in added.items():
+            self._row_cache.extend(key, old, (*old, rel), rows)
         return version
 
     def _stage_append(self, table: str, rows: list[dict], schema: pa.Schema) -> str:
@@ -834,7 +889,10 @@ class SnapshotStorage(Storage):
     def write_lock(self):
         raise RuntimeError("SnapshotStorage is read-only (time-travel view)")
 
-    def commit(self, updates, schemas, drop_tables=(), expected_version=None, appends=None):
+    def commit(
+        self, updates, schemas, drop_tables=(), expected_version=None, appends=None,
+        bucket_appends=None,
+    ):
         raise RuntimeError("SnapshotStorage is read-only (time-travel view)")
 
     def commit_external_many(
@@ -865,6 +923,8 @@ class OverlayStorage(Storage):
     drains the overlay into staged parquet files, and the driver
     publishes every staged file with one atomic
     :meth:`Storage.commit_external_many` flip."""
+
+    stages_whole_buckets = True
 
     def __init__(self, base: Storage):
         # deliberately NOT calling super().__init__ — no manifest I/O
@@ -926,7 +986,10 @@ class OverlayStorage(Storage):
 
         return contextlib.nullcontext()
 
-    def commit(self, updates, schemas, drop_tables=(), expected_version=None, appends=None):
+    def commit(
+        self, updates, schemas, drop_tables=(), expected_version=None, appends=None,
+        bucket_appends=None,
+    ):
         for t in drop_tables:
             self.dropped.add(t)
             self.ever_dropped.add(t)
@@ -934,6 +997,11 @@ class OverlayStorage(Storage):
         for key, rows in updates.items():
             self.overlay[key] = [dict(r) for r in rows]
             self.dropped.discard(key[0])  # a re-created table is live again
+        # an appended bucket is staged whole, like any other: the
+        # driver's flip registers one file per staged bucket
+        for key, rows in (bucket_appends or {}).items():
+            self.overlay[key] = self.bucket_rows(*key) + [dict(r) for r in rows]
+            self.dropped.discard(key[0])
         self.schemas.update(schemas)
         for table, (rows, schema) in (appends or {}).items():
             self.appended.setdefault(table, []).extend(dict(r) for r in rows)

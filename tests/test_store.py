@@ -222,13 +222,62 @@ def test_item_get_sees_collection_tombstone(store):
 
 
 def test_wal_pruning_bounds_bucket(store):
-    store.WAL_KEEP_MS = 0  # prune everything completed immediately
-    for i in range(10):
+    """Item writes append their WAL rows while the bucket holds fewer
+    than WAL_MAX_FILES files; compact_appends folds such a bucket into
+    one file early and drops the completed rows past WAL_KEEP_MS."""
+    import time as _time
+
+    n = store.WAL_MAX_FILES - 1
+    for i in range(n):
         store.put("pruned", {"n": i})
-    b = store.storage.bucket_rows("transactions", store._bucket("pruned"))
-    # only the entry completed in the newest commit may linger
-    assert len([t for t in b if t["completed_at"] is not None]) <= 1
+    b = store._bucket("pruned")
+    assert len(store.storage.bucket_files("transactions", b)) == n
+    assert len(store.storage.bucket_rows("transactions", b)) == n
+    store.WAL_KEEP_MS = 0  # every completed entry is past the horizon
+    _time.sleep(0.005)  # ... once the clock has moved past its stamp
+    store.compact_appends()
+    assert len(store.storage.bucket_files("transactions", b)) == 1
+    assert [t for t in store.storage.bucket_rows("transactions", b) if t["completed_at"]] == []
     assert store.recover() == 0
+
+
+def test_wal_stays_bounded_without_maintenance(tmp_path):
+    """With no compact_appends ever, item writes keep every WAL bucket
+    at most WAL_MAX_FILES files: the write that finds the list full
+    rewrites it as one file and prunes the completed rows past
+    WAL_KEEP_MS. Incomplete rows (an auto_complete=False handle's)
+    survive the prune and stay recoverable in revision order."""
+    import time as _time
+
+    from hyper_storage_spark.store.documents import TRANSACTIONS
+
+    root = str(tmp_path / "s")
+    store = DocumentStore(root)
+    store.WAL_KEEP_MS = 0  # a row is expired once the clock moves past its stamp
+    k = store.WAL_MAX_FILES
+    b = store._bucket("grow")
+    lengths = []
+    for i in range(3 * k + 2):
+        store.put("grow", {"n": i})
+        files = len(store.storage.bucket_files(TRANSACTIONS, b))
+        rows = store.storage.bucket_rows(TRANSACTIONS, b)
+        lengths.append(files)
+        assert files <= k and len(rows) <= k, (i, files, len(rows))
+        # every completed row left is younger than the last fold
+        assert min(t["revision"] for t in rows) > i + 1 - k
+        _time.sleep(0.002)
+    assert lengths[: k + 2] == [*range(1, k + 1), 1, 2]  # the (k+1)th write folded
+    assert store.get("grow") == ({"n": 3 * k + 1}, 3 * k + 2)
+
+    lazy = DocumentStore(root, auto_complete=False)
+    for i in range(2 * k):
+        lazy.put("lazy", {"n": i})
+        assert len(lazy.storage.bucket_files(TRANSACTIONS, lazy._bucket("lazy"))) <= k
+    held = [t for t in lazy.storage.bucket_rows(TRANSACTIONS, lazy._bucket("lazy")) if t["document_uri"] == "lazy"]
+    assert sorted(t["revision"] for t in held) == list(range(1, 2 * k + 1))
+    assert all(t["completed_at"] is None for t in held)
+    assert store.recover(scan_all=True) == 2 * k
+    assert [e["revision"] for e in store.feed_events() if e["document_uri"] == "lazy"] == list(range(1, 2 * k + 1))
 
 
 def test_point_read_pushes_filters_into_scan(store):
@@ -1453,9 +1502,9 @@ def test_group_commit_concurrent_writers_serialize_correctly(spark, tmp_path):
 
 def test_write_batch_one_flip_serial_semantics(spark, tmp_path):
     """write_batch applies ops in order against the evolving state in
-    ONE staged flip (+1 feed append +1 completion flip): later ops see
-    earlier ones, failed ops report their exception without aborting
-    the rest, and the manifest moves a constant number of versions."""
+    ONE staged flip that also carries the feed events and completion:
+    later ops see earlier ones, failed ops report their exception
+    without aborting the rest, and the manifest moves one version."""
     store = DocumentStore(str(tmp_path / "wb"), spark=spark)
     v0 = store.storage._read_manifest()["version"]
     out = store.write_batch(
@@ -1477,8 +1526,7 @@ def test_write_batch_one_flip_serial_semantics(spark, tmp_path):
     with pytest.raises(NotFoundError):
         store.get("wb~/a")
     assert store.get("wb~/b")[0] == {"x": 9, "id": "b"}
-    # one staged data flip + one feed append + one completion flip
-    assert store.storage._read_manifest()["version"] - v0 <= 3
+    assert store.storage._read_manifest()["version"] - v0 == 1
     evs = [(e["method"], e["revision"]) for e in store.feed_events()]
     assert evs == [
         ("feed:put", 1),
@@ -2567,6 +2615,49 @@ def test_read_cache_lost_cas_race_caches_nothing(tmp_path, monkeypatch):
     assert loser.read_cache_stats()["buckets"] == 1
     assert loser.bucket_rows("t", 1) == [{"document_uri": "w", "v": 3}]
 
+    # an item write's single flip: a flip that lands between its staged
+    # files and its CAS makes it lose, and the lost flip registers no
+    # feed event, WAL row or index row; the re-stage registers each once
+    import os
+
+    from hyper_storage_spark.plans import SortItem
+    from hyper_storage_spark.store.documents import FEED, TRANSACTIONS
+
+    store = DocumentStore(str(tmp_path / "d"))
+    store.put("c~/x", {"a": 1})
+    store.create_index("c~", "by_a", [SortItem("a", "decimal", "asc")], None)
+    idef = store.index_defs("c~")[0]
+
+    def state():
+        return (
+            sorted((e["item_id"], e["revision"]) for e in store.storage.all_rows(FEED)),
+            sorted((t["item_id"], t["revision"]) for t in store.storage.all_rows(TRANSACTIONS)),
+            sorted((r["item_id"], r["revision"]) for r in store.storage.bucket_rows(idef.storage_table, 0)),
+        )
+
+    races = {"left": 0}
+
+    def race_on_wal_file(rows, sch, abspath):
+        out = real_write(rows, sch, abspath)
+        if races["left"] and f"{os.sep}{TRANSACTIONS}{os.sep}" in abspath:
+            races["left"] -= 1
+            store.storage.set_meta("foreign", races["left"])  # same thread: re-enters the lock
+        return out
+
+    monkeypatch.setattr(storage_mod, "write_bucket_file", race_on_wal_file)
+    before = state()
+    races["left"] = 10**6
+    monkeypatch.setattr(store, "WRITE_CAS_RETRIES", 3)
+    with pytest.raises(ManifestConflict):
+        store.put("c~/y", {"a": 2})
+    assert state() == before
+    races["left"] = 1
+    assert store.put("c~/y", {"a": 2}) == (True, 2)
+    feed, wal, index = state()
+    assert feed == sorted(before[0] + [("y", 2)])
+    assert wal == sorted(before[1] + [("y", 2)])
+    assert index == sorted(before[2] + [("y", 2)])
+
 
 def test_read_cache_lru_cap_evicts(tmp_path, monkeypatch):
     import pyarrow as pa
@@ -2719,3 +2810,201 @@ def test_read_cache_threads_lose_no_update(tmp_path):
     for h in handles:
         cache = h._row_cache
         assert cache.rows == sum(len(rows) for _, rows in cache._entries.values())
+
+
+# -- one flip per item write, appended WAL rows --------------------------------
+
+
+def _rows_written_by_table(monkeypatch, write):
+    """Rows each table's files got during ``write()``, as passed to
+    the shared bucket-file writer."""
+    import os
+
+    from hyper_storage_spark.store import storage as storage_mod
+
+    real = storage_mod.write_bucket_file
+    seen: dict = {}
+
+    def spy(rows, schema, abspath):
+        table = os.path.basename(os.path.dirname(abspath))
+        seen[table] = seen.get(table, 0) + len(rows)
+        return real(rows, schema, abspath)
+
+    monkeypatch.setattr(storage_mod, "write_bucket_file", spy)
+    try:
+        write()
+    finally:
+        monkeypatch.setattr(storage_mod, "write_bucket_file", real)
+    return seen
+
+
+def test_item_write_cost_does_not_grow_with_the_wal(tmp_path, monkeypatch):
+    """WAL growth regression (a count, not a timing): after 2,000 prior
+    writes to one bucket (write_batch ops, no maintenance) the next item
+    write hands the writer exactly one WAL row, and the same total row
+    count as after 10 prior writes."""
+    from hyper_storage_spark.plans import SortItem
+
+    def rows_written(prior: int) -> dict:
+        store = DocumentStore(str(tmp_path / f"s{prior}"))
+        store.put("c~/x", {"a": 0})
+        store.create_index("c~", "by_a", [SortItem("a", "decimal", "asc")], None)
+        for k in range(0, prior, 500):
+            out = store.write_batch([("patch", "c~/x", {"a": i}) for i in range(k, min(prior, k + 500))])
+            assert not any(isinstance(o, BaseException) for o in out)
+        assert len(store.storage.bucket_rows("transactions", store._bucket("c~"))) == prior + 1
+        # the next write appends: the list is short of WAL_MAX_FILES
+        # (the write that finds it full folds it, see
+        # test_wal_stays_bounded_without_maintenance)
+        assert len(store.storage.bucket_files("transactions", store._bucket("c~"))) < store.WAL_MAX_FILES
+        return _rows_written_by_table(monkeypatch, lambda: store.patch("c~/x", {"a": -1}))
+
+    few, many = rows_written(10), rows_written(2000)
+    assert many["transactions"] == few["transactions"] == 1
+    assert sum(many.values()) == sum(few.values()), (few, many)
+
+
+def test_item_write_is_one_flip_with_completed_wal_rows(tmp_path):
+    store = DocumentStore(str(tmp_path / "s"))
+    store.put("c~/a", {"v": 1})
+    v = store.storage.current_version()
+    _, _, tid = store.put_txn("c~/b", {"v": 2})
+    assert store.storage.current_version() == v + 1
+    assert store.get_transaction(tid)["completed"] is True
+    assert len(store.storage.bucket_files("transactions", store._bucket("c~"))) == 2
+    assert [(e["item_id"], e["revision"]) for e in store.feed_events()] == [("a", 1), ("b", 2)]
+
+
+def test_incomplete_rows_of_a_lazy_handle_complete_in_the_next_flip(tmp_path):
+    """An auto_complete=False handle leaves incomplete appended WAL
+    rows. The next write by an auto_complete=True handle to the same
+    document publishes the older revision first, stamps both rows in
+    its one flip and folds the WAL bucket into one file."""
+    from hyper_storage_spark.plans import SortItem
+    from hyper_storage_spark.store.documents import FEED, TRANSACTIONS
+
+    root = str(tmp_path / "s")
+    eager = DocumentStore(root)
+    eager.put("c~/a", {"n": 1})
+    eager.create_index("c~", "by_n", [SortItem("n", "decimal", "asc")], None)
+    lazy = DocumentStore(root, auto_complete=False)
+    lazy.put("c~/b", {"n": 2})
+    b = eager._bucket("c~")
+    assert len(eager.storage.bucket_files(TRANSACTIONS, b)) == 2
+    assert [t["revision"] for t in eager.storage.bucket_rows(TRANSACTIONS, b) if t["completed_at"] is None] == [2]
+    feed_before = len(eager.storage.all_rows(FEED))
+
+    v = eager.storage.current_version()
+    assert eager.put("c~/c", {"n": 3}) == (True, 3)
+    assert eager.storage.current_version() == v + 1
+    published = eager.storage.all_rows(FEED)[feed_before:]  # publication order
+    assert [(e["item_id"], e["revision"]) for e in published] == [("b", 2), ("c", 3)]
+    wal = eager.storage.bucket_rows(TRANSACTIONS, b)
+    assert len(eager.storage.bucket_files(TRANSACTIONS, b)) == 1
+    assert sorted(t["revision"] for t in wal) == [1, 2, 3]
+    assert all(t["completed_at"] is not None for t in wal)
+    idx = eager.storage.bucket_rows(eager.index_defs("c~")[0].storage_table, 0)
+    assert sorted(r["item_id"] for r in idx) == ["a", "b", "c"]
+    assert eager.recover(scan_all=True) == 0
+
+
+def test_get_transaction_reads_a_multi_file_wal_bucket(tmp_path):
+    root = str(tmp_path / "s")
+    store = DocumentStore(root)
+    ids = [store.put_txn("doc", {"n": i})[2] for i in range(3)]
+    ids.append(DocumentStore(root, auto_complete=False).put_txn("doc", {"n": 3})[2])
+    b = store._bucket("doc")
+
+    def status():
+        return [(store.get_transaction(t)["revision"], store.get_transaction(t)["completed"]) for t in ids]
+
+    assert len(store.storage.bucket_files("transactions", b)) == 4
+    assert status() == [(1, True), (2, True), (3, True), (4, False)]
+    store.compact_appends()
+    assert len(store.storage.bucket_files("transactions", b)) == 1
+    assert status() == [(1, True), (2, True), (3, True), (4, False)]
+    assert store.recover() == 1
+    assert status()[-1] == (4, True)
+
+
+def test_info_reports_bucket_segments(tmp_path):
+    import json as _json
+    import os
+    import subprocess
+    import sys
+
+    root = str(tmp_path / "s")
+    store = DocumentStore(root)
+    for i in range(4):
+        store.put("doc", {"n": i})
+    assert store.info()["tables"]["transactions"]["bucket_segments"] == 3
+    assert store.info()["tables"]["content"]["bucket_segments"] == 0
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    p = subprocess.run(
+        [sys.executable, "tools/store_admin.py", root, "info"],
+        capture_output=True, text=True, cwd=repo, timeout=120,
+    )
+    assert p.returncode == 0, p.stderr[:400]
+    assert _json.loads(p.stdout)["tables"]["transactions"]["bucket_segments"] == 3
+    store.compact_appends()
+    assert store.info()["tables"]["transactions"]["bucket_segments"] == 0
+
+
+def test_bucket_appends_add_one_file_and_keep_reads_exact(tmp_path):
+    """Storage.commit(bucket_appends=) adds one file to a bucket's list.
+    The read cache grows an entry cached from the pre-flip list, drops
+    one cached from another list, and reads stay equal to parquet; the
+    executor overlay stages the whole bucket and the time-travel view
+    refuses."""
+    import pyarrow as pa
+
+    from hyper_storage_spark.store.storage import OverlayStorage, Storage
+
+    schema = pa.schema([("document_uri", pa.string()), ("v", pa.int64())])
+    st = Storage(str(tmp_path / "s"))
+    st.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"document_uri": "b", "v": 1}]})
+    st.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"document_uri": "a", "v": 2}]})
+    assert len(st.bucket_files("t", 0)) == 2
+    hits = st.read_cache_stats()["hits"]
+    assert st.bucket_rows("t", 0) == [{"document_uri": "b", "v": 1}, {"document_uri": "a", "v": 2}]
+    assert st.read_cache_stats()["hits"] == hits + 1  # the extended entry
+    assert _exact(st.bucket_rows("t", 0)) == _exact(_parquet_rows(st, "t", 0))
+
+    other = Storage(st.root)
+    other.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"document_uri": "c", "v": 3}]})
+    v = st.current_version()
+    st.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"document_uri": "d", "v": 4}]})
+    assert st.current_version() == v + 1
+    misses = st.read_cache_stats()["misses"]
+    assert [r["v"] for r in st.bucket_rows("t", 0)] == [1, 2, 3, 4]
+    assert st.read_cache_stats()["misses"] == misses + 1  # dropped, not extended
+    # a rewrite through updates replaces the whole list
+    st.commit({("t", 0): st.bucket_rows("t", 0)}, {"t": schema})
+    assert len(st.bucket_files("t", 0)) == 1
+
+    overlay = OverlayStorage(st)
+    overlay.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"document_uri": "e", "v": 5}]})
+    assert [r["v"] for r in overlay.bucket_rows("t", 0)] == [2, 1, 3, 4, 5]  # the rewrite sorted a, b
+    assert len(st.bucket_files("t", 0)) == 1  # the base is untouched
+    with pytest.raises(RuntimeError, match="read-only"):
+        st.snapshot(v).commit({}, {"t": schema}, bucket_appends={("t", 0): []})
+
+
+def test_write_bucket_file_sorts_by_key_with_none_as_empty(tmp_path):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hyper_storage_spark.store.storage import write_bucket_file
+
+    two = pa.schema([("document_uri", pa.string()), ("item_id", pa.string())])
+    rows = [{"document_uri": "b", "item_id": "x"}, {"document_uri": None, "item_id": "z"},
+            {"document_uri": "b"}, {"document_uri": "", "item_id": "a"}]
+    path = os.path.join(str(tmp_path), "two.parquet")
+    out = write_bucket_file(rows, two, path)
+    assert out == [rows[3], rows[1], rows[2], rows[0]]
+    assert pq.read_table(path).to_pylist()[0] == {"document_uri": "", "item_id": "a"}
+    one = pa.schema([("document_uri", pa.string()), ("v", pa.int64())])
+    rows = [{"document_uri": "b", "v": 1}, {"document_uri": None, "v": 2}, {"document_uri": "a", "v": 3}]
+    assert [r["v"] for r in write_bucket_file(rows, one, os.path.join(str(tmp_path), "one.parquet"))] == [2, 3, 1]
