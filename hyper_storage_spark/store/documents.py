@@ -32,8 +32,10 @@ Semantics mirrored from the reference (citations inline):
   incremental maintenance on every write (IndexContentTaskWorker.scala,
   IndexDefTaskWorker.scala). The reference must track obsolete sort
   values because Cassandra clustering keys are immutable
-  (PrimaryWorker.scala:183-215); our bucket rewrite replaces the row
-  wholesale, which subsumes L17's delete-then-insert.
+  (PrimaryWorker.scala:183-215); here a write appends one delta row per
+  touched item to each index — an upsert, or a tombstone when the item
+  left the index — and readers let it replace the item's older row
+  (storage.merge_delta), which subsumes L17's delete-then-insert.
 """
 
 from __future__ import annotations
@@ -67,7 +69,7 @@ from ..plans.model import (
 )
 from .idgen import create_id
 from .merge import filter_nulls, merge_patch
-from .storage import Storage, bucket_of, write_bucket_file
+from .storage import Storage, bucket_of, delta_of, delta_schema, is_delta_file, merge_delta, write_bucket_file
 
 
 class NotFoundError(KeyError):
@@ -204,7 +206,8 @@ def _index_schema(sort_by: tuple[SortItem, ...]) -> pa.Schema:
         if name == "item_id":
             continue
         fields.append((name, DEC_ARROW if item.effective_type == DECIMAL else pa.string()))
-    return pa.schema(fields)
+    # item writes append their index rows as deltas (_refresh_indexes)
+    return delta_schema(pa.schema(fields))
 
 
 def index_spark_schema(sort_by: tuple[SortItem, ...]) -> str:
@@ -347,18 +350,19 @@ class DocumentStore:
             None,
         )
 
-    def index_defs(self, uri: str) -> list[IndexDef]:
+    def index_defs(self, uri: Optional[str] = None) -> list[IndexDef]:
+        """The indexes of collection ``uri``; every collection's when None."""
         rows = self.storage.bucket_rows(INDEX_DEFS, 0)
         out = []
         for r in rows:
-            if r["document_uri"] != uri:
+            if uri is not None and r["document_uri"] != uri:
                 continue
             sort_by = tuple(
                 SortItem(d["field_name"], d.get("field_type"), d.get("order"))
                 for d in json.loads(r["sort_by"])
             )
             out.append(
-                IndexDef(uri, r["index_id"], r["status"], sort_by, r["filter_by"], r["table_name"])
+                IndexDef(r["document_uri"], r["index_id"], r["status"], sort_by, r["filter_by"], r["table_name"])
             )
         return out
 
@@ -613,9 +617,10 @@ class DocumentStore:
         file each (``bucket_appends``); a bucket is rewritten only when
         _stage_wal says so, which also bounds its file list. With
         ``auto_complete`` the rows are already stamped ``completed_at``
-        and the same flip carries the index rows, a collection delete's
-        index drops and the feed events: the manifest flip is atomic
-        across tables, so data and completion need no second flip.
+        and the same flip carries the index delta rows (appended the
+        same way, see _refresh_indexes), a collection delete's index
+        drops and the feed events: the manifest flip is atomic across
+        tables, so data and completion need no second flip.
         Without it the rows stay incomplete for
         complete_transactions()/recover()."""
         from .storage import ManifestConflict
@@ -648,26 +653,29 @@ class DocumentStore:
         updates = {(table, b): cache[table][b] for (table, b) in dirty}
         schemas = {CONTENT: CONTENT_SCHEMA, STATICS: STATICS_SCHEMA, TRANSACTIONS: TRANSACTIONS_SCHEMA}
         drop_tables: list[str] = []
+        bucket_appends: dict = {}
         try:
             wal, rewrite = self._stage_wal(cache[TRANSACTIONS], ok_uris if self.auto_complete else [])
             feed_rows = (
                 self._stage_completion(
-                    ok_uris, wal, now, updates, schemas, drop_tables, content=cache[CONTENT]
+                    ok_uris, wal, now, updates, schemas, drop_tables, bucket_appends, content=cache[CONTENT]
                 )
                 if self.auto_complete
                 else []
             )
-            for b in rewrite:
-                updates[(TRANSACTIONS, b)] = self._wal_retained(wal[b], now)
-            wal_appends = {(TRANSACTIONS, b): rows for b, rows in wal.items() if b not in rewrite}
-            if updates or wal_appends:
+            for b, rows in wal.items():
+                if b in rewrite:
+                    updates[(TRANSACTIONS, b)] = self._wal_retained(rows, now)
+                else:
+                    bucket_appends[(TRANSACTIONS, b)] = rows
+            if updates or bucket_appends:
                 self.storage.commit(
                     updates,
                     schemas,
                     drop_tables=drop_tables,
                     expected_version=staged_version,
                     appends={FEED: (feed_rows, FEED_SCHEMA)} if feed_rows else None,
-                    bucket_appends=wal_appends,
+                    bucket_appends=bucket_appends,
                 )
         except ManifestConflict:
             return False  # lost the flip: re-stage, mark nothing
@@ -700,7 +708,11 @@ class DocumentStore:
         ``auto_complete=False`` handle — which the completion then
         stamps in the same flip, before the batch's own rows, keeping
         per-document feed order. So no write path needs maintenance to
-        keep a WAL bucket's files and expired rows bounded."""
+        keep a WAL bucket's files and expired rows bounded. The bucket's
+        rows are read only to rewrite it or when one of its files may
+        hold an incomplete row (Storage.may_hold_nulls answers that per
+        file without reading rows), so an appending write's cost does
+        not grow with the rows the bucket keeps."""
         touched = set(uris)
         wal: dict[int, list[dict]] = {}
         rewrite: set[int] = set()
@@ -709,7 +721,8 @@ class DocumentStore:
                 self.storage.stages_whole_buckets
                 or len(self.storage.bucket_files(TRANSACTIONS, b)) >= self.WAL_MAX_FILES
             )
-            old = self.storage.bucket_rows(TRANSACTIONS, b) if full or touched else []
+            pending = bool(touched) and not full and self.storage.may_hold_nulls(TRANSACTIONS, b, "completed_at")
+            old = self.storage.bucket_rows(TRANSACTIONS, b) if full or pending else []
             if full or any(t["completed_at"] is None and t["document_uri"] in touched for t in old):
                 rewrite.add(b)
                 wal[b] = old + new
@@ -912,9 +925,10 @@ class DocumentStore:
             now = _now_ms()
             wal = {b: self.storage.bucket_rows(TRANSACTIONS, b) for b in {self._bucket(u) for u in uris}}
             updates: dict = {}
+            bucket_appends: dict = {}
             drop_tables: list[str] = []
             schemas = {TRANSACTIONS: TRANSACTIONS_SCHEMA}
-            feed_rows = self._stage_completion(uris, wal, now, updates, schemas, drop_tables)
+            feed_rows = self._stage_completion(uris, wal, now, updates, schemas, drop_tables, bucket_appends)
             if not feed_rows:
                 return 0
             for b in {self._bucket(e["document_uri"]) for e in feed_rows}:
@@ -930,17 +944,18 @@ class DocumentStore:
                 drop_tables=drop_tables,
                 expected_version=staged_version,
                 appends={FEED: (feed_rows, FEED_SCHEMA)},
+                bucket_appends=bucket_appends,
             )
             return len(feed_rows)
 
     def _stage_completion(
         self, uris: list, wal: dict, now: int, updates: dict, schemas: dict,
-        drop_tables: list, content: Optional[dict] = None,
+        drop_tables: list, bucket_appends: dict, content: Optional[dict] = None,
     ) -> list[dict]:
         """Stage the completion of every incomplete row of ``uris`` held
         in ``wal`` (bucket → WAL rows; each completed row is stamped
         ``completed_at = now`` in place) into the caller's flip: index
-        rows for the touched items or, for a collection delete, its
+        delta rows for the touched items or, for a collection delete, its
         index tables dropped and its INDEX_DEFS rows removed
         (BackgroundContentTaskCompleter.scala:128-139). ``content``
         (bucket → staged content rows) spares the index refresh a
@@ -970,6 +985,7 @@ class DocumentStore:
                     uri,
                     [t["item_id"] for t in incomplete],
                     updates,
+                    bucket_appends,
                     None if content is None else content.get(bucket),
                 )
             for idef in idefs:
@@ -1094,10 +1110,14 @@ class DocumentStore:
 
     def _index_row(self, idef: IndexDef, content_row: dict) -> Optional[dict]:
         """Membership + sort-value extraction for one item
-        (IndexLogic.scala:81-87: eval error ⇒ excluded)."""
-        if content_row["is_deleted"] or content_row["body"] is None:
+        (IndexLogic.scala:81-87: eval error ⇒ excluded). A live item
+        whose body is null (a PATCH that merged to null) is judged like
+        one with no fields, as the Spark twin ``_index_rows_df`` and the
+        base-table plan judge it: an unfiltered index holds it with null
+        sort values."""
+        if content_row["is_deleted"]:
             return None
-        body = json.loads(content_row["body"])
+        body = json.loads(content_row["body"]) if content_row["body"] is not None else None
         if idef.filter_by:
             try:
                 if not truthy(evaluate(parse(idef.filter_by), body if isinstance(body, dict) else {})):
@@ -1123,30 +1143,36 @@ class DocumentStore:
         return row
 
     def _refresh_indexes(
-        self, uri: str, item_ids: list[str], updates: dict, content_rows: Optional[list] = None
+        self, uri: str, item_ids: list[str], updates: dict, bucket_appends: dict,
+        content_rows: Optional[list] = None,
     ) -> None:
-        """Delete-then-insert maintenance for the touched items across
-        all of the document's indexes (L17/L18 subsumed by rewrite).
-        ``content_rows`` is the document's content bucket as the caller
-        staged it; None reads it."""
+        """Index maintenance by delta for the touched items across all of
+        the document's indexes (L17/L18): one row per touched item — its
+        index row, or a tombstone (null revision) when it is not a
+        member — staged into ``bucket_appends`` as one delta file per
+        index, so a write costs its own index rows, not the index's.
+        The write that finds an index's file list at WAL_MAX_FILES (the
+        WAL's cap) folds it instead: the merged rows go into ``updates``
+        as one new base file. ``content_rows`` is the document's content
+        bucket as the caller staged it; None reads it."""
         idefs = [d for d in self.index_defs(uri) if d.status != STATUS_DELETING]
         if not idefs:
             return
         if content_rows is None:
             content_rows = self._content_bucket(uri)
         content = {r["item_id"]: r for r in content_rows if r["document_uri"] == uri}
-        touched = set(item_ids)
         for idef in idefs:
-            rows = self.storage.bucket_rows(idef.storage_table, 0)
-            rows = [r for r in rows if r["item_id"] not in touched]
-            for item_id in sorted(touched):
+            table = idef.storage_table
+            delta = []
+            for item_id in sorted(set(item_ids)):
                 c = content.get(item_id)
-                if c is None:
-                    continue
-                new_row = self._index_row(idef, c)
-                if new_row is not None:
-                    rows.append(new_row)
-            updates[(idef.storage_table, 0)] = rows
+                row = None if c is None else self._index_row(idef, c)
+                tombstone = {"document_uri": uri, "index_id": idef.index_id, "item_id": item_id, "revision": None}
+                delta.append(row or tombstone)
+            if len(self.storage.bucket_files(table, 0)) >= self.WAL_MAX_FILES:
+                updates[(table, 0)] = merge_delta(self.storage.bucket_rows(table, 0), delta_of([delta]))
+            else:
+                bucket_appends[(table, 0)] = delta
 
     # -- bulk ingest (the 100 TB write path) -----------------------------------
 
@@ -1895,9 +1921,9 @@ class DocumentStore:
         The flip is PINNED on the index table's committed file list,
         snapshotted BEFORE the content frame is constructed (review
         r12): per-item writes commit content + index MV rows in ONE
-        atomic manifest flip (``_refresh_indexes`` feeds the same
-        ``updates`` dict), so any write landing after our content
-        snapshot necessarily moved the index table's files and the
+        atomic manifest flip (``_refresh_indexes`` stages into the same
+        flip, appending a delta file), so any write landing after our
+        content snapshot necessarily moved the index table's files and the
         one-attempt ``_flip_index_files`` raises
         ``ManifestConflict`` — we re-snapshot and re-stage instead of
         silently overwriting that write's fresh MV row (which would
@@ -1980,7 +2006,7 @@ class DocumentStore:
 
         from .storage import ManifestConflict
 
-        touched = touched_ids.select(F.col(touched_ids.columns[0]).alias("item_id"))
+        touched_ids = touched_ids.select(F.col(touched_ids.columns[0]).alias("item_id"))
         # the keep-side is a SNAPSHOT of the committed MV, so the flip
         # is version-pinned and a lost race RE-STAGES from the fresh
         # manifest (the write path's discipline): without the pin, two
@@ -1992,9 +2018,16 @@ class DocumentStore:
         last: Optional[BaseException] = None
         for attempt in range(self.WRITE_CAS_RETRIES):
             snapshot_files = self.storage.bucket_files(idef.storage_table, 0)
-            existing = self.storage.spark_df_or_empty(
+            existing, delta = self.storage.spark_df_and_delta(
                 self.spark, idef.storage_table, index_spark_schema(idef.sort_by)
             )
+            # the frame holds the base files only: items with pending
+            # delta rows re-extract from content like the touched ones
+            touched = touched_ids
+            if delta:
+                touched = touched.unionByName(
+                    self.spark.createDataFrame([(i,) for i in delta], "item_id string")
+                )
             keep = existing.join(touched, "item_id", "left_anti").select(
                 *[f.name for f in existing.schema.fields]
             )
@@ -2425,9 +2458,10 @@ class DocumentStore:
         time-travel versions, per-table file/byte/bucket counts — the
         numbers an operator needs to size vacuum/compaction and to
         watch growth; ``bucket_segments`` counts the files in bucket
-        lists beyond one per bucket, which for the WAL is the backlog
-        compact_appends folds — and this handle's decoded-row cache counters
-        (``read_cache``: hits, misses, rows and buckets held, row cap).
+        lists beyond one per bucket, which for the WAL and for an index
+        table's pending delta files is the backlog compact_appends folds
+        — and this handle's decoded-row cache counters (``read_cache``:
+        hits, misses, rows and files held, row cap).
         Reads only the manifest + file metadata (no data decode), so it
         is safe to poll."""
         import os
@@ -2449,7 +2483,8 @@ class DocumentStore:
                 "buckets": sum(1 for k in entry if not k.startswith("a")),
                 "append_segments": sum(1 for k in entry if k.startswith("a")),
                 # files in bucket lists beyond one per bucket: for the
-                # WAL, the appended files compact_appends will fold
+                # WAL and index deltas, the appended files
+                # compact_appends will fold
                 "bucket_segments": sum(
                     len(v) - 1 for k, v in entry.items() if not k.startswith("a") and isinstance(v, list) and v
                 ),
@@ -2571,13 +2606,15 @@ class DocumentStore:
         {table: files merged}. See Storage.compact_append_table for the
         feed-readStream re-delivery caveat.
 
-        It also folds the write-ahead log: every WAL bucket that item
-        writes grew into a list of files becomes one file again, its
-        completed entries older than WAL_KEEP_MS dropped. Item writes
-        fold a bucket on their own once its list holds WAL_MAX_FILES
-        files (see _stage_wal), so this only clears the backlog early;
-        single-file buckets are not read. The fold is one pinned flip
-        and is not counted in the returned dict; ``info()``'s
+        It also folds the WAL and index deltas: every WAL bucket that
+        item writes grew into a list of files becomes one file again,
+        its completed entries older than WAL_KEEP_MS dropped, and every
+        index table with pending delta files becomes one base file of
+        its merged rows. Item writes fold a list on their own once it
+        holds WAL_MAX_FILES files (see _stage_wal and _refresh_indexes),
+        so this only clears the backlog early; single-file WAL buckets
+        and index tables without deltas are not read. The fold is one
+        pinned flip and is not counted in the returned dict; ``info()``'s
         ``bucket_segments`` shows the backlog it clears. Superseded
         files are reclaimed by the next :meth:`vacuum`."""
         with self._lock:
@@ -2587,10 +2624,10 @@ class DocumentStore:
                     merged = self.storage.compact_append_table(table)
                     if merged:
                         out[table] = merged
-            self._fold_wal()
+            self._fold_appended()
             return out
 
-    def _fold_wal(self) -> None:
+    def _fold_appended(self) -> None:
         def fold():
             v0 = self.storage.current_version()
             now = _now_ms()
@@ -2601,8 +2638,14 @@ class DocumentStore:
                 for key, rel in self.storage._read_manifest()["tables"].get(TRANSACTIONS, {}).items()
                 if isinstance(rel, list) and len(rel) > 1
             }
+            schemas = {TRANSACTIONS: TRANSACTIONS_SCHEMA}
+            for idef in self.index_defs():
+                table = idef.storage_table
+                if any(is_delta_file(p) for p in self.storage.bucket_files(table, 0)):
+                    updates[(table, 0)] = self.storage.bucket_rows(table, 0)
+                    schemas[table] = _index_schema(idef.sort_by)
             if updates:
-                self.storage.commit(updates, {TRANSACTIONS: TRANSACTIONS_SCHEMA}, expected_version=v0)
+                self.storage.commit(updates, schemas, expected_version=v0)
 
         self._admin_commit(fold)
 

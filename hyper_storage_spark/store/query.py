@@ -21,19 +21,26 @@ we do the same with the budget enforced, erroring beyond it.
 pagination loop (queryUntilFetched, HyperbusAdapter.scala:268-309):
 bounded number of storage selects, adaptive fetch growth, least-rows
 resume filters from the ported IndexLogic.
+
+An index table may hold a pending delta (rows item writes appended, see
+store/storage.py). The Spark scan reads its base files only — the plan
+is the same with or without a delta — and :func:`_merged_fetch` merges
+the delta on the driver around each bounded fetch.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 from dataclasses import dataclass, field
-from typing import Any, Optional
+from decimal import ROUND_HALF_UP, Decimal, localcontext
+from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..expression.compiler import CompileError, apply_filter
-from ..expression.evaluator import EvalError, evaluate, is_number, to_decimal, truthy
+from ..expression.evaluator import EvalError, canonical_str, evaluate, is_number, to_decimal, truthy
 from ..expression.parser import parse
 from ..paths import is_collection_uri
 from ..plans.field_filters import FieldFiltersExtractor
@@ -61,6 +68,7 @@ from .documents import (
     NotFoundError,
     index_spark_schema,
 )
+from .storage import merge_delta
 
 DEFAULT_PAGE_SIZE = 100  # HyperbusAdapter.scala:35
 DEFAULT_MAX_SKIPPED_ROWS = 10000  # HyperbusAdapter.scala:33
@@ -104,11 +112,22 @@ class QueryResult:
 
 
 def _lit_for(ff: FieldFilter, decimal_col: bool):
-    from ..expression.evaluator import canonical_str
-
     if decimal_col:
         return F.lit(to_decimal(ff.value)).cast("decimal(38,12)")
     return F.lit(ff.value if isinstance(ff.value, str) else canonical_str(ff.value))
+
+
+_SCALE_12 = Decimal(1).scaleb(-12)
+
+
+def _value_for(ff: FieldFilter, decimal_col: bool):
+    """The value of :func:`_lit_for`'s literal, as Python compares it
+    with a row's cell (the decimal cast rounds half up to scale 12)."""
+    if decimal_col:
+        with localcontext() as ctx:
+            ctx.prec = 80
+            return to_decimal(ff.value).quantize(_SCALE_12, rounding=ROUND_HALF_UP)
+    return ff.value if isinstance(ff.value, str) else canonical_str(ff.value)
 
 
 def _null_value_cond(c, op: FilterOp):
@@ -127,9 +146,42 @@ def _null_value_cond(c, op: FilterOp):
     }[op]
 
 
-def _apply_field_filters(df: DataFrame, filters: list[FieldFilter], decimal_cols: set[str]) -> DataFrame:
-    from ..expression.evaluator import EvalError
+_NULL_VALUE_OK = {
+    FilterOp.EQ: lambda c: c is None,
+    FilterOp.GT: lambda c: c is not None,
+    FilterOp.GTEQ: lambda c: True,
+    FilterOp.LT: lambda c: False,
+    FilterOp.LTEQ: lambda c: c is None,
+}
+_COMPARE = {
+    FilterOp.EQ: lambda c, v: c == v,
+    FilterOp.GT: lambda c, v: c > v,
+    FilterOp.GTEQ: lambda c, v: c >= v,
+    FilterOp.LT: lambda c, v: c < v,
+    FilterOp.LTEQ: lambda c, v: c <= v,
+}
 
+
+def _field_filters_ok(row: dict, filters: list[FieldFilter], decimal_cols: set[str]) -> bool:
+    """:func:`_apply_field_filters` on one row held in memory (an index
+    delta row): the same conditions, under SQL null semantics."""
+    for ff in filters:
+        c = row.get(ff.name)
+        if ff.value is None:
+            ok = _NULL_VALUE_OK[ff.op](c)
+        else:
+            try:
+                v = _value_for(ff, ff.name in decimal_cols)
+            except EvalError:
+                ok = c is None if ff.op == FilterOp.EQ else False
+            else:
+                ok = c is not None and _COMPARE[ff.op](c, v)
+        if not ok:
+            return False
+    return True
+
+
+def _apply_field_filters(df: DataFrame, filters: list[FieldFilter], decimal_cols: set[str]) -> DataFrame:
     for ff in filters:
         c = F.col(ff.name)
         if ff.value is None:
@@ -186,6 +238,65 @@ def _apply_residual(df: DataFrame, filter_ast) -> tuple[DataFrame, bool]:
         return df.filter(residual(F.col("body"))), False
 
 
+def _residual_ok(filter_ast, body, compiled: bool = True) -> bool:
+    """The residual on one parsed body, as queryAndFilterRows judges a
+    row (HyperbusAdapter.scala:236-243): evaluation error ⇒ rejected.
+    The uncompiled residual's UDF rejects a null body outright."""
+    if filter_ast is None:
+        return True
+    if body is None and not compiled:
+        return False
+    try:
+        return bool(truthy(evaluate(filter_ast, body if isinstance(body, dict) else {})))
+    except EvalError:
+        return False
+
+
+@dataclass
+class _Source:
+    """A chosen source: its Spark frame (base files, pushed filters and,
+    in :func:`_plan`, the residual), the index table's pending delta
+    (item_id → newest delta row) and ``keep``, the frame's predicates
+    on one delta row."""
+
+    df: DataFrame
+    delta: dict = field(default_factory=dict)
+    keep: Callable[[dict], bool] = lambda r: True
+
+
+def _merged_fetch(src: _Source, order: list[tuple[str, bool]], limit: int) -> list:
+    """The first ``limit`` rows of the source in ``order`` ((physical
+    column, ascending) pairs; [] for scan order), the pending delta
+    merged in by the one rule (storage.merge_delta): fetch ``limit +
+    |delta|`` base rows, drop those the delta supersedes, add the live
+    delta rows ``keep`` accepts, re-sort, cut to ``limit``. Exact,
+    because at most ``|delta|`` fetched rows can be superseded. Rows
+    are Spark Rows or dicts; both index by column name."""
+    df = src.df.orderBy(*[F.col(n).asc() if a else F.col(n).desc() for n, a in order]) if order else src.df
+    if not src.delta:
+        return df.limit(limit).collect()
+    rows = merge_delta(df.limit(limit + len(src.delta)).collect(), src.delta, src.keep)
+    # scan order of a folded (item_id-sorted) base file when unordered
+    rows.sort(key=_order_key(order or [("item_id", True)]))
+    return rows[:limit]
+
+
+def _order_key(order: list[tuple[str, bool]]):
+    """Sort key of Spark's ORDER BY over ``order``: nulls first
+    ascending, last descending."""
+
+    def cmp(a, b) -> int:
+        for name, asc in order:
+            x, y = a[name], b[name]
+            if x == y:
+                continue
+            c = -1 if x is None else 1 if y is None else -1 if x < y else 1
+            return c if asc else -c
+        return 0
+
+    return functools.cmp_to_key(cmp)
+
+
 def query(
     store: DocumentStore,
     uri: str,
@@ -203,22 +314,21 @@ def query(
         raise NotFoundError(uri)
 
     sort = list(sort or [])
-    plan, df, filter_ast = _plan(store, uri, filter, sort)
+    plan, src, filter_ast = _plan(store, uri, filter, sort)
 
     if plan.exact_sort:
-        order = _physical_order(plan)
-        fetched = (df.orderBy(*order) if order else df).limit(size).collect()
+        fetched = _merged_fetch(src, _order_spec(plan), size)
         # body can be NULL on a live row (reference parity: a PATCH whose
         # merge result is Null stores body=None with isDeleted=false,
         # PrimaryWorker.mergeBody) — surface as None, never crash
-        items = [json.loads(r.body) if r.body is not None else None for r in fetched]
+        items = [json.loads(r["body"]) if r["body"] is not None else None for r in fetched]
     else:
         budget = size + skip_max
-        fetched = df.limit(budget + 1).collect()
+        fetched = _merged_fetch(src, [], budget + 1)
         if len(fetched) > budget:
             raise QueryBudgetExceeded(f"Maximum skipped row limit is reached: {skip_max}")
         rows = _collection_ordering_sort(
-            [json.loads(r.body) if r.body is not None else None for r in fetched], sort
+            [json.loads(r["body"]) if r["body"] is not None else None for r in fetched], sort
         )
         items = rows[:size]
 
@@ -259,41 +369,33 @@ def _plan(store: DocumentStore, uri: str, filter: Optional[str], sort: list[Sort
     exact = len(ck_fields) == len(sort) or not sort
 
     if idef is None:
-        df = store.storage.spark_df_or_empty(store.spark, CONTENT, CONTENT_SPARK)
-        df = df.filter(
-            (F.col("document_uri") == uri) & (F.col("item_id") != "") & (~F.col("is_deleted"))
-        )
         # base scan pushes only the item_id bound (db/Db.scala:146-177)
         item_filters = [f for f in filter_fields if f.name == "item_id"]
-        df = _apply_field_filters(df, item_filters, set())
+        src = _base_source(store, uri, item_filters)
         plan = PlanInfo(CONTENT, None, item_filters, ck_fields, reversed_, exact)
     else:
-        df = store.storage.spark_df_or_empty(
-            store.spark, idef.storage_table, index_spark_schema(idef.sort_by)
-        )
-        decimal_cols = {
-            name
-            for i, s in enumerate(idef.sort_by)
-            if (name := _field_name(idef, i)) != "item_id" and s.effective_type == DECIMAL
-        }
-        df = _apply_field_filters(df, filter_fields, decimal_cols)
+        src = _index_source(store, idef, filter_fields)
         plan = PlanInfo(idef.table_name, idef.index_id, filter_fields, ck_fields, reversed_, exact)
         # the reference returns MV rows in the index table's clustering
         # order (sort columns per DDL asc/desc, then item_id) even when
-        # the query asks for no sort — record it for _physical_order
+        # the query asks for no sort — record it for _order_spec
         plan.default_order = [
             (_field_name(idef, i), (s.order or "asc") != "desc")
             for i, s in enumerate(idef.sort_by)
         ] + [("item_id", True)]
 
     if filter_ast is not None:
-        df, compiled = _apply_residual(df, filter_ast)
+        src.df, compiled = _apply_residual(src.df, filter_ast)
         plan.residual_compiled = compiled
+        pushed = src.keep
+        src.keep = lambda r: pushed(r) and _residual_ok(
+            filter_ast, json.loads(r["body"]) if r["body"] is not None else None, compiled
+        )
 
     from .stats import estimate_rows
 
     plan.estimated_rows = estimate_rows(store, uri, filter_ast)
-    return plan, df, filter_ast
+    return plan, src, filter_ast
 
 
 def _field_name(idef: IndexDef, i: int) -> str:
@@ -302,21 +404,18 @@ def _field_name(idef: IndexDef, i: int) -> str:
     return table_field_name(idef.sort_by[i], len(idef.sort_by), i)
 
 
-def _physical_order(plan: PlanInfo):
-    """ORDER BY on the chosen source's physical sort columns. For the
-    base table the implicit order is item_id asc unless reversed
-    (queryAndFilterRows, HyperbusAdapter.scala:203-209)."""
+def _order_spec(plan: PlanInfo) -> list[tuple[str, bool]]:
+    """ORDER BY on the chosen source's physical sort columns, as
+    (column, ascending) pairs. For the base table the implicit order is
+    item_id asc unless reversed (queryAndFilterRows,
+    HyperbusAdapter.scala:203-209)."""
     if plan.index_id is None:
-        asc = next((ck.ascending for ck in plan.ck_fields if ck.name == "item_id"), True)
-        return [F.col("item_id").asc() if asc else F.col("item_id").desc()]
+        return [("item_id", next((ck.ascending for ck in plan.ck_fields if ck.name == "item_id"), True))]
     if not plan.ck_fields and plan.default_order:
         # no explicit sort: the index's own clustering order (flipped
         # when the scan direction is reversed)
-        return [
-            F.col(name).asc() if asc != plan.reversed else F.col(name).desc()
-            for name, asc in plan.default_order
-        ]
-    order = [F.col(ck.name).asc() if ck.ascending else F.col(ck.name).desc() for ck in plan.ck_fields]
+        return [(name, asc != plan.reversed) for name, asc in plan.default_order]
+    order = [(ck.name, ck.ascending) for ck in plan.ck_fields]
     # stabilize with item_id: the implicit trailing clustering key is
     # ALWAYS asc in the index DDL (sort_by_with_id's defIdSort), so its
     # scan direction follows plan.reversed — NOT the previous field's
@@ -325,16 +424,13 @@ def _physical_order(plan: PlanInfo):
     # from reversed ^ asc(id)=True, and the two must agree or keyset
     # paging re-fetches/skips rows inside tie groups)
     if not any(ck.name == "item_id" for ck in plan.ck_fields):
-        order.append(F.col("item_id").desc() if plan.reversed else F.col("item_id").asc())
+        order.append(("item_id", not plan.reversed))
     return order
 
 
 def _collection_ordering_sort(items: list[Any], sort: list[SortBy]) -> list[Any]:
     """CollectionOrdering port: multi-field, numeric iff both numbers,
     else canonical-string comparison (HyperbusAdapter.scala:341-376)."""
-    import functools
-
-    from ..expression.evaluator import canonical_str
 
     def extract(item, name):
         cur = item if isinstance(item, dict) else {}
@@ -417,16 +513,6 @@ def query_paged(
         else [SortItem("id", "text", "asc")]
     )
 
-    def residual_ok(body) -> bool:
-        # queryAndFilterRows: per-row residual eval, error ⇒ rejected
-        # (HyperbusAdapter.scala:236-243)
-        if filter_ast is None:
-            return True
-        try:
-            return bool(truthy(evaluate(filter_ast, body if isinstance(body, dict) else {})))
-        except EvalError:
-            return False
-
     items: list[Any] = []
     selects: list[dict] = []  # plan trace: one entry per storage select
     least: list[FieldFilter] = []
@@ -446,17 +532,15 @@ def query_paged(
         )
 
         merged = merge_least_query_filter_fields(plan.filter_fields, least)
-        _, df, _ = _plan_raw(store, uri, plan, merged)
-        order = _physical_order(plan)
-        fetched = df.orderBy(*order).limit(fetch_limit).collect()
+        fetched = _merged_fetch(_plan_raw(store, uri, plan, merged), _order_spec(plan), fetch_limit)
         selects.append({"table": plan.table_name, "filters": merged, "limit": fetch_limit})
 
         accepted = []
         for r in fetched:
-            body = json.loads(r.body) if r.body is not None else None
+            body = json.loads(r["body"]) if r["body"] is not None else None
             last_value = body
             last_row = r
-            if residual_ok(body):
+            if _residual_ok(filter_ast, body):
                 accepted.append(body)
         items.extend(accepted)
         total_fetched = len(fetched)
@@ -508,27 +592,39 @@ def query_paged(
     return result
 
 
-def _plan_raw(store: DocumentStore, uri: str, plan: PlanInfo, filters: list[FieldFilter]):
-    """Rebuild the chosen source DataFrame with an explicit pushed-filter
-    set (used by the paging loop to apply merged least-rows filters)."""
+def _plan_raw(store: DocumentStore, uri: str, plan: PlanInfo, filters: list[FieldFilter]) -> _Source:
+    """Rebuild the chosen source with an explicit pushed-filter set
+    (used by the paging loop to apply merged least-rows filters)."""
     if plan.index_id is None:
-        df = store.storage.spark_df_or_empty(store.spark, CONTENT, CONTENT_SPARK)
-        df = df.filter(
-            (F.col("document_uri") == uri) & (F.col("item_id") != "") & (~F.col("is_deleted"))
-        )
-        df = _apply_field_filters(df, [f for f in filters if f.name == "item_id"], set())
-    else:
-        idef = next(d for d in store.index_defs(uri) if d.index_id == plan.index_id)
-        df = store.storage.spark_df_or_empty(
-            store.spark, idef.storage_table, index_spark_schema(idef.sort_by)
-        )
-        decimal_cols = {
-            name
-            for i, s in enumerate(idef.sort_by)
-            if (name := _field_name(idef, i)) != "item_id" and s.effective_type == DECIMAL
-        }
-        df = _apply_field_filters(df, filters, decimal_cols)
-    return plan, df, None
+        return _base_source(store, uri, [f for f in filters if f.name == "item_id"])
+    idef = next(d for d in store.index_defs(uri) if d.index_id == plan.index_id)
+    return _index_source(store, idef, filters)
+
+
+def _base_source(store: DocumentStore, uri: str, filters: list[FieldFilter]) -> _Source:
+    df = store.storage.spark_df_or_empty(store.spark, CONTENT, CONTENT_SPARK)
+    df = df.filter(
+        (F.col("document_uri") == uri) & (F.col("item_id") != "") & (~F.col("is_deleted"))
+    )
+    return _Source(_apply_field_filters(df, filters, set()))
+
+
+def _index_source(store: DocumentStore, idef: IndexDef, filters: list[FieldFilter]) -> _Source:
+    """The index table's base files with ``filters`` pushed, and its
+    pending delta read at the same manifest."""
+    df, delta = store.storage.spark_df_and_delta(
+        store.spark, idef.storage_table, index_spark_schema(idef.sort_by)
+    )
+    decimal_cols = {
+        name
+        for i, s in enumerate(idef.sort_by)
+        if (name := _field_name(idef, i)) != "item_id" and s.effective_type == DECIMAL
+    }
+    return _Source(
+        _apply_field_filters(df, filters, decimal_cols),
+        delta,
+        lambda r: _field_filters_ok(r, filters, decimal_cols),
+    )
 
 
 def explain(

@@ -11,11 +11,25 @@ zero dependencies.
 
 A bucket is one file or a LIST of files read in order. Bulk paths
 register lists, and a commit's ``bucket_appends`` adds one file to the
-end of a bucket's list instead of rewriting the bucket: the item write
-path appends its write-ahead-log rows that way, so most writes cost
-their own WAL rows, not the bucket's. The document layer folds such a
-list back into one file when it reaches a fixed length
-(``DocumentStore.WAL_MAX_FILES``) and in ``compact_appends``.
+end of a bucket's list instead of rewriting the bucket. The item write
+path appends two kinds of rows that way, so most writes cost their own
+rows, not the bucket's:
+
+- its write-ahead-log rows, which a read simply concatenates;
+- its index rows, as a DELTA: tables whose schema is marked by
+  :func:`delta_schema` get their appended files named ``delta-*``, one
+  row per touched item — an upsert, or a tombstone (null ``revision``)
+  for an item that left the index. A bucket's list is then its BASE
+  files followed by ordered delta files, and every reader applies the
+  one merge rule, :func:`merge_delta`: a delta row replaces every
+  earlier row with its ``item_id``, and tombstones are dropped.
+  :meth:`Storage.bucket_rows` returns the merged table; a Spark scan
+  reads only the base files (:meth:`Storage.spark_df_and_delta` hands
+  the caller the pending delta to merge on the driver).
+
+The document layer folds such a list back into one base file when it
+reaches a fixed length (``DocumentStore.WAL_MAX_FILES``) and in
+``compact_appends``.
 
 Scale note: bucket count is configurable (default 16 for local tests,
 1024 at cluster scale to mirror the reference's shard constant); Spark
@@ -23,21 +37,18 @@ reads address the bucket *files* directly, so a single-document lookup
 touches exactly one bucket and collection scans parallelize across
 buckets.
 
-Decoded-row cache: an unfiltered :meth:`Storage.bucket_rows` keeps the
-rows it decoded, keyed by (table, bucket) and stamped with the file
-paths the manifest named, and a successful :meth:`Storage.commit`
-keeps the rows it wrote in the form a re-read returns them. Bucket
-files are immutable — every name carries a fresh uuid, appends are
-staged under a tmp name and renamed, and nothing ever rewrites a path —
-so rows remembered for a path are that file's content for as long as
-the file exists. Every read still reads the manifest first and serves
-from memory only when the current manifest names exactly the cached
-paths: a foreign process's commit, a rollback or a vacuum changes the
-paths, never a path's content, so a cached entry can be missed but
-never be stale. A commit that appends a file to a bucket extends the
-bucket's entry only when the entry was cached from exactly the
-pre-flip file list; otherwise it drops the entry. Filtered (point)
-reads skip the cache and keep parquet row-group pruning.
+Decoded-row cache: :meth:`Storage.bucket_rows` keeps the rows it
+decoded, one entry per file keyed by the file's path, and a successful
+:meth:`Storage.commit` keeps the rows it wrote in the form a re-read
+returns them. Bucket files are immutable — every name carries a fresh
+uuid, appends are staged under a tmp name and renamed, and nothing ever
+rewrites a path — so rows remembered for a path are that file's content
+for as long as the file exists. Every read still reads the manifest
+first and takes from memory the files it names: a foreign process's
+commit, a rollback or a vacuum changes the paths, never a path's
+content, so a cached entry can be missed but never be stale. Filtered
+(point) reads of base files skip the cache and keep parquet row-group
+pruning.
 """
 
 from __future__ import annotations
@@ -96,6 +107,77 @@ def write_bucket_file(rows: list[dict], schema: pa.Schema, abspath: str) -> list
     os.makedirs(os.path.dirname(abspath), exist_ok=True)
     pq.write_table(pa.Table.from_pylist(rows, schema=schema), abspath, row_group_size=ROW_GROUP_SIZE)
     return rows
+
+
+# schema metadata marking a table whose ``bucket_appends`` are deltas
+_DELTA_META = {b"bucket_appends": b"delta"}
+_DELTA_PREFIX = "delta-"
+
+
+def delta_schema(schema: pa.Schema) -> pa.Schema:
+    """``schema`` marked so that :meth:`Storage.commit` writes a
+    ``bucket_appends`` file of its table as a delta (see the module
+    docstring). Rows need ``item_id`` and ``revision`` columns."""
+    return schema.with_metadata({**(schema.metadata or {}), **_DELTA_META})
+
+
+def _is_delta_schema(schema: pa.Schema) -> bool:
+    return (schema.metadata or {}).get(b"bucket_appends") == b"delta"
+
+
+def is_delta_file(path: str) -> bool:
+    return os.path.basename(path).startswith(_DELTA_PREFIX)
+
+
+def delta_of(files: Iterable[list[dict]]) -> dict[str, dict]:
+    """``item_id`` → the newest row for it across delta files' rows,
+    given in list order."""
+    out: dict[str, dict] = {}
+    for rows in files:
+        for r in rows:
+            out[r["item_id"]] = r
+    return out
+
+
+def merge_delta(base: Iterable, delta: dict[str, dict], keep: Optional[Callable[[dict], bool]] = None) -> list:
+    """THE merge rule of a delta-written table, used by every reader: a
+    delta row (``delta`` as :func:`delta_of` builds it) replaces every
+    base row with its ``item_id``; tombstones (``revision`` None) are
+    dropped, and so are live delta rows failing ``keep`` when it is
+    given. Base rows may be dicts or Spark Rows."""
+    out = [r for r in base if r["item_id"] not in delta]
+    out.extend(r for r in delta.values() if r["revision"] is not None and (keep is None or keep(r)))
+    return out
+
+
+_FILTER_OPS = {
+    "==": lambda a, b: a == b,
+    "!=": lambda a, b: a != b,
+    "in": lambda a, b: a in b,
+    "not in": lambda a, b: a not in b,
+    ">=": lambda a, b: a is not None and a >= b,
+    "<=": lambda a, b: a is not None and a <= b,
+    ">": lambda a, b: a is not None and a > b,
+    "<": lambda a, b: a is not None and a < b,
+}
+
+
+def _row_filter(filters: list) -> Callable[[dict], bool]:
+    """pyarrow DNF conjunction ``filters`` as a predicate on one row
+    held in memory."""
+    return lambda r: all(_FILTER_OPS[op](r.get(col), val) for col, op, val in filters)
+
+
+def _footer_may_hold_nulls(path: str, column: str) -> bool:
+    """Parquet footer statistics: can ``column`` of the file hold a
+    null? True when a row group has no null count."""
+    md = pq.ParquetFile(path).metadata
+    i = md.schema.names.index(column)
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(i).statistics
+        if st is None or not st.has_null_count or st.null_count:
+            return True
+    return False
 
 
 # arrow types whose to_pylist value is exactly one Python type
@@ -165,60 +247,76 @@ def _rows_as_read(rows: list[dict], schema: pa.Schema) -> list[dict]:
 
 
 class _RowCache:
-    """Decoded bucket rows, one entry per (table, bucket), each stamped
-    with the file paths it was read from (see the module docstring for
-    why such an entry can never be stale). A newer file for a bucket
-    replaces the bucket's entry; least-recently-used entries are evicted
-    once the cached rows exceed ``cap_rows``. Entries are never mutated:
-    readers get shallow copies. One lock guards the bookkeeping, since a
-    streaming micro-batch thread and a user thread may share a Storage."""
+    """Decoded rows of bucket files, one entry per immutable file path
+    (see the module docstring for why such an entry can never be
+    stale). The file list last seen for each (table, bucket) is kept
+    too: a newer list drops the entries of the files it no longer
+    names, which only a time-travel view reads again, and that view has
+    a cache of its own. Least-recently-used entries are evicted once
+    the cached rows exceed ``cap_rows``. Entries are never mutated:
+    readers copy what they hand out. A lookup of a bucket's files
+    counts one hit when every file is in memory, else one miss. One
+    lock guards the bookkeeping, since a streaming micro-batch thread
+    and a user thread may share a Storage."""
 
     def __init__(self, cap_rows: int):
         self.cap_rows = cap_rows
         self._lock = _threading.Lock()
-        self._entries: OrderedDict[tuple[str, int], tuple[tuple[str, ...], list[dict]]] = OrderedDict()
+        self._entries: OrderedDict[str, list[dict]] = OrderedDict()
+        self._lists: dict[tuple[str, int], tuple[str, ...]] = {}
         self.rows = 0
         self.hits = 0
         self.misses = 0
 
-    def get(self, key: tuple[str, int], rels: tuple[str, ...]) -> Optional[list[dict]]:
-        with self._lock:
-            entry = self._entries.get(key)
-            if entry is None or entry[0] != rels:
-                self.misses += 1
-                return None
-            self._entries.move_to_end(key)
-            self.hits += 1
-        return [dict(r) for r in entry[1]]
+    def _supersede(self, key: tuple[str, int], rels: tuple[str, ...]) -> None:
+        old = self._lists.get(key, ())
+        if old != rels:
+            for rel in set(old).difference(rels):
+                rows = self._entries.pop(rel, None)
+                if rows is not None:
+                    self.rows -= len(rows)
+            self._lists[key] = rels
 
-    def put(self, key: tuple[str, int], rels: tuple[str, ...], rows: list[dict]) -> None:
+    def supersede(self, key: tuple[str, int], rels: tuple[str, ...]) -> None:
+        """The bucket ``key`` now lists ``rels`` (a successful flip)."""
         with self._lock:
-            old = self._entries.pop(key, None)
+            self._supersede(key, rels)
+
+    def lookup(
+        self, key: tuple[str, int], rels: tuple[str, ...], wanted: tuple[str, ...]
+    ) -> dict[str, Optional[list[dict]]]:
+        """Bucket ``key`` lists ``rels``: the cached rows of each of its
+        files in ``wanted``, None where not cached."""
+        with self._lock:
+            self._supersede(key, rels)
+            found = {}
+            for rel in wanted:
+                rows = found[rel] = self._entries.get(rel)
+                if rows is not None:
+                    self._entries.move_to_end(rel)
+            if None in found.values():
+                self.misses += 1
+            else:
+                self.hits += 1
+        return found
+
+    def peek(self, rel: str) -> Optional[list[dict]]:
+        """The cached rows of one path, or None; not counted, not touched."""
+        with self._lock:
+            return self._entries.get(rel)
+
+    def put(self, rel: str, rows: list[dict]) -> None:
+        with self._lock:
+            old = self._entries.pop(rel, None)
             if old is not None:
-                self.rows -= len(old[1])
+                self.rows -= len(old)
             if len(rows) > self.cap_rows:
                 return
-            self._entries[key] = (rels, rows)
+            self._entries[rel] = rows
             self.rows += len(rows)
             while self.rows > self.cap_rows:
-                _, (_, evicted) = self._entries.popitem(last=False)
+                _, evicted = self._entries.popitem(last=False)
                 self.rows -= len(evicted)
-
-    def extend(
-        self, key: tuple[str, int], old_rels: tuple[str, ...], rels: tuple[str, ...], rows: list[dict]
-    ) -> None:
-        """A flip added the file holding ``rows`` to a bucket whose file
-        list was ``old_rels`` and now is ``rels``. An entry cached from
-        exactly ``old_rels`` (or an empty bucket) grows by the new rows;
-        any other entry is dropped, so the next read goes to parquet."""
-        with self._lock:
-            entry = self._entries.get(key)
-            if old_rels and (entry is None or entry[0] != old_rels):
-                if entry is not None:
-                    del self._entries[key]
-                    self.rows -= len(entry[1])
-                return
-        self.put(key, rels, (entry[1] if old_rels else []) + rows)
 
     def stats(self) -> dict:
         with self._lock:
@@ -226,7 +324,7 @@ class _RowCache:
                 "hits": self.hits,
                 "misses": self.misses,
                 "rows": self.rows,
-                "buckets": len(self._entries),
+                "files": len(self._entries),
                 "cap_rows": self.cap_rows,
             }
 
@@ -251,6 +349,9 @@ class Storage:
     # and keeps a whole-store scan such as recover(scan_all=True) from
     # pinning every bucket of a large store in memory
     READ_CACHE_ROWS = 100_000
+    # bound of the per-file memo of may_hold_nulls answers (paths are
+    # immutable, so an answer never goes stale; the memo is only reset)
+    NULLS_MEMO_FILES = 4096
 
     # True when a commit stages a ``bucket_appends`` bucket as a whole
     # rewrite anyway (the executor overlay): a caller that would rather
@@ -290,6 +391,7 @@ class Storage:
         self._flock_owner: Optional[int] = None
         self._flock_mutex = _threading.Lock()
         self._row_cache = _RowCache(self.READ_CACHE_ROWS)
+        self._nulls: dict[tuple[str, str], bool] = {}
         if not os.path.exists(self._manifest_path):
             self._write_manifest(
                 {"version": 0, "n_buckets": self.n_buckets, "tables": {}}
@@ -470,51 +572,91 @@ class Storage:
 
     # -- reads --------------------------------------------------------------
 
-    def bucket_rows(self, table: str, bucket: int, filters: Optional[list] = None) -> list[dict]:
-        """Rows of one bucket; ``filters`` (pyarrow DNF tuples, e.g.
-        ``[("document_uri", "==", uri)]``) push the predicate into the
-        parquet read — row groups whose min/max stats exclude the key
-        are never decoded, so a point GET reads one row group instead of
-        materializing the whole bucket (commit() writes buckets sorted
-        by key with bounded row groups to make the stats selective).
-
-        An unfiltered read is served from the decoded-row cache when
-        the manifest still names the files it was cached from (see the
-        module docstring); the caller always gets dicts of its own to
-        mutate."""
-        manifest = self._read_manifest()
+    def _bucket_rels(self, table: str, bucket: int, manifest: Optional[dict] = None) -> tuple[str, ...]:
+        if manifest is None:
+            manifest = self._read_manifest()
         rel = manifest["tables"].get(table, {}).get(str(bucket))
         if rel is None:
-            return []
-        rels = tuple(rel) if isinstance(rel, list) else (rel,)
+            return ()
+        return tuple(rel) if isinstance(rel, list) else (rel,)
+
+    def _file_rows(
+        self, key: tuple[str, int], rels: tuple[str, ...], wanted: Optional[tuple[str, ...]] = None
+    ) -> dict[str, list[dict]]:
+        """The decoded rows of the files ``wanted`` (default: all) of
+        bucket ``key``, whose list is ``rels``, from the cache where it
+        holds them (shared lists: copy before handing out)."""
+        found = self._row_cache.lookup(key, rels, rels if wanted is None else wanted)
+        for rel, rows in found.items():
+            if rows is None:
+                found[rel] = pq.read_table(os.path.join(self.root, rel)).to_pylist()
+                self._row_cache.put(rel, found[rel])
+        return found
+
+    def bucket_rows(self, table: str, bucket: int, filters: Optional[list] = None) -> list[dict]:
+        """Rows of one bucket, pending deltas merged (:func:`merge_delta`);
+        ``filters`` (pyarrow DNF tuples, e.g.
+        ``[("document_uri", "==", uri)]``) push the predicate into the
+        parquet read of the base files — row groups whose min/max stats
+        exclude the key are never decoded, so a point GET reads one row
+        group instead of materializing the whole bucket (commit() writes
+        buckets sorted by key with bounded row groups to make the stats
+        selective).
+
+        An unfiltered read takes every file the manifest names from the
+        decoded-row cache where it can (see the module docstring); the
+        caller always gets dicts of its own to mutate."""
+        rels = self._bucket_rels(table, bucket)
+        deltas = tuple(r for r in rels if is_delta_file(r))
         if not filters:
-            cached = self._row_cache.get((table, bucket), rels)
-            if cached is not None:
-                return cached
+            files = self._file_rows((table, bucket), rels)
+            rows = [r for rel in rels if rel not in deltas for r in files[rel]]
+            if deltas:
+                rows = merge_delta(rows, delta_of(files[rel] for rel in deltas))
+            return [dict(r) for r in rows]
         out: list[dict] = []
         for r in rels:
-            out.extend(
-                pq.read_table(os.path.join(self.root, r), filters=filters or None).to_pylist()
-            )
-        if not filters:
-            self._row_cache.put((table, bucket), rels, out)
-            return [dict(r) for r in out]
-        return out
+            if r not in deltas:
+                out.extend(pq.read_table(os.path.join(self.root, r), filters=filters).to_pylist())
+        if deltas:
+            files = self._file_rows((table, bucket), rels, deltas)
+            out = merge_delta(out, delta_of(files[rel] for rel in deltas), _row_filter(filters))
+        return [dict(r) for r in out] if deltas else out
 
     def read_cache_stats(self) -> dict:
-        """Decoded-row cache counters: unfiltered reads served from
-        memory (hits) and from parquet (misses), rows and buckets held,
-        and the row cap."""
+        """Decoded-row cache counters: bucket reads served wholly from
+        memory (hits) and partly from parquet (misses), rows and files
+        held, and the row cap."""
         return self._row_cache.stats()
 
+    def may_hold_nulls(self, table: str, bucket: int, column: str) -> bool:
+        """Can any file of the bucket hold a null ``column``? Answered
+        per immutable file from its cached rows or its parquet footer
+        statistics, and remembered, so the bucket's rows are not read."""
+        for rel in self._bucket_rels(table, bucket):
+            key = (rel, column)
+            found = self._nulls.get(key)
+            if found is None:
+                rows = self._row_cache.peek(rel)
+                found = (
+                    any(r[column] is None for r in rows)
+                    if rows is not None
+                    else _footer_may_hold_nulls(os.path.join(self.root, rel), column)
+                )
+                if len(self._nulls) >= self.NULLS_MEMO_FILES:
+                    self._nulls.clear()
+                self._nulls[key] = found
+            if found:
+                return True
+        return False
+
     def bucket_files(self, table: str, bucket: int) -> list[str]:
-        manifest = self._read_manifest()
-        rel = manifest["tables"].get(table, {}).get(str(bucket))
-        if rel is None:
-            return []
-        return [os.path.join(self.root, r) for r in (rel if isinstance(rel, list) else [rel])]
+        """Every file of the bucket's list, base and delta."""
+        return [os.path.join(self.root, r) for r in self._bucket_rels(table, bucket)]
 
     def files(self, table: str) -> list[str]:
+        """Every file of the table, base and delta (for a delta-written
+        table, raw rows: use :meth:`bucket_rows` for the merged table)."""
         manifest = self._read_manifest()
         out: list[str] = []
         for rel in manifest["tables"].get(table, {}).values():
@@ -625,10 +767,12 @@ class Storage:
 
         ``bucket_appends`` adds rows to a bucket without rewriting it:
         each (table, bucket) gets ONE new file (schema ``schemas[table]``)
-        at the end of its file list, in the same flip. This is how the
-        write-ahead log grows by a write's own rows; the bucket's older
-        files stay as they are until a caller rewrites the bucket
-        through ``updates`` (which replaces the whole list)."""
+        at the end of its file list, in the same flip — a delta file when
+        the schema is a :func:`delta_schema`. This is how the write-ahead
+        log grows by a write's own rows and an index by its delta rows;
+        the bucket's older files stay as they are until a caller
+        rewrites the bucket through ``updates`` (which replaces the
+        whole list)."""
         manifest = self._read_manifest()
         if expected_version is not None and manifest["version"] != expected_version:
             raise ManifestConflict(
@@ -636,32 +780,36 @@ class Storage:
                 f"{expected_version}, found {manifest['version']}"
             )
         version = manifest["version"] + 1
+        # (table, bucket) → its new file list, for the cache after the flip
+        lists: dict[tuple[str, int], tuple[str, ...]] = {}
         for table in drop_tables:  # drops first: drop-and-recreate keeps the recreate
-            manifest["tables"].pop(table, None)
-        def write(table: str, bucket: int, rows: list[dict]) -> tuple[str, list[dict]]:
+            for key in manifest["tables"].pop(table, {}):
+                if not key.startswith("a"):
+                    lists[(table, int(key))] = ()
+        written: dict[str, list[dict]] = {}  # path → rows as a re-read returns them
+
+        def write(table: str, bucket: int, rows: list[dict], prefix: str = "") -> str:
             # uuid suffix: two PROCESSES racing at the same version must
             # not write the same path — the CAS flip rejects the loser,
             # but only if the winner's file wasn't overwritten first
             rel = os.path.join(
                 "data",
                 _sanitize(table),
-                f"b{bucket:04d}-v{version:08d}-{uuid.uuid4().hex[:6]}.parquet",
+                f"{prefix}b{bucket:04d}-v{version:08d}-{uuid.uuid4().hex[:6]}.parquet",
             )
             rows = write_bucket_file(rows, schemas[table], os.path.join(self.root, rel))
-            return rel, _rows_as_read(rows, schemas[table])
+            written[rel] = _rows_as_read(rows, schemas[table])
+            return rel
 
-        written: dict[tuple[str, int], tuple[str, list[dict]]] = {}
         for (table, bucket), rows in updates.items():
-            written[(table, bucket)] = write(table, bucket, rows)
-            manifest["tables"].setdefault(table, {})[str(bucket)] = written[(table, bucket)][0]
-        added: dict[tuple[str, int], tuple[tuple[str, ...], str, list[dict]]] = {}
+            rel = write(table, bucket, rows)
+            manifest["tables"].setdefault(table, {})[str(bucket)] = rel
+            lists[(table, bucket)] = (rel,)
         for (table, bucket), rows in (bucket_appends or {}).items():
-            entry = manifest["tables"].setdefault(table, {})
-            cur = entry.get(str(bucket))
-            old = () if cur is None else tuple(cur) if isinstance(cur, list) else (cur,)
-            rel, rows = write(table, bucket, rows)
-            entry[str(bucket)] = [*old, rel]
-            added[(table, bucket)] = (old, rel, rows)
+            prefix = _DELTA_PREFIX if _is_delta_schema(schemas[table]) else ""
+            rels = (*self._bucket_rels(table, bucket, manifest), write(table, bucket, rows, prefix))
+            manifest["tables"].setdefault(table, {})[str(bucket)] = list(rels)
+            lists[(table, bucket)] = rels
         for table, (rows, schema) in (appends or {}).items():
             manifest["tables"].setdefault(table, {})[f"a{version}"] = self._stage_append(
                 table, rows, schema
@@ -670,10 +818,10 @@ class Storage:
         self._cas_write_manifest(manifest, version - 1)
         # only a flip that won may seed the cache: a loser's files are
         # never named by any manifest
-        for key, (rel, rows) in written.items():
-            self._row_cache.put(key, (rel,), rows)
-        for key, (old, rel, rows) in added.items():
-            self._row_cache.extend(key, old, (*old, rel), rows)
+        for key, rels in lists.items():
+            self._row_cache.supersede(key, rels)
+        for rel, rows in written.items():
+            self._row_cache.put(rel, rows)
         return version
 
     def _stage_append(self, table: str, rows: list[dict], schema: pa.Schema) -> str:
@@ -842,10 +990,29 @@ class Storage:
         return self.spark_df_or_empty(spark, table, spark_schema)
 
     def spark_df_or_empty(self, spark, table: str, spark_schema: str):
-        files = self.files(table)
-        if not files:
-            return spark.createDataFrame([], spark_schema)
-        return spark.read.schema(spark_schema).parquet(*files)
+        """A frame over the table's BASE files: a delta-written table's
+        pending delta is not in it (see :meth:`spark_df_and_delta`)."""
+        return self.spark_df_and_delta(spark, table, spark_schema)[0]
+
+    def spark_df_and_delta(self, spark, table: str, spark_schema: str):
+        """From ONE manifest read: a frame over the table's base files
+        and its pending delta (``item_id`` → newest delta row, every
+        bucket's delta files in list order), which the caller merges
+        with :func:`merge_delta`. The delta rows come from the decoded-
+        row cache; they are copies, and no base row is read here."""
+        base: list[str] = []
+        delta: dict[str, dict] = {}
+        for key, rel in self._read_manifest()["tables"].get(table, {}).items():
+            rels = tuple(rel) if isinstance(rel, list) else (rel,)
+            deltas = tuple(r for r in rels if is_delta_file(r))
+            base.extend(r for r in rels if r not in deltas)
+            if deltas:
+                files = self._file_rows((table, int(key)), rels, deltas)
+                delta.update(delta_of(files[r] for r in deltas))
+        delta = {k: dict(v) for k, v in delta.items()}
+        if not base:
+            return spark.createDataFrame([], spark_schema), delta
+        return spark.read.schema(spark_schema).parquet(*(os.path.join(self.root, r) for r in base)), delta
 
 
 class SnapshotStorage(Storage):
@@ -872,8 +1039,9 @@ class SnapshotStorage(Storage):
                 f"(available: {base.versions()!r})"
             ) from None
         # a cache of its own: historical paths must not evict the live
-        # store's entries (one entry per bucket)
+        # store's entries
         self._row_cache = _RowCache(self.READ_CACHE_ROWS)
+        self._nulls = {}
 
     def _read_manifest(self) -> dict:
         return self._pinned
@@ -934,6 +1102,7 @@ class OverlayStorage(Storage):
         # reads of untouched buckets fall through to the base, and so
         # does their cache
         self._row_cache = base._row_cache
+        self._nulls = base._nulls
         self.overlay: dict[tuple[str, int], list[dict]] = {}
         self.schemas: dict[str, pa.Schema] = {}
         self.appended: dict[str, list[dict]] = {}
@@ -950,20 +1119,7 @@ class OverlayStorage(Storage):
             return []
         if (table, bucket) in self.overlay:
             rows = [dict(r) for r in self.overlay[(table, bucket)]]
-            if filters:
-                ops = {
-                    "==": lambda a, b: a == b,
-                    "!=": lambda a, b: a != b,
-                    "in": lambda a, b: a in b,
-                    "not in": lambda a, b: a not in b,
-                    ">=": lambda a, b: a is not None and a >= b,
-                    "<=": lambda a, b: a is not None and a <= b,
-                    ">": lambda a, b: a is not None and a > b,
-                    "<": lambda a, b: a is not None and a < b,
-                }
-                for col, op, val in filters:
-                    rows = [r for r in rows if ops[op](r.get(col), val)]
-            return rows
+            return list(filter(_row_filter(filters), rows)) if filters else rows
         return self.base.bucket_rows(table, bucket, filters)
 
     def bucket_files(self, table: str, bucket: int) -> list[str]:
@@ -997,10 +1153,13 @@ class OverlayStorage(Storage):
         for key, rows in updates.items():
             self.overlay[key] = [dict(r) for r in rows]
             self.dropped.discard(key[0])  # a re-created table is live again
-        # an appended bucket is staged whole, like any other: the
-        # driver's flip registers one file per staged bucket
+        # an appended bucket is staged whole, like any other (a delta
+        # merged in by the one rule): the driver's flip registers one
+        # file per staged bucket
         for key, rows in (bucket_appends or {}).items():
-            self.overlay[key] = self.bucket_rows(*key) + [dict(r) for r in rows]
+            rows = [dict(r) for r in rows]
+            old = self.bucket_rows(*key)
+            self.overlay[key] = merge_delta(old, delta_of([rows])) if _is_delta_schema(schemas[key[0]]) else old + rows
             self.dropped.discard(key[0])
         self.schemas.update(schemas)
         for table, (rows, schema) in (appends or {}).items():

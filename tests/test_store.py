@@ -2436,7 +2436,16 @@ def _exact(rows):
 
 
 def _assert_reads_exact(storage):
-    """Every bucket of every table reads back exactly as parquet has it."""
+    """Every bucket of every table reads back exactly as parquet has it:
+    the bucket equals the merge rule applied to its files' raw parquet
+    rows (their concatenation when it holds no delta file), and each
+    file's rows as the storage holds them equal a fresh read of it."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from hyper_storage_spark.store.storage import delta_of, is_delta_file, merge_delta
+
     manifest = storage._read_manifest()
     checked = 0
     for table, entry in manifest["tables"].items():
@@ -2444,9 +2453,15 @@ def _assert_reads_exact(storage):
             if key.startswith("a"):  # append segments are not buckets
                 continue
             bucket = int(key)
-            assert _exact(storage.bucket_rows(table, bucket)) == _exact(
-                _parquet_rows(storage, table, bucket)
-            ), (table, bucket)
+            paths = storage.bucket_files(table, bucket)
+            raw = [pq.read_table(p).to_pylist() for p in paths]
+            base = [r for p, rows in zip(paths, raw) if not is_delta_file(p) for r in rows]
+            deltas = [rows for p, rows in zip(paths, raw) if is_delta_file(p)]
+            want = merge_delta(base, delta_of(deltas)) if deltas else base
+            assert _exact(storage.bucket_rows(table, bucket)) == _exact(want), (table, bucket)
+            rels = tuple(os.path.relpath(p, storage.root) for p in paths)
+            held = storage._file_rows((table, bucket), rels)
+            assert [_exact(held[rel]) for rel in rels] == [_exact(rows) for rows in raw], (table, bucket)
             checked += 1
     return checked
 
@@ -2604,7 +2619,7 @@ def test_read_cache_lost_cas_race_caches_nothing(tmp_path, monkeypatch):
     with pytest.raises(ManifestConflict):
         loser.commit({("t", 0): [{"document_uri": "l", "v": 1}]}, {"t": schema})
     monkeypatch.setattr(storage_mod, "write_bucket_file", real_write)
-    assert loser.read_cache_stats()["buckets"] == 0
+    assert loser.read_cache_stats()["files"] == 0
     assert loser.bucket_rows("t", 0) == [{"document_uri": "w", "v": 2}]
 
     # a pinned commit refused before staging caches nothing either
@@ -2612,7 +2627,7 @@ def test_read_cache_lost_cas_race_caches_nothing(tmp_path, monkeypatch):
     winner.commit({("t", 1): [{"document_uri": "w", "v": 3}]}, {"t": schema})
     with pytest.raises(ManifestConflict):
         loser.commit({("t", 1): [{"document_uri": "l", "v": 4}]}, {"t": schema}, expected_version=v)
-    assert loser.read_cache_stats()["buckets"] == 1
+    assert loser.read_cache_stats()["files"] == 1
     assert loser.bucket_rows("t", 1) == [{"document_uri": "w", "v": 3}]
 
     # an item write's single flip: a flip that lands between its staged
@@ -2646,13 +2661,17 @@ def test_read_cache_lost_cas_race_caches_nothing(tmp_path, monkeypatch):
 
     monkeypatch.setattr(storage_mod, "write_bucket_file", race_on_wal_file)
     before = state()
+    index_files = store.storage.bucket_files(idef.storage_table, 0)
     races["left"] = 10**6
     monkeypatch.setattr(store, "WRITE_CAS_RETRIES", 3)
     with pytest.raises(ManifestConflict):
         store.put("c~/y", {"a": 2})
     assert state() == before
+    assert store.storage.bucket_files(idef.storage_table, 0) == index_files  # no delta registered
     races["left"] = 1
     assert store.put("c~/y", {"a": 2}) == (True, 2)
+    after_files = store.storage.bucket_files(idef.storage_table, 0)
+    assert after_files[:-1] == index_files and storage_mod.is_delta_file(after_files[-1])
     feed, wal, index = state()
     assert feed == sorted(before[0] + [("y", 2)])
     assert wal == sorted(before[1] + [("y", 2)])
@@ -2674,7 +2693,7 @@ def test_read_cache_lru_cap_evicts(tmp_path, monkeypatch):
     for b in range(3):
         st.commit({("t", b): rows(b, 2)}, {"t": schema})
     stats = st.read_cache_stats()
-    assert stats["cap_rows"] == 5 and stats["rows"] == 4 and stats["buckets"] == 2
+    assert stats["cap_rows"] == 5 and stats["rows"] == 4 and stats["files"] == 2
     misses = stats["misses"]
     assert st.bucket_rows("t", 0) == rows(0, 2)  # evicted first: read from parquet
     assert st.read_cache_stats()["misses"] == misses + 1
@@ -2720,8 +2739,8 @@ def test_info_reports_read_cache_counters(tmp_path):
     store.put("c~/x", {"v": 1})
     store.put("c~/y", {"v": 2})
     cache = store.info()["read_cache"]
-    assert set(cache) == {"hits", "misses", "rows", "buckets", "cap_rows"}
-    assert cache["hits"] > 0 and cache["rows"] > 0 and cache["buckets"] > 0
+    assert set(cache) == {"hits", "misses", "rows", "files", "cap_rows"}
+    assert cache["hits"] > 0 and cache["rows"] > 0 and cache["files"] > 0
 
 
 def test_read_only_views_refuse_external_commits_as_read_only(tmp_path):
@@ -2809,7 +2828,7 @@ def test_read_cache_threads_lose_no_update(tmp_path):
         assert _exact(st.bucket_rows("t", b)) == _exact(_parquet_rows(st, "t", b))
     for h in handles:
         cache = h._row_cache
-        assert cache.rows == sum(len(rows) for _, rows in cache._entries.values())
+        assert cache.rows == sum(len(rows) for rows in cache._entries.values())
 
 
 # -- one flip per item write, appended WAL rows --------------------------------
@@ -2933,21 +2952,33 @@ def test_info_reports_bucket_segments(tmp_path):
     import subprocess
     import sys
 
+    from hyper_storage_spark.plans import SortItem
+
     root = str(tmp_path / "s")
     store = DocumentStore(root)
     for i in range(4):
         store.put("doc", {"n": i})
-    assert store.info()["tables"]["transactions"]["bucket_segments"] == 3
+    store.put("c~/x", {"n": 0})
+    store.create_index("c~", "byn", [SortItem("n", "decimal")], None)
+    index = store.index_defs("c~")[0].storage_table
+    for i in range(2):
+        store.put(f"c~/y{i}", {"n": i})
+    # 3 appended WAL files for doc and 2 for c~ (its WAL bucket's own
+    # files, whichever bucket it hashes to)
+    assert store.info()["tables"]["transactions"]["bucket_segments"] == 5
     assert store.info()["tables"]["content"]["bucket_segments"] == 0
+    assert store.info()["tables"][index]["bucket_segments"] == 2  # pending delta files
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     p = subprocess.run(
         [sys.executable, "tools/store_admin.py", root, "info"],
         capture_output=True, text=True, cwd=repo, timeout=120,
     )
     assert p.returncode == 0, p.stderr[:400]
-    assert _json.loads(p.stdout)["tables"]["transactions"]["bucket_segments"] == 3
+    assert _json.loads(p.stdout)["tables"]["transactions"]["bucket_segments"] == 5
+    assert _json.loads(p.stdout)["tables"][index]["bucket_segments"] == 2
     store.compact_appends()
     assert store.info()["tables"]["transactions"]["bucket_segments"] == 0
+    assert store.info()["tables"][index]["bucket_segments"] == 0
 
 
 def test_bucket_appends_add_one_file_and_keep_reads_exact(tmp_path):
@@ -3008,3 +3039,411 @@ def test_write_bucket_file_sorts_by_key_with_none_as_empty(tmp_path):
     one = pa.schema([("document_uri", pa.string()), ("v", pa.int64())])
     rows = [{"document_uri": "b", "v": 1}, {"document_uri": None, "v": 2}, {"document_uri": "a", "v": 3}]
     assert [r["v"] for r in write_bucket_file(rows, one, os.path.join(str(tmp_path), "one.parquet"))] == [2, 3, 1]
+
+
+# -- index maintenance by delta ------------------------------------------------
+
+
+def _index_state(store, idef):
+    """An index table's merged rows as comparable tuples, by item id."""
+    return sorted(
+        tuple(r.get(k) for k in ("item_id", "revision", "body", "d0", "t0", "t1"))
+        for r in store.storage.bucket_rows(idef.storage_table, 0)
+    )
+
+
+def _index_rebuild(store, idef):
+    """The same tuples, extracted afresh from the collection's live content."""
+    rows = (
+        store._index_row(idef, c)
+        for c in store._content_bucket(idef.document_uri)
+        if c["document_uri"] == idef.document_uri and c["item_id"]
+    )
+    return sorted(tuple(r.get(k) for k in ("item_id", "revision", "body", "d0", "t0", "t1")) for r in rows if r)
+
+
+def _delta_files(store, idef):
+    from hyper_storage_spark.store.storage import is_delta_file
+
+    return [p for p in store.storage.bucket_files(idef.storage_table, 0) if is_delta_file(p)]
+
+
+def test_delta_bucket_appends_merge_by_item_id(tmp_path):
+    """Storage level: a delta schema's bucket_appends files are named as
+    deltas and merged by item_id (newest row wins, a null revision is a
+    tombstone) in unfiltered and filtered reads, in the executor
+    overlay and in the Spark-side split; a plain schema's appends still
+    concatenate."""
+    import pyarrow as pa
+
+    from hyper_storage_spark.store.storage import OverlayStorage, Storage, delta_schema, is_delta_file
+
+    schema = delta_schema(pa.schema([("item_id", pa.string()), ("revision", pa.int64()), ("v", pa.int64())]))
+    st = Storage(str(tmp_path / "s"))
+    st.commit({("t", 0): [{"item_id": k, "revision": 1, "v": i} for i, k in enumerate("abc")]}, {"t": schema})
+    st.commit({}, {"t": schema}, bucket_appends={("t", 0): [
+        {"item_id": "a", "revision": 2, "v": 10}, {"item_id": "b", "revision": None}, {"item_id": "d", "revision": 2, "v": 3},
+    ]})
+    st.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"item_id": "a", "revision": 3, "v": 20}]})
+    files = st.bucket_files("t", 0)
+    assert [is_delta_file(p) for p in files] == [False, True, True]
+    want = [{"item_id": "c", "revision": 1, "v": 2}, {"item_id": "a", "revision": 3, "v": 20},
+            {"item_id": "d", "revision": 2, "v": 3}]
+    assert st.bucket_rows("t", 0) == want
+    assert Storage(st.root).bucket_rows("t", 0) == want  # from parquet, not the cache
+    assert st.bucket_rows("t", 0, filters=[("v", ">=", 3)]) == want[1:]
+    assert st.bucket_rows("t", 0, filters=[("item_id", "==", "b")]) == []
+    overlay = OverlayStorage(st)
+    overlay.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"item_id": "c", "revision": None}]})
+    assert overlay.bucket_rows("t", 0) == want[1:]
+    assert st.bucket_rows("t", 0) == want
+
+    plain = pa.schema([("item_id", pa.string()), ("revision", pa.int64())])
+    st.commit({}, {"p": plain}, bucket_appends={("p", 0): [{"item_id": "a", "revision": 1}]})
+    st.commit({}, {"p": plain}, bucket_appends={("p", 0): [{"item_id": "a", "revision": None}]})
+    assert not any(is_delta_file(p) for p in st.bucket_files("p", 0))
+    assert st.bucket_rows("p", 0) == [{"item_id": "a", "revision": 1}, {"item_id": "a", "revision": None}]
+
+
+def test_item_write_appends_index_deltas_and_folds_at_the_cap(tmp_path, monkeypatch):
+    """An item write adds one delta file per index holding one row per
+    touched item, whatever the index's size; the write that finds the
+    list at WAL_MAX_FILES folds it into one base file, and so does
+    compact_appends(). The merged rows always equal a rebuild."""
+    from hyper_storage_spark.plans import SortItem
+
+    store = DocumentStore(str(tmp_path / "s"))
+    for i in range(40):
+        store.put(f"c~/i{i:02d}", {"a": i})
+    store.create_index("c~", "hot", [SortItem("a", "decimal", "desc")], "a > 20")
+    idef = store.index_defs("c~")[0]
+    assert len(store.storage.bucket_files(idef.storage_table, 0)) == 1
+    for n in range(1, store.WAL_MAX_FILES):
+        seen = _rows_written_by_table(monkeypatch, lambda: store.patch(f"c~/i{n:02d}", {"a": 30 + n}))
+        index_dir = next(t for t in seen if t.startswith("index_"))
+        assert seen[index_dir] == 1
+        assert len(_delta_files(store, idef)) == n
+        assert _index_state(store, idef) == _index_rebuild(store, idef)
+    store.delete("c~/i30")  # the list is full: this write folds it
+    assert _delta_files(store, idef) == [] and len(store.storage.bucket_files(idef.storage_table, 0)) == 1
+    assert _index_state(store, idef) == _index_rebuild(store, idef)
+    store.patch("c~/i39", {"a": 0})
+    assert len(_delta_files(store, idef)) == 1
+    info = store.info()["tables"][idef.storage_table]
+    assert info["bucket_segments"] == 1
+    store.compact_appends()
+    assert _delta_files(store, idef) == []
+    assert _index_state(store, idef) == _index_rebuild(store, idef)
+    assert "i39" not in {r[0] for r in _index_state(store, idef)}
+
+
+def test_item_write_reads_no_wal_rows_however_many_it_keeps(tmp_path, monkeypatch):
+    """_stage_wal reads a WAL bucket only to rewrite it or when one of
+    its files may hold an incomplete row: after 10 or 2,000 completed
+    prior writes (list short of WAL_MAX_FILES) the next item write
+    reads no WAL row — also on a fresh handle, which answers from the
+    files' parquet footers. A lazy handle's incomplete row makes the
+    next write read the bucket and complete it."""
+    from hyper_storage_spark.store.documents import TRANSACTIONS
+    from hyper_storage_spark.store.storage import Storage
+
+    real = Storage.bucket_rows
+
+    def wal_rows_read(store, write) -> int:
+        seen = []
+
+        def spy(self, table, bucket, filters=None):
+            out = real(self, table, bucket, filters)
+            if table == TRANSACTIONS:
+                seen.append(len(out))
+            return out
+
+        monkeypatch.setattr(Storage, "bucket_rows", spy)
+        try:
+            write()
+        finally:
+            monkeypatch.setattr(Storage, "bucket_rows", real)
+        return sum(seen)
+
+    def after(prior: int) -> tuple:
+        root = str(tmp_path / f"s{prior}")
+        store = DocumentStore(root)
+        store.put("c~/x", {"a": 0})
+        for k in range(0, prior, 500):
+            store.write_batch([("patch", "c~/x", {"a": i}) for i in range(k, min(prior, k + 500))])
+        b = store._bucket("c~")
+        assert len(store.storage.bucket_rows(TRANSACTIONS, b)) == prior + 1
+        assert len(store.storage.bucket_files(TRANSACTIONS, b)) < store.WAL_MAX_FILES - 2
+        warm = wal_rows_read(store, lambda: store.patch("c~/x", {"a": -1}))
+        fresh = DocumentStore(root)
+        cold = wal_rows_read(fresh, lambda: fresh.patch("c~/x", {"a": -2}))
+        return warm, cold
+
+    assert after(10) == after(2000) == (0, 0)
+    root = str(tmp_path / "s10")
+    DocumentStore(root, auto_complete=False).patch("c~/x", {"a": -3})
+    store = DocumentStore(root)
+    # the 11 rows written in after(10), the two probes' and the lazy one
+    assert wal_rows_read(store, lambda: store.patch("c~/x", {"a": -4})) == 11 + 2 + 1
+    assert store.recover(scan_all=True) == 0
+
+
+def test_null_body_index_membership_agrees_across_build_paths(spark, tmp_path):
+    """A live item whose body PATCHed to null: the driver build, the
+    Spark build and per-item maintenance give an index the same rows
+    (an unfiltered index holds the item with null sort values), and an
+    index-served query returns the same items as the base-table plan."""
+    import json as _json
+
+    from hyper_storage_spark.plans import SortBy, SortItem
+
+    store = DocumentStore(str(tmp_path / "nb"), spark=spark)
+    for i in range(6):
+        store.put(f"nb~/i{i}", {"a": i, "p": 10 - i})
+    store.patch("nb~/i1", None)
+    queries = [
+        dict(sort=[SortBy("p")]),
+        dict(sort=[SortBy("p", True)]),
+        dict(filter="a > 2", sort=[SortBy("p")]),
+    ]
+
+    def answers():
+        return [sorted(_json.dumps(b) for b in store.query("nb~", size=20, **q).items) for q in queries]
+
+    base = answers()  # no index yet: the base-table plan serves them
+    assert _json.dumps(None) in base[0]
+    for filter_by in (None, "a > 2"):
+        rows = {}
+        for use_spark in (False, True):
+            store.create_index("nb~", "ix", [SortItem("p", "decimal")], filter_by, use_spark=use_spark)
+            idef = store.index_defs("nb~")[0]
+            rows[use_spark] = _index_state(store, idef)
+            served = ["ix"] * 3 if filter_by is None else [None, None, "ix"]
+            assert [store.explain("nb~", **q).index_id for q in queries] == served
+            assert answers() == base, (filter_by, use_spark)
+            store.delete_index("nb~", "ix")
+        assert rows[False] == rows[True] == _index_rebuild(store, idef)
+        assert ("i1" in {r[0] for r in rows[True]}) == (filter_by is None)
+    # per-item maintenance agrees with both builds
+    store.create_index("nb~", "ix", [SortItem("p", "decimal")], None)
+    idef = store.index_defs("nb~")[0]
+    store.patch("nb~/i4", None)
+    assert "i4" in {r[0] for r in _index_state(store, idef)}
+    assert _index_state(store, idef) == _index_rebuild(store, idef)
+
+
+def _fuzz_body(rng):
+    body = {"a": rng.randint(0, 9)}
+    p = rng.choice([1, 2, 2, 2.5, "x", None])
+    if p is not None:
+        body["p"] = p
+    t = rng.choice(["a", "b", "b", None])
+    if t is not None:
+        body["t"] = t
+    return body
+
+
+def _copy_and_fold(spark, root, dest):
+    """A copy of the store whose index deltas are all folded."""
+    import shutil
+
+    shutil.copytree(root, dest)
+    folded = DocumentStore(dest, spark=spark)
+    folded.compact_appends()
+    for idef in folded.index_defs("fz~"):
+        assert _delta_files(folded, idef) == []
+    return folded
+
+
+def _answers(store, checks):
+    """Each check's outcome: (items, plan kind) or the exception type;
+    paged checks add their select traces."""
+    from hyper_storage_spark.store.query import QueryBudgetExceeded
+
+    out = []
+    for paged, kw in checks:
+        try:
+            res = (store.query_paged if paged else store.query)("fz~", **kw)
+        except QueryBudgetExceeded as e:
+            out.append(type(e).__name__)
+            continue
+        p = res.plan
+        out.append((res.items, p.index_id, p.exact_sort, p.reversed, getattr(res, "selects", None)))
+    return out
+
+
+def test_index_delta_fuzz_matches_rebuild_and_folded_copy(spark, tmp_path):
+    """Seeded PUT/PATCH/DELETE traffic moves items in and out of a
+    filtered index, with tied and null sort values and PATCHes to null,
+    across write-path folds and compact_appends(). After every op each
+    index's merged rows equal a rebuild from live content; at
+    checkpoints every query and query_paged answer (exact, reversed,
+    inexact with its budget, residual) equals that of a folded copy."""
+    import random
+
+    from hyper_storage_spark.plans import SortBy, SortItem
+
+    rng = random.Random(7331)
+    root = str(tmp_path / "fz")
+    store = DocumentStore(root, spark=spark)
+    ids = [f"i{n:02d}" for n in range(14)]
+    for i in ids[:9]:
+        store.put(f"fz~/{i}", _fuzz_body(rng))
+    store.create_index("fz~", "hot", [SortItem("p", "decimal", "desc"), SortItem("t", "text")], "a > 3")
+    store.create_index("fz~", "byt", [SortItem("t", "text")], None)
+    idefs = store.index_defs("fz~")
+    checks = [
+        (False, dict(filter="a > 3", sort=[SortBy("p", True), SortBy("t")], size=4)),
+        (False, dict(filter="a > 3", sort=[SortBy("p"), SortBy("t", True)], size=4)),
+        (False, dict(filter="a > 3", sort=[SortBy("a")], size=3, skip_max=4)),
+        (False, dict(filter="a > 3", sort=[SortBy("a")], size=2, skip_max=1)),
+        (False, dict(filter='t = "b" and a > 4', sort=[SortBy("t")], size=20)),
+        (False, dict(filter='t > "a"', sort=[SortBy("t", True)], size=5)),
+        (True, dict(filter="a > 3", sort=[SortBy("p", True), SortBy("t")], size=2)),
+        (True, dict(filter="a > 3", sort=[SortBy("p"), SortBy("t", True)], size=2)),
+        (True, dict(filter="a > 6", sort=[SortBy("t")], size=2)),
+    ]
+    kinds = set()
+    checked_with_delta = 0
+    for step in range(90):
+        item = rng.choice(ids)
+        roll = rng.random()
+        try:
+            if roll < 0.4:
+                store.put(f"fz~/{item}", _fuzz_body(rng))
+            elif roll < 0.55:
+                store.patch(f"fz~/{item}", None)
+            elif roll < 0.8:
+                store.patch(f"fz~/{item}", {"a": rng.randint(0, 9), "p": rng.choice([None, 2, 3])})
+            else:
+                store.delete(f"fz~/{item}")
+        except NotFoundError:
+            pass
+        if rng.random() < 0.05:
+            store.compact_appends()
+        for idef in idefs:
+            assert _index_state(store, idef) == _index_rebuild(store, idef), (step, idef.index_id)
+        if step % 15 == 14:
+            pending = sum(len(_delta_files(store, idef)) for idef in idefs)
+            checked_with_delta += pending > 0
+            folded = _copy_and_fold(spark, root, str(tmp_path / f"folded{step}"))
+            got, want = _answers(store, checks), _answers(folded, checks)
+            assert got == want, step
+            kinds.update((a[1], a[2], a[3]) for a in got if isinstance(a, tuple))
+            kinds.update(a for a in got if isinstance(a, str))
+    assert checked_with_delta >= 4
+    assert "QueryBudgetExceeded" in kinds
+    assert {k[1:] for k in kinds if isinstance(k, tuple) and k[0]} >= {(True, False), (True, True), (False, False)}
+
+
+def test_index_served_frame_reads_base_files_and_gains_no_filter(spark, tmp_path):
+    """The Spark plan of an index-served query is the same with and
+    without a pending delta: its frame reads the base files only and
+    carries the same filters; the delta is merged on the driver."""
+    import re
+
+    from hyper_storage_spark.plans import SortBy, SortItem
+    from hyper_storage_spark.store.query import _plan
+
+    store = DocumentStore(str(tmp_path / "pl"), spark=spark)
+    for i in range(8):
+        store.put(f"pl~/i{i}", {"a": i})
+    store.create_index("pl~", "bya", [SortItem("a", "decimal")], "a > 1")
+    idef = store.index_defs("pl~")[0]
+
+    def shape():
+        plan, src, _ = _plan(store, "pl~", "a > 2", [SortBy("a")])
+        assert plan.index_id == "bya"
+        text = src.df._jdf.queryExecution().optimizedPlan().toString()
+        return sorted(src.df.inputFiles()), re.sub(r"#\d+L?", "#", text), src.delta
+
+    files, before, delta = shape()
+    assert delta == {}
+    store.patch("pl~/i5", {"a": 0})
+    store.put("pl~/i9", {"a": 9})
+    files_after, after, delta = shape()
+    assert sorted(delta) == ["i5", "i9"] and delta["i5"]["revision"] is None
+    assert files_after == files and len(_delta_files(store, idef)) == 2
+    assert not any("delta-" in f for f in files_after)
+    assert after == before
+    assert [b["id"] for b in store.query("pl~", filter="a > 2", sort=[SortBy("a")]).items] == [
+        "i3", "i4", "i6", "i7", "i9"
+    ]
+
+
+def test_index_deltas_across_collection_recreate_time_travel_and_vacuum(spark, tmp_path):
+    """A collection delete drops its index tables with every delta file,
+    and a re-created index starts clean; an at_version view reads the
+    multi-file index as it was; vacuum keeps referenced delta files."""
+    from hyper_storage_spark.plans import SortBy, SortItem
+
+    store = DocumentStore(str(tmp_path / "rc"), spark=spark)
+    for i in range(5):
+        store.put(f"rc~/i{i}", {"a": i})
+    store.create_index("rc~", "bya", [SortItem("a", "decimal")], None)
+    idef = store.index_defs("rc~")[0]
+    store.patch("rc~/i1", {"a": 10})
+    store.delete("rc~/i2")
+    assert len(_delta_files(store, idef)) == 2
+    v = store.storage.current_version()
+    then_rows = _index_state(store, idef)
+    then_items = store.query("rc~", sort=[SortBy("a")]).items
+    store.put("rc~/i7", {"a": -1})
+    store.patch("rc~/i3", None)
+
+    old = store.at_version(v)
+    assert _index_state(old, idef) == then_rows
+    assert old.query("rc~", sort=[SortBy("a")]).items == then_items
+    now_rows = _index_state(store, idef)
+    store.vacuum(grace_seconds=0, keep_versions=0)
+    assert len(_delta_files(store, idef)) == 4
+    assert _index_state(DocumentStore(store.storage.root), idef) == now_rows
+    _assert_reads_exact(store.storage)
+
+    store.delete("rc~")
+    assert store.storage.files(idef.storage_table) == []
+    store.put("rc~/j0", {"a": 1})
+    store.create_index("rc~", "bya", [SortItem("a", "decimal")], None)
+    assert _delta_files(store, idef) == []
+    store.put("rc~/j1", {"a": 2})
+    assert len(_delta_files(store, idef)) == 1
+    assert _index_state(store, idef) == _index_rebuild(store, idef)
+
+
+def test_bulk_index_paths_over_pending_deltas(spark, tmp_path):
+    """merge_collection and expire_items refresh an index incrementally
+    from its base files, so items with pending delta rows re-extract
+    from content; _backfill_index_spark rebuilds over them. Each leaves
+    one merged base equal to a rebuild."""
+    from hyper_storage_spark.plans import SortItem
+
+    store = DocumentStore(str(tmp_path / "bk"), spark=spark)
+    for i in range(10):
+        store.put(f"bk~/i{i}", {"v": i, "ts": f"2024-01-{i + 1:02d} 00:00:00"})
+    store.create_index("bk~", "big", [SortItem("v", "decimal")], "v >= 5", use_spark=True)
+    idef = store.index_defs("bk~")[0]
+
+    def pend(leaves, enters, gone):
+        store.patch(f"bk~/{leaves}", {"v": 1})
+        store.patch(f"bk~/{enters}", {"v": 50})
+        store.delete(f"bk~/{gone}")
+        assert _delta_files(store, idef)  # a write may have folded first
+
+    def settled():
+        assert _delta_files(store, idef) == []
+        assert _index_state(store, idef) == _index_rebuild(store, idef)
+
+    pend("i6", "i2", "i8")
+    batch = spark.createDataFrame([("i3", 30), ("i20", 20)], "item string, v long")
+    store.merge_collection(batch, "bk~", "item")
+    settled()
+    assert {"i2", "i3", "i20"} <= {r[0] for r in _index_state(store, idef)}
+    store.put("bk~/i6", {"v": 60, "ts": "2023-01-01 00:00:00"})
+    pend("i9", "i4", "i5")
+    n, _ = store.expire_items("bk~", "ts", "2024-01-03 00:00:00", "v long, ts string")
+    assert n >= 1
+    settled()
+    store.put("bk~/i7", {"v": 70})
+    pend("i7", "i3", "i9")
+    store._backfill_index_spark(idef)
+    settled()

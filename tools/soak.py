@@ -45,6 +45,12 @@ Invariants asserted (not eyeballed), after a closing recover():
      One final quiesced aggregate-vs-shadow comparison runs
      unconditionally; retryable read races mid-loop are counted, a
      retryable error on the FINAL check is a failure.
+  7. INDEX DELTA ATOMICITY — soak_b~ carries a filtered index from the
+     start, which every item write maintains by appending delta rows
+     in its one flip (and folds at the file cap or in compact). After
+     recovery its merged rows must equal a rebuild from live content:
+     a SIGKILL can never leave a delta without its content or content
+     without its delta.
 
 Usage: python tools/soak.py [--procs 4] [--threads 3] [--seconds 45]
        [--kill-every 4] [--root DIR] [--no-spark]
@@ -568,13 +574,24 @@ class _RestDriver:
                 )
 
 
+INDEXED_URI, INDEX_ID = "soak_b~", "soak_hot"
+
+
+def _index_rows(rows) -> list:
+    """Index rows as comparable tuples (None rows, i.e. non-members, skipped)."""
+    keys = ("item_id", "revision", "body", "d0")
+    return sorted(tuple(r.get(k) for k in keys) for r in rows if r)
+
+
 def run_soak(
     root: str, procs: int, threads: int, seconds: int, kill_every: float, spark=None
 ) -> dict:
+    from hyper_storage_spark.plans import SortItem
     from hyper_storage_spark.store import DocumentStore
     from hyper_storage_spark.store.documents import CONTENT, FEED, STATICS
 
-    DocumentStore(root)  # init manifest
+    # init manifest; the invariant-7 index exists before any writer
+    DocumentStore(root).create_index(INDEXED_URI, INDEX_ID, [SortItem("a", "decimal", "desc")], "a > 50")
     rng = random.Random(4242)
 
     def spawn(wid: int):
@@ -728,6 +745,18 @@ def run_soak(
     if rest_driver is not None:
         rest_driver.step(final=True)
         failures.extend(rest_driver.failures)
+    # 7. index delta atomicity: merged index rows == a rebuild
+    idef = next(d for d in store.index_defs(INDEXED_URI) if d.index_id == INDEX_ID)
+    merged = _index_rows(store.storage.bucket_rows(idef.storage_table, 0))
+    rebuilt = _index_rows((
+        store._index_row(idef, c)
+        for c in store.storage.bucket_rows(CONTENT, store._bucket(INDEXED_URI))
+        if c["document_uri"] == INDEXED_URI and c["item_id"]
+    ))
+    if merged != rebuilt:
+        diff = sorted(set(merged) ^ set(rebuilt))[:5]
+        failures.append(f"{INDEXED_URI} index {INDEX_ID}: merged rows differ from a rebuild at {diff}")
+    index_files = len(store.storage.bucket_files(idef.storage_table, 0))
     # 4c. closing vacuum keeps state readable
     before = {(c["document_uri"], c["item_id"], c["revision"]) for c in content}
     removed = store.vacuum(grace_seconds=0.0, keep_versions=0)
@@ -745,6 +774,8 @@ def run_soak(
         "revisions": {u: s["revision"] for u, s in statics.items()},
         "recovered_on_close": redriven,
         "vacuum_removed": removed,
+        "index_rows": len(merged),
+        "index_files": index_files,
         "worker_errors": errs,
         "op_exceptions": op_exceptions[:20],
         "n_op_exceptions": len(op_exceptions),
