@@ -1151,12 +1151,20 @@ class DocumentStore:
         index row, or a tombstone (null revision) when it is not a
         member — staged into ``bucket_appends`` as one delta file per
         index, so a write costs its own index rows, not the index's.
-        The write that finds an index's file list at WAL_MAX_FILES (the
-        WAL's cap) folds it instead: the merged rows go into ``updates``
-        as one new base file. ``content_rows`` is the document's content
-        bucket as the caller staged it; None reads it."""
+        The write folds an index instead (the merged rows go into
+        ``updates`` as one new base file) when its file list is at
+        WAL_MAX_FILES (the WAL's cap), or when the delta rows, pending
+        plus this write's, would exceed both WAL_MAX_FILES and the base's
+        rows divided by WAL_MAX_FILES: an index-served query fetches one
+        extra row per pending delta row, so a batch write's large delta
+        is folded at once instead of being paid for by every query until
+        the file cap. ``content_rows`` is the document's content bucket as
+        the caller staged it; None reads it."""
+        # the collection document itself ('' item id) is no item: every
+        # index build leaves it out
+        item_ids = sorted(set(item_ids) - {""})
         idefs = [d for d in self.index_defs(uri) if d.status != STATUS_DELETING]
-        if not idefs:
+        if not idefs or not item_ids:
             return
         if content_rows is None:
             content_rows = self._content_bucket(uri)
@@ -1164,12 +1172,14 @@ class DocumentStore:
         for idef in idefs:
             table = idef.storage_table
             delta = []
-            for item_id in sorted(set(item_ids)):
+            for item_id in item_ids:
                 c = content.get(item_id)
                 row = None if c is None else self._index_row(idef, c)
                 tombstone = {"document_uri": uri, "index_id": idef.index_id, "item_id": item_id, "revision": None}
                 delta.append(row or tombstone)
-            if len(self.storage.bucket_files(table, 0)) >= self.WAL_MAX_FILES:
+            files, base_rows, pending = self.storage.bucket_shape(table, 0)
+            cap = self.WAL_MAX_FILES
+            if files >= cap or pending + len(delta) > max(cap, base_rows // cap):
                 updates[(table, 0)] = merge_delta(self.storage.bucket_rows(table, 0), delta_of([delta]))
             else:
                 bucket_appends[(table, 0)] = delta

@@ -153,6 +153,7 @@ _NULL_VALUE_OK = {
     FilterOp.LT: lambda c: False,
     FilterOp.LTEQ: lambda c: c is None,
 }
+# the pushed comparisons, on Spark Columns and on values held in memory
 _COMPARE = {
     FilterOp.EQ: lambda c, v: c == v,
     FilterOp.GT: lambda c, v: c > v,
@@ -199,14 +200,7 @@ def _apply_field_filters(df: DataFrame, filters: list[FieldFilter], decimal_cols
             # per row, which rejects, so ranges push FALSE.
             df = df.filter(c.isNull() if ff.op == FilterOp.EQ else F.lit(False))
             continue
-        cond = {
-            FilterOp.EQ: c == v,
-            FilterOp.GT: c > v,
-            FilterOp.GTEQ: c >= v,
-            FilterOp.LT: c < v,
-            FilterOp.LTEQ: c <= v,
-        }[ff.op]
-        df = df.filter(cond)
+        df = df.filter(_COMPARE[ff.op](c, v))
     return df
 
 

@@ -28,8 +28,10 @@ rows, not the bucket's:
   the caller the pending delta to merge on the driver).
 
 The document layer folds such a list back into one base file when it
-reaches a fixed length (``DocumentStore.WAL_MAX_FILES``) and in
-``compact_appends``.
+reaches a fixed length (``DocumentStore.WAL_MAX_FILES``), when an
+index's delta rows outgrow their share of its base rows
+(:meth:`Storage.bucket_shape` counts both without decoding a row), and
+in ``compact_appends``.
 
 Scale note: bucket count is configurable (default 16 for local tests,
 1024 at cluster scale to mirror the reference's shard constant); Spark
@@ -349,9 +351,6 @@ class Storage:
     # and keeps a whole-store scan such as recover(scan_all=True) from
     # pinning every bucket of a large store in memory
     READ_CACHE_ROWS = 100_000
-    # bound of the per-file memo of may_hold_nulls answers (paths are
-    # immutable, so an answer never goes stale; the memo is only reset)
-    NULLS_MEMO_FILES = 4096
 
     # True when a commit stages a ``bucket_appends`` bucket as a whole
     # rewrite anyway (the executor overlay): a caller that would rather
@@ -391,7 +390,6 @@ class Storage:
         self._flock_owner: Optional[int] = None
         self._flock_mutex = _threading.Lock()
         self._row_cache = _RowCache(self.READ_CACHE_ROWS)
-        self._nulls: dict[tuple[str, str], bool] = {}
         if not os.path.exists(self._manifest_path):
             self._write_manifest(
                 {"version": 0, "n_buckets": self.n_buckets, "tables": {}}
@@ -631,24 +629,28 @@ class Storage:
 
     def may_hold_nulls(self, table: str, bucket: int, column: str) -> bool:
         """Can any file of the bucket hold a null ``column``? Answered
-        per immutable file from its cached rows or its parquet footer
-        statistics, and remembered, so the bucket's rows are not read."""
+        per immutable file from its cached rows, else from its parquet
+        footer statistics, so no row is decoded."""
         for rel in self._bucket_rels(table, bucket):
-            key = (rel, column)
-            found = self._nulls.get(key)
-            if found is None:
-                rows = self._row_cache.peek(rel)
-                found = (
-                    any(r[column] is None for r in rows)
-                    if rows is not None
-                    else _footer_may_hold_nulls(os.path.join(self.root, rel), column)
-                )
-                if len(self._nulls) >= self.NULLS_MEMO_FILES:
-                    self._nulls.clear()
-                self._nulls[key] = found
-            if found:
+            rows = self._row_cache.peek(rel)
+            if rows is None:
+                if _footer_may_hold_nulls(os.path.join(self.root, rel), column):
+                    return True
+            elif any(r[column] is None for r in rows):
                 return True
         return False
+
+    def bucket_shape(self, table: str, bucket: int) -> tuple[int, int, int]:
+        """(files in the bucket's list, rows of its base files, rows of
+        its delta files), raw rows before the merge, counted from cached
+        rows or parquet footers, so no row is decoded."""
+        rels = self._bucket_rels(table, bucket)
+        rows = [0, 0]
+        for rel in rels:
+            held = self._row_cache.peek(rel)
+            n = len(held) if held is not None else pq.read_metadata(os.path.join(self.root, rel)).num_rows
+            rows[is_delta_file(rel)] += n
+        return len(rels), rows[0], rows[1]
 
     def bucket_files(self, table: str, bucket: int) -> list[str]:
         """Every file of the bucket's list, base and delta."""
@@ -1041,7 +1043,6 @@ class SnapshotStorage(Storage):
         # a cache of its own: historical paths must not evict the live
         # store's entries
         self._row_cache = _RowCache(self.READ_CACHE_ROWS)
-        self._nulls = {}
 
     def _read_manifest(self) -> dict:
         return self._pinned
@@ -1102,7 +1103,6 @@ class OverlayStorage(Storage):
         # reads of untouched buckets fall through to the base, and so
         # does their cache
         self._row_cache = base._row_cache
-        self._nulls = base._nulls
         self.overlay: dict[tuple[str, int], list[dict]] = {}
         self.schemas: dict[str, pa.Schema] = {}
         self.appended: dict[str, list[dict]] = {}
@@ -1130,6 +1130,12 @@ class OverlayStorage(Storage):
         if table in self.dropped or (table, bucket) in self.overlay:
             return []
         return self.base.bucket_files(table, bucket)
+
+    def bucket_shape(self, table: str, bucket: int) -> tuple[int, int, int]:
+        # like bucket_files: an overlaid bucket has no files
+        if table in self.dropped or (table, bucket) in self.overlay:
+            return 0, 0, 0
+        return self.base.bucket_shape(table, bucket)
 
     def current_version(self):
         # overlays buffer in memory with no manifest — version pinning

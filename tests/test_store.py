@@ -3137,6 +3137,43 @@ def test_item_write_appends_index_deltas_and_folds_at_the_cap(tmp_path, monkeypa
     assert "i39" not in {r[0] for r in _index_state(store, idef)}
 
 
+def test_batch_write_folds_an_index_delta_past_its_share_of_the_base(tmp_path):
+    """An index-served query fetches one extra row per pending delta
+    row, so a write also folds an index when the delta rows, pending
+    plus its own, would exceed both WAL_MAX_FILES and the base's rows
+    divided by WAL_MAX_FILES: write_batch into an indexed collection
+    leaves at most that many delta rows pending, while single-item
+    writes still append up to the file cap."""
+    import random
+
+    from hyper_storage_spark.plans import SortItem
+
+    store = DocumentStore(str(tmp_path / "s"))
+    store.write_batch([("put", f"c~/i{i:03d}", {"a": i}) for i in range(400)])
+    store.create_index("c~", "all", [SortItem("a", "decimal", "asc")])
+    idef = store.index_defs("c~")[0]
+    cap = store.WAL_MAX_FILES
+    assert store.storage.bucket_shape(idef.storage_table, 0) == (1, 400, 0)
+    store.write_batch([("patch", f"c~/i{i:03d}", {"a": -i}) for i in range(30)])
+    assert store.storage.bucket_shape(idef.storage_table, 0) == (2, 400, 30)  # 30 <= 400 // cap
+    store.write_batch([("patch", f"c~/i{i:03d}", {"a": -i}) for i in range(30, 60)])  # 60 > 50: fold
+    assert store.storage.bucket_shape(idef.storage_table, 0) == (1, 400, 0)
+    assert _index_state(store, idef) == _index_rebuild(store, idef)
+    store.write_batch([("delete", f"c~/i{i:03d}", None) for i in range(100, 160)])  # one batch past the share
+    assert store.storage.bucket_shape(idef.storage_table, 0) == (1, 340, 0)
+    assert _index_state(store, idef) == _index_rebuild(store, idef)
+    for n in range(1, cap):
+        store.patch(f"c~/i{n:03d}", {"a": n})
+        assert store.storage.bucket_shape(idef.storage_table, 0) == (1 + n, 340, n)
+    rng = random.Random(5)
+    for _ in range(30):
+        ids = rng.sample(range(400), rng.randint(1, 25))
+        store.write_batch([("put", f"c~/i{i:03d}", {"a": rng.randint(0, 9)}) for i in ids])
+        files, base, pending = store.storage.bucket_shape(idef.storage_table, 0)
+        assert files <= cap and pending <= max(cap, base // cap)
+        assert _index_state(store, idef) == _index_rebuild(store, idef)
+
+
 def test_item_write_reads_no_wal_rows_however_many_it_keeps(tmp_path, monkeypatch):
     """_stage_wal reads a WAL bucket only to rewrite it or when one of
     its files may hold an incomplete row: after 10 or 2,000 completed
@@ -3230,6 +3267,15 @@ def test_null_body_index_membership_agrees_across_build_paths(spark, tmp_path):
     store.patch("nb~/i4", None)
     assert "i4" in {r[0] for r in _index_state(store, idef)}
     assert _index_state(store, idef) == _index_rebuild(store, idef)
+    # a write to the collection document itself ('' item id) is no
+    # item: like both builds, maintenance leaves it out of the index
+    files = store.storage.bucket_files(idef.storage_table, 0)
+    store.put("nb~", {"p": 5})
+    assert store.storage.bucket_files(idef.storage_table, 0) == files
+    assert "" not in {r["item_id"] for r in store.storage.bucket_rows(idef.storage_table, 0)}
+    assert sorted(_json.dumps(b) for b in store.query("nb~", size=20, sort=[SortBy("p")]).items) == sorted(
+        _json.dumps(store.get(f"nb~/i{i}")[0]) for i in range(6)
+    )
 
 
 def _fuzz_body(rng):
