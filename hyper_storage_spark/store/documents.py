@@ -35,7 +35,12 @@ Semantics mirrored from the reference (citations inline):
   (PrimaryWorker.scala:183-215); here a write appends one delta row per
   touched item to each index — an upsert, or a tombstone when the item
   left the index — and readers let it replace the item's older row
-  (storage.merge_delta), which subsumes L17's delete-then-insert.
+  (storage.merge_delta), which subsumes L17's delete-then-insert;
+- bulk collection writes (ingest_collection, merge_collection,
+  expire_items), the backfill-job face: each builds its collection's
+  new content bucket as a Spark frame, and one publisher
+  (``_publish_bulk``) stages it and flips it in with the statics row in
+  one commit, pinned on the version its reads saw.
 """
 
 from __future__ import annotations
@@ -69,7 +74,8 @@ from ..plans.model import (
 )
 from .idgen import create_id
 from .merge import filter_nulls, merge_patch
-from .storage import Storage, bucket_of, delta_of, delta_schema, is_delta_file, merge_delta, write_bucket_file
+from .storage import Storage, bucket_of, delta_of, delta_schema, is_delta_file, merge_delta
+from .storage import write_bucket_file  # noqa: F401  (perfbench's tracer wraps it here)
 
 
 class NotFoundError(KeyError):
@@ -249,6 +255,24 @@ def transaction_id_of(txn: dict) -> str:
     return f"{txn['dt_quantum']}-{txn['partition']}-{txn['uuid']}"
 
 
+def _item_rows(df, uri: str, item_id_col: str, revision: int, now: int):
+    """Content rows of collection ``uri`` for every row of ``df``: the
+    row as the JSON body (with the server-injected ``id``), keyed by
+    ``item_id_col``, at ``revision``, created and modified ``now``."""
+    from pyspark.sql import functions as F
+
+    item_id = F.col(item_id_col).cast("string")
+    return df.select(
+        F.lit(uri).alias("document_uri"),
+        item_id.alias("item_id"),
+        F.lit(revision).cast("long").alias("revision"),
+        F.to_json(F.struct(*[F.col(c) for c in df.columns if c != "id"], item_id.alias("id"))).alias("body"),
+        F.lit(False).alias("is_deleted"),
+        F.lit(now).alias("created_at"),
+        F.lit(now).alias("modified_at"),
+    )
+
+
 def _sort_value(item: SortItem, value: Any):
     """Typed sort-column value (IndexLogic.scala:177-182 type semantics)."""
     if value is None:
@@ -289,9 +313,9 @@ class DocumentStore:
     """Library-mode document store. All writes serialize through one
     lock (single-writer ⇒ gapless revisions); queries run on Spark."""
 
-    # minimum age (s) before vacuum may reclaim an UNREFERENCED file
-    # under a staging marker (rollup_build_/index_backfill_/ingest-/
-    # merge-/expire-/-stream-): another process's staging-to-commit
+    # minimum age (s) before vacuum may reclaim an UNREFERENCED staged
+    # file (Storage.is_staged: a Spark-staged frame or an executor-
+    # staged stream bucket): another process's staging-to-commit
     # window must fit inside it (see vacuum). Class attribute so tests
     # that deliberately reclaim fresh staging garbage can lower it.
     STAGING_GRACE_S = 120.0
@@ -1184,79 +1208,87 @@ class DocumentStore:
             else:
                 bucket_appends[(table, 0)] = delta
 
-    # -- bulk ingest (the 100 TB write path) -----------------------------------
+    # -- bulk collection writes (the 100 TB write path) ------------------------
+
+    def _publish_bulk(self, uri: str, build):
+        """THE publisher of the bulk collection writes (ingest_collection,
+        merge_collection, expire_items): one pinned :meth:`Storage.commit`
+        that registers a Spark-staged frame as the collection's content
+        bucket and replaces its statics row with the next revision.
+
+        ``build(static, revision, now)`` gets the collection's statics
+        row (None when it has none), the revision to publish and the
+        write time, reads what it needs and returns ``(frame, result)``;
+        ``frame`` is the whole new content bucket (other documents
+        hashing into it included), or None when there is nothing to
+        publish. Content and statics share the flip: two flips would let
+        a crash strand a half-created collection that can neither be
+        queried (no static) nor re-ingested (bucket non-empty). The flip
+        is pinned on the version read before ``build``'s reads, so a
+        write that lands after them refuses the flip instead of being
+        erased by the staged bucket; a refused attempt re-runs ``build``
+        on fresh state, at most WRITE_CAS_RETRIES times, then raises
+        ManifestConflict. Returns the landed (or empty) attempt's
+        ``result``. Caller holds self._lock."""
+        from .storage import ManifestConflict
+
+        bucket = self._bucket(uri)
+        last: Optional[BaseException] = None
+        for attempt in range(self.WRITE_CAS_RETRIES):
+            v0 = self.storage.current_version()
+            static = self._get_static(uri)
+            revision = 1 if static is None else static["revision"] + 1
+            now = _now_ms()
+            frame, result = build(static, revision, now)
+            if frame is None:
+                return result
+            files = self.storage.stage_frame(frame, CONTENT)
+            statics = [r for r in self._statics_bucket(uri) if r["document_uri"] != uri]
+            statics.append(
+                {
+                    "document_uri": uri,
+                    "revision": revision,
+                    "is_deleted": False,
+                    "created_at": now if static is None else static["created_at"],
+                    "modified_at": now,
+                }
+            )
+            try:
+                self.storage.commit(
+                    {(STATICS, bucket): statics},
+                    {STATICS: STATICS_SCHEMA},
+                    files={CONTENT: {bucket: files}},
+                    expected_version=v0,
+                )
+                return result
+            except ManifestConflict as e:
+                last = e
+            if attempt < self.WRITE_CAS_RETRIES - 1:
+                self._cas_backoff(attempt)
+        raise last  # type: ignore[misc]
 
     def ingest_collection(self, df, collection_uri: str, item_id_col: str) -> int:
         """Bulk-load a Spark DataFrame as a collection: every row becomes
         an item whose body is the row as JSON (+ the server-injected
         ``id``), written by Spark executors directly into the bucket —
         no driver round-trip per item. One atomic manifest flip makes
-        the whole collection visible (revision 1), exactly like the
-        reference's backfill jobs. This is the ingest path that scales:
-        per-item PUT is for the operational API, ingest_collection for
-        backfills/migrations.
+        the whole collection visible (revision 1) with its statics row,
+        exactly like the reference's backfill jobs. This is the ingest
+        path that scales: per-item PUT is for the operational API,
+        ingest_collection for backfills/migrations.
         """
-        import os
-
-        from pyspark.sql import functions as F
-
         if not collection_uri.endswith("~"):
             raise ValueError("ingest_collection requires a collection~ URI")
-        with self._lock:
-            if self._get_static(collection_uri) is not None:
+
+        def build(static, revision, now):
+            if static is not None:
                 raise ValueError(f"{collection_uri!r} already exists")
-            bucket = self._bucket(collection_uri)
             if self._content_bucket(collection_uri):
                 raise ValueError("bucket already has data; per-item API required")
-            now = _now_ms()
-            body_cols = [c for c in df.columns if c != "id"]
-            out = df.select(
-                F.lit(collection_uri).alias("document_uri"),
-                F.col(item_id_col).cast("string").alias("item_id"),
-                F.lit(1).cast("long").alias("revision"),
-                F.to_json(
-                    F.struct(
-                        *[F.col(c) for c in body_cols],
-                        F.col(item_id_col).cast("string").alias("id"),
-                    )
-                ).alias("body"),
-                F.lit(False).alias("is_deleted"),
-                F.lit(now).alias("created_at"),
-                F.lit(now).alias("modified_at"),
-            )
-            outdir = os.path.join(self.storage.root, "data", "content", f"ingest-b{bucket:04d}")
-            out.write.mode("overwrite").parquet(outdir)
-            files = [
-                os.path.join(outdir, f)
-                for f in os.listdir(outdir)
-                if f.endswith(".parquet")
-            ]
-            n = sum(1 for _ in files)  # at least one part file required
-            if n == 0:
-                raise RuntimeError("ingest produced no files")
-            # content + statics in ONE manifest flip: two flips let a
-            # crash in between strand a half-created collection that can
-            # neither be queried (no static) nor re-ingested (bucket
-            # non-empty) — commit_external_many exists for exactly this
-            statics_rows = [r for r in self._statics_bucket(collection_uri)]
-            statics_rows.append(
-                {
-                    "document_uri": collection_uri,
-                    "revision": 1,
-                    "is_deleted": False,
-                    "created_at": now,
-                    "modified_at": now,
-                }
-            )
-            statics_abs = os.path.join(
-                self.storage.root, "data", "statics",
-                f"b{bucket:04d}-ingest-{uuid.uuid4().hex[:8]}.parquet",
-            )
-            write_bucket_file(statics_rows, STATICS_SCHEMA, statics_abs)
-            self.storage.commit_external_many(
-                {CONTENT: {bucket: files}, STATICS: {bucket: [statics_abs]}}
-            )
-            return 1
+            return _item_rows(df, collection_uri, item_id_col, revision, now), revision
+
+        with self._lock:
+            return self._publish_bulk(collection_uri, build)
 
     def merge_collection(
         self, df, collection_uri: str, item_id_col: str, delete_missing: bool = False
@@ -1279,35 +1311,16 @@ class DocumentStore:
         surface, not the operational API; consumers needing per-item
         change events use per-item writes or diff snapshots
         (at_version makes that cheap). Returns the new revision."""
-        import os
-
         from pyspark.sql import functions as F
 
         if not collection_uri.endswith("~"):
             raise ValueError("merge_collection requires a collection~ URI")
-        with self._lock:
-            static = self._get_static(collection_uri)
+
+        def build(static, revision, now):
             if static is None or static["is_deleted"]:
                 raise NotFoundError(collection_uri)
-            bucket = self._bucket(collection_uri)
-            revision = static["revision"] + 1
-            now = _now_ms()
-            body_cols = [c for c in df.columns if c != "id"]
-            new_rows = df.select(
-                F.lit(collection_uri).alias("document_uri"),
-                F.col(item_id_col).cast("string").alias("item_id"),
-                F.lit(revision).cast("long").alias("revision"),
-                F.to_json(
-                    F.struct(
-                        *[F.col(c) for c in body_cols],
-                        F.col(item_id_col).cast("string").alias("id"),
-                    )
-                ).alias("body"),
-                F.lit(False).alias("is_deleted"),
-                F.lit(now).alias("created_at"),
-                F.lit(now).alias("modified_at"),
-            )
-            files = self.storage.bucket_files(CONTENT, bucket)
+            new_rows = _item_rows(df, collection_uri, item_id_col, revision, now)
+            files = self.storage.bucket_files(CONTENT, self._bucket(collection_uri))
             old = (
                 self.spark.read.schema(CONTENT_SPARK).parquet(*files)
                 if files
@@ -1328,45 +1341,15 @@ class DocumentStore:
                     "left_anti",
                 )
             merged = keep.unionByName(new_rows).sort("document_uri", "item_id")
-            outdir = os.path.join(
-                self.storage.root, "data", "content",
-                f"merge-b{bucket:04d}-{uuid.uuid4().hex[:8]}",
-            )
-            merged.write.mode("overwrite").parquet(outdir)
-            out_files = [
-                os.path.join(outdir, f)
-                for f in os.listdir(outdir)
-                if f.endswith(".parquet")
-            ]
-            if not out_files:
-                raise RuntimeError("merge produced no files")
-            statics_rows = [
-                r for r in self._statics_bucket(collection_uri)
-                if r["document_uri"] != collection_uri
-            ]
-            statics_rows.append(
-                {
-                    "document_uri": collection_uri,
-                    "revision": revision,
-                    "is_deleted": False,
-                    "created_at": static["created_at"],
-                    "modified_at": now,
-                }
-            )
-            statics_abs = os.path.join(
-                self.storage.root, "data", "statics",
-                f"b{bucket:04d}-merge-{uuid.uuid4().hex[:8]}.parquet",
-            )
-            write_bucket_file(statics_rows, STATICS_SCHEMA, statics_abs)
-            self.storage.commit_external_many(
-                {CONTENT: {bucket: out_files}, STATICS: {bucket: [statics_abs]}}
-            )
+            return merged, (revision, new_rows.select(F.col("item_id")))
+
+        with self._lock:
+            revision, touched = self._publish_bulk(collection_uri, build)
             # indexes: upsert mode refreshes INCREMENTALLY (only the
             # batch's ids re-extract; untouched MV rows copy columnar —
             # the full rebuild re-parsed every body per merge, an
             # O(collection) cost for an O(batch) change). Full-snapshot
             # mode touches everything by definition: full rebuild.
-            touched = new_rows.select(F.col("item_id"))
             for idef in self.index_defs(collection_uri):
                 if idef.status == STATUS_NORMAL:
                     if delete_missing:
@@ -1419,8 +1402,6 @@ class DocumentStore:
         distributed backfill. Items whose ``ts_field`` is missing or
         unparseable are KEPT — retention must never eat rows on a
         schema mismatch."""
-        import os
-
         from pyspark.sql import functions as F
 
         if not collection_uri.endswith("~"):
@@ -1437,72 +1418,42 @@ class DocumentStore:
         ).collect()[0]
         if probe.t is None:
             raise ValueError(f"older_than {older_than!r} is not a parseable timestamp")
-        with self._lock:
-            static = self._get_static(collection_uri)
+        cutoff = F.lit(older_than).cast("timestamp")
+        # try_cast, not cast: under ANSI a malformed timestamp THROWS
+        # mid-rewrite; retention tolerates bad rows by KEEPING them
+        ts = F.get_json_object(F.col("body"), f"$.{ts_field}").try_cast("timestamp")
+        expired_cond = (
+            (F.col("document_uri") == collection_uri)
+            & (F.col("item_id") != "")
+            & (~F.col("is_deleted"))
+            & ts.isNotNull()
+            & (ts < cutoff)
+        )
+
+        def build(static, revision, now):
             if static is None or static["is_deleted"]:
                 raise NotFoundError(collection_uri)
-            bucket = self._bucket(collection_uri)
-            files = self.storage.bucket_files(CONTENT, bucket)
+            files = self.storage.bucket_files(CONTENT, self._bucket(collection_uri))
             if not files:
-                return 0, static["revision"]
+                return None, (0, static["revision"], None)
             old = self.spark.read.schema(CONTENT_SPARK).parquet(*files)
-            cutoff = F.lit(older_than).cast("timestamp")
-            # try_cast, not cast: under ANSI a malformed timestamp THROWS
-            # mid-rewrite; retention tolerates bad rows by KEEPING them
-            ts = F.get_json_object(F.col("body"), f"$.{ts_field}").try_cast("timestamp")
-            expired_cond = (
-                (F.col("document_uri") == collection_uri)
-                & (F.col("item_id") != "")
-                & (~F.col("is_deleted"))
-                & ts.isNotNull()
-                & (ts < cutoff)
-            )
             n_expired = old.filter(expired_cond).count()
             if n_expired == 0:
-                return 0, static["revision"]
-            revision = static["revision"] + 1
-            now = _now_ms()
+                return None, (0, static["revision"], None)
             keep = old.filter(~expired_cond).sort("document_uri", "item_id")
-            outdir = os.path.join(
-                self.storage.root, "data", "content",
-                f"expire-b{bucket:04d}-{uuid.uuid4().hex[:8]}",
-            )
-            keep.write.mode("overwrite").parquet(outdir)
-            out_files = [
-                os.path.join(outdir, f)
-                for f in os.listdir(outdir)
-                if f.endswith(".parquet")
-            ]
-            statics_rows = [
-                r for r in self._statics_bucket(collection_uri)
-                if r["document_uri"] != collection_uri
-            ]
-            statics_rows.append(
-                {
-                    "document_uri": collection_uri,
-                    "revision": revision,
-                    "is_deleted": False,
-                    "created_at": static["created_at"],
-                    "modified_at": now,
-                }
-            )
-            statics_abs = os.path.join(
-                self.storage.root, "data", "statics",
-                f"b{bucket:04d}-expire-{uuid.uuid4().hex[:8]}.parquet",
-            )
-            write_bucket_file(statics_rows, STATICS_SCHEMA, statics_abs)
-            self.storage.commit_external_many(
-                {CONTENT: {bucket: out_files}, STATICS: {bucket: [statics_abs]}}
-            )
+            return keep, (n_expired, revision, old.filter(expired_cond).select("item_id"))
+
+        with self._lock:
+            n_expired, revision, expired_ids = self._publish_bulk(collection_uri, build)
             # incremental index refresh: only the expired ids drop out
             # of each MV (their content is gone, so the fresh side is
             # empty by construction); untouched rows copy columnar.
             # The old bucket files back the expired-id frame and stay
             # on disk until vacuum — safe to read after the flip.
-            expired_ids = old.filter(expired_cond).select("item_id")
-            for idef in self.index_defs(collection_uri):
-                if idef.status == STATUS_NORMAL:
-                    self._refresh_index_spark_incremental(idef, expired_ids)
+            if expired_ids is not None:
+                for idef in self.index_defs(collection_uri):
+                    if idef.status == STATUS_NORMAL:
+                        self._refresh_index_spark_incremental(idef, expired_ids)
             return n_expired, revision
 
     # -- reads (queryDocument analog) -----------------------------------------
@@ -1862,65 +1813,25 @@ class DocumentStore:
             & (~F.col("is_deleted"))
         )
 
-    def _stage_index_files(self, idef: IndexDef, df, suffix: str = "") -> tuple[str, list]:
-        """Write a frame to a unique backfill staging dir; returns
-        (outdir, staged parquet paths). Staging dir keyed by the
-        PHYSICAL table (collection + index): the same index_id on two
-        collections (routine with template indexes) must never
-        overwrite the other's committed files.
-
-        UNIQUE dir per build: the incremental refresh READS the
-        currently-committed files (which live in the previous build's
-        dir) while writing the next — a fixed path would overwrite
-        its own lazy input. Superseded dirs become unreferenced at
-        the flip and vacuum reclaims them (the index_backfill_
-        staging marker, which also covers ``suffix``-named side
-        frames like the catch-up rev snapshots)."""
-        import os
-
-        from .storage import _sanitize
-
-        outdir = os.path.join(
-            self.storage.root,
-            "data",
-            f"index_backfill_{_sanitize(idef.storage_table)}_{uuid.uuid4().hex[:8]}{suffix}",
-        )
-        df.write.mode("overwrite").parquet(outdir)
-        files = [os.path.join(outdir, f) for f in os.listdir(outdir) if f.endswith(".parquet")]
-        return outdir, files
-
-    def _flip_index_files(self, idef: IndexDef, files, expect_table_files=None) -> None:
-        """Flip the staged MV files in. Only the FLIP retries under the
-        write window (files are already staged) — holding the lock
-        across the Spark job would stall every concurrent writer for
-        the build's duration. With ``expect_table_files`` the flip is
-        ONE attempt pinned on THIS TABLE's committed file list (checked
-        under the window lock): callers whose staged files embed a
-        snapshot of the table own the retry — they must re-stage, not
-        re-flip. Pinning per-table, not on the global manifest version,
-        means unrelated content flips (the busy writer fleet) never
-        force a re-stage."""
+    def _flip_index_files(self, idef: IndexDef, files, expect_table_files) -> None:
+        """Flip the staged MV files in: ONE attempt, under the write
+        window, pinned on THIS TABLE's committed file list. Callers'
+        staged files embed a snapshot of the table, so they own the
+        retry — they must re-stage, not re-flip — and holding the lock
+        across their Spark job would stall every concurrent writer for
+        the build's duration. Pinning per-table, not on the global
+        manifest version, means unrelated content flips (the busy
+        writer fleet) never force a re-stage."""
         from .storage import ManifestConflict
 
-        if expect_table_files is None:
-            self._admin_commit(
-                lambda: self.storage.commit_external(idef.storage_table, {0: files})
-            )
-        else:
-            with self.storage.write_lock():
-                current = self.storage.bucket_files(idef.storage_table, 0)
-                if sorted(current) != sorted(expect_table_files):
-                    raise ManifestConflict(
-                        f"{idef.storage_table}: committed files moved since "
-                        "the incremental snapshot was read"
-                    )
-                self.storage.commit_external(idef.storage_table, {0: files})
-
-    def _commit_index_files(self, idef: IndexDef, df, expect_table_files=None) -> None:
-        """Stage the index MV's files and flip — see
-        :meth:`_stage_index_files` / :meth:`_flip_index_files`."""
-        _, files = self._stage_index_files(idef, df)
-        self._flip_index_files(idef, files, expect_table_files)
+        with self.storage.write_lock():
+            current = self.storage.bucket_files(idef.storage_table, 0)
+            if sorted(current) != sorted(expect_table_files):
+                raise ManifestConflict(
+                    f"{idef.storage_table}: committed files moved since "
+                    "the incremental snapshot was read"
+                )
+            self.storage.commit({}, {}, files={idef.storage_table: {0: files}})
 
     def _backfill_index_spark(self, idef: IndexDef) -> None:
         """Distributed FULL index backfill: membership filter +
@@ -1987,15 +1898,15 @@ class DocumentStore:
                     idef, content.join(touched, "item_id", "left_semi")
                 )
                 df = keep.unionByName(fresh)
-            rev_dir, _ = self._stage_index_files(idef, revs, suffix="_revs")
-            mv_dir, files = self._stage_index_files(idef, df)
+            rev_files = self.storage.stage_frame(revs, idef.storage_table)
+            files = self.storage.stage_frame(df, idef.storage_table)
             try:
-                self._flip_index_files(idef, files, expect_table_files=snapshot_files)
+                self._flip_index_files(idef, files, snapshot_files)
                 return
             except ManifestConflict as e:
                 last = e
-            staged = self.spark.read.parquet(mv_dir)
-            prev_revs = self.spark.read.parquet(rev_dir)
+            staged = self.spark.read.parquet(*files)
+            prev_revs = self.spark.read.parquet(*rev_files)
             if attempt < self.WRITE_CAS_RETRIES - 1:
                 self._cas_backoff(attempt)
         raise last  # type: ignore[misc]
@@ -2046,11 +1957,10 @@ class DocumentStore:
             )
             fresh = self._index_rows_df(idef, fresh_content)
             try:
-                self._commit_index_files(
-                    idef,
-                    keep.unionByName(fresh.select(*keep.columns)),
-                    expect_table_files=snapshot_files,
+                files = self.storage.stage_frame(
+                    keep.unionByName(fresh.select(*keep.columns)), idef.storage_table
                 )
+                self._flip_index_files(idef, files, snapshot_files)
                 return
             except ManifestConflict as e:
                 last = e
@@ -2155,7 +2065,7 @@ class DocumentStore:
         self, uri: str, index_id: str, last_item_id: str, chunk_size: int
     ) -> tuple[bool, str]:
         """Backfill one keyset chunk (item_id > last_item_id, first
-        chunk_size items in id order) into the MV; merge-by-item_id so
+        chunk_size items in id order) into the MV, merged by item_id so
         live writes that already materialized an item stay idempotent.
         Returns (scan complete?, new watermark)."""
         idef = next(
@@ -2348,10 +2258,13 @@ class DocumentStore:
 
         Runs under the store lock (the manifest snapshot and the walk
         must not interleave with a concurrent commit), and skips files
-        younger than ``grace_seconds``: executor-staged streaming/
-        backfill files exist on disk BEFORE the driver's manifest flip
-        and hold no lock — deleting them mid-batch would break the
-        commit. 0 is only safe with no concurrent writers."""
+        younger than ``grace_seconds``: staged files (streaming
+        batches, bulk writes, index and rollup builds) exist on disk
+        BEFORE the manifest flip that registers them and hold no lock —
+        deleting them mid-window would break the commit. Files that
+        ``Storage.is_staged`` recognises therefore wait at least
+        STAGING_GRACE_S whatever ``grace_seconds`` says; 0 is only safe
+        for other files with no concurrent writers."""
         import os
 
         if keep_versions is not None and keep_versions < 0:
@@ -2412,46 +2325,24 @@ class DocumentStore:
             # grace. Deleting one mid-window makes the subsequent commit
             # register a dangling reference (caught by the round-9 soak:
             # a 0.5 s-grace vacuum ate a concurrent refresh's staged MV
-            # files). Every distributed-write path stages under a
-            # recognizable marker, so those candidates get a floor grace
-            # wide enough for any realistic staging window; a crashed
-            # writer's abandoned staging files are still reclaimed, one
-            # horizon later.
-            # marker match is SHAPE-scoped, not a bare substring over
-            # the whole path: a user table whose sanitized name merely
-            # contains "merge-" must not have its ordinary garbage
-            # floored. Committed stream/ingest/merge/expire bucket
-            # files keep their staged names forever, so recently
+            # files). Storage names every such file, and
+            # Storage.is_staged recognises it by that name alone, so
+            # those candidates get a floor grace wide enough for any
+            # realistic staging window; a crashed writer's abandoned
+            # staging files are still reclaimed, one horizon later.
+            # Committed staged files keep their names, so recently
             # SUPERSEDED ones also wait out the floor — the accepted
-            # cost (120 s of extra garbage retention) of not being
-            # able to tell a foreign writer's in-flight staging from
-            # fresh garbage by name alone.
-            import re as _re
-
-            _staged_dir = _re.compile(r"^(rollup_build_|index_backfill_|ingest-|merge-|expire-)")
-            # "rollup" covers the defs-bucket rewrite staged directly
-            # into data/rollup_defs (rollups._write_mv_and_def /
-            # b0000-rollup-<hex>.parquet) — without it a zero/short-
-            # grace foreign vacuum could reclaim the staged defs file
-            # between write_bucket_file and commit_external_many,
-            # the exact dangling-reference window the floor exists for
-            _staged_file = _re.compile(r"^b\d+-(ingest|merge|expire|stream|rollup)-")
-
-            def _is_staging(relpath: str) -> bool:
-                parts = relpath.split(os.sep)
-                return any(_staged_dir.match(seg) for seg in parts[:-1]) or bool(
-                    _staged_file.match(parts[-1])
-                )
-
+            # cost (STAGING_GRACE_S of extra garbage retention) of not
+            # being able to tell a foreign writer's in-flight staging
+            # from fresh garbage by name alone.
             for dirpath, _dirs, files in os.walk(data_root):
                 for f in files:
                     p = os.path.abspath(os.path.join(dirpath, f))
                     if not p.endswith(".parquet") or p in referenced:
                         continue
-                    rel = os.path.relpath(p, data_root)
                     floor = (
                         max(grace_seconds, self.STAGING_GRACE_S)
-                        if _is_staging(rel)
+                        if self.storage.is_staged(p)
                         else grace_seconds
                     )
                     try:

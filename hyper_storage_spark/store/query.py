@@ -204,6 +204,25 @@ def _apply_field_filters(df: DataFrame, filters: list[FieldFilter], decimal_cols
     return df
 
 
+def _with_residual(plan: PlanInfo, src: "_Source", filter_ast) -> "_Source":
+    """``src`` with the full filter applied as the residual predicate,
+    on its frame and on its delta rows; records in ``plan`` whether the
+    residual compiled. Only callers that run ``src.df`` apply it: the
+    paging loop judges fetched rows with :func:`_residual_ok` itself."""
+    if filter_ast is None:
+        return src
+    df, compiled = _apply_residual(src.df, filter_ast)
+    plan.residual_compiled = compiled
+    pushed = src.keep
+    return _Source(
+        df,
+        src.delta,
+        lambda r: pushed(r) and _residual_ok(
+            filter_ast, json.loads(r["body"]) if r["body"] is not None else None, compiled
+        ),
+    )
+
+
 def _apply_residual(df: DataFrame, filter_ast) -> tuple[DataFrame, bool]:
     """Apply the full filter as the residual predicate (prepared frame —
     one JSON parse per row); fall back to an Arrow-batched Python
@@ -249,7 +268,7 @@ def _residual_ok(filter_ast, body, compiled: bool = True) -> bool:
 @dataclass
 class _Source:
     """A chosen source: its Spark frame (base files, pushed filters and,
-    in :func:`_plan`, the residual), the index table's pending delta
+    after :func:`_with_residual`, the residual), the index table's pending delta
     (item_id → newest delta row) and ``keep``, the frame's predicates
     on one delta row."""
 
@@ -309,6 +328,7 @@ def query(
 
     sort = list(sort or [])
     plan, src, filter_ast = _plan(store, uri, filter, sort)
+    src = _with_residual(plan, src, filter_ast)
 
     if plan.exact_sort:
         fetched = _merged_fetch(src, _order_spec(plan), size)
@@ -377,14 +397,6 @@ def _plan(store: DocumentStore, uri: str, filter: Optional[str], sort: list[Sort
             (_field_name(idef, i), (s.order or "asc") != "desc")
             for i, s in enumerate(idef.sort_by)
         ] + [("item_id", True)]
-
-    if filter_ast is not None:
-        src.df, compiled = _apply_residual(src.df, filter_ast)
-        plan.residual_compiled = compiled
-        pushed = src.keep
-        src.keep = lambda r: pushed(r) and _residual_ok(
-            filter_ast, json.loads(r["body"]) if r["body"] is not None else None, compiled
-        )
 
     from .stats import estimate_rows
 
@@ -631,7 +643,8 @@ def explain(
     surface the reference lists as future work (README «Что на
     будущее»): which access path (base/MV), pushed conjuncts, ORDER BY
     prefix, scan direction, exact-vs-residual sort."""
-    plan, _, _ = _plan(store, uri, filter, list(sort or []))
+    plan, src, filter_ast = _plan(store, uri, filter, list(sort or []))
+    _with_residual(plan, src, filter_ast)
     return plan
 
 

@@ -257,47 +257,25 @@ def _conform(d: RollupDef, partials: DataFrame) -> DataFrame:
     )
 
 
-def _stage_mv(store, d: RollupDef, partials: DataFrame) -> list[str]:
-    """Write the MV parquet files WITHOUT committing them — the caller
-    picks the flip (alone, or atomic with a rollup_defs update)."""
-    import os
-    import uuid
-
-    from .storage import _sanitize
-
-    # unique dir per write: a refresh READS the current MV files while
-    # writing the next version — overwriting in place would delete the
-    # input mid-scan (FAILED_READ_FILE); superseded dirs stay manifest-
-    # referenced for time travel until vacuum drops them
-    outdir = os.path.join(
-        store.storage.root,
-        "data",
-        f"rollup_build_{_sanitize(d.table_name)}_{uuid.uuid4().hex[:8]}",
-    )
-    _conform(d, partials).write.mode("overwrite").parquet(outdir)
-    return [os.path.join(outdir, f) for f in os.listdir(outdir) if f.endswith(".parquet")]
-
-
 def _write_mv_and_def(store, d: RollupDef, partials: DataFrame, **def_fields) -> None:
     """Stage the MV and flip it TOGETHER with the updated rollup_defs
-    row in ONE manifest commit (commit_external_many, the expire_items
-    CONTENT+STATICS discipline). The refresh paths need this: a crash
-    between a committed MV and a separate watermark bump would leave
-    the merged MV live with a stale built_revision, so the next
-    refresh re-classifies the same delta as insert-only and merges it
-    a SECOND time — permanent double-counting. One flip means the MV
-    and its watermark are never observable apart."""
-    import os
-    import uuid
+    row in ONE manifest commit (the staged files as ``files=``, the
+    defs bucket as ``updates`` — the bulk writes' content+statics
+    discipline). The refresh paths need this: a crash between a
+    committed MV and a separate watermark bump would leave the merged
+    MV live with a stale built_revision, so the next refresh
+    re-classifies the same delta as insert-only and merges it a SECOND
+    time — permanent double-counting. One flip means the MV and its
+    watermark are never observable apart."""
+    # the long Spark work, unpinned; a fresh staging dir, because a
+    # refresh READS the current MV files while writing the next version
+    files = store.storage.stage_frame(_conform(d, partials), d.table_name)
 
-    from .storage import write_bucket_file
-
-    files = _stage_mv(store, d, partials)  # the long Spark work, unpinned
     # the defs-bucket rewrite is a read-modify-write of the WHOLE
     # bucket, so its read must be version-pinned to the flip
     # (expected_version) or a foreign process's concurrent defs commit
     # (another rollup's create/refresh) would be silently reverted by
-    # our stale full-bucket file — a lost update that rolls back the
+    # our stale full-bucket rewrite — a lost update that rolls back the
     # OTHER rollup's watermark and reintroduces the double-merge class.
     # The read happens AFTER staging so the pinned window is
     # milliseconds (one file write + the CAS), and a conflict retries
@@ -314,13 +292,10 @@ def _write_mv_and_def(store, d: RollupDef, partials: DataFrame, **def_fields) ->
         for r in rows:
             if r["document_uri"] == d.document_uri and r["rollup_id"] == d.rollup_id:
                 r.update(def_fields)
-        defs_abs = os.path.join(
-            store.storage.root, "data", ROLLUP_DEFS,
-            f"b0000-rollup-{uuid.uuid4().hex[:8]}.parquet",
-        )
-        write_bucket_file(rows, ROLLUP_DEFS_SCHEMA, defs_abs)
-        store.storage.commit_external_many(
-            {d.table_name: {0: files}, ROLLUP_DEFS: {0: [defs_abs]}},
+        store.storage.commit(
+            {(ROLLUP_DEFS, 0): rows},
+            {ROLLUP_DEFS: ROLLUP_DEFS_SCHEMA},
+            files={d.table_name: {0: files}},
             expected_version=v0,
         )
 

@@ -33,6 +33,14 @@ index's delta rows outgrow their share of its base rows
 (:meth:`Storage.bucket_shape` counts both without decoding a row), and
 in ``compact_appends``.
 
+Every flip that registers bucket rows or files is one :meth:`Storage.commit`:
+rows it writes itself, and files written before it (``files=``) — a
+Spark frame staged by :meth:`Storage.stage_frame`, or bucket files that
+executors wrote at :meth:`Storage.staged_bucket_file` paths. Those
+staging names are made here only, each fresh (a uuid), and
+:meth:`Storage.is_staged` recognises them, so vacuum can spare a file
+whose writer has not flipped yet.
+
 Scale note: bucket count is configurable (default 16 for local tests,
 1024 at cluster scale to mirror the reference's shard constant); Spark
 reads address the bucket *files* directly, so a single-document lookup
@@ -110,6 +118,10 @@ def write_bucket_file(rows: list[dict], schema: pa.Schema, abspath: str) -> list
     pq.write_table(pa.Table.from_pylist(rows, schema=schema), abspath, row_group_size=ROW_GROUP_SIZE)
     return rows
 
+
+# name prefix of every file or directory written before the flip that
+# registers it (Storage.stage_frame, Storage.staged_bucket_file)
+_STAGED = "staged-"
 
 # schema metadata marking a table whose ``bucket_appends`` are deltas
 _DELTA_META = {b"bucket_appends": b"delta"}
@@ -666,64 +678,9 @@ class Storage:
                 out.append(os.path.join(self.root, r))
         return out
 
-    def commit_external(self, table: str, bucket_files: dict[int, list[str]]) -> int:
-        """Register externally-written parquet files (e.g. a Spark bulk
-        ingest) as the new content of the given buckets — one atomic
-        manifest flip, same as :meth:`commit`."""
-        return self.commit_external_many({table: bucket_files})
-
-    def commit_external_many(
-        self,
-        table_bucket_files: dict[str, dict[int, list[str]]],
-        drop_tables: Iterable[str] = (),
-        meta: Optional[dict] = None,
-        expected_version: Optional[int] = None,
-        appends: Optional[dict[str, tuple[list[dict], pa.Schema]]] = None,
-    ) -> int:
-        """Register externally-written files across MANY tables (and/or
-        drop tables) in ONE atomic manifest flip — the commit point of
-        the distributed write path, where executors stage bucket files
-        and the driver publishes them all-or-nothing. ``meta`` entries
-        ride in the same flip (e.g. the streaming batch watermark — a
-        marker that must be atomic with the data it marks), and so do
-        ``appends`` (e.g. the batch's feed events), exactly as in
-        :meth:`commit`. Drops apply BEFORE registrations, so a
-        drop-and-recreate in one commit keeps the recreated content.
-
-        ``expected_version`` pins the caller's whole read-stage-flip
-        window, exactly like :meth:`commit`: callers whose registered
-        files embed state READ at that version (e.g. a rewritten
-        full-bucket row file) pass it, and the flip refuses if ANY
-        foreign flip landed since — without it this method's own
-        manifest re-read would silently publish the stale rewrite over
-        the foreign commit (lost update). A refused flip registers
-        none of the appends."""
-        manifest = self._read_manifest()
-        if expected_version is not None and manifest["version"] != expected_version:
-            raise ManifestConflict(
-                f"manifest version moved since staging reads: expected "
-                f"{expected_version}, found {manifest['version']}"
-            )
-        version = manifest["version"] + 1
-        for table in drop_tables:
-            manifest["tables"].pop(table, None)
-        for table, bucket_files in table_bucket_files.items():
-            for bucket, paths in bucket_files.items():
-                rels = [os.path.relpath(p, self.root) for p in paths]
-                manifest["tables"].setdefault(table, {})[str(bucket)] = rels
-        for table, (rows, schema) in (appends or {}).items():
-            manifest["tables"].setdefault(table, {})[f"a{version}"] = self._stage_append(
-                table, rows, schema
-            )
-        if meta:
-            manifest.setdefault("meta", {}).update(meta)
-        manifest["version"] = version
-        self._cas_write_manifest(manifest, version - 1)
-        return version
-
     def set_meta(self, key: str, value) -> int:
         """Commit one manifest-metadata entry (its own flip)."""
-        return self.commit_external_many({}, meta={key: value})
+        return self.commit({}, {}, meta={key: value})
 
     def get_meta(self, key: str, default=None):
         return self._read_manifest().get("meta", {}).get(key, default)
@@ -746,9 +703,13 @@ class Storage:
         expected_version: Optional[int] = None,
         appends: Optional[dict[str, tuple[list[dict], pa.Schema]]] = None,
         bucket_appends: Optional[dict[tuple[str, int], list[dict]]] = None,
+        files: Optional[dict[str, dict[int, list[str]]]] = None,
+        meta: Optional[dict] = None,
     ) -> int:
         """Atomically replace the given (table, bucket) datasets (and/or
-        drop whole tables). One manifest flip = one commit.
+        drop whole tables). One manifest flip = one commit, and the one
+        flip for bucket rows and files (append-only tables keep their
+        own retrying :meth:`append`).
 
         ``expected_version`` pins the WHOLE read-stage-flip window:
         callers that computed ``updates`` from reads taken at that
@@ -774,7 +735,16 @@ class Storage:
         log grows by a write's own rows and an index by its delta rows;
         the bucket's older files stay as they are until a caller
         rewrites the bucket through ``updates`` (which replaces the
-        whole list)."""
+        whole list).
+
+        ``files`` registers parquet files written before the flip — a
+        Spark frame staged by :meth:`stage_frame`, or bucket files an
+        executor wrote at :meth:`staged_bucket_file` — as the whole new
+        list of each (table, bucket) it names. ``meta`` entries ride in
+        the same flip (e.g. a streaming batch watermark, which must be
+        atomic with the data it marks). Drops apply before everything
+        else, so a drop-and-recreate in one commit keeps the recreated
+        content. A refused flip registers none of it."""
         manifest = self._read_manifest()
         if expected_version is not None and manifest["version"] != expected_version:
             raise ManifestConflict(
@@ -807,6 +777,11 @@ class Storage:
             rel = write(table, bucket, rows)
             manifest["tables"].setdefault(table, {})[str(bucket)] = rel
             lists[(table, bucket)] = (rel,)
+        for table, buckets in (files or {}).items():
+            for bucket, paths in buckets.items():
+                rels = tuple(os.path.relpath(p, self.root) for p in paths)
+                manifest["tables"].setdefault(table, {})[str(bucket)] = list(rels)
+                lists[(table, bucket)] = rels
         for (table, bucket), rows in (bucket_appends or {}).items():
             prefix = _DELTA_PREFIX if _is_delta_schema(schemas[table]) else ""
             rels = (*self._bucket_rels(table, bucket, manifest), write(table, bucket, rows, prefix))
@@ -816,6 +791,8 @@ class Storage:
             manifest["tables"].setdefault(table, {})[f"a{version}"] = self._stage_append(
                 table, rows, schema
             )
+        if meta:
+            manifest.setdefault("meta", {}).update(meta)
         manifest["version"] = version
         self._cas_write_manifest(manifest, version - 1)
         # only a flip that won may seed the cache: a loser's files are
@@ -846,9 +823,9 @@ class Storage:
     # race there never invalidates the staged content (re-reading the
     # fresh manifest and re-registering is always safe), so a legitimate
     # concurrent appender shouldn't fail. Read-modify-write commits
-    # (commit / commit_external_many / replace_append_table) keep
-    # fail-fast — their content was computed against the PRE-flip state
-    # and replaying it could drop the winner's changes.
+    # (commit / replace_append_table) keep fail-fast — their content
+    # was computed against the PRE-flip state and replaying it could
+    # drop the winner's changes.
     APPEND_CAS_RETRIES = 8
 
     def append(self, table: str, rows: list[dict], schema: pa.Schema) -> int:
@@ -986,14 +963,37 @@ class Storage:
     def table_dir(self, table: str) -> str:
         return os.path.join(self.root, "data", _sanitize(table))
 
-    def spark_df(self, spark, table: str, spark_schema: str):
-        """Alias of :meth:`spark_df_or_empty` (the zero-files case must
-        return an empty frame, never a zero-path reader call)."""
-        return self.spark_df_or_empty(spark, table, spark_schema)
+    # -- staging: files on disk before the flip that registers them ---------
+
+    def stage_frame(self, df, table: str) -> list[str]:
+        """Write a Spark frame into a fresh staging directory of
+        ``table`` and return its parquet files, for a later
+        :meth:`commit` ``files=`` to register. The directory is new on
+        every call, so staging never overwrites a file that a manifest,
+        a retained snapshot or a lazy frame over committed files still
+        reads."""
+        outdir = os.path.join(self.table_dir(table), f"{_STAGED}{uuid.uuid4().hex[:12]}")
+        df.write.parquet(outdir)
+        return sorted(os.path.join(outdir, f) for f in os.listdir(outdir) if f.endswith(".parquet"))
+
+    def staged_bucket_file(self, table: str, bucket: int) -> str:
+        """A fresh path for one bucket file that an executor writes
+        (:func:`write_bucket_file`) for the driver's flip to register."""
+        return os.path.join(self.table_dir(table), f"{_STAGED}b{bucket:04d}-{uuid.uuid4().hex[:12]}.parquet")
+
+    def is_staged(self, path: str) -> bool:
+        """Was the file at ``path`` named by :meth:`stage_frame` or
+        :meth:`staged_bucket_file`? Such a file exists before its flip,
+        so vacuum must not take it for garbage while a writer (maybe
+        another process) is still between the two. Only names below the
+        table's directory count: a table's own name never marks it."""
+        parts = os.path.relpath(path, os.path.join(self.root, "data")).split(os.sep)
+        return any(p.startswith(_STAGED) for p in parts[1:])
 
     def spark_df_or_empty(self, spark, table: str, spark_schema: str):
-        """A frame over the table's BASE files: a delta-written table's
-        pending delta is not in it (see :meth:`spark_df_and_delta`)."""
+        """A frame over the table's BASE files (an empty frame when it
+        has none): a delta-written table's pending delta is not in it
+        (see :meth:`spark_df_and_delta`)."""
         return self.spark_df_and_delta(spark, table, spark_schema)[0]
 
     def spark_df_and_delta(self, spark, table: str, spark_schema: str):
@@ -1058,15 +1058,10 @@ class SnapshotStorage(Storage):
     def write_lock(self):
         raise RuntimeError("SnapshotStorage is read-only (time-travel view)")
 
-    def commit(
-        self, updates, schemas, drop_tables=(), expected_version=None, appends=None,
-        bucket_appends=None,
-    ):
+    def commit(self, *args, **kwargs):
         raise RuntimeError("SnapshotStorage is read-only (time-travel view)")
 
-    def commit_external_many(
-        self, table_bucket_files, drop_tables=(), meta=None, expected_version=None, appends=None
-    ):
+    def stage_frame(self, df, table):
         raise RuntimeError("SnapshotStorage is read-only (time-travel view)")
 
     def append(self, table, rows, schema):
@@ -1090,8 +1085,8 @@ class OverlayStorage(Storage):
     applies a bucket's write commands through the unmodified
     DocumentStore code path (same semantics by construction): the task
     drains the overlay into staged parquet files, and the driver
-    publishes every staged file with one atomic
-    :meth:`Storage.commit_external_many` flip."""
+    publishes every staged file with one atomic :meth:`Storage.commit`
+    flip (``files=``)."""
 
     stages_whole_buckets = True
 
@@ -1150,8 +1145,12 @@ class OverlayStorage(Storage):
 
     def commit(
         self, updates, schemas, drop_tables=(), expected_version=None, appends=None,
-        bucket_appends=None,
+        bucket_appends=None, files=None, meta=None,
     ):
+        if files or meta:
+            # registering files and manifest metadata is the driver's
+            # flip, never an overlay's; refused before anything buffers
+            raise RuntimeError("OverlayStorage never writes the manifest")
         for t in drop_tables:
             self.dropped.add(t)
             self.ever_dropped.add(t)
@@ -1177,12 +1176,6 @@ class OverlayStorage(Storage):
         self.appended.setdefault(table, []).extend(dict(r) for r in rows)
         self.append_schemas[table] = schema
         return 0
-
-    def commit_external_many(
-        self, table_bucket_files, drop_tables=(), meta=None, expected_version=None, appends=None
-    ):
-        # registering files is the driver's flip, never an overlay's
-        raise RuntimeError("OverlayStorage never writes the manifest")
 
     def _write_manifest(self, manifest):  # pragma: no cover - guard
         raise RuntimeError("OverlayStorage never writes the manifest")

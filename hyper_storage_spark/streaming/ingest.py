@@ -109,7 +109,7 @@ def _dispatch(ds: DocumentStore, method: str, path: str, raw_body: Optional[str]
 _RESULT_SCHEMA = "kind string, table string, bucket int, path string, payload string"
 
 
-def _apply_bucket_commands(root: str, n_buckets: int, auto_complete: bool, batch_id: int):
+def _apply_bucket_commands(root: str, n_buckets: int, auto_complete: bool):
     """Returns the executor-side applyInPandas function for one group:
     apply the group's commands (per-document, seq order) through the
     REAL DocumentStore write path against a copy-on-write overlay,
@@ -132,7 +132,7 @@ def _apply_bucket_commands(root: str, n_buckets: int, auto_complete: bool, batch
         import pandas as pd
 
         from ..store.documents import DocumentStore as _DS
-        from ..store.storage import OverlayStorage, Storage, _sanitize, write_bucket_file
+        from ..store.storage import OverlayStorage, Storage, write_bucket_file
 
         out = []
         if len(pdf):
@@ -157,16 +157,12 @@ def _apply_bucket_commands(root: str, n_buckets: int, auto_complete: bool, batch
                     }
                     overlay.append(DEAD_LETTER, [row], DEAD_LETTER_SCHEMA)
             for (table, bucket), rows in overlay.overlay.items():
-                rel = os.path.join(
-                    "data",
-                    _sanitize(table),
-                    f"b{bucket:04d}-stream-{batch_id}-{uuid.uuid4().hex[:8]}.parquet",
-                )
+                path = base.staged_bucket_file(table, bucket)
                 # the shared writer keeps staged buckets key-sorted with
                 # bounded row groups — point-read pruning must hold for
                 # buckets last written by the streaming path too
-                write_bucket_file(rows, overlay.schemas[table], os.path.join(root, rel))
-                out.append(("file", table, int(bucket), rel, None))
+                write_bucket_file(rows, overlay.schemas[table], path)
+                out.append(("file", table, int(bucket), path, None))
             for table, rows in overlay.appended.items():
                 for row in rows:
                     out.append(("append", table, 0, None, json.dumps(row)))
@@ -180,9 +176,7 @@ def _apply_bucket_commands(root: str, n_buckets: int, auto_complete: bool, batch
     return apply_group
 
 
-def apply_commands_distributed(
-    store: DocumentStore, batch_df, batch_id: int, commit_meta: Optional[dict] = None
-) -> None:
+def apply_commands_distributed(store: DocumentStore, batch_df, commit_meta: Optional[dict] = None) -> None:
     """Apply one micro-batch executor-side: group the commands, run
     each group through the overlayed DocumentStore on its executor,
     then flip the manifest ONCE on the driver: the staged files, the
@@ -258,9 +252,7 @@ def apply_commands_distributed(
     # a constant key puts the whole batch in one group (a string: an
     # integer literal in groupBy would resolve as a column ordinal)
     groups = ann.groupBy(F.lit("batch") if one_group else F.col("bucket"))
-    func = _apply_bucket_commands(
-        store.storage.root, n_buckets, store.auto_complete, batch_id
-    )
+    func = _apply_bucket_commands(store.storage.root, n_buckets, store.auto_complete)
     from ..store.storage import ManifestConflict
 
     # The flip is PINNED on the manifest version read BEFORE the
@@ -268,7 +260,7 @@ def apply_commands_distributed(
     # through their own manifest read, so a foreign (cross-process)
     # commit landing anywhere in the stage window would otherwise be
     # silently overwritten by the full-bucket staged files — the exact
-    # lost update commit_external_many's docstring warns about. On
+    # lost update Storage.commit's expected_version exists for. On
     # conflict the whole batch re-stages against fresh state (bounded
     # retries); the feed events ride in the refused flip, so none of
     # the failed attempt's events is published.
@@ -323,13 +315,14 @@ def _publish(store: DocumentStore, results, v0: int, commit_meta: Optional[dict]
     drops: list[str] = []
     for r in results:
         if r.kind == "file":
-            files.setdefault(r.table, {})[r.bucket] = [os.path.join(store.storage.root, r.path)]
+            files.setdefault(r.table, {})[r.bucket] = [r.path]
         elif r.kind == "drop":
             drops.append(r.table)
     if files or drops or commit_meta or appends:
         with store._lock:
-            store.storage.commit_external_many(
-                files, drop_tables=drops, meta=commit_meta, expected_version=v0, appends=appends
+            store.storage.commit(
+                {}, {}, drop_tables=drops, expected_version=v0, appends=appends,
+                files=files, meta=commit_meta,
             )
 
 
@@ -406,7 +399,7 @@ def run_command_stream(
         if batch_id <= last_applied():
             return
         meta = {wm_key: batch_id}
-        apply_commands_distributed(store, batch_df, batch_id, commit_meta=meta)
+        apply_commands_distributed(store, batch_df, commit_meta=meta)
         if compact_every and (batch_id + 1) % compact_every == 0:
             store.compact_appends()
         if vacuum_every and (batch_id + 1) % vacuum_every == 0:

@@ -387,7 +387,7 @@ def test_route_picks_coarsest_servable_grain(store):
 
 def test_refresh_is_one_atomic_manifest_flip(store):
     # every refresh path commits the MV files AND the watermark bump in
-    # ONE manifest version (commit_external_many): a crash can never
+    # ONE manifest version (one Storage.commit): a crash can never
     # observe a merged MV with a stale built_revision, which would
     # re-classify the same delta as insert-only and double-merge it
     store.create_rollup("metrics~", "ts", ["k"], "v", resolution="day", schema=SCHEMA)

@@ -526,10 +526,10 @@ def test_commit_drop_and_recreate_keeps_recreated_content(spark, tmp_path):
     st = Storage(str(tmp_path / "s"), n_buckets=4)
     schema = pa.schema([("k", pa.string())])
     st.commit({("t", 0): [{"k": "old"}]}, {"t": schema})
-    # external: stage a new file and drop+recreate in one flip
-    staged = str(tmp_path / "s" / "data" / "t" / "new.parquet")
+    # files: stage a new file and drop+recreate in one flip
+    staged = st.staged_bucket_file("t", 0)
     write_bucket_file([{"k": "new"}], schema, staged)
-    st.commit_external_many({"t": {0: [staged]}}, drop_tables=["t"])
+    st.commit({}, {}, files={"t": {0: [staged]}}, drop_tables=["t"])
     assert [r["k"] for r in st.bucket_rows("t", 0)] == ["new"]
     # same ordering in the row-level commit
     st.commit({("t", 0): [{"k": "newer"}]}, {"t": schema}, drop_tables=["t"])
@@ -563,7 +563,7 @@ def test_manifest_meta_roundtrip(tmp_path):
     assert st.get_meta("wm", -1) == -1
     st.set_meta("wm", 7)
     assert st.get_meta("wm") == 7
-    st.commit_external_many({}, meta={"wm": 9, "other": "x"})
+    st.commit({}, {}, meta={"wm": 9, "other": "x"})
     assert st.get_meta("wm") == 9 and st.get_meta("other") == "x"
 
 
@@ -2127,7 +2127,7 @@ def test_store_admin_health(spark, tmp_path):
 
 def test_store_admin_health_ok_on_bulk_loaded_store(spark, tmp_path):
     """Bulk paths bump the revision counter WITHOUT feed events by
-    design — health must not page on a perfectly healthy ingest-built
+    design — health must not page on a perfectly healthy bulk-ingested
     store (the round-8 review false-alarm finding)."""
     import json as _json
     import subprocess
@@ -2197,35 +2197,107 @@ def test_vacuum_spares_fresh_staging_files(spark, tmp_path):
 
     store = DocumentStore(str(tmp_path / "store"), spark=spark)
     store.put("d", {"a": 1})
-    staged_dir = tmp_path / "store" / "data" / "rollup_build_fake_x"
-    os.makedirs(staged_dir)
-    staged = staged_dir / "part-0000.parquet"
-    staged.write_bytes(b"not-yet-committed")
-    # plain unreferenced garbage with no marker IS reclaimed at grace 0
+    # a Spark-staged frame (bulk content, an index or rollup build)
+    # whose writer has not flipped yet
+    staged = store.storage.stage_frame(spark.range(3), "rollup_x")
+    assert staged
+    # plain unreferenced garbage with no staging name IS reclaimed at grace 0
     loose = tmp_path / "store" / "data" / "content" / "b0000-v99999999-dead.parquet"
     loose.write_bytes(b"orphan")
     store.vacuum(grace_seconds=0.0, keep_versions=0)
-    assert staged.exists(), "fresh staging file must survive any grace"
+    assert all(os.path.exists(p) for p in staged), "fresh staging file must survive any grace"
     assert not loose.exists(), "unmarked orphans still reclaim immediately"
 
 
-def test_vacuum_spares_staged_rollup_defs_file(spark, tmp_path):
-    """Round-10 ADVICE closure: the defs-bucket rewrite stages
-    b0000-rollup-<hex>.parquet directly into data/rollup_defs
-    (rollups._write_mv_and_def) — that name must match the staged-file
-    marker so a concurrent zero-grace vacuum in another process cannot
-    reclaim it between write_bucket_file and commit_external_many
-    (the dangling-reference window STAGING_GRACE_S exists to close)."""
+def test_vacuum_spares_executor_staged_stream_file(tmp_path):
+    """The other staging name: a bucket file an executor writes for a
+    stream batch (Storage.staged_bucket_file) exists before the
+    driver's flip registers it, so a concurrent zero-grace vacuum in
+    another process must not reclaim it in between (the
+    dangling-reference window STAGING_GRACE_S exists to close). A
+    table whose own name starts like a staging name gets no floor."""
     import os
 
-    store = DocumentStore(str(tmp_path / "store"), spark=spark)
+    import pyarrow as pa
+
+    from hyper_storage_spark.store.storage import write_bucket_file
+
+    store = DocumentStore(str(tmp_path / "store"))
     store.put("d", {"a": 1})
-    defs_dir = tmp_path / "store" / "data" / "rollup_defs"
-    os.makedirs(defs_dir, exist_ok=True)
-    staged = defs_dir / "b0000-rollup-deadbeef.parquet"
-    staged.write_bytes(b"not-yet-committed")
+    schema = pa.schema([("k", pa.string())])
+    staged = store.storage.staged_bucket_file("content", 0)
+    write_bucket_file([{"k": "x"}], schema, staged)
+    look_alike = os.path.join(store.storage.table_dir("staged-t"), "b0000-v99999999-dead.parquet")
+    write_bucket_file([{"k": "y"}], schema, look_alike)
     store.vacuum(grace_seconds=0.0, keep_versions=0)
-    assert staged.exists(), "staged rollup-defs file must get the floor grace"
+    assert os.path.exists(staged), "staged stream file must get the floor grace"
+    assert not os.path.exists(look_alike), "a table name never marks its files as staged"
+
+
+@pytest.mark.parametrize("path", ["merge", "expire"])
+def test_bulk_flip_conflict_restages_and_keeps_foreign_write(spark, tmp_path, path):
+    """merge_collection and expire_items publish their collection's whole
+    content bucket from a Spark frame. A second handle on the same root
+    puts a document into that bucket just before the bulk flip: the
+    flip, pinned on the version read before the bulk path's reads, is
+    refused and the bulk write re-stages from fresh state — it never
+    publishes a bucket that erases the foreign write."""
+    from hyper_storage_spark.store.storage import ManifestConflict, bucket_of
+
+    store = DocumentStore(str(tmp_path / "s"), spark=spark)
+    n = store.storage.n_buckets
+    foreign = next(u for u in (f"other{i}" for i in range(1000)) if bucket_of(u, n) == bucket_of("c~", n))
+    store.put("c~/1", {"v": 1, "ts": "2020-01-01 00:00:00"})
+    store.put("c~/2", {"v": 2, "ts": "2030-01-01 00:00:00"})
+    writer = DocumentStore(store.storage.root)
+    real_flip = store.storage.commit
+    outcomes = []
+
+    def flip(*a, **k):
+        if not outcomes:
+            assert writer.put(foreign, {"f": 1}) == (True, 1)
+        try:
+            v = real_flip(*a, **k)
+        except ManifestConflict:
+            outcomes.append("conflict")
+            raise
+        outcomes.append("flip")
+        return v
+
+    store.storage.commit = flip
+    try:
+        if path == "merge":
+            batch = spark.createDataFrame([("3", 3)], "item string, v long")
+            assert store.merge_collection(batch, "c~", "item") == 3
+        else:
+            assert store.expire_items("c~", "ts", "2025-01-01 00:00:00", "v long, ts string") == (1, 3)
+    finally:
+        store.storage.commit = real_flip
+    assert outcomes == ["conflict", "flip"]
+    assert store.get(foreign) == ({"f": 1}, 1)  # the foreign write survived
+    assert store.get("c~/2")[0]["v"] == 2 and store.get("c~/2")[1] == 3
+    if path == "merge":
+        assert store.get("c~/3")[0] == {"item": "3", "v": 3, "id": "3"}
+    else:
+        with pytest.raises(NotFoundError):
+            store.get("c~/1")
+
+
+def test_reingest_after_restore_keeps_snapshot_files(spark, tmp_path):
+    """Each ingest stages its content in a fresh directory: ingesting
+    c~, restoring the store to before that ingest and ingesting c~
+    again must not overwrite the first ingest's files, which a retained
+    snapshot still reads."""
+    store = DocumentStore(str(tmp_path / "s"), spark=spark)
+    v0 = store.storage.current_version()
+    store.ingest_collection(spark.range(10).selectExpr("cast(id as string) as item", "id as v"), "c~", "item")
+    v1 = store.storage.current_version()
+    store.restore_version(v0)
+    store.ingest_collection(spark.range(3).selectExpr("cast(id as string) as item", "id * 10 as v"), "c~", "item")
+    assert store.at_version(v1).get("c~/7") == ({"item": "7", "v": 7, "id": "7"}, 1)
+    assert store.get("c~/2") == ({"item": "2", "v": 20, "id": "2"}, 1)
+    with pytest.raises(NotFoundError):
+        store.get("c~/7")
 
 
 def test_incremental_index_refresh_equals_full_rebuild(spark, tmp_path):
@@ -2745,8 +2817,8 @@ def test_info_reports_read_cache_counters(tmp_path):
 
 def test_read_only_views_refuse_external_commits_as_read_only(tmp_path):
     """The time-travel view and the executor overlay accept the base
-    commit_external_many signature (pin and appends included) and fail
-    as what they are, staging nothing."""
+    commit signature with files and meta to register (pin and appends
+    included) and fail as what they are, staging nothing."""
     import os
 
     import pyarrow as pa
@@ -2765,11 +2837,13 @@ def test_read_only_views_refuse_external_commits_as_read_only(tmp_path):
 
     before = data_files()
     kwargs = dict(drop_tables=["t"], meta={"k": 1}, expected_version=v,
-                  appends={"t": ([{"v": "b"}], schema)})
+                  appends={"t": ([{"v": "b"}], schema)}, files={"t": {0: before}})
     with pytest.raises(RuntimeError, match="read-only"):
-        SnapshotStorage(s, v).commit_external_many({}, **kwargs)
+        SnapshotStorage(s, v).commit({}, {}, **kwargs)
+    overlay = OverlayStorage(s)
     with pytest.raises(RuntimeError, match="never writes the manifest"):
-        OverlayStorage(s).commit_external_many({}, **kwargs)
+        overlay.commit({}, {}, **kwargs)
+    assert not overlay.dropped and not overlay.appended, "the overlay buffered part of it"
     assert data_files() == before and s.current_version() == v
 
 

@@ -15,6 +15,16 @@ from hyper_storage_spark.streaming import (
 )
 
 
+def _staged_files(store) -> list:
+    """The store's data files that carry a staging name (the executor-
+    staged stream buckets, in these tests)."""
+    import glob
+    import os
+
+    pattern = os.path.join(store.storage.root, "data", "**", "*.parquet")
+    return [p for p in glob.glob(pattern, recursive=True) if store.storage.is_staged(p)]
+
+
 def test_command_stream_ingest(spark, tmp_path):
     store = DocumentStore(str(tmp_path / "store"), spark=spark)
     cmds = str(tmp_path / "commands")
@@ -185,11 +195,9 @@ def test_windowed_event_counts_stream_matches_batch(spark, tmp_path, sf_dir):
 
 def test_distributed_batch_applies_on_executors(spark, tmp_path):
     """One micro-batch touching several documents must be applied by
-    the bucket-grouped executor path (staged *-stream-* bucket files +
+    the bucket-grouped executor path (staged stream bucket files +
     one manifest flip), not a driver-side row loop — per-document seq
     order and gapless revisions intact."""
-    import glob
-
     store = DocumentStore(str(tmp_path / "store"), spark=spark)
     cmds = str(tmp_path / "commands")
     ckpt = str(tmp_path / "ckpt")
@@ -214,8 +222,7 @@ def test_distributed_batch_applies_on_executors(spark, tmp_path):
 
     # the executor path stages per-bucket files; a driver-side row
     # loop would never create these
-    staged = glob.glob(str(tmp_path / "store" / "data" / "*" / "*-stream-*.parquet"))
-    assert staged, "distributed write path did not run"
+    assert _staged_files(store), "distributed write path did not run"
 
     # feed events were published through the driver's single append
     evs = {(e["document_uri"], e["revision"], e["method"]) for e in store.feed_events()}
@@ -275,15 +282,15 @@ def test_serial_fallback_crash_replay_exactly_once(spark, tmp_path):
         ],
     )
 
-    real_flip = store.storage.commit_external_many
+    real_flip = store.storage.commit
 
     def boom(*a, **k):
         raise RuntimeError("injected crash at the manifest flip")
 
-    store.storage.commit_external_many = boom
+    store.storage.commit = boom
     with pytest.raises(Exception, match="injected crash|Query.*terminated"):
         run_command_stream(spark, store, cmds, ckpt)
-    store.storage.commit_external_many = real_flip
+    store.storage.commit = real_flip
 
     # crash before the flip ⇒ NOTHING of the batch is visible and the
     # watermark did not advance: revisions unchanged, no partial prefix
@@ -375,8 +382,6 @@ def test_vacuum_reclaims_superseded_stream_staging_files(spark, tmp_path, monkey
     (The staging floor is lowered: this single-process test WANTS
     immediate reclaim; the floor exists for concurrent cross-process
     staging windows — see DocumentStore.STAGING_GRACE_S.)"""
-    import glob
-
     monkeypatch.setattr(DocumentStore, "STAGING_GRACE_S", 0.0)
     store = DocumentStore(str(tmp_path / "store"), spark=spark)
     cmds = str(tmp_path / "commands")
@@ -387,7 +392,7 @@ def test_vacuum_reclaims_superseded_stream_staging_files(spark, tmp_path, monkey
     store.put("vdoc", {"a": 2})
     removed = store.vacuum(grace_seconds=0, keep_versions=0)
     assert removed > 0
-    leftover = glob.glob(str(tmp_path / "store" / "data" / "*" / "*-stream-*.parquet"))
+    leftover = _staged_files(store)
     referenced = set()
     for t in store.storage.tables():
         referenced.update(store.storage.files(t))
@@ -600,17 +605,17 @@ def test_streaming_vacuum_reclaims_crash_orphans(spark, tmp_path, monkeypatch):
     ckpt = str(tmp_path / "ckpt")
     write_commands(cmds, [{"seq": 1, "method": "put", "path": "orph", "body": {"a": 1}}])
 
-    real_flip = store.storage.commit_external_many
+    real_flip = store.storage.commit
 
     def boom(*a, **k):
         raise RuntimeError("injected crash at the manifest flip")
 
-    store.storage.commit_external_many = boom
+    store.storage.commit = boom
     with pytest.raises(Exception):
         run_command_stream(spark, store, cmds, ckpt)
-    store.storage.commit_external_many = real_flip
+    store.storage.commit = real_flip
 
-    orphans = glob.glob(str(tmp_path / "store" / "data" / "*" / "*-stream-*.parquet"))
+    orphans = _staged_files(store)
     assert orphans, "crashed batch left no staged files to orphan"
 
     # replay with per-batch vacuum and no grace (no concurrent writers
@@ -2067,7 +2072,7 @@ def test_stream_flip_pinned_against_foreign_write(tmp_path):
             "bucket": [bucket_of("col~", n)] * 2,
         }
     )
-    stage = ing._apply_bucket_commands(store.storage.root, n, store.auto_complete, 7)
+    stage = ing._apply_bucket_commands(store.storage.root, n, store.auto_complete)
 
     v0 = store.storage.current_version()
     results = list(stage(group).itertuples(index=False))
@@ -2106,7 +2111,7 @@ def test_stream_flip_conflict_restages_through_run_command_stream(spark, tmp_pat
             commands.append({"seq": 3, "method": "delete", "path": "gone~", "body": None})
         write_commands(str(root / "commands"), commands)
 
-        real_flip = store.storage.commit_external_many
+        real_flip = store.storage.commit
         outcomes = []
 
         def flip(*a, **k):
@@ -2120,11 +2125,11 @@ def test_stream_flip_conflict_restages_through_run_command_stream(spark, tmp_pat
             outcomes.append("flip")
             return v
 
-        store.storage.commit_external_many = flip
+        store.storage.commit = flip
         try:
             run_command_stream(spark, store, str(root / "commands"), str(root / "ckpt"))
         finally:
-            store.storage.commit_external_many = real_flip
+            store.storage.commit = real_flip
         # the stale flip was refused once, then the batch re-staged and landed
         assert outcomes == ["conflict", "flip"], collection_delete
         assert store.get("col~/foreign")[0]["v"] == 99  # foreign write survived

@@ -69,7 +69,7 @@ def _health(store) -> dict:
             # the revision WITHOUT feed events by design, and retention
             # truncates a prefix — so gaps here are normal for
             # bulk-loaded or truncated stores, and this field must NOT
-            # gate ok (a healthy ingest-built store would page forever)
+            # gate ok (a healthy bulk-ingested store would page forever)
             "feed_covers_all_revisions": frevs == list(range(1, r + 1)),
         }
     # content bucket skew: rows per manifest bucket of the content table
@@ -87,7 +87,7 @@ def _health(store) -> dict:
         for t in tables.values():
             for v in t.values():
                 # a bucket value is one path (plain commit) or a LIST
-                # of paths (external commits: ingest/merge/backfill)
+                # of paths (commits with files=: ingest/merge/backfill)
                 if isinstance(v, list):
                     referenced.update(v)
                 else:
