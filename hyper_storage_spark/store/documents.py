@@ -40,7 +40,8 @@ Semantics mirrored from the reference (citations inline):
   expire_items), the backfill-job face: each builds its collection's
   new content bucket as a Spark frame, and one publisher
   (``_publish_bulk``) stages it and flips it in with the statics row in
-  one commit, pinned on the version its reads saw.
+  one commit, pinned on the file lists of the buckets its reads saw
+  (``_flip_staged``, the flip of every Spark-staged build).
 """
 
 from __future__ import annotations
@@ -566,6 +567,28 @@ class DocumentStore:
 
         time.sleep(random.uniform(0.001, 0.004) * min(attempt + 1, 8))
 
+    def _retry_conflicts(self, attempt_fn, locked: bool = False):
+        """Run ``attempt_fn`` until it returns without ManifestConflict,
+        at most WRITE_CAS_RETRIES times with jittered backoff, then
+        re-raise the last conflict. ``locked`` holds the write window
+        across each attempt (released before the backoff: sleeping
+        while holding it would stall the very writers we yield to).
+        Each attempt must re-read the state it stages."""
+        from .storage import ManifestConflict
+
+        last: Optional[BaseException] = None
+        for attempt in range(self.WRITE_CAS_RETRIES):
+            try:
+                if not locked:
+                    return attempt_fn()
+                with self.storage.write_lock():
+                    return attempt_fn()
+            except ManifestConflict as e:
+                last = e
+            if attempt < self.WRITE_CAS_RETRIES - 1:
+                self._cas_backoff(attempt)
+        raise last  # type: ignore[misc]
+
     def _prepare_op(self, method: str, path: str):
         """Shared pre-queue validation + template instantiation for
         BOTH write entry points (_write and write_batch) — one place to
@@ -925,23 +948,12 @@ class DocumentStore:
         streaming file-source face keeps its at-least-once floor — a
         written-but-unregistered file is visible to directory
         listings)."""
-        from .storage import ManifestConflict
-
+        # same fairness rule as the write batch: hold the cross-process
+        # lock across the read-compute-flip window (standalone callers —
+        # recover, public complete_transactions; the batch path already
+        # holds it and this re-enters)
         with self._lock:
-            for attempt in range(self.WRITE_CAS_RETRIES):
-                try:
-                    # same fairness rule as the write batch: hold the
-                    # cross-process lock across the read-compute-flip
-                    # window (standalone callers — recover, public
-                    # complete_transactions; the batch path already
-                    # holds it and this re-enters)
-                    with self.storage.write_lock():
-                        return self._complete_uris_once(uris)
-                except ManifestConflict:
-                    if attempt == self.WRITE_CAS_RETRIES - 1:
-                        raise
-                    self._cas_backoff(attempt)
-        raise AssertionError("unreachable")  # pragma: no cover
+            return self._retry_conflicts(lambda: self._complete_uris_once(uris), locked=True)
 
     def _complete_uris_once(self, uris: list) -> int:
         with self._lock:
@@ -1067,30 +1079,24 @@ class DocumentStore:
                 incomplete = [t for t in rows if t["completed_at"] is None]
                 abandoned = {t["uuid"] for t in incomplete if t["dt_quantum"] < horizon_q}
                 if abandoned:
-                    from .storage import ManifestConflict
-
                     # version-pinned prune with re-read-and-retry: a
                     # concurrent writer's txn appended between our read
                     # and this rewrite must not be erased by the stale
                     # full-bucket replace
-                    for attempt in range(self.WRITE_CAS_RETRIES):
+                    def prune():
                         pinned = self.storage.current_version()
                         keep = [
                             t
                             for t in self.storage.bucket_rows(TRANSACTIONS, b)
                             if t["uuid"] not in abandoned
                         ]
-                        try:
-                            self.storage.commit(
-                                {(TRANSACTIONS, b): keep},
-                                {TRANSACTIONS: TRANSACTIONS_SCHEMA},
-                                expected_version=pinned,
-                            )
-                            break
-                        except ManifestConflict:
-                            if attempt == self.WRITE_CAS_RETRIES - 1:
-                                raise
-                            self._cas_backoff(attempt)
+                        self.storage.commit(
+                            {(TRANSACTIONS, b): keep},
+                            {TRANSACTIONS: TRANSACTIONS_SCHEMA},
+                            expected_version=pinned,
+                        )
+
+                    self._retry_conflicts(prune)
                 live_uris = {
                     t["document_uri"] for t in incomplete if t["uuid"] not in abandoned
                 }
@@ -1212,8 +1218,8 @@ class DocumentStore:
 
     def _publish_bulk(self, uri: str, build):
         """THE publisher of the bulk collection writes (ingest_collection,
-        merge_collection, expire_items): one pinned :meth:`Storage.commit`
-        that registers a Spark-staged frame as the collection's content
+        merge_collection, expire_items): one :meth:`_flip_staged` that
+        registers a Spark-staged frame as the collection's content
         bucket and replaces its statics row with the next revision.
 
         ``build(static, revision, now)`` gets the collection's statics
@@ -1224,18 +1230,17 @@ class DocumentStore:
         publish. Content and statics share the flip: two flips would let
         a crash strand a half-created collection that can neither be
         queried (no static) nor re-ingested (bucket non-empty). The flip
-        is pinned on the version read before ``build``'s reads, so a
-        write that lands after them refuses the flip instead of being
-        erased by the staged bucket; a refused attempt re-runs ``build``
-        on fresh state, at most WRITE_CAS_RETRIES times, then raises
-        ManifestConflict. Returns the landed (or empty) attempt's
-        ``result``. Caller holds self._lock."""
-        from .storage import ManifestConflict
-
+        is pinned on the content and statics buckets' file lists, read
+        before ``build``'s reads: a write to either bucket after them
+        refuses the flip instead of being erased by the staged bucket,
+        and the next attempt re-runs ``build`` on fresh state (at most
+        WRITE_CAS_RETRIES times, then ManifestConflict). Flips to other
+        buckets never force a re-stage. Returns the landed (or empty)
+        attempt's ``result``. Caller holds self._lock."""
         bucket = self._bucket(uri)
-        last: Optional[BaseException] = None
-        for attempt in range(self.WRITE_CAS_RETRIES):
-            v0 = self.storage.current_version()
+
+        def attempt():
+            pins = {(t, bucket): self.storage.bucket_files(t, bucket) for t in (CONTENT, STATICS)}
             static = self._get_static(uri)
             revision = 1 if static is None else static["revision"] + 1
             now = _now_ms()
@@ -1253,19 +1258,12 @@ class DocumentStore:
                     "modified_at": now,
                 }
             )
-            try:
-                self.storage.commit(
-                    {(STATICS, bucket): statics},
-                    {STATICS: STATICS_SCHEMA},
-                    files={CONTENT: {bucket: files}},
-                    expected_version=v0,
-                )
-                return result
-            except ManifestConflict as e:
-                last = e
-            if attempt < self.WRITE_CAS_RETRIES - 1:
-                self._cas_backoff(attempt)
-        raise last  # type: ignore[misc]
+            self._flip_staged(
+                pins, {CONTENT: {bucket: files}}, {(STATICS, bucket): statics}, {STATICS: STATICS_SCHEMA}
+            )
+            return result
+
+        return self._retry_conflicts(attempt)
 
     def ingest_collection(self, df, collection_uri: str, item_id_col: str) -> int:
         """Bulk-load a Spark DataFrame as a collection: every row becomes
@@ -1613,18 +1611,7 @@ class DocumentStore:
         closure re-reads whatever state it stages, so each retry
         merges against the fresh manifest; non-conflict exceptions
         (e.g. IndexAlreadyExists) propagate immediately."""
-        from .storage import ManifestConflict
-
-        last: Optional[BaseException] = None
-        for attempt in range(self.WRITE_CAS_RETRIES):
-            try:
-                with self.storage.write_lock():
-                    return attempt_fn()
-            except ManifestConflict as e:
-                last = e
-            if attempt < self.WRITE_CAS_RETRIES - 1:
-                self._cas_backoff(attempt)
-        raise last  # type: ignore[misc]
+        return self._retry_conflicts(attempt_fn, locked=True)
 
     def create_index(
         self,
@@ -1813,25 +1800,30 @@ class DocumentStore:
             & (~F.col("is_deleted"))
         )
 
-    def _flip_index_files(self, idef: IndexDef, files, expect_table_files) -> None:
-        """Flip the staged MV files in: ONE attempt, under the write
-        window, pinned on THIS TABLE's committed file list. Callers'
-        staged files embed a snapshot of the table, so they own the
-        retry — they must re-stage, not re-flip — and holding the lock
-        across their Spark job would stall every concurrent writer for
-        the build's duration. Pinning per-table, not on the global
-        manifest version, means unrelated content flips (the busy
-        writer fleet) never force a re-stage."""
+    def _flip_staged(self, pins, files, updates=None, schemas=None) -> int:
+        """THE flip of Spark-staged builds (bulk collection writes, index
+        builds): ONE attempt, under the write window, pinned on the
+        committed file lists of the buckets the build read — ``pins``
+        maps (table, bucket) to the list read before the build. A moved
+        list raises ManifestConflict. The caller owns the retry: its
+        staged files embed the stale read, so it must re-stage, not
+        re-flip, and holding the lock across its Spark job would stall
+        every concurrent writer for the build's duration. Pinning on the
+        buckets read, not on the global manifest version, means flips
+        elsewhere (the busy writer fleet) never force a re-stage.
+        ``files``, ``updates`` and ``schemas`` go to one
+        :meth:`Storage.commit`; ``updates`` must come from pinned
+        buckets, which the check proves unchanged."""
         from .storage import ManifestConflict
 
         with self.storage.write_lock():
-            current = self.storage.bucket_files(idef.storage_table, 0)
-            if sorted(current) != sorted(expect_table_files):
-                raise ManifestConflict(
-                    f"{idef.storage_table}: committed files moved since "
-                    "the incremental snapshot was read"
-                )
-            self.storage.commit({}, {}, files={idef.storage_table: {0: files}})
+            for (table, bucket), expect in pins.items():
+                if sorted(self.storage.bucket_files(table, bucket)) != sorted(expect):
+                    raise ManifestConflict(
+                        f"{table} bucket {bucket}: committed files moved since "
+                        "the staged build read them"
+                    )
+            return self.storage.commit(updates or {}, schemas or {}, files=files)
 
     def _backfill_index_spark(self, idef: IndexDef) -> None:
         """Distributed FULL index backfill: membership filter +
@@ -1845,7 +1837,7 @@ class DocumentStore:
         atomic manifest flip (``_refresh_indexes`` stages into the same
         flip, appending a delta file), so any write landing after our
         content snapshot necessarily moved the index table's files and the
-        one-attempt ``_flip_index_files`` raises
+        one-attempt ``_flip_staged`` raises
         ``ManifestConflict`` — we re-snapshot and re-stage instead of
         silently overwriting that write's fresh MV row (which would
         leave content and index permanently divergent).
@@ -1901,7 +1893,9 @@ class DocumentStore:
             rev_files = self.storage.stage_frame(revs, idef.storage_table)
             files = self.storage.stage_frame(df, idef.storage_table)
             try:
-                self._flip_index_files(idef, files, snapshot_files)
+                self._flip_staged(
+                    {(idef.storage_table, 0): snapshot_files}, {idef.storage_table: {0: files}}
+                )
                 return
             except ManifestConflict as e:
                 last = e
@@ -1925,22 +1919,20 @@ class DocumentStore:
         rebuild (pytest-pinned)."""
         from pyspark.sql import functions as F
 
-        from .storage import ManifestConflict
-
         touched_ids = touched_ids.select(F.col(touched_ids.columns[0]).alias("item_id"))
         # the keep-side is a SNAPSHOT of the committed MV, so the flip
-        # is version-pinned and a lost race RE-STAGES from the fresh
-        # manifest (the write path's discipline): without the pin, two
+        # is pinned on the MV's file list and a lost race RE-STAGES from
+        # the fresh manifest (the write path's discipline): without the pin, two
         # concurrent bulk merges would each flip a keep-side missing
         # the other's fresh rows — a permanent lost update. The full
         # rebuild has the same stage-then-flip window (a per-item write
         # between its content snapshot and its flip) and is pinned the
         # same way since r12 (_backfill_index_spark)
-        last: Optional[BaseException] = None
-        for attempt in range(self.WRITE_CAS_RETRIES):
-            snapshot_files = self.storage.bucket_files(idef.storage_table, 0)
+        def attempt():
+            table = idef.storage_table
+            snapshot_files = self.storage.bucket_files(table, 0)
             existing, delta = self.storage.spark_df_and_delta(
-                self.spark, idef.storage_table, index_spark_schema(idef.sort_by)
+                self.spark, table, index_spark_schema(idef.sort_by)
             )
             # the frame holds the base files only: items with pending
             # delta rows re-extract from content like the touched ones
@@ -1956,17 +1948,10 @@ class DocumentStore:
                 touched, "item_id", "left_semi"
             )
             fresh = self._index_rows_df(idef, fresh_content)
-            try:
-                files = self.storage.stage_frame(
-                    keep.unionByName(fresh.select(*keep.columns)), idef.storage_table
-                )
-                self._flip_index_files(idef, files, snapshot_files)
-                return
-            except ManifestConflict as e:
-                last = e
-            if attempt < self.WRITE_CAS_RETRIES - 1:
-                self._cas_backoff(attempt)
-        raise last  # type: ignore[misc]
+            files = self.storage.stage_frame(keep.unionByName(fresh.select(*keep.columns)), table)
+            self._flip_staged({(table, 0): snapshot_files}, {table: {0: files}})
+
+        self._retry_conflicts(attempt)
 
     # retry backoff for failed background builds — the reference's
     # PendingIndexWorker re-arms a 60 s timer (PendingIndexWorker.scala:24-98)
@@ -2559,36 +2544,27 @@ class DocumentStore:
         read, exactly as with an expired Kafka offset — the dead-letter
         log has the same shape and can be truncated the same way via
         ``Storage.replace_append_table``."""
-        from .storage import ManifestConflict
+
+        def attempt():
+            # version read BEFORE the rows (review r12): the flip is
+            # pinned on it, so an append landing anywhere in the
+            # read-compute window conflicts and we recompute —
+            # never strip a winner's a-key while dropping its rows.
+            # (Reading it after would let an append slip between
+            # the rows read and the version read and be erased.)
+            v0 = self.storage.current_version()
+            rows = self.storage.all_rows(FEED)
+            keep = sorted(
+                (r for r in rows if r["ts"] is not None and r["ts"] >= older_than_ms),
+                key=lambda r: (r["document_uri"], r["revision"]),
+            )
+            removed = len(rows) - len(keep)
+            if removed:
+                self.storage.replace_append_table(FEED, keep, FEED_SCHEMA, expected_version=v0)
+            return removed
 
         with self._lock:
-            last: Optional[BaseException] = None
-            for attempt in range(self.WRITE_CAS_RETRIES):
-                # version read BEFORE the rows (review r12): the flip is
-                # pinned on it, so an append landing anywhere in the
-                # read-compute window conflicts and we recompute —
-                # never strip a winner's a-key while dropping its rows.
-                # (Reading it after would let an append slip between
-                # the rows read and the version read and be erased.)
-                v0 = self.storage.current_version()
-                rows = self.storage.all_rows(FEED)
-                keep = sorted(
-                    (r for r in rows if r["ts"] is not None and r["ts"] >= older_than_ms),
-                    key=lambda r: (r["document_uri"], r["revision"]),
-                )
-                removed = len(rows) - len(keep)
-                if not removed:
-                    return 0
-                try:
-                    self.storage.replace_append_table(
-                        FEED, keep, FEED_SCHEMA, expected_version=v0
-                    )
-                    return removed
-                except ManifestConflict as e:
-                    last = e
-                if attempt < self.WRITE_CAS_RETRIES - 1:
-                    self._cas_backoff(attempt)
-            raise last  # type: ignore[misc]
+            return self._retry_conflicts(attempt)
 
     def feed_events(self) -> list[dict]:
         """The published change feed, in publication order (Kafka-topic

@@ -2234,23 +2234,23 @@ def test_vacuum_spares_executor_staged_stream_file(tmp_path):
     assert not os.path.exists(look_alike), "a table name never marks its files as staged"
 
 
-@pytest.mark.parametrize("path", ["merge", "expire"])
-def test_bulk_flip_conflict_restages_and_keeps_foreign_write(spark, tmp_path, path):
-    """merge_collection and expire_items publish their collection's whole
-    content bucket from a Spark frame. A second handle on the same root
-    puts a document into that bucket just before the bulk flip: the
-    flip, pinned on the version read before the bulk path's reads, is
-    refused and the bulk write re-stages from fresh state — it never
-    publishes a bucket that erases the foreign write."""
+def _bulk_write_with_foreign_put(spark, tmp_path, path, same_bucket):
+    """Run one bulk write on a store holding c~/1 and c~/2 (none for
+    ingest) while a second handle on the same root puts a document just
+    before the first bulk flip, into c~'s bucket or into another one.
+    Returns (store, foreign uri, flip outcomes)."""
     from hyper_storage_spark.store.storage import ManifestConflict, bucket_of
 
     store = DocumentStore(str(tmp_path / "s"), spark=spark)
     n = store.storage.n_buckets
-    foreign = next(u for u in (f"other{i}" for i in range(1000)) if bucket_of(u, n) == bucket_of("c~", n))
-    store.put("c~/1", {"v": 1, "ts": "2020-01-01 00:00:00"})
-    store.put("c~/2", {"v": 2, "ts": "2030-01-01 00:00:00"})
+    foreign = next(
+        u for u in (f"other{i}" for i in range(1000)) if (bucket_of(u, n) == bucket_of("c~", n)) == same_bucket
+    )
+    if path != "ingest":
+        store.put("c~/1", {"v": 1, "ts": "2020-01-01 00:00:00"})
+        store.put("c~/2", {"v": 2, "ts": "2030-01-01 00:00:00"})
     writer = DocumentStore(store.storage.root)
-    real_flip = store.storage.commit
+    real_flip = store._flip_staged
     outcomes = []
 
     def flip(*a, **k):
@@ -2264,23 +2264,58 @@ def test_bulk_flip_conflict_restages_and_keeps_foreign_write(spark, tmp_path, pa
         outcomes.append("flip")
         return v
 
-    store.storage.commit = flip
+    store._flip_staged = flip
     try:
-        if path == "merge":
+        if path == "ingest":
+            df = spark.createDataFrame([("1", 1), ("2", 2)], "item string, v long")
+            assert store.ingest_collection(df, "c~", "item") == 1
+        elif path == "merge":
             batch = spark.createDataFrame([("3", 3)], "item string, v long")
             assert store.merge_collection(batch, "c~", "item") == 3
         else:
             assert store.expire_items("c~", "ts", "2025-01-01 00:00:00", "v long, ts string") == (1, 3)
     finally:
-        store.storage.commit = real_flip
-    assert outcomes == ["conflict", "flip"]
+        del store._flip_staged
     assert store.get(foreign) == ({"f": 1}, 1)  # the foreign write survived
-    assert store.get("c~/2")[0]["v"] == 2 and store.get("c~/2")[1] == 3
+    if path != "ingest":
+        assert store.get("c~/2")[0]["v"] == 2 and store.get("c~/2")[1] == 3
     if path == "merge":
         assert store.get("c~/3")[0] == {"item": "3", "v": 3, "id": "3"}
-    else:
+    elif path == "expire":
         with pytest.raises(NotFoundError):
             store.get("c~/1")
+    return store, foreign, outcomes
+
+
+@pytest.mark.parametrize("path", ["merge", "expire"])
+def test_bulk_flip_conflict_restages_and_keeps_foreign_write(spark, tmp_path, path):
+    """merge_collection and expire_items publish their collection's whole
+    content bucket from a Spark frame. A second handle on the same root
+    puts a document into that bucket just before the bulk flip: the
+    flip, pinned on the bucket's file lists read before the bulk path's
+    reads, is refused and the bulk write re-stages from fresh state —
+    it never publishes a bucket that erases the foreign write."""
+    _, _, outcomes = _bulk_write_with_foreign_put(spark, tmp_path, path, same_bucket=True)
+    assert outcomes == ["conflict", "flip"]
+
+
+@pytest.mark.parametrize("path", ["ingest", "merge", "expire"])
+def test_bulk_flip_lands_first_time_past_other_bucket_writes(spark, tmp_path, path):
+    """The bulk flip is pinned on the collection's own content and
+    statics buckets only: a second handle committing to another bucket
+    while the bulk write builds does not refuse it. It lands on its
+    first attempt, staging once, and both writes survive."""
+    import os
+
+    from hyper_storage_spark.store.documents import CONTENT
+
+    store, _, outcomes = _bulk_write_with_foreign_put(spark, tmp_path, path, same_bucket=False)
+    assert outcomes == ["flip"]
+    content_dir = store.storage.table_dir(CONTENT)
+    staged = [d for d in os.listdir(content_dir) if store.storage.is_staged(os.path.join(content_dir, d))]
+    assert len(staged) == 1, staged
+    if path == "ingest":
+        assert store.get("c~/2") == ({"item": "2", "v": 2, "id": "2"}, 1)
 
 
 def test_reingest_after_restore_keeps_snapshot_files(spark, tmp_path):
@@ -3463,7 +3498,7 @@ def test_index_served_frame_reads_base_files_and_gains_no_filter(spark, tmp_path
     import re
 
     from hyper_storage_spark.plans import SortBy, SortItem
-    from hyper_storage_spark.store.query import _plan
+    from hyper_storage_spark.store.query import _plan, _with_residual
 
     store = DocumentStore(str(tmp_path / "pl"), spark=spark)
     for i in range(8):
@@ -3472,8 +3507,9 @@ def test_index_served_frame_reads_base_files_and_gains_no_filter(spark, tmp_path
     idef = store.index_defs("pl~")[0]
 
     def shape():
-        plan, src, _ = _plan(store, "pl~", "a > 2", [SortBy("a")])
-        assert plan.index_id == "bya"
+        plan, src, filter_ast = _plan(store, "pl~", "a > 2", [SortBy("a")])
+        src = _with_residual(plan, src, filter_ast)  # the frame query() runs
+        assert plan.index_id == "bya" and plan.residual_compiled
         text = src.df._jdf.queryExecution().optimizedPlan().toString()
         return sorted(src.df.inputFiles()), re.sub(r"#\d+L?", "#", text), src.delta
 
