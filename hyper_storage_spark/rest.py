@@ -551,8 +551,9 @@ class RestFacade:
     # reserved top-level namespace `_transactions/{transactionId}` — the
     # face of GET /hyper-storage/transactions/{id}. The id is the WAL
     # primary key (dt_quantum-partition-uuid), so the lookup is a point
-    # read of one bucket; completed-and-pruned ids 404 (the reference's
-    # recovery horizon applies to status lookups too).
+    # read of one bucket. A write's WAL row is written completed, so a
+    # known id always reads completed; ids pruned past WAL_KEEP_MS 404
+    # (the reference's recovery horizon applies to status lookups too).
     _TRANSACTIONS_PREFIX = "_transactions/"
 
     def _transactions_route(self, m: str, path: str) -> RestResponse:

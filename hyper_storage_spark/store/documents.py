@@ -23,11 +23,13 @@ Semantics mirrored from the reference (citations inline):
   PrimaryWorker.scala:315-328; verified by the model-based random CRUD
   differential in tests/test_store.py);
 - write-ahead transactions + completion publishing ``feed:*`` events
-  with the revision header, at-least-once, idempotent by revision
+  with the revision header, idempotent by revision
   (BackgroundContentTaskCompleter.scala:75-113). The reference
-  completes in the background because Cassandra has no multi-table
-  atomicity; here a write's completion rides in its own manifest flip,
-  and recovery completes only rows a write left incomplete;
+  completes in the background, and re-drives what a crash left behind
+  with recovery workers, because Cassandra and Kafka cannot commit
+  together; here a write's WAL rows are written completed and its
+  index rows and feed events ride in the same manifest flip, so no
+  write leaves anything to recover;
 - index lifecycle INDEXING→NORMAL / DELETING with backfill and
   incremental maintenance on every write (IndexContentTaskWorker.scala,
   IndexDefTaskWorker.scala). The reference must track obsolete sort
@@ -326,7 +328,6 @@ class DocumentStore:
         root: str,
         spark=None,
         n_buckets: Optional[int] = None,
-        auto_complete: bool = True,
         storage: Optional[Storage] = None,
     ):
         # ``storage`` injection lets the distributed write path run the
@@ -334,7 +335,6 @@ class DocumentStore:
         # on executors (streaming/ingest.py)
         self.storage = storage if storage is not None else Storage(root, n_buckets)
         self.spark = spark
-        self.auto_complete = auto_complete
         self._lock = threading.RLock()
         # group-commit queue: ops append here; one leader at a time
         # drains and applies them all in one flip while followers sleep
@@ -482,7 +482,8 @@ class DocumentStore:
         """Single-op front door with GROUP COMMIT: the op is queued and
         whichever caller next holds the writer lock drains the queue and
         applies every queued op in ONE staged manifest flip, which also
-        carries their completion (WAL stamps, index rows, feed events).
+        carries their completion (completed WAL rows, index rows, feed
+        events), so a returned write is already complete.
         Under concurrency, N ops cost one flip instead of N; a lone
         writer degenerates to a one-op batch.
         Per-op semantics (revision order, per-op errors) are unchanged —
@@ -605,9 +606,9 @@ class DocumentStore:
 
     def _apply_write_batch(self, batch: list) -> None:
         """Stage every op of the batch against cached bucket state, then
-        publish all touched buckets, the batch's WAL rows and (with
-        ``auto_complete``) the successful ops' completion in ONE
-        manifest flip. Caller holds ``self._lock``."""
+        publish all touched buckets, the batch's WAL rows and the
+        successful ops' index rows and feed events in ONE manifest flip.
+        Caller holds ``self._lock``."""
         try:
             self._apply_write_batch_guarded(batch)
         finally:
@@ -660,16 +661,12 @@ class DocumentStore:
         request a re-stage after a lost flip race — in that case nothing
         was exposed and nothing is marked.
 
-        The batch's WAL rows are appended to their buckets as one new
-        file each (``bucket_appends``); a bucket is rewritten only when
-        _stage_wal says so, which also bounds its file list. With
-        ``auto_complete`` the rows are already stamped ``completed_at``
-        and the same flip carries the index delta rows (appended the
-        same way, see _refresh_indexes), a collection delete's index
-        drops and the feed events: the manifest flip is atomic across
-        tables, so data and completion need no second flip.
-        Without it the rows stay incomplete for
-        complete_transactions()/recover()."""
+        The batch's WAL rows, stamped ``completed_at`` when staged, go to
+        their buckets as _stage_wal decides, and the same flip carries
+        the index delta rows (appended the same way, see
+        _refresh_indexes), a collection delete's index drops and the feed
+        events: the manifest flip is atomic across tables, so a write
+        completes in its own flip and leaves nothing to finish later."""
         from .storage import ManifestConflict
 
         # version pinned BEFORE the staging reads (defense-in-depth:
@@ -678,10 +675,9 @@ class DocumentStore:
         # caught by the expected_version check instead of erased)
         staged_version = self.storage.current_version()
         # CONTENT/STATICS: bucket → the bucket's staged rows;
-        # TRANSACTIONS: bucket → this batch's new WAL rows only
-        cache: dict = {CONTENT: {}, STATICS: {}, TRANSACTIONS: {}}
+        # TRANSACTIONS: this batch's WAL rows, in op order
+        cache: dict = {CONTENT: {}, STATICS: {}, TRANSACTIONS: []}
         dirty: set = set()
-        ok_uris: list[str] = []
         now = _now_ms()
         for op in batch:
             op.result = op.error = None  # re-stage cleanly on retry
@@ -693,28 +689,15 @@ class DocumentStore:
                 op.txn_id = txn_id
             except Exception as e:  # noqa: BLE001 — per-op isolation
                 op.error = e
-            else:
-                uri = split_path(op.path).document_uri
-                if uri not in ok_uris:
-                    ok_uris.append(uri)
         updates = {(table, b): cache[table][b] for (table, b) in dirty}
         schemas = {CONTENT: CONTENT_SCHEMA, STATICS: STATICS_SCHEMA, TRANSACTIONS: TRANSACTIONS_SCHEMA}
         drop_tables: list[str] = []
         bucket_appends: dict = {}
         try:
-            wal, rewrite = self._stage_wal(cache[TRANSACTIONS], ok_uris if self.auto_complete else [])
-            feed_rows = (
-                self._stage_completion(
-                    ok_uris, wal, now, updates, schemas, drop_tables, bucket_appends, content=cache[CONTENT]
-                )
-                if self.auto_complete
-                else []
+            self._stage_wal(cache[TRANSACTIONS], now, updates, bucket_appends)
+            feed_rows = self._stage_completion(
+                cache[TRANSACTIONS], now, updates, schemas, drop_tables, bucket_appends, cache[CONTENT]
             )
-            for b, rows in wal.items():
-                if b in rewrite:
-                    updates[(TRANSACTIONS, b)] = self._wal_retained(rows, now)
-                else:
-                    bucket_appends[(TRANSACTIONS, b)] = rows
             if updates or bucket_appends:
                 self.storage.commit(
                     updates,
@@ -740,42 +723,27 @@ class DocumentStore:
             op.done = True
         return True
 
-    def _stage_wal(self, new_rows: dict, uris: list) -> tuple[dict, set]:
-        """Decide how a batch's new WAL rows (bucket → rows) reach their
-        buckets. Returns (bucket → the rows the flip writes, the buckets
-        it rewrites): a rewritten bucket maps to its current rows plus
-        the new ones, any other bucket to the new rows alone, appended
-        as one file.
-
-        A bucket is rewritten (folded into one file, its completed
-        entries past WAL_KEEP_MS pruned) when its file list already
-        holds WAL_MAX_FILES files, when the storage stages whole buckets
-        anyway (the executor overlay), or when it holds an INCOMPLETE
-        row of one of ``uris`` — left by a crashed writer or an
-        ``auto_complete=False`` handle — which the completion then
-        stamps in the same flip, before the batch's own rows, keeping
-        per-document feed order. So no write path needs maintenance to
-        keep a WAL bucket's files and expired rows bounded. The bucket's
-        rows are read only to rewrite it or when one of its files may
-        hold an incomplete row (Storage.may_hold_nulls answers that per
-        file without reading rows), so an appending write's cost does
-        not grow with the rows the bucket keeps."""
-        touched = set(uris)
-        wal: dict[int, list[dict]] = {}
-        rewrite: set[int] = set()
-        for b, new in new_rows.items():
-            full = (
+    def _stage_wal(self, txns: list, now: int, updates: dict, bucket_appends: dict) -> None:
+        """Stage a batch's WAL rows into the caller's flip. A bucket's
+        rows are appended as one new file (``bucket_appends``), so an
+        appending write reads none of the rows the bucket keeps. The
+        bucket is rewritten instead (``updates``: its current rows plus
+        the new ones, as one file, the entries past WAL_KEEP_MS pruned)
+        when its file list already holds WAL_MAX_FILES files, or when
+        the storage stages whole buckets anyway (the executor overlay).
+        So no write path needs maintenance to keep a WAL bucket's files
+        and expired rows bounded."""
+        new: dict[int, list[dict]] = {}
+        for t in txns:
+            new.setdefault(t["partition"], []).append(t)
+        for b, rows in new.items():
+            if (
                 self.storage.stages_whole_buckets
                 or len(self.storage.bucket_files(TRANSACTIONS, b)) >= self.WAL_MAX_FILES
-            )
-            pending = bool(touched) and not full and self.storage.may_hold_nulls(TRANSACTIONS, b, "completed_at")
-            old = self.storage.bucket_rows(TRANSACTIONS, b) if full or pending else []
-            if full or any(t["completed_at"] is None and t["document_uri"] in touched for t in old):
-                rewrite.add(b)
-                wal[b] = old + new
+            ):
+                updates[(TRANSACTIONS, b)] = self._wal_retained(self.storage.bucket_rows(TRANSACTIONS, b) + rows, now)
             else:
-                wal[b] = new
-        return wal, rewrite
+                bucket_appends[(TRANSACTIONS, b)] = rows
 
     def _stage_op(
         self, method: str, path: str, body: Any, cache: dict, dirty: set, now: int
@@ -884,11 +852,11 @@ class DocumentStore:
             "body": json.dumps(body) if body is not None else None,
             "dt_quantum": now // 60000,  # TransactionLogic.scala:32-34
             "partition": bucket,
-            "completed_at": None,
+            "completed_at": now,  # completes in the batch's own flip
         }
         cache[CONTENT][bucket] = new_content
         cache[STATICS][bucket] = new_statics
-        cache[TRANSACTIONS].setdefault(bucket, []).append(txn)
+        cache[TRANSACTIONS].append(txn)
         dirty.update({(CONTENT, bucket), (STATICS, bucket)})
 
         if method == "delete" and not item_id:
@@ -899,7 +867,7 @@ class DocumentStore:
 
         return created, revision, transaction_id_of(txn)
 
-    # -- background completion (BackgroundContentTaskCompleter analog) --------
+    # -- completion (BackgroundContentTaskCompleter analog) -------------------
 
     # completed WAL entries older than this are pruned by any WAL
     # bucket rewrite (the reference's stale-recovery horizon,
@@ -913,103 +881,29 @@ class DocumentStore:
     WAL_MAX_FILES = 8
 
     def _wal_retained(self, rows: list[dict], now: int) -> list[dict]:
-        """``rows`` without the completed entries past WAL_KEEP_MS
-        (removeCompleteTransactionsFromList analog)."""
+        """``rows`` without the entries completed more than WAL_KEEP_MS
+        before ``now`` (removeCompleteTransactionsFromList analog)."""
         horizon = now - self.WAL_KEEP_MS
-        return [t for t in rows if t["completed_at"] is None or t["completed_at"] >= horizon]
-
-    def complete_transactions(self, uri: str) -> int:
-        """Complete incomplete WAL entries for a document: maintain
-        indexes, publish feed events, stamp completed_at. At-least-once
-        — a crash between publish and stamp re-publishes the same
-        (uri, item, revision) on recovery, and consumers dedup by
-        revision (the reference's delivery model, README «Обработка
-        транзакций»); completion itself never scans the feed."""
-        return self._complete_uris([uri])
-
-    def _complete_uris(self, uris: list) -> int:
-        """Batched completion of rows a write did NOT complete in its
-        own flip (``auto_complete=False`` handles, crashed or foreign
-        writers; recover() and complete_transactions() call this):
-        gather every named document's incomplete WAL entries, then
-        publish ALL their feed events and all index/WAL updates in ONE
-        manifest flip. Each WAL bucket holding a stamped row is
-        rewritten, which folds its appended files into one. Per-document
-        event order is preserved (entries sort by revision within a
-        uri); cross-document feed order is unconstrained.
-
-        Cross-process safe (r7): if a concurrent process wins the flip
-        race, the whole computation re-runs against fresh reads —
-        completion is idempotent (stamping completed_at and rewriting
-        index rows recompute identically), and the feed events ride IN
-        the completion flip (``commit(appends=...)``) so a lost race
-        registers nothing: no duplicate publication on retry, and no
-        crash window between publication and the stamps it marks (the
-        streaming file-source face keeps its at-least-once floor — a
-        written-but-unregistered file is visible to directory
-        listings)."""
-        # same fairness rule as the write batch: hold the cross-process
-        # lock across the read-compute-flip window (standalone callers —
-        # recover, public complete_transactions; the batch path already
-        # holds it and this re-enters)
-        with self._lock:
-            return self._retry_conflicts(lambda: self._complete_uris_once(uris), locked=True)
-
-    def _complete_uris_once(self, uris: list) -> int:
-        with self._lock:
-            staged_version = self.storage.current_version()
-            now = _now_ms()
-            wal = {b: self.storage.bucket_rows(TRANSACTIONS, b) for b in {self._bucket(u) for u in uris}}
-            updates: dict = {}
-            bucket_appends: dict = {}
-            drop_tables: list[str] = []
-            schemas = {TRANSACTIONS: TRANSACTIONS_SCHEMA}
-            feed_rows = self._stage_completion(uris, wal, now, updates, schemas, drop_tables, bucket_appends)
-            if not feed_rows:
-                return 0
-            for b in {self._bucket(e["document_uri"]) for e in feed_rows}:
-                updates[(TRANSACTIONS, b)] = self._wal_retained(wal[b], now)
-            # the feed events ride IN the same flip as the completion
-            # stamps/index updates (r7): atomic for manifest readers —
-            # a crash can no longer publish without stamping or vice
-            # versa, and a lost CAS race registers nothing, so the
-            # retry's re-publish is the FIRST publish
-            self.storage.commit(
-                updates,
-                schemas,
-                drop_tables=drop_tables,
-                expected_version=staged_version,
-                appends={FEED: (feed_rows, FEED_SCHEMA)},
-                bucket_appends=bucket_appends,
-            )
-            return len(feed_rows)
+        return [t for t in rows if t["completed_at"] >= horizon]
 
     def _stage_completion(
-        self, uris: list, wal: dict, now: int, updates: dict, schemas: dict,
-        drop_tables: list, bucket_appends: dict, content: Optional[dict] = None,
+        self, txns: list, now: int, updates: dict, schemas: dict,
+        drop_tables: list, bucket_appends: dict, content: dict,
     ) -> list[dict]:
-        """Stage the completion of every incomplete row of ``uris`` held
-        in ``wal`` (bucket → WAL rows; each completed row is stamped
-        ``completed_at = now`` in place) into the caller's flip: index
-        delta rows for the touched items or, for a collection delete, its
-        index tables dropped and its INDEX_DEFS rows removed
-        (BackgroundContentTaskCompleter.scala:128-139). ``content``
-        (bucket → staged content rows) spares the index refresh a
-        re-read. Returns the feed events, each document's in revision
-        order."""
+        """Stage the completion of a batch's WAL rows ``txns`` (op order)
+        into the caller's flip: index delta rows for the touched items
+        or, for a collection delete, its index tables dropped and its
+        INDEX_DEFS rows removed (BackgroundContentTaskCompleter.scala:
+        128-139). ``content`` (bucket → staged content rows) spares the
+        index refresh a re-read. Returns the feed events, each
+        document's in revision order."""
+        by_uri: dict[str, list[dict]] = {}
+        for t in txns:
+            by_uri.setdefault(t["document_uri"], []).append(t)
         feed_rows: list[dict] = []
-        for uri in dict.fromkeys(uris):
-            bucket = self._bucket(uri)
-            incomplete = sorted(
-                (t for t in wal.get(bucket, ()) if t["document_uri"] == uri and t["completed_at"] is None),
-                key=lambda t: t["revision"],
-            )
-            if not incomplete:
-                continue
+        for uri, rows in by_uri.items():
             idefs = self.index_defs(uri)
-            if is_collection_uri(uri) and any(
-                t["method"] == "feed:delete" and t["item_id"] == "" for t in incomplete
-            ):
+            if is_collection_uri(uri) and any(t["method"] == "feed:delete" and t["item_id"] == "" for t in rows):
                 drop_tables.extend(idef.storage_table for idef in idefs)
                 defs = updates.get((INDEX_DEFS, 0))
                 if defs is None:
@@ -1018,125 +912,23 @@ class DocumentStore:
                 schemas[INDEX_DEFS] = INDEX_DEFS_SCHEMA
             else:
                 self._refresh_indexes(
-                    uri,
-                    [t["item_id"] for t in incomplete],
-                    updates,
-                    bucket_appends,
-                    None if content is None else content.get(bucket),
+                    uri, [t["item_id"] for t in rows], updates, bucket_appends, content.get(self._bucket(uri))
                 )
             for idef in idefs:
                 schemas[idef.storage_table] = _index_schema(idef.sort_by)
-            for t in incomplete:
-                feed_rows.append(
-                    {
-                        "uuid": t["uuid"],
-                        "document_uri": uri,
-                        "item_id": t["item_id"],
-                        "revision": t["revision"],
-                        "method": t["method"],
-                        "body": t["body"],
-                        "ts": now,
-                    }
-                )
-                t["completed_at"] = now
-        return feed_rows
-
-    def recover(self, scan_all: bool = False) -> int:
-        """Re-drive incomplete transactions (RecoveryWorker analog).
-
-        Like the reference's hot/stale workers
-        (recovery/RecoveryWorker.scala:143-186,204-356, checkpoints in
-        db/scheme.cql:26-29), the scan is CHECKPOINTED per bucket: only
-        minute-quanta in [checkpoint, now] are read (the quantum
-        predicate pushes into the parquet scan), so recovery cost is
-        proportional to the un-scanned window, not the WAL size.
-        ``scan_all=True`` forces a full-history walk.
-
-        Incomplete transactions older than ``WAL_KEEP_MS`` are ABANDONED
-        — dropped from the WAL without completion or feed publication,
-        mirroring the reference's bounded stale-recovery horizon
-        (application.conf:10: recovery never looks further back).
-
-        The checkpoint is advanced only to ``now - HOT_LAG_QUANTA``
-        minutes: the executor-side streaming path stages WAL rows and
-        publishes them with a manifest flip that does NOT hold this
-        store's lock, so a transaction quantum can become visible
-        shortly after recover() scanned it — the lag re-scans that hot
-        window on the next pass (the reference's hot-recovery worker
-        re-walks a recent window for exactly this reason,
-        RecoveryWorker.scala:143-186)."""
-        total = 0
-        now = _now_ms()
-        now_q = now // 60000
-        horizon_q = (now - self.WAL_KEEP_MS) // 60000
-        with self._lock:
-            ckpt = self._read_recovery_checkpoint()
-            for b in range(self.storage.n_buckets):
-                from_q = 0 if scan_all else ckpt.get(str(b), 0)
-                rows = self.storage.bucket_rows(
-                    TRANSACTIONS, b, filters=[("dt_quantum", ">=", from_q)] if from_q else None
-                )
-                incomplete = [t for t in rows if t["completed_at"] is None]
-                abandoned = {t["uuid"] for t in incomplete if t["dt_quantum"] < horizon_q}
-                if abandoned:
-                    # version-pinned prune with re-read-and-retry: a
-                    # concurrent writer's txn appended between our read
-                    # and this rewrite must not be erased by the stale
-                    # full-bucket replace
-                    def prune():
-                        pinned = self.storage.current_version()
-                        keep = [
-                            t
-                            for t in self.storage.bucket_rows(TRANSACTIONS, b)
-                            if t["uuid"] not in abandoned
-                        ]
-                        self.storage.commit(
-                            {(TRANSACTIONS, b): keep},
-                            {TRANSACTIONS: TRANSACTIONS_SCHEMA},
-                            expected_version=pinned,
-                        )
-
-                    self._retry_conflicts(prune)
-                live_uris = {
-                    t["document_uri"] for t in incomplete if t["uuid"] not in abandoned
+            feed_rows.extend(
+                {
+                    "uuid": t["uuid"],
+                    "document_uri": uri,
+                    "item_id": t["item_id"],
+                    "revision": t["revision"],
+                    "method": t["method"],
+                    "body": t["body"],
+                    "ts": now,
                 }
-                # one batched completion per bucket: all feed events in
-                # one append, all index/WAL updates in one flip
-                total += self._complete_uris(sorted(live_uris))
-                ckpt[str(b)] = max(from_q, now_q - self.HOT_LAG_QUANTA)
-            self._write_recovery_checkpoint(ckpt)
-        return total
-
-    # checkpoint trails now by this many minute-quanta so WAL rows
-    # published concurrently (executor flips don't hold the lock) are
-    # re-scanned on the next pass
-    HOT_LAG_QUANTA = 2
-
-    def _recovery_checkpoint_path(self) -> str:
-        import os
-
-        return os.path.join(self.storage.root, "recovery_checkpoint.json")
-
-    def _read_recovery_checkpoint(self) -> dict:
-        try:
-            with open(self._recovery_checkpoint_path()) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return {}
-
-    def _write_recovery_checkpoint(self, ckpt: dict) -> None:
-        import os
-
-        # uuid-suffixed tmp: two processes running recover()
-        # concurrently must not share a tmp path — with a fixed name,
-        # one replace()s the file away and the other's replace raises
-        # FileNotFoundError (found by the 6-process soak). Last writer
-        # wins on the checkpoint itself, which is safe: a stale
-        # checkpoint only widens the next recovery's re-scan window.
-        tmp = self._recovery_checkpoint_path() + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(ckpt, f)
-        os.replace(tmp, self._recovery_checkpoint_path())
+                for t in rows
+            )
+        return feed_rows
 
     def _index_row(self, idef: IndexDef, content_row: dict) -> Optional[dict]:
         """Membership + sort-value extraction for one item
@@ -1173,8 +965,7 @@ class DocumentStore:
         return row
 
     def _refresh_indexes(
-        self, uri: str, item_ids: list[str], updates: dict, bucket_appends: dict,
-        content_rows: Optional[list] = None,
+        self, uri: str, item_ids: list[str], updates: dict, bucket_appends: dict, content_rows: list
     ) -> None:
         """Index maintenance by delta for the touched items across all of
         the document's indexes (L17/L18): one row per touched item — its
@@ -1189,15 +980,13 @@ class DocumentStore:
         extra row per pending delta row, so a batch write's large delta
         is folded at once instead of being paid for by every query until
         the file cap. ``content_rows`` is the document's content bucket as
-        the caller staged it; None reads it."""
+        the caller staged it."""
         # the collection document itself ('' item id) is no item: every
         # index build leaves it out
         item_ids = sorted(set(item_ids) - {""})
         idefs = [d for d in self.index_defs(uri) if d.status != STATUS_DELETING]
         if not idefs or not item_ids:
             return
-        if content_rows is None:
-            content_rows = self._content_bucket(uri)
         content = {r["item_id"]: r for r in content_rows if r["document_uri"] == uri}
         for idef in idefs:
             table = idef.storage_table
@@ -1265,6 +1054,12 @@ class DocumentStore:
 
         return self._retry_conflicts(attempt)
 
+    def _bucket_content_df(self, uri: str):
+        """The content bucket of ``uri`` as a frame over its files, every
+        document hashing into it included; None when it has no files."""
+        files = self.storage.bucket_files(CONTENT, self._bucket(uri))
+        return self.spark.read.schema(CONTENT_SPARK).parquet(*files) if files else None
+
     def ingest_collection(self, df, collection_uri: str, item_id_col: str) -> int:
         """Bulk-load a Spark DataFrame as a collection: every row becomes
         an item whose body is the row as JSON (+ the server-injected
@@ -1273,7 +1068,8 @@ class DocumentStore:
         the whole collection visible (revision 1) with its statics row,
         exactly like the reference's backfill jobs. This is the ingest
         path that scales: per-item PUT is for the operational API,
-        ingest_collection for backfills/migrations.
+        ingest_collection for backfills/migrations. Other documents
+        hashing into the collection's content bucket keep their rows.
         """
         if not collection_uri.endswith("~"):
             raise ValueError("ingest_collection requires a collection~ URI")
@@ -1281,9 +1077,9 @@ class DocumentStore:
         def build(static, revision, now):
             if static is not None:
                 raise ValueError(f"{collection_uri!r} already exists")
-            if self._content_bucket(collection_uri):
-                raise ValueError("bucket already has data; per-item API required")
-            return _item_rows(df, collection_uri, item_id_col, revision, now), revision
+            rows = _item_rows(df, collection_uri, item_id_col, revision, now)
+            old = self._bucket_content_df(collection_uri)
+            return (rows if old is None else old.unionByName(rows).sort("document_uri", "item_id")), revision
 
         with self._lock:
             return self._publish_bulk(collection_uri, build)
@@ -1318,12 +1114,9 @@ class DocumentStore:
             if static is None or static["is_deleted"]:
                 raise NotFoundError(collection_uri)
             new_rows = _item_rows(df, collection_uri, item_id_col, revision, now)
-            files = self.storage.bucket_files(CONTENT, self._bucket(collection_uri))
-            old = (
-                self.spark.read.schema(CONTENT_SPARK).parquet(*files)
-                if files
-                else self.spark.createDataFrame([], CONTENT_SPARK)
-            )
+            old = self._bucket_content_df(collection_uri)
+            if old is None:
+                old = self.spark.createDataFrame([], CONTENT_SPARK)
             # keep every bucket row EXCEPT this collection's replaced
             # items (other documents hashing into the bucket rewrite
             # unchanged — the bucket is the commit unit); full-snapshot
@@ -1431,10 +1224,9 @@ class DocumentStore:
         def build(static, revision, now):
             if static is None or static["is_deleted"]:
                 raise NotFoundError(collection_uri)
-            files = self.storage.bucket_files(CONTENT, self._bucket(collection_uri))
-            if not files:
+            old = self._bucket_content_df(collection_uri)
+            if old is None:
                 return None, (0, static["revision"], None)
-            old = self.spark.read.schema(CONTENT_SPARK).parquet(*files)
             n_expired = old.filter(expired_cond).count()
             if n_expired == 0:
                 return None, (0, static["revision"], None)
@@ -2231,8 +2023,8 @@ class DocumentStore:
 
     def vacuum(self, grace_seconds: float = 3600.0, keep_versions: Optional[int] = None) -> int:
         """Delete data files no longer referenced by any RETAINED
-        manifest — current or time-travel snapshot. Returns files
-        removed.
+        manifest — current or time-travel snapshot. Returns the parquet
+        files removed.
 
         ``keep_versions`` overrides the snapshot retention for this
         pass (the Delta-VACUUM-style trade): None keeps every snapshot
@@ -2319,24 +2111,35 @@ class DocumentStore:
             # SUPERSEDED ones also wait out the floor — the accepted
             # cost (STAGING_GRACE_S of extra garbage retention) of not
             # being able to tell a foreign writer's in-flight staging
-            # from fresh garbage by name alone.
-            for dirpath, _dirs, files in os.walk(data_root):
-                for f in files:
-                    p = os.path.abspath(os.path.join(dirpath, f))
-                    if not p.endswith(".parquet") or p in referenced:
+            # from fresh garbage by name alone. A Spark-staged directory
+            # also holds _SUCCESS and .crc files: once none of its
+            # parquet files is referenced they go too, under the same
+            # floor, and then the directory itself, if it is empty and
+            # was already that old before this pass.
+            staged_floor = max(grace_seconds, self.STAGING_GRACE_S)
+
+            def aged(path: str, floor: float) -> bool:
+                try:
+                    return now - os.path.getmtime(path) >= floor
+                except OSError:
+                    return False  # vanished concurrently
+
+            for dirpath, _dirs, files in os.walk(data_root, topdown=False):
+                staged_dir = self.storage.is_staged(dirpath)
+                dir_aged = staged_dir and aged(dirpath, staged_floor)
+                paths = [os.path.abspath(os.path.join(dirpath, f)) for f in files]
+                sweep_all = staged_dir and not any(p in referenced for p in paths)
+                for p in paths:
+                    if p in referenced or not (sweep_all or p.endswith(".parquet")):
                         continue
-                    floor = (
-                        max(grace_seconds, self.STAGING_GRACE_S)
-                        if self.storage.is_staged(p)
-                        else grace_seconds
-                    )
+                    if aged(p, staged_floor if self.storage.is_staged(p) else grace_seconds):
+                        os.remove(p)
+                        removed += p.endswith(".parquet")
+                if dir_aged:
                     try:
-                        if now - os.path.getmtime(p) < floor:
-                            continue
+                        os.rmdir(dirpath)
                     except OSError:
-                        continue  # vanished concurrently
-                    os.remove(p)
-                    removed += 1
+                        pass  # still holds a referenced or young file
             return removed
 
     def info(self) -> dict:
@@ -2396,7 +2199,6 @@ class DocumentStore:
         return DocumentStore(
             self.storage.root,
             spark=self.spark,
-            auto_complete=False,
             storage=self.storage.snapshot(version),
         )
 
@@ -2494,7 +2296,8 @@ class DocumentStore:
 
         It also folds the WAL and index deltas: every WAL bucket that
         item writes grew into a list of files becomes one file again,
-        its completed entries older than WAL_KEEP_MS dropped, and every
+        its entries completed more than WAL_KEEP_MS ago dropped (every
+        entry is written completed, so none waits for a later pass), and every
         index table with pending delta files becomes one base file of
         its merged rows. Item writes fold a list on their own once it
         holds WAL_MAX_FILES files (see _stage_wal and _refresh_indexes),

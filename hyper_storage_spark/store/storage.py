@@ -182,18 +182,6 @@ def _row_filter(filters: list) -> Callable[[dict], bool]:
     return lambda r: all(_FILTER_OPS[op](r.get(col), val) for col, op, val in filters)
 
 
-def _footer_may_hold_nulls(path: str, column: str) -> bool:
-    """Parquet footer statistics: can ``column`` of the file hold a
-    null? True when a row group has no null count."""
-    md = pq.ParquetFile(path).metadata
-    i = md.schema.names.index(column)
-    for g in range(md.num_row_groups):
-        st = md.row_group(g).column(i).statistics
-        if st is None or not st.has_null_count or st.null_count:
-            return True
-    return False
-
-
 # arrow types whose to_pylist value is exactly one Python type
 _PLAIN_TYPES = {
     pa.string(): str,
@@ -359,9 +347,9 @@ class Storage:
 
     # decoded-row cache bound, in rows across all cached buckets: it
     # holds the buckets a write path keeps re-reading (a collection's
-    # content bucket, its WAL and statics buckets, its index tables),
-    # and keeps a whole-store scan such as recover(scan_all=True) from
-    # pinning every bucket of a large store in memory
+    # content and statics buckets, its index tables, a WAL bucket it
+    # folds), and keeps a pass over many buckets, such as the fold
+    # of compact_appends, from pinning them all in memory
     READ_CACHE_ROWS = 100_000
 
     # True when a commit stages a ``bucket_appends`` bucket as a whole
@@ -638,19 +626,6 @@ class Storage:
         memory (hits) and partly from parquet (misses), rows and files
         held, and the row cap."""
         return self._row_cache.stats()
-
-    def may_hold_nulls(self, table: str, bucket: int, column: str) -> bool:
-        """Can any file of the bucket hold a null ``column``? Answered
-        per immutable file from its cached rows, else from its parquet
-        footer statistics, so no row is decoded."""
-        for rel in self._bucket_rels(table, bucket):
-            rows = self._row_cache.peek(rel)
-            if rows is None:
-                if _footer_may_hold_nulls(os.path.join(self.root, rel), column):
-                    return True
-            elif any(r[column] is None for r in rows):
-                return True
-        return False
 
     def bucket_shape(self, table: str, bucket: int) -> tuple[int, int, int]:
         """(files in the bucket's list, rows of its base files, rows of

@@ -8,8 +8,10 @@ serially per document through the DocumentStore on an executor, then
 the driver publishes the staged result in one pinned manifest flip.
 That yields the same single-writer/gapless-revision/feed-publication
 semantics as the reference's ShardProcessor + PrimaryWorker +
-BackgroundContentTaskCompleter pipeline, with the streaming checkpoint
-replacing hot/stale recovery.
+BackgroundContentTaskCompleter pipeline. The flip carries each write's
+completed WAL rows, index rows and feed events with its data, and the
+batch watermark rides in it, so neither a crashed batch nor a crashed
+write leaves anything for the reference's hot/stale recovery to finish.
 """
 
 from __future__ import annotations
@@ -109,7 +111,7 @@ def _dispatch(ds: DocumentStore, method: str, path: str, raw_body: Optional[str]
 _RESULT_SCHEMA = "kind string, table string, bucket int, path string, payload string"
 
 
-def _apply_bucket_commands(root: str, n_buckets: int, auto_complete: bool):
+def _apply_bucket_commands(root: str, n_buckets: int):
     """Returns the executor-side applyInPandas function for one group:
     apply the group's commands (per-document, seq order) through the
     REAL DocumentStore write path against a copy-on-write overlay,
@@ -138,7 +140,7 @@ def _apply_bucket_commands(root: str, n_buckets: int, auto_complete: bool):
         if len(pdf):
             base = Storage(root, n_buckets)
             overlay = OverlayStorage(base)
-            ds = _DS(root, auto_complete=auto_complete, storage=overlay)
+            ds = _DS(root, storage=overlay)
             # a null seq (NaN in pandas) orders FIRST in its document,
             # deterministically; pandas would put it last by default
             pdf = pdf.sort_values(["document_uri", "seq"], na_position="first")
@@ -252,7 +254,7 @@ def apply_commands_distributed(store: DocumentStore, batch_df, commit_meta: Opti
     # a constant key puts the whole batch in one group (a string: an
     # integer literal in groupBy would resolve as a column ordinal)
     groups = ann.groupBy(F.lit("batch") if one_group else F.col("bucket"))
-    func = _apply_bucket_commands(store.storage.root, n_buckets, store.auto_complete)
+    func = _apply_bucket_commands(store.storage.root, n_buckets)
     from ..store.storage import ManifestConflict
 
     # The flip is PINNED on the manifest version read BEFORE the
@@ -360,8 +362,9 @@ def run_command_stream(
     collection-document delete runs as one group on the same path
     (:func:`apply_commands_distributed`). The driver's only work per
     batch is one atomic manifest flip, which also publishes the batch's
-    feed events. The checkpoint makes restarts resume after the last
-    fully-applied batch (recovery parity without RecoveryWorker).
+    feed events and holds its WAL rows already completed, so a batch is
+    complete once its flip lands. The checkpoint makes restarts resume
+    after the last fully-applied batch; no recovery pass is needed.
 
     foreachBatch is at-least-once: a crash between apply and the
     checkpoint commit re-delivers the batch, and re-applying writes

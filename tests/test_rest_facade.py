@@ -375,7 +375,8 @@ def test_index_ddl_background_lifecycle(spark, tmp_path):
 def test_transaction_status_route(spark, tmp_path):
     """GET _transactions/{transactionId} (hyperstorage.raml:90-98): every
     write verb returns a transactionId body; the status route point-reads
-    the WAL and reports completion; unknown/malformed ids → 404."""
+    the WAL and reports completion, which every write has on return;
+    unknown/malformed ids → 404."""
     store = DocumentStore(str(tmp_path / "txns"), spark=spark)
     facade = RestFacade(store)
 
@@ -398,15 +399,6 @@ def test_transaction_status_route(spark, tmp_path):
     for resp, meth in ((r2, "feed:put"), (p, "feed:patch"), (d, "feed:delete"), (c, "feed:put")):
         body = facade.handle("GET", f"_transactions/{resp.body['transactionId']}").body
         assert body["method"] == meth and body["completed"] is True
-
-    # incomplete transaction reports completed=false until completion runs
-    store2 = DocumentStore(str(tmp_path / "txns2"), spark=spark, auto_complete=False)
-    f2 = RestFacade(store2)
-    rr = f2.put("u~/x", {"v": 1})
-    tid2 = rr.body["transactionId"]
-    assert f2.handle("GET", f"_transactions/{tid2}").body["completed"] is False
-    store2.complete_transactions("u~")
-    assert f2.handle("GET", f"_transactions/{tid2}").body["completed"] is True
 
     assert facade.handle("GET", "_transactions/not-a-real-id").status == 404
     assert facade.handle("GET", "_transactions/12345-0-deadbeef").status == 404

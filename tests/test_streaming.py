@@ -2072,7 +2072,7 @@ def test_stream_flip_pinned_against_foreign_write(tmp_path):
             "bucket": [bucket_of("col~", n)] * 2,
         }
     )
-    stage = ing._apply_bucket_commands(store.storage.root, n, store.auto_complete)
+    stage = ing._apply_bucket_commands(store.storage.root, n)
 
     v0 = store.storage.current_version()
     results = list(stage(group).itertuples(index=False))

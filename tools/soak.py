@@ -1,10 +1,12 @@
 """Multi-writer chaos soak for the document store: N OS processes ×
 M threads of mixed put / patch / delete / write_batch / vacuum /
-compact / recover against ONE store root, with a SIGKILL loop that
-murders and respawns random workers mid-write — then a full invariant
-sweep over the survivor state.
+compact against ONE store root, with a SIGKILL loop that murders and
+respawns random workers mid-write — then a full invariant sweep over
+the survivor state. No recovery pass runs anywhere: every write
+completes in its own manifest flip, so the sweep reads the raw
+post-kill state.
 
-Invariants asserted (not eyeballed), after a closing recover():
+Invariants asserted (not eyeballed):
 
   1. GAPLESS REVISIONS — per collection, the distinct feed revisions
      form exactly 1..R where R is the static's revision counter: no
@@ -17,8 +19,9 @@ Invariants asserted (not eyeballed), after a closing recover():
      present in the feed at its returned revision (kills may leave
      EXTRA committed-but-unlogged ops — at-least-once — never missing
      ones).
-  4. ZERO ORPHANS — every manifest-referenced file exists on disk; no
-     incomplete WAL transactions survive recovery; a closing vacuum
+  4. ZERO ORPHANS — every manifest-referenced file exists on disk; the
+     WAL holds no incomplete transaction (a write's rows are written
+     completed, so one would mean a torn flip); a closing vacuum
      removes only unreferenced files and the state re-reads intact.
   5. ROLLUP READ PARITY (round 9, needs --spark / a session) — a
      concurrent reader thread drives store.aggregate() (auto_refresh
@@ -47,8 +50,8 @@ Invariants asserted (not eyeballed), after a closing recover():
      retryable error on the FINAL check is a failure.
   7. INDEX DELTA ATOMICITY — soak_b~ carries a filtered index from the
      start, which every item write maintains by appending delta rows
-     in its one flip (and folds at the file cap or in compact). After
-     recovery its merged rows must equal a rebuild from live content:
+     in its one flip (and folds at the file cap or in compact). At the
+     end its merged rows must equal a rebuild from live content:
      a SIGKILL can never leave a delta without its content or content
      without its delta. Workers stop compacting in their last
      min(10 s, seconds/4), so the check usually merges pending delta
@@ -137,13 +140,11 @@ def maintenance():
     while time.time() < stop:
         time.sleep(rng.uniform(0.5, 1.5))
         try:
-            op = rng.choice(["vacuum", "compact", "recover"] if time.time() < quiet else ["vacuum", "recover"])
+            op = rng.choice(["vacuum", "compact"] if time.time() < quiet else ["vacuum"])
             if op == "vacuum":
                 store.vacuum(grace_seconds=0.5)
-            elif op == "compact":
-                store.compact_appends()
             else:
-                store.recover()
+                store.compact_appends()
         except Exception:
             pass  # maintenance may race a concurrent flip; writers own correctness
 
@@ -664,7 +665,6 @@ def run_soak(
 
     # ---- invariant sweep on a FRESH handle ------------------------------
     store = DocumentStore(root)
-    redriven = store.recover(scan_all=True)
     failures: list[str] = []
 
     statics = {r["document_uri"]: r for r in store.storage.all_rows(STATICS)
@@ -731,12 +731,12 @@ def run_soak(
             for r in rel if isinstance(rel, list) else [rel]:
                 if not os.path.exists(os.path.join(root, r)):
                     failures.append(f"manifest references missing file {r}")
-    # 4b. WAL drained
+    # 4b. no incomplete WAL row, with no recovery pass run
     from hyper_storage_spark.store.documents import TRANSACTIONS
 
     incomplete = [t for t in store.storage.all_rows(TRANSACTIONS) if not t["completed_at"]]
     if incomplete:
-        failures.append(f"{len(incomplete)} incomplete transactions survive recovery")
+        failures.append(f"{len(incomplete)} incomplete transactions after the kills")
     # 5. rollup read parity: the quiesced final refresh+compare MUST
     # hold (no writer races left to excuse a skip), and every retained
     # historical answer must re-read identically — both BEFORE the
@@ -778,7 +778,6 @@ def run_soak(
         "procs": procs, "threads": threads, "seconds": seconds, "kills": kills,
         "ops_logged": ops_logged,
         "revisions": {u: s["revision"] for u, s in statics.items()},
-        "recovered_on_close": redriven,
         "vacuum_removed": removed,
         "index_rows": len(merged),
         "index_files": index_files,

@@ -9,13 +9,11 @@ face instead:
     python tools/store_admin.py ROOT vacuum [--grace SECONDS] [--keep N]
     python tools/store_admin.py ROOT compact
     python tools/store_admin.py ROOT rollback VERSION
-    python tools/store_admin.py ROOT recover
     python tools/store_admin.py ROOT truncate-feed --older-than-ms MS
     python tools/store_admin.py ROOT retention [--feed-keep-ms MS] [--grace S] [--keep N]
 
 Every command prints ONE JSON line. No Spark session is started —
-these are manifest/file operations (recover uses the driver-side
-completion path).
+these are manifest/file operations.
 """
 
 from __future__ import annotations
@@ -32,8 +30,9 @@ def _health(store) -> dict:
     per-collection item/tombstone/revision stats with the gapless
     feed-parity invariant CHECKED (not assumed), content bucket skew
     (hottest bucket ÷ mean — the reducer imbalance a collection scan
-    inherits), WAL backlog, and the orphan-file count a vacuum pass
-    would reclaim. No Spark session; manifest + parquet footer reads."""
+    inherits), WAL rows left incomplete (every write completes in its
+    own flip, so any such row means a damaged store), and the
+    orphan-file count a vacuum pass would reclaim. No Spark session; manifest + parquet footer reads."""
     import os
 
     from hyper_storage_spark.store.documents import (
@@ -138,7 +137,6 @@ def main(argv: list[str] | None = None) -> int:
     sub.add_parser("compact")
     rb = sub.add_parser("rollback")
     rb.add_argument("version", type=int)
-    sub.add_parser("recover")
     tf = sub.add_parser("truncate-feed")
     tf.add_argument("--older-than-ms", type=int, required=True,
                     help="drop published feed events with ts before this epoch-ms")
@@ -155,7 +153,7 @@ def main(argv: list[str] | None = None) -> int:
     sub.add_parser(
         "health",
         help="one-shot day-2 diagnostic: per-collection stats, "
-        "revision/feed parity, bucket skew, WAL backlog, orphan files",
+        "revision/feed parity, bucket skew, incomplete WAL rows, orphan files",
     )
     dv = sub.add_parser(
         "diff", help="item-level changes between two retained versions"
@@ -181,8 +179,6 @@ def main(argv: list[str] | None = None) -> int:
         out = {"compacted": store.compact_appends()}
     elif args.cmd == "rollback":
         out = {"restored_to": args.version, "new_version": store.restore_version(args.version)}
-    elif args.cmd == "recover":
-        out = {"completed_transactions": store.recover()}
     elif args.cmd == "diff":
         changes = store.diff_versions(args.v_from, args.v_to, uri=args.uri)
         out = {"n_changes": len(changes), "changes": changes}
