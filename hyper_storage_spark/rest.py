@@ -205,7 +205,7 @@ class RestFacade:
             with self.store._lock:
                 self._check_preconditions(path, if_match, if_none_match)
                 created, revision, txn_id = self.store.put_txn(path, body)
-            # response body is the WAL transaction envelope
+            # response body is the transaction envelope
             # (hyperstorage.raml:57-68: 201 → HyperStorageTransactionCreated
             # {transactionId, path}, 200 → HyperStorageTransaction) —
             # clients poll GET _transactions/{id} for completion
@@ -549,11 +549,10 @@ class RestFacade:
     # -- transaction status (hyperstorage.raml:90-98) -------------------------
 
     # reserved top-level namespace `_transactions/{transactionId}` — the
-    # face of GET /hyper-storage/transactions/{id}. The id is the WAL
-    # primary key (dt_quantum-partition-uuid), so the lookup is a point
-    # read of one bucket. A write's WAL row is written completed, so a
-    # known id always reads completed; ids pruned past WAL_KEEP_MS 404
-    # (the reference's recovery horizon applies to status lookups too).
+    # face of GET /hyper-storage/transactions/{id}. The id names the
+    # write's feed event (version-ts-uuid), so the lookup reads one feed
+    # file. A write completes in its own flip, so a known id always
+    # reads completed; an id 404s once feed retention drops its event.
     _TRANSACTIONS_PREFIX = "_transactions/"
 
     def _transactions_route(self, m: str, path: str) -> RestResponse:

@@ -5,8 +5,8 @@ Delta-style commit protocol), plus the CRUD/indexing/query engine on top.
 - :mod:`storage` — physical layer: hash-bucketed parquet + manifest.
 - :mod:`merge` — merge-patch + null-stripping body semantics.
 - :mod:`idgen` — time-ordered unique ids for POST auto-id.
-- :mod:`documents` — DocumentStore: CRUD, revisions, WAL, feed events,
-  index lifecycle + incremental maintenance.
+- :mod:`documents` — DocumentStore: CRUD, revisions, feed events (the
+  transaction log), index lifecycle + incremental maintenance.
 - :mod:`query` — the collection query planner/executor on Spark.
 - :mod:`stats` — ANALYZE + histogram/NDV row estimates for explain
   (a reference future-work item).

@@ -22,14 +22,16 @@ Semantics mirrored from the reference (citations inline):
   static-column mechanics (deleteContent keeps Some(static) live,
   PrimaryWorker.scala:315-328; verified by the model-based random CRUD
   differential in tests/test_store.py);
-- write-ahead transactions + completion publishing ``feed:*`` events
-  with the revision header, idempotent by revision
-  (BackgroundContentTaskCompleter.scala:75-113). The reference
-  completes in the background, and re-drives what a crash left behind
-  with recovery workers, because Cassandra and Kafka cannot commit
-  together; here a write's WAL rows are written completed and its
-  index rows and feed events ride in the same manifest flip, so no
-  write leaves anything to recover;
+- the change feed is the transaction log: every write publishes one
+  ``feed:*`` event with the revision header, idempotent by revision
+  (BackgroundContentTaskCompleter.scala:75-113), and the write's
+  transaction id names that event (:func:`transaction_id`). The
+  reference keeps a write-ahead transactions table, completes it in
+  the background and re-drives what a crash left behind with recovery
+  workers, because Cassandra and Kafka cannot commit together; here a
+  write's index rows and feed event ride in the same manifest flip as
+  its content, so no write leaves anything to recover and the event is
+  the transaction's only record;
 - index lifecycle INDEXING→NORMAL / DELETING with backfill and
   incremental maintenance on every write (IndexContentTaskWorker.scala,
   IndexDefTaskWorker.scala). The reference must track obsolete sort
@@ -54,6 +56,7 @@ import time
 import uuid
 from collections import deque
 from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Context, Decimal
 from typing import Any, Optional
 
 import pyarrow as pa
@@ -88,10 +91,12 @@ class NotFoundError(KeyError):
 CONTENT = "content"
 STATICS = "statics"
 INDEX_DEFS = "index_defs"
-TRANSACTIONS = "transactions"
 FEED = "feed"
 
 DEC_ARROW = pa.decimal128(38, 12)
+_DEC_INT_DIGITS = DEC_ARROW.precision - DEC_ARROW.scale
+_DEC_QUANTUM = Decimal(1).scaleb(-DEC_ARROW.scale)
+_DEC_CONTEXT = Context(prec=DEC_ARROW.precision + 1)  # room for a carry out of rounding
 
 CONTENT_SCHEMA = pa.schema(
     [
@@ -127,20 +132,6 @@ INDEX_DEFS_SCHEMA = pa.schema(
         ("sort_by", pa.string()),  # JSON list of {field_name, field_type, order}
         ("filter_by", pa.string()),
         ("table_name", pa.string()),
-    ]
-)
-
-TRANSACTIONS_SCHEMA = pa.schema(
-    [
-        ("uuid", pa.string()),
-        ("document_uri", pa.string()),
-        ("item_id", pa.string()),
-        ("revision", pa.int64()),
-        ("method", pa.string()),
-        ("body", pa.string()),
-        ("dt_quantum", pa.int64()),
-        ("partition", pa.int32()),
-        ("completed_at", pa.int64()),
     ]
 )
 
@@ -246,16 +237,17 @@ class IndexAlreadyExists(ValueError):
     REST facade needs to tell this apart from a plain 400."""
 
 
-def transaction_id_of(txn: dict) -> str:
-    """Public transaction id: ``{dt_quantum}-{partition}-{uuid}``.
+def transaction_id(version: int, ts: int, uid: str) -> str:
+    """Public transaction id ``{version}-{ts}-{uuid}`` of the write whose
+    feed event ``uid`` flip ``version`` published at ``ts``.
 
-    The reference's transactions table is keyed (dt_quantum, partition,
-    uuid) (TransactionLogic.scala:15-34, db/scheme.cql), so encoding all
-    three into the id makes the status lookup a POINT READ of one WAL
-    bucket with a pushed dt_quantum+uuid predicate — at 100 TB the
-    lookup cost is one row-group-pruned parquet scan of one bucket,
-    never a sweep of the whole WAL."""
-    return f"{txn['dt_quantum']}-{txn['partition']}-{txn['uuid']}"
+    The reference keys its transactions table (dt_quantum, partition,
+    uuid) (TransactionLogic.scala:15-34, db/scheme.cql) so that a status
+    lookup is a point read. Here the feed is the log: the version names
+    the one feed file that holds the event
+    (:meth:`Storage.appended_rows`) and ts+uuid are pushed into its
+    scan, so a lookup never sweeps the feed."""
+    return f"{version}-{ts}-{uid}"
 
 
 def _item_rows(df, uri: str, item_id_col: str, revision: int, now: int):
@@ -282,9 +274,16 @@ def _sort_value(item: SortItem, value: Any):
         return None
     if item.effective_type == DECIMAL:
         try:
-            return to_decimal(value)
+            d = to_decimal(value)
         except EvalError:
             return None
+        # the value the decimal(38,12) column holds, as the Spark build
+        # (_index_rows_df) casts it: rounded half-up to the column's
+        # scale, NULL past its integer digits
+        if not d.is_finite() or d.adjusted() >= _DEC_INT_DIGITS:
+            return None
+        d = d.quantize(_DEC_QUANTUM, rounding=ROUND_HALF_UP, context=_DEC_CONTEXT)
+        return d if d.adjusted() < _DEC_INT_DIGITS else None
     try:
         return canonical_str(value)
     except EvalError:
@@ -309,7 +308,7 @@ class _PendingWrite:
         self.result: Optional[tuple] = None
         self.error: Optional[BaseException] = None
         self.done = False
-        self.txn_id: Optional[str] = None  # public WAL transaction id
+        self.txn_id: Optional[str] = None  # public transaction id (see transaction_id)
 
 
 class DocumentStore:
@@ -416,7 +415,7 @@ class DocumentStore:
 
     def put_txn(self, path: str, body: Any) -> tuple[bool, int, str]:
         """PUT returning ``(created, revision, transaction_id)`` — the
-        reference's write responses carry the WAL transaction id
+        reference's write responses carry the transaction id
         (hyperstorage.raml HyperStorageTransaction/-Created), which
         clients poll via :meth:`get_transaction`."""
         op = self._submit("put", path, body)
@@ -442,37 +441,34 @@ class DocumentStore:
     def get_transaction(self, transaction_id: str) -> dict:
         """Transaction status by public id (GET
         /hyper-storage/transactions/{transactionId},
-        hyperstorage.raml:90-98). The id encodes the WAL primary key
-        (see :func:`transaction_id_of`), so this is a point read of ONE
-        bucket with dt_quantum+uuid pushed into the parquet scan.
-        Raises NotFoundError for unknown, malformed, or
-        expired-and-pruned ids (completed WAL entries older than
-        WAL_KEEP_MS are gone — same horizon as the reference's
-        recovery window)."""
+        hyperstorage.raml:90-98), answered from the write's feed event:
+        the id (see :func:`transaction_id`) names the flip that
+        published it, so this reads one manifest and one feed file with
+        ts+uuid pushed into the scan. A write completes in its own flip,
+        so a known id always reads completed. Raises NotFoundError for
+        unknown or malformed ids, and for ids whose event is no longer
+        in the feed (dropped by :meth:`truncate_feed`, or undone by
+        :meth:`restore_version`)."""
         try:
-            quantum_s, partition_s, uid = transaction_id.split("-", 2)
-            quantum, partition = int(quantum_s), int(partition_s)
+            version_s, ts_s, uid = transaction_id.split("-", 2)
+            version, ts = int(version_s), int(ts_s)
         except (ValueError, AttributeError):
             raise NotFoundError(f"transaction {transaction_id!r}")
-        rows = self.storage.bucket_rows(
-            TRANSACTIONS,
-            partition,
-            filters=[("dt_quantum", "==", quantum), ("uuid", "==", uid)],
-        )
-        row = next((r for r in rows if r["uuid"] == uid), None)
-        if row is None:
+        rows = self.storage.appended_rows(FEED, version, [("ts", "==", ts), ("uuid", "==", uid)])
+        if not rows:
             raise NotFoundError(f"transaction {transaction_id!r}")
+        event = rows[0]
         return {
             "transactionId": transaction_id,
             "path": (
-                f"{row['document_uri']}/{row['item_id']}"
-                if row["item_id"]
-                else row["document_uri"]
+                f"{event['document_uri']}/{event['item_id']}"
+                if event["item_id"]
+                else event["document_uri"]
             ),
-            "revision": row["revision"],
-            "method": row["method"],
-            "completed": row["completed_at"] is not None,
-            "completedAt": row["completed_at"],
+            "revision": event["revision"],
+            "method": event["method"],
+            "completed": True,
+            "completedAt": event["ts"],
         }
 
     def _write(self, method: str, path: str, body: Any) -> tuple[bool, int]:
@@ -482,8 +478,8 @@ class DocumentStore:
         """Single-op front door with GROUP COMMIT: the op is queued and
         whichever caller next holds the writer lock drains the queue and
         applies every queued op in ONE staged manifest flip, which also
-        carries their completion (completed WAL rows, index rows, feed
-        events), so a returned write is already complete.
+        carries their completion (index rows, feed events), so a
+        returned write is already complete.
         Under concurrency, N ops cost one flip instead of N; a lone
         writer degenerates to a one-op batch.
         Per-op semantics (revision order, per-op errors) are unchanged —
@@ -606,8 +602,8 @@ class DocumentStore:
 
     def _apply_write_batch(self, batch: list) -> None:
         """Stage every op of the batch against cached bucket state, then
-        publish all touched buckets, the batch's WAL rows and the
-        successful ops' index rows and feed events in ONE manifest flip.
+        publish all touched buckets and the successful ops' index rows
+        and feed events in ONE manifest flip.
         Caller holds ``self._lock``."""
         try:
             self._apply_write_batch_guarded(batch)
@@ -661,12 +657,12 @@ class DocumentStore:
         request a re-stage after a lost flip race — in that case nothing
         was exposed and nothing is marked.
 
-        The batch's WAL rows, stamped ``completed_at`` when staged, go to
-        their buckets as _stage_wal decides, and the same flip carries
-        the index delta rows (appended the same way, see
+        The flip carries the staged buckets, the index delta rows (see
         _refresh_indexes), a collection delete's index drops and the feed
         events: the manifest flip is atomic across tables, so a write
-        completes in its own flip and leaves nothing to finish later."""
+        completes in its own flip and leaves nothing to finish later.
+        The flip lands at ``staged_version + 1``, which every op's
+        transaction id names (an overlay, with no manifest, mints none)."""
         from .storage import ManifestConflict
 
         # version pinned BEFORE the staging reads (defense-in-depth:
@@ -675,28 +671,28 @@ class DocumentStore:
         # caught by the expected_version check instead of erased)
         staged_version = self.storage.current_version()
         # CONTENT/STATICS: bucket → the bucket's staged rows;
-        # TRANSACTIONS: this batch's WAL rows, in op order
-        cache: dict = {CONTENT: {}, STATICS: {}, TRANSACTIONS: []}
+        # FEED: this batch's feed events, in op order
+        cache: dict = {CONTENT: {}, STATICS: {}, FEED: []}
         dirty: set = set()
         now = _now_ms()
         for op in batch:
             op.result = op.error = None  # re-stage cleanly on retry
             try:
-                created, revision, txn_id = self._stage_op(
+                created, revision, uid = self._stage_op(
                     op.method, op.path, op.body, cache, dirty, now
                 )
                 op.result = (created, revision)
-                op.txn_id = txn_id
+                if staged_version is not None:
+                    op.txn_id = transaction_id(staged_version + 1, now, uid)
             except Exception as e:  # noqa: BLE001 — per-op isolation
                 op.error = e
         updates = {(table, b): cache[table][b] for (table, b) in dirty}
-        schemas = {CONTENT: CONTENT_SCHEMA, STATICS: STATICS_SCHEMA, TRANSACTIONS: TRANSACTIONS_SCHEMA}
+        schemas = {CONTENT: CONTENT_SCHEMA, STATICS: STATICS_SCHEMA}
         drop_tables: list[str] = []
         bucket_appends: dict = {}
         try:
-            self._stage_wal(cache[TRANSACTIONS], now, updates, bucket_appends)
             feed_rows = self._stage_completion(
-                cache[TRANSACTIONS], now, updates, schemas, drop_tables, bucket_appends, cache[CONTENT]
+                cache[FEED], updates, schemas, drop_tables, bucket_appends, cache[CONTENT]
             )
             if updates or bucket_appends:
                 self.storage.commit(
@@ -723,35 +719,14 @@ class DocumentStore:
             op.done = True
         return True
 
-    def _stage_wal(self, txns: list, now: int, updates: dict, bucket_appends: dict) -> None:
-        """Stage a batch's WAL rows into the caller's flip. A bucket's
-        rows are appended as one new file (``bucket_appends``), so an
-        appending write reads none of the rows the bucket keeps. The
-        bucket is rewritten instead (``updates``: its current rows plus
-        the new ones, as one file, the entries past WAL_KEEP_MS pruned)
-        when its file list already holds WAL_MAX_FILES files, or when
-        the storage stages whole buckets anyway (the executor overlay).
-        So no write path needs maintenance to keep a WAL bucket's files
-        and expired rows bounded."""
-        new: dict[int, list[dict]] = {}
-        for t in txns:
-            new.setdefault(t["partition"], []).append(t)
-        for b, rows in new.items():
-            if (
-                self.storage.stages_whole_buckets
-                or len(self.storage.bucket_files(TRANSACTIONS, b)) >= self.WAL_MAX_FILES
-            ):
-                updates[(TRANSACTIONS, b)] = self._wal_retained(self.storage.bucket_rows(TRANSACTIONS, b) + rows, now)
-            else:
-                bucket_appends[(TRANSACTIONS, b)] = rows
-
     def _stage_op(
         self, method: str, path: str, body: Any, cache: dict, dirty: set, now: int
     ) -> tuple[bool, int, str]:
         """One op's in-memory mutation against the batch cache — the
         exact serial ``_write`` logic, with bucket reads served from
         (and results staged back into) ``cache`` so later ops in the
-        batch observe earlier ones. Raises BEFORE mutating on invalid
+        batch observe earlier ones. Returns (created, revision, the
+        uuid of the op's feed event). Raises BEFORE mutating on invalid
         ops, so a failed op leaves the batch state untouched."""
         rp = split_path(path)
         uri, item_id = rp.document_uri, rp.item_id
@@ -841,22 +816,20 @@ class DocumentStore:
             }
         )
 
-        # WAL entry first (README «Обработка транзакций»: a write whose
-        # transaction lands without content is simply not accepted)
-        txn = {
+        # the op's feed event is its transaction record, published in
+        # the batch's own flip with its content
+        event = {
             "uuid": uuid.uuid4().hex,
             "document_uri": uri,
             "item_id": item_id,
             "revision": revision,
             "method": f"feed:{method}",
             "body": json.dumps(body) if body is not None else None,
-            "dt_quantum": now // 60000,  # TransactionLogic.scala:32-34
-            "partition": bucket,
-            "completed_at": now,  # completes in the batch's own flip
+            "ts": now,
         }
         cache[CONTENT][bucket] = new_content
         cache[STATICS][bucket] = new_statics
-        cache[TRANSACTIONS].append(txn)
+        cache[FEED].append(event)
         dirty.update({(CONTENT, bucket), (STATICS, bucket)})
 
         if method == "delete" and not item_id:
@@ -865,45 +838,35 @@ class DocumentStore:
             # collection get its template indexes back
             self._templated_uris.discard(uri)
 
-        return created, revision, transaction_id_of(txn)
+        return created, revision, event["uuid"]
 
     # -- completion (BackgroundContentTaskCompleter analog) -------------------
 
-    # completed WAL entries older than this are pruned by any WAL
-    # bucket rewrite (the reference's stale-recovery horizon,
-    # application.conf:10 — recovery never looks further back)
-    WAL_KEEP_MS = 24 * 3600 * 1000
-    # an item write appends its WAL rows as one new file while the
-    # bucket's list holds fewer files than this; the write that finds
-    # it full rewrites the bucket as one file, pruned (see _stage_wal).
+    # an item write appends its rows to an index as one delta file while
+    # the index's list holds fewer files than this; the write that finds
+    # it full folds the index into one base file (see _refresh_indexes).
     # Bounds the files a read opens and the manifest's size, at one
-    # whole-bucket rewrite per this many writes to a bucket
-    WAL_MAX_FILES = 8
-
-    def _wal_retained(self, rows: list[dict], now: int) -> list[dict]:
-        """``rows`` without the entries completed more than WAL_KEEP_MS
-        before ``now`` (removeCompleteTransactionsFromList analog)."""
-        horizon = now - self.WAL_KEEP_MS
-        return [t for t in rows if t["completed_at"] >= horizon]
+    # whole-index rewrite per this many writes to a collection
+    DELTA_MAX_FILES = 8
 
     def _stage_completion(
-        self, txns: list, now: int, updates: dict, schemas: dict,
+        self, events: list, updates: dict, schemas: dict,
         drop_tables: list, bucket_appends: dict, content: dict,
     ) -> list[dict]:
-        """Stage the completion of a batch's WAL rows ``txns`` (op order)
+        """Stage the completion of a batch's feed ``events`` (op order)
         into the caller's flip: index delta rows for the touched items
         or, for a collection delete, its index tables dropped and its
         INDEX_DEFS rows removed (BackgroundContentTaskCompleter.scala:
         128-139). ``content`` (bucket → staged content rows) spares the
-        index refresh a re-read. Returns the feed events, each
-        document's in revision order."""
+        index refresh a re-read. Returns the events, each document's in
+        revision order."""
         by_uri: dict[str, list[dict]] = {}
-        for t in txns:
-            by_uri.setdefault(t["document_uri"], []).append(t)
+        for e in events:
+            by_uri.setdefault(e["document_uri"], []).append(e)
         feed_rows: list[dict] = []
         for uri, rows in by_uri.items():
             idefs = self.index_defs(uri)
-            if is_collection_uri(uri) and any(t["method"] == "feed:delete" and t["item_id"] == "" for t in rows):
+            if is_collection_uri(uri) and any(e["method"] == "feed:delete" and e["item_id"] == "" for e in rows):
                 drop_tables.extend(idef.storage_table for idef in idefs)
                 defs = updates.get((INDEX_DEFS, 0))
                 if defs is None:
@@ -912,22 +875,11 @@ class DocumentStore:
                 schemas[INDEX_DEFS] = INDEX_DEFS_SCHEMA
             else:
                 self._refresh_indexes(
-                    uri, [t["item_id"] for t in rows], updates, bucket_appends, content.get(self._bucket(uri))
+                    uri, [e["item_id"] for e in rows], updates, bucket_appends, content.get(self._bucket(uri))
                 )
             for idef in idefs:
                 schemas[idef.storage_table] = _index_schema(idef.sort_by)
-            feed_rows.extend(
-                {
-                    "uuid": t["uuid"],
-                    "document_uri": uri,
-                    "item_id": t["item_id"],
-                    "revision": t["revision"],
-                    "method": t["method"],
-                    "body": t["body"],
-                    "ts": now,
-                }
-                for t in rows
-            )
+            feed_rows.extend(rows)
         return feed_rows
 
     def _index_row(self, idef: IndexDef, content_row: dict) -> Optional[dict]:
@@ -974,9 +926,9 @@ class DocumentStore:
         index, so a write costs its own index rows, not the index's.
         The write folds an index instead (the merged rows go into
         ``updates`` as one new base file) when its file list is at
-        WAL_MAX_FILES (the WAL's cap), or when the delta rows, pending
-        plus this write's, would exceed both WAL_MAX_FILES and the base's
-        rows divided by WAL_MAX_FILES: an index-served query fetches one
+        DELTA_MAX_FILES, or when the delta rows, pending plus this
+        write's, would exceed both DELTA_MAX_FILES and the base's rows
+        divided by DELTA_MAX_FILES: an index-served query fetches one
         extra row per pending delta row, so a batch write's large delta
         is folded at once instead of being paid for by every query until
         the file cap. ``content_rows`` is the document's content bucket as
@@ -997,7 +949,7 @@ class DocumentStore:
                 tombstone = {"document_uri": uri, "index_id": idef.index_id, "item_id": item_id, "revision": None}
                 delta.append(row or tombstone)
             files, base_rows, pending = self.storage.bucket_shape(table, 0)
-            cap = self.WAL_MAX_FILES
+            cap = self.DELTA_MAX_FILES
             if files >= cap or pending + len(delta) > max(cap, base_rows // cap):
                 updates[(table, 0)] = merge_delta(self.storage.bucket_rows(table, 0), delta_of([delta]))
             else:
@@ -1101,8 +1053,8 @@ class DocumentStore:
         full distributed backfill, everything is touched by definition).
 
         Like ingest_collection, the bulk path publishes no per-item
-        feed events and writes no WAL rows — it is the backfill
-        surface, not the operational API; consumers needing per-item
+        feed events (and so mints no transaction ids) — it is the
+        backfill surface, not the operational API; consumers needing per-item
         change events use per-item writes or diff snapshots
         (at_version makes that cheap). Returns the new revision."""
         from pyspark.sql import functions as F
@@ -1187,7 +1139,7 @@ class DocumentStore:
 
         Executes as ONE executor-side bucket rewrite + manifest flip —
         the merge_collection bulk discipline: one shared revision bump,
-        no per-item WAL/feed events (this is the backfill/maintenance
+        no per-item feed events (this is the backfill/maintenance
         surface; at_version diffs recover the removed set when a
         consumer needs it), NORMAL indexes rebuilt through the
         distributed backfill. Items whose ``ts_field`` is missing or
@@ -2147,9 +2099,9 @@ class DocumentStore:
         time-travel versions, per-table file/byte/bucket counts — the
         numbers an operator needs to size vacuum/compaction and to
         watch growth; ``bucket_segments`` counts the files in bucket
-        lists beyond one per bucket, which for the WAL and for an index
-        table's pending delta files is the backlog compact_appends folds
-        — and this handle's decoded-row cache counters (``read_cache``:
+        lists beyond one per bucket, which for an index table's pending
+        delta files is the backlog compact_appends folds — and this
+        handle's decoded-row cache counters (``read_cache``:
         hits, misses, rows and files held, row cap).
         Reads only the manifest + file metadata (no data decode), so it
         is safe to poll."""
@@ -2171,9 +2123,8 @@ class DocumentStore:
                 "bytes": size,
                 "buckets": sum(1 for k in entry if not k.startswith("a")),
                 "append_segments": sum(1 for k in entry if k.startswith("a")),
-                # files in bucket lists beyond one per bucket: for the
-                # WAL and index deltas, the appended files
-                # compact_appends will fold
+                # files in bucket lists beyond one per bucket: for an
+                # index, the delta files compact_appends will fold
                 "bucket_segments": sum(
                     len(v) - 1 for k, v in entry.items() if not k.startswith("a") and isinstance(v, list) and v
                 ),
@@ -2294,15 +2245,15 @@ class DocumentStore:
         {table: files merged}. See Storage.compact_append_table for the
         feed-readStream re-delivery caveat.
 
-        It also folds the WAL and index deltas: every WAL bucket that
-        item writes grew into a list of files becomes one file again,
-        its entries completed more than WAL_KEEP_MS ago dropped (every
-        entry is written completed, so none waits for a later pass), and every
-        index table with pending delta files becomes one base file of
-        its merged rows. Item writes fold a list on their own once it
-        holds WAL_MAX_FILES files (see _stage_wal and _refresh_indexes),
-        so this only clears the backlog early; single-file WAL buckets
-        and index tables without deltas are not read. The fold is one
+        The feed's merged file keeps the first replaced append key, so
+        every transaction id still names the file holding its event
+        (see :meth:`get_transaction`).
+
+        It also folds the index deltas: every index table with pending
+        delta files becomes one base file of its merged rows. Item
+        writes fold a list on their own once it holds DELTA_MAX_FILES
+        files (see _refresh_indexes), so this only clears the backlog
+        early; index tables without deltas are not read. The fold is one
         pinned flip and is not counted in the returned dict; ``info()``'s
         ``bucket_segments`` shows the backlog it clears. Superseded
         files are reclaimed by the next :meth:`vacuum`."""
@@ -2319,15 +2270,7 @@ class DocumentStore:
     def _fold_appended(self) -> None:
         def fold():
             v0 = self.storage.current_version()
-            now = _now_ms()
-            updates = {
-                (TRANSACTIONS, int(key)): self._wal_retained(
-                    self.storage.bucket_rows(TRANSACTIONS, int(key)), now
-                )
-                for key, rel in self.storage._read_manifest()["tables"].get(TRANSACTIONS, {}).items()
-                if isinstance(rel, list) and len(rel) > 1
-            }
-            schemas = {TRANSACTIONS: TRANSACTIONS_SCHEMA}
+            updates, schemas = {}, {}
             for idef in self.index_defs():
                 table = idef.storage_table
                 if any(is_delta_file(p) for p in self.storage.bucket_files(table, 0)):
@@ -2344,7 +2287,8 @@ class DocumentStore:
         one CAS flip (vacuum reclaims the superseded files subject to
         snapshot retention). Returns events removed. Consumers resuming
         from beyond the horizon must re-sync from a snapshot/at_version
-        read, exactly as with an expired Kafka offset — the dead-letter
+        read, exactly as with an expired Kafka offset, and a dropped
+        event's transaction id no longer resolves — the dead-letter
         log has the same shape and can be truncated the same way via
         ``Storage.replace_append_table``."""
 
@@ -2357,9 +2301,12 @@ class DocumentStore:
             # the rows read and the version read and be erased.)
             v0 = self.storage.current_version()
             rows = self.storage.all_rows(FEED)
+            # publication order, as compaction keeps it: the retained
+            # file's row groups then prune on ts, which every
+            # get_transaction lookup filters on
             keep = sorted(
                 (r for r in rows if r["ts"] is not None and r["ts"] >= older_than_ms),
-                key=lambda r: (r["document_uri"], r["revision"]),
+                key=lambda r: (r["ts"], r["document_uri"], r["revision"]),
             )
             removed = len(rows) - len(keep)
             if removed:

@@ -11,27 +11,32 @@ zero dependencies.
 
 A bucket is one file or a LIST of files read in order. Bulk paths
 register lists, and a commit's ``bucket_appends`` adds one file to the
-end of a bucket's list instead of rewriting the bucket. The item write
-path appends two kinds of rows that way, so most writes cost their own
-rows, not the bucket's:
-
-- its write-ahead-log rows, which a read simply concatenates;
-- its index rows, as a DELTA: tables whose schema is marked by
-  :func:`delta_schema` get their appended files named ``delta-*``, one
-  row per touched item — an upsert, or a tombstone (null ``revision``)
-  for an item that left the index. A bucket's list is then its BASE
-  files followed by ordered delta files, and every reader applies the
-  one merge rule, :func:`merge_delta`: a delta row replaces every
-  earlier row with its ``item_id``, and tombstones are dropped.
-  :meth:`Storage.bucket_rows` returns the merged table; a Spark scan
-  reads only the base files (:meth:`Storage.spark_df_and_delta` hands
-  the caller the pending delta to merge on the driver).
+end of a bucket's list instead of rewriting the bucket (a read of a
+plain table simply concatenates the files). The item write path appends
+its index rows that way, as a DELTA, so most writes cost their own rows,
+not the index's: tables whose schema is marked by :func:`delta_schema`
+get their appended files named ``delta-*``, one row per touched item —
+an upsert, or a tombstone (null ``revision``) for an item that left the
+index. A bucket's list is then its BASE files followed by ordered delta
+files, and every reader applies the one merge rule,
+:func:`merge_delta`: a delta row replaces every earlier row with its
+``item_id``, and tombstones are dropped. :meth:`Storage.bucket_rows`
+returns the merged table; a Spark scan reads only the base files
+(:meth:`Storage.spark_df_and_delta` hands the caller the pending delta
+to merge on the driver).
 
 The document layer folds such a list back into one base file when it
-reaches a fixed length (``DocumentStore.WAL_MAX_FILES``), when an
+reaches a fixed length (``DocumentStore.DELTA_MAX_FILES``), when an
 index's delta rows outgrow their share of its base rows
 (:meth:`Storage.bucket_shape` counts both without decoding a row), and
 in ``compact_appends``.
+
+Append-only tables (the change feed, the dead-letter log) are not
+bucketed: each flip that appends registers one file under its own key
+``a{version}``, and a rewrite of such files (compaction, retention)
+keeps the first key it replaces, so the rows flip ``version`` appended
+are always in the file under the greatest key not above ``version``
+(:meth:`Storage.appended_rows`).
 
 Every flip that registers bucket rows or files is one :meth:`Storage.commit`:
 rows it writes itself, and files written before it (``files=``) — a
@@ -347,15 +352,10 @@ class Storage:
 
     # decoded-row cache bound, in rows across all cached buckets: it
     # holds the buckets a write path keeps re-reading (a collection's
-    # content and statics buckets, its index tables, a WAL bucket it
-    # folds), and keeps a pass over many buckets, such as the fold
-    # of compact_appends, from pinning them all in memory
+    # content and statics buckets, its index tables), and keeps a pass
+    # over many buckets, such as the fold of compact_appends, from
+    # pinning them all in memory
     READ_CACHE_ROWS = 100_000
-
-    # True when a commit stages a ``bucket_appends`` bucket as a whole
-    # rewrite anyway (the executor overlay): a caller that would rather
-    # prune the bucket while it is rewritten hands it the whole bucket
-    stages_whole_buckets = False
 
     def __init__(self, root: str, n_buckets: Optional[int] = None):
         self.root = root
@@ -706,11 +706,10 @@ class Storage:
         ``bucket_appends`` adds rows to a bucket without rewriting it:
         each (table, bucket) gets ONE new file (schema ``schemas[table]``)
         at the end of its file list, in the same flip — a delta file when
-        the schema is a :func:`delta_schema`. This is how the write-ahead
-        log grows by a write's own rows and an index by its delta rows;
-        the bucket's older files stay as they are until a caller
-        rewrites the bucket through ``updates`` (which replaces the
-        whole list).
+        the schema is a :func:`delta_schema`. This is how an index grows
+        by a write's delta rows; the bucket's older files stay as they
+        are until a caller rewrites the bucket through ``updates``
+        (which replaces the whole list).
 
         ``files`` registers parquet files written before the flip — a
         Spark frame staged by :meth:`stage_frame`, or bucket files an
@@ -895,8 +894,11 @@ class Storage:
     ) -> int:
         """Swap an append-only table's ENTIRE content for ``rows`` in
         one CAS flip (retention truncation; compaction's backstop).
-        The new file takes an ``a{version}`` key, so later appends
-        (higher versions) keep sorting after it.
+        The new file takes the table's first append key (``a{version}``
+        when it has none), as compact_append_table's does, so every
+        kept row stays under the greatest key not above the flip that
+        appended it (:meth:`appended_rows`) and later appends keep
+        sorting after it.
 
         ``expected_version`` pins the flip on the manifest version the
         caller's read began at (review r12): without it, an append
@@ -921,13 +923,27 @@ class Storage:
         pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp, row_group_size=ROW_GROUP_SIZE)
         os.replace(tmp, abspath)
         entry = manifest["tables"].get(table, {})
+        first = min((int(k[1:]) for k in entry if k.startswith("a")), default=version)
         manifest["tables"][table] = {
             **{k: v for k, v in entry.items() if not k.startswith("a")},
-            f"a{version}": rel,
+            f"a{first}": rel,
         }
         manifest["version"] = version
         self._cas_write_manifest(manifest, version - 1)
         return version
+
+    def appended_rows(self, table: str, version: int, filters: list) -> list[dict]:
+        """Rows of append-only ``table`` matching ``filters`` (pyarrow DNF,
+        pushed into the scan), read from the one file that holds the
+        rows flip ``version`` appended: the file under the greatest
+        append key not above ``version`` (see the module docstring).
+        One manifest read and at most one file read; [] when the table
+        has no key that old."""
+        entry = self._read_manifest()["tables"].get(table, {})
+        keys = [int(k[1:]) for k in entry if k.startswith("a") and int(k[1:]) <= version]
+        if not keys:
+            return []
+        return pq.read_table(os.path.join(self.root, entry[f"a{max(keys)}"]), filters=filters).to_pylist()
 
     def all_rows(self, table: str) -> list[dict]:
         out: list[dict] = []
@@ -1062,8 +1078,6 @@ class OverlayStorage(Storage):
     drains the overlay into staged parquet files, and the driver
     publishes every staged file with one atomic :meth:`Storage.commit`
     flip (``files=``)."""
-
-    stages_whole_buckets = True
 
     def __init__(self, base: Storage):
         # deliberately NOT calling super().__init__ — no manifest I/O

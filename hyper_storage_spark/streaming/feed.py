@@ -35,18 +35,16 @@ def feed_readstream(
     via ``dropDuplicatesWithinWatermark`` — state is bounded by the
     watermark, so this scales to an unbounded feed (a plain
     dropDuplicates would accumulate every key forever). The dedup key
-    is the event ``uuid`` — the stable event identity: crash-replay
-    re-publications carry the originating WAL transaction's uuid, so
-    they collapse, while DISTINCT events that share
+    is the event ``uuid`` — the stable event identity (a write's
+    transaction id names it): re-deliveries of one event carry its
+    uuid, so they collapse, while DISTINCT events that share
     (document_uri, item_id, revision) do not — index-DDL events all
     carry revision 0 with item_id = index_id, so keying on that triple
     would silently drop a delete-after-create (or a re-create) of the
-    same index inside the bound (review r12). Crash-replay
-    re-publications (the WAL's at-least-once completion path) land
-    within seconds of the original, so any operationally sane bound
-    covers them; events re-delivered LATER than the bound (e.g. a feed
-    compaction rewriting old files under a tailing reader) fall back to
-    at-least-once, which is the documented floor."""
+    same index inside the bound (review r12). Events re-delivered
+    LATER than the bound (e.g. a feed compaction rewriting old files
+    under a tailing reader) fall back to at-least-once, which is the
+    documented floor."""
     df = (
         spark.readStream.schema(FEED_SPARK)
         .option("maxFilesPerTrigger", 16)

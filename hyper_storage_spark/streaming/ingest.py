@@ -9,9 +9,9 @@ the driver publishes the staged result in one pinned manifest flip.
 That yields the same single-writer/gapless-revision/feed-publication
 semantics as the reference's ShardProcessor + PrimaryWorker +
 BackgroundContentTaskCompleter pipeline. The flip carries each write's
-completed WAL rows, index rows and feed events with its data, and the
-batch watermark rides in it, so neither a crashed batch nor a crashed
-write leaves anything for the reference's hot/stale recovery to finish.
+index rows and feed event with its data, and the batch watermark rides
+in it, so neither a crashed batch nor a crashed write leaves anything
+for the reference's hot/stale recovery to finish.
 """
 
 from __future__ import annotations
@@ -362,9 +362,9 @@ def run_command_stream(
     collection-document delete runs as one group on the same path
     (:func:`apply_commands_distributed`). The driver's only work per
     batch is one atomic manifest flip, which also publishes the batch's
-    feed events and holds its WAL rows already completed, so a batch is
-    complete once its flip lands. The checkpoint makes restarts resume
-    after the last fully-applied batch; no recovery pass is needed.
+    feed events, so a batch is complete once its flip lands. The
+    checkpoint makes restarts resume after the last fully-applied
+    batch; no recovery pass is needed.
 
     foreachBatch is at-least-once: a crash between apply and the
     checkpoint commit re-delivers the batch, and re-applying writes

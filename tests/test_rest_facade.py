@@ -374,8 +374,8 @@ def test_index_ddl_background_lifecycle(spark, tmp_path):
 
 def test_transaction_status_route(spark, tmp_path):
     """GET _transactions/{transactionId} (hyperstorage.raml:90-98): every
-    write verb returns a transactionId body; the status route point-reads
-    the WAL and reports completion, which every write has on return;
+    write verb returns a transactionId body; the status route reads the
+    write's feed event and reports completion, which every write has on return;
     unknown/malformed ids → 404."""
     store = DocumentStore(str(tmp_path / "txns"), spark=spark)
     facade = RestFacade(store)

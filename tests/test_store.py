@@ -248,53 +248,6 @@ def test_item_get_sees_collection_tombstone(store):
         store.get("tomb~/a")
 
 
-def test_wal_pruning_bounds_bucket(store):
-    """Item writes append their WAL rows while the bucket holds fewer
-    than WAL_MAX_FILES files; compact_appends folds such a bucket into
-    one file early and drops the completed rows past WAL_KEEP_MS."""
-    import time as _time
-
-    n = store.WAL_MAX_FILES - 1
-    for i in range(n):
-        store.put("pruned", {"n": i})
-    b = store._bucket("pruned")
-    assert len(store.storage.bucket_files("transactions", b)) == n
-    assert len(store.storage.bucket_rows("transactions", b)) == n
-    store.WAL_KEEP_MS = 0  # every completed entry is past the horizon
-    _time.sleep(0.005)  # ... once the clock has moved past its stamp
-    store.compact_appends()
-    assert len(store.storage.bucket_files("transactions", b)) == 1
-    assert [t for t in store.storage.bucket_rows("transactions", b) if t["completed_at"]] == []
-
-
-def test_wal_stays_bounded_without_maintenance(tmp_path):
-    """With no compact_appends ever, item writes keep every WAL bucket
-    at most WAL_MAX_FILES files: the write that finds the list full
-    rewrites it as one file and prunes the completed rows past
-    WAL_KEEP_MS."""
-    import time as _time
-
-    from hyper_storage_spark.store.documents import TRANSACTIONS
-
-    root = str(tmp_path / "s")
-    store = DocumentStore(root)
-    store.WAL_KEEP_MS = 0  # a row is expired once the clock moves past its stamp
-    k = store.WAL_MAX_FILES
-    b = store._bucket("grow")
-    lengths = []
-    for i in range(3 * k + 2):
-        store.put("grow", {"n": i})
-        files = len(store.storage.bucket_files(TRANSACTIONS, b))
-        rows = store.storage.bucket_rows(TRANSACTIONS, b)
-        lengths.append(files)
-        assert files <= k and len(rows) <= k, (i, files, len(rows))
-        # every completed row left is younger than the last fold
-        assert min(t["revision"] for t in rows) > i + 1 - k
-        _time.sleep(0.002)
-    assert lengths[: k + 2] == [*range(1, k + 1), 1, 2]  # the (k+1)th write folded
-    assert store.get("grow") == ({"n": 3 * k + 1}, 3 * k + 2)
-
-
 def test_point_read_pushes_filters_into_scan(store):
     """bucket_rows(filters=) must return only the matching rows from a
     multi-row-group bucket file (key-sorted + bounded row groups ⇒ a
@@ -1894,8 +1847,8 @@ def test_writer_killed_midstream_recovers_consistently(spark, tmp_path):
     with no recovery pass after it: whatever prefix of ops became
     durable must be fully consistent — gapless feed 1..R (a write's
     completion rides in its own flip, so there is nothing to re-drive),
-    every feed:put readable, no incomplete WAL entries, and the store
-    accepts new writes. Holds for ANY kill point by construction."""
+    every feed:put readable, no write record beside the feed, and the
+    store accepts new writes. Holds for ANY kill point by construction."""
     import json as _json
     import signal
     import subprocess
@@ -1937,8 +1890,9 @@ for i in range(10_000):
     assert {e["item_id"] for e in evs} == {f"{i:05d}" for i in range(n_items)}
     for e in evs:
         assert _json.loads(e["body"])["i"] == int(e["item_id"])
-    # no incomplete WAL entries
-    assert [t for t in store.storage.all_rows("transactions") if t["completed_at"] is None] == []
+    # every durable write has its feed event, the one record of its
+    # transaction: no write table beside the feed exists
+    assert "transactions" not in store.storage.tables()
     # and the store is fully writable afterwards
     created, rev = store.put("kdoc~/post-crash", {"ok": True})
     assert created and rev == res.revision + 1
@@ -1989,12 +1943,13 @@ def test_diff_versions_add_change_remove(spark, tmp_path):
 def test_multi_writer_chaos_soak_invariants():
     """Sustained cross-process chaos (tools/soak.py): 3 processes × 2
     threads of mixed put/patch/delete/write_batch plus concurrent
-    vacuum/compact/recover, with a SIGKILL loop murdering workers
-    mid-write — then the invariant sweep: gapless feed revisions 1..R
-    per collection, content↔feed parity, the fsync'd op log as an
-    at-least-once lower bound, no dangling manifest references, a
-    drained WAL, and a state-preserving closing vacuum. A longer run
-    (4×3×120 s) is recorded in SCALE.md §chaos soak."""
+    vacuum/compact, with a SIGKILL loop murdering workers mid-write —
+    then the invariant sweep: gapless feed revisions 1..R per
+    collection, content↔feed parity, the fsync'd op log as an
+    at-least-once lower bound, no dangling manifest references, every
+    logged transaction id resolving to its op, and a state-preserving
+    closing vacuum. A longer run (4×3×120 s) is recorded in SCALE.md
+    §chaos soak."""
     import tempfile
 
     import tools.soak as soak
@@ -2029,7 +1984,7 @@ def test_store_admin_health(spark, tmp_path):
     # not a tombstone — tombstones stay for document-level deletes
     assert c["live_items"] == 7 and c["tombstones"] == 0 and c["revision"] == 9
     assert c["feed_bounded"] and c["feed_covers_all_revisions"]
-    assert out["wal_incomplete"] == 0
+    assert "wal_incomplete" not in out
     assert out["orphan_files"] == 0 and out["ok"] is True
 
 
@@ -2483,7 +2438,7 @@ def _assert_reads_exact(storage):
 
 def _write_path_store(root):
     """A Spark-free store whose writes touch every table of the item
-    write path: content, statics and WAL buckets, INDEX_DEFS, and two
+    write path: content and statics buckets, INDEX_DEFS, and two
     index tables — one with a decimal sort field fed ints, floats and
     strings, one filtered, and items lacking the sort field (absent
     keys in the index rows)."""
@@ -2506,12 +2461,12 @@ def _write_path_store(root):
 
 
 def test_read_cache_reads_equal_parquet_reread_on_the_write_path(tmp_path):
-    from hyper_storage_spark.store.documents import CONTENT, INDEX_DEFS, STATICS, TRANSACTIONS
+    from hyper_storage_spark.store.documents import CONTENT, INDEX_DEFS, STATICS
 
     store = _write_path_store(str(tmp_path / "s"))
     st = store.storage
     tables = set(st.tables())
-    assert {CONTENT, STATICS, TRANSACTIONS, INDEX_DEFS} <= tables
+    assert {CONTENT, STATICS, INDEX_DEFS} <= tables
     index_tables = {t for t in tables if t.startswith("index::")}
     assert len(index_tables) == 2
     before = st.read_cache_stats()
@@ -2576,10 +2531,10 @@ def test_read_cache_commit_normalizes_like_a_reread(tmp_path):
 def test_read_cache_returns_rows_the_caller_may_mutate(tmp_path):
     store = _write_path_store(str(tmp_path / "s"))
     st = store.storage
-    from hyper_storage_spark.store.documents import CONTENT, TRANSACTIONS
+    from hyper_storage_spark.store.documents import CONTENT, STATICS
 
     bucket = store._bucket("coll~")
-    for table in (CONTENT, TRANSACTIONS):
+    for table in (CONTENT, STATICS):
         rows = st.bucket_rows(table, bucket)
         for r in rows:
             r["revision"] = -1
@@ -2647,11 +2602,11 @@ def test_read_cache_lost_cas_race_caches_nothing(tmp_path, monkeypatch):
 
     # an item write's single flip: a flip that lands between its staged
     # files and its CAS makes it lose, and the lost flip registers no
-    # feed event, WAL row or index row; the re-stage registers each once
+    # feed event or index row; the re-stage registers each once
     import os
 
     from hyper_storage_spark.plans import SortItem
-    from hyper_storage_spark.store.documents import FEED, TRANSACTIONS
+    from hyper_storage_spark.store.documents import CONTENT, FEED
 
     store = DocumentStore(str(tmp_path / "d"))
     store.put("c~/x", {"a": 1})
@@ -2661,20 +2616,19 @@ def test_read_cache_lost_cas_race_caches_nothing(tmp_path, monkeypatch):
     def state():
         return (
             sorted((e["item_id"], e["revision"]) for e in store.storage.all_rows(FEED)),
-            sorted((t["item_id"], t["revision"]) for t in store.storage.all_rows(TRANSACTIONS)),
             sorted((r["item_id"], r["revision"]) for r in store.storage.bucket_rows(idef.storage_table, 0)),
         )
 
     races = {"left": 0}
 
-    def race_on_wal_file(rows, sch, abspath):
+    def race_on_content_file(rows, sch, abspath):
         out = real_write(rows, sch, abspath)
-        if races["left"] and f"{os.sep}{TRANSACTIONS}{os.sep}" in abspath:
+        if races["left"] and f"{os.sep}{CONTENT}{os.sep}" in abspath:
             races["left"] -= 1
             store.storage.set_meta("foreign", races["left"])  # same thread: re-enters the lock
         return out
 
-    monkeypatch.setattr(storage_mod, "write_bucket_file", race_on_wal_file)
+    monkeypatch.setattr(storage_mod, "write_bucket_file", race_on_content_file)
     before = state()
     index_files = store.storage.bucket_files(idef.storage_table, 0)
     races["left"] = 10**6
@@ -2687,10 +2641,9 @@ def test_read_cache_lost_cas_race_caches_nothing(tmp_path, monkeypatch):
     assert store.put("c~/y", {"a": 2}) == (True, 2)
     after_files = store.storage.bucket_files(idef.storage_table, 0)
     assert after_files[:-1] == index_files and storage_mod.is_delta_file(after_files[-1])
-    feed, wal, index = state()
+    feed, index = state()
     assert feed == sorted(before[0] + [("y", 2)])
-    assert wal == sorted(before[1] + [("y", 2)])
-    assert index == sorted(before[2] + [("y", 2)])
+    assert index == sorted(before[1] + [("y", 2)])
 
 
 def test_read_cache_lru_cap_evicts(tmp_path, monkeypatch):
@@ -2848,7 +2801,7 @@ def test_read_cache_threads_lose_no_update(tmp_path):
         assert cache.rows == sum(len(rows) for rows in cache._entries.values())
 
 
-# -- one flip per item write, appended WAL rows --------------------------------
+# -- one flip per item write; the feed is the transaction log ------------------
 
 
 def _rows_written_by_table(monkeypatch, write):
@@ -2875,11 +2828,13 @@ def _rows_written_by_table(monkeypatch, write):
 
 
 def test_item_write_cost_does_not_grow_with_the_wal(tmp_path, monkeypatch):
-    """WAL growth regression (a count, not a timing): after 2,000 prior
-    writes to one bucket (write_batch ops, no maintenance) the next item
-    write hands the writer exactly one WAL row, and the same total row
-    count as after 10 prior writes."""
+    """Transaction-log growth regression (a count, not a timing): the
+    log is the feed, and after 2,000 prior writes to one collection
+    (write_batch ops, no maintenance) the next item write appends one
+    feed event and hands the bucket-file writer the same rows as after
+    10 prior writes."""
     from hyper_storage_spark.plans import SortItem
+    from hyper_storage_spark.store.documents import FEED
 
     def rows_written(prior: int) -> dict:
         store = DocumentStore(str(tmp_path / f"s{prior}"))
@@ -2888,70 +2843,222 @@ def test_item_write_cost_does_not_grow_with_the_wal(tmp_path, monkeypatch):
         for k in range(0, prior, 500):
             out = store.write_batch([("patch", "c~/x", {"a": i}) for i in range(k, min(prior, k + 500))])
             assert not any(isinstance(o, BaseException) for o in out)
-        assert len(store.storage.bucket_rows("transactions", store._bucket("c~"))) == prior + 1
-        # the next write appends: the list is short of WAL_MAX_FILES
-        # (the write that finds it full folds it, see
-        # test_wal_stays_bounded_without_maintenance)
-        assert len(store.storage.bucket_files("transactions", store._bucket("c~"))) < store.WAL_MAX_FILES
-        return _rows_written_by_table(monkeypatch, lambda: store.patch("c~/x", {"a": -1}))
+        events = store.storage.all_rows(FEED)
+        assert sum(1 for e in events if e["item_id"] == "x") == prior + 1
+        seen = _rows_written_by_table(monkeypatch, lambda: store.patch("c~/x", {"a": -1}))
+        assert len(store.storage.all_rows(FEED)) == len(events) + 1
+        return seen
 
     few, many = rows_written(10), rows_written(2000)
-    assert many["transactions"] == few["transactions"] == 1
+    assert "transactions" not in many
     assert sum(many.values()) == sum(few.values()), (few, many)
 
 
 def test_item_write_is_one_flip_with_completed_wal_rows(tmp_path):
+    """An item write is one flip, and its transaction record is the
+    feed event that flip appends under its own key: the id names that
+    version and reads completed."""
+    from hyper_storage_spark.store.documents import FEED
+
     store = DocumentStore(str(tmp_path / "s"))
     store.put("c~/a", {"v": 1})
     v = store.storage.current_version()
     _, _, tid = store.put_txn("c~/b", {"v": 2})
     assert store.storage.current_version() == v + 1
+    assert tid.startswith(f"{v + 1}-")
+    assert f"a{v + 1}" in store.storage._read_manifest()["tables"][FEED]
     assert store.get_transaction(tid)["completed"] is True
-    assert len(store.storage.bucket_files("transactions", store._bucket("c~"))) == 2
+    assert "transactions" not in store.storage.tables()
     assert [(e["item_id"], e["revision"]) for e in store.feed_events()] == [("a", 1), ("b", 2)]
 
 
 def test_get_transaction_reads_a_multi_file_wal_bucket(tmp_path):
+    """The transaction log is the feed: ids of writes from two handles
+    on one root resolve while the feed holds one file per write, and
+    after compact_appends merges them into one."""
+    from hyper_storage_spark.store.documents import FEED
+
     root = str(tmp_path / "s")
     store = DocumentStore(root)
     ids = [store.put_txn("doc", {"n": i})[2] for i in range(3)]
     ids.append(DocumentStore(root).put_txn("doc", {"n": 3})[2])
-    b = store._bucket("doc")
 
     def status():
         return [(store.get_transaction(t)["revision"], store.get_transaction(t)["completed"]) for t in ids]
 
-    assert len(store.storage.bucket_files("transactions", b)) == 4
+    assert store.info()["tables"][FEED]["append_segments"] == 4
     assert status() == [(1, True), (2, True), (3, True), (4, True)]
     store.compact_appends()
-    assert len(store.storage.bucket_files("transactions", b)) == 1
+    assert store.info()["tables"][FEED]["append_segments"] == 1
     assert status() == [(1, True), (2, True), (3, True), (4, True)]
+    ids.append(store.put_txn("doc", {"n": 4})[2])  # lands after the merged file
+    assert status()[-1] == (5, True)
+
+
+def _feed_files_opened(monkeypatch, read) -> list:
+    """Feed parquet files that ``read()`` opened with ``pq.read_table``."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from hyper_storage_spark.store.documents import FEED
+
+    real = pq.read_table
+    opened = []
+
+    def spy(source, *args, **kwargs):
+        if f"{os.sep}{FEED}{os.sep}" in str(source):
+            opened.append(source)
+        return real(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", spy)
+    try:
+        read()
+    finally:
+        monkeypatch.setattr(pq, "read_table", real)
+    return opened
+
+
+def test_get_transaction_opens_one_feed_file(tmp_path, monkeypatch):
+    """A status lookup opens exactly one feed file whatever the feed's
+    file count — before and after compact_appends — and at most one for
+    an unknown id, none for a malformed one."""
+    store = DocumentStore(str(tmp_path / "s"))
+    ids = [store.put_txn(f"c~/i{i}", {"n": i})[2] for i in range(6)]
+    store.compact_appends()
+    ids += [store.put_txn(f"c~/j{i}", {"n": i})[2] for i in range(3)]
+    for tid in ids:
+        assert len(_feed_files_opened(monkeypatch, lambda: store.get_transaction(tid))) == 1
+
+    def missing(tid):
+        def read():
+            with pytest.raises(NotFoundError):
+                store.get_transaction(tid)
+
+        return read
+
+    version, ts, _ = ids[-1].split("-", 2)
+    assert len(_feed_files_opened(monkeypatch, missing(f"{version}-{ts}-{'0' * 32}"))) == 1
+    assert _feed_files_opened(monkeypatch, missing("not-a-real-id")) == []
+    assert _feed_files_opened(monkeypatch, missing("0-0-deadbeef")) == []
+
+
+def test_transaction_id_resolves_until_truncate_feed_drops_its_event(tmp_path):
+    """truncate_feed keeps its retained file at the feed's first append
+    key, in publication order (so a lookup's ts filter prunes its row
+    groups), so ids of kept events still resolve, also after a later
+    append; an id whose event is truncated 404s."""
+    import time as _time
+
+    from hyper_storage_spark.store.documents import FEED
+
+    store = DocumentStore(str(tmp_path / "s"))
+    ids = []
+    for i, uri in enumerate(["a~", "z~", "a~"]):
+        ids.append(store.put_txn(f"{uri}/i{i}", {"n": i})[2])
+        _time.sleep(0.005)
+
+    def at(tid):
+        return store.get_transaction(tid)["completedAt"]
+
+    def published_in_order():
+        ts = [e["ts"] for e in store.storage.all_rows(FEED)]
+        return ts == sorted(ts)
+
+    assert store.truncate_feed(at(ids[1])) == 1
+    assert published_in_order()
+    with pytest.raises(NotFoundError):
+        store.get_transaction(ids[0])
+    assert [store.get_transaction(t)["path"] for t in ids[1:]] == ["z~/i1", "a~/i2"]
+    ids.append(store.put_txn("z~/i3", {"n": 3})[2])
+    assert store.truncate_feed(at(ids[2])) == 1
+    assert published_in_order()
+    with pytest.raises(NotFoundError):
+        store.get_transaction(ids[1])
+    assert [store.get_transaction(t)["path"] for t in ids[2:]] == ["a~/i2", "z~/i3"]
+    assert [store.get_transaction(t)["revision"] for t in ids[2:]] == [2, 2]
+
+
+def test_transaction_id_resolves_from_a_second_handle_and_at_version(tmp_path):
+    """Any handle on the root resolves an id, and so does a time-travel
+    view at or after the write's flip; a view from before it does not."""
+    root = str(tmp_path / "s")
+    one = DocumentStore(root)
+    one.put("doc", {"n": 0})
+    before = one.storage.current_version()
+    tid = one.put_txn("doc", {"n": 1})[2]
+    at = one.storage.current_version()
+    one.put("doc", {"n": 2})
+    two = DocumentStore(root)
+    assert two.get_transaction(tid) == one.get_transaction(tid)
+    assert one.get_transaction(tid)["revision"] == 2
+    assert one.at_version(at).get_transaction(tid) == one.get_transaction(tid)
+    with pytest.raises(NotFoundError):
+        one.at_version(before).get_transaction(tid)
+    tid2 = two.put_txn("doc", {"n": 3})[2]
+    assert one.get_transaction(tid2)["revision"] == 4
+
+
+def test_transaction_id_404s_after_restore_version_undoes_its_write(tmp_path):
+    store = DocumentStore(str(tmp_path / "s"))
+    store.put("doc", {"n": 1})
+    v = store.storage.current_version()
+    tid = store.put_txn("doc", {"n": 2})[2]
+    assert store.get_transaction(tid)["revision"] == 2
+    store.restore_version(v)
+    with pytest.raises(NotFoundError):
+        store.get_transaction(tid)
+    store.compact_appends()
+    with pytest.raises(NotFoundError):
+        store.get_transaction(tid)
+    # the write after the rollback reuses the revision under a new id
+    again = store.put_txn("doc", {"n": 3})[2]
+    assert again != tid and store.get_transaction(again)["revision"] == 2
 
 
 def test_every_write_path_completes_in_its_own_flip(spark, tmp_path):
-    """One-phase completion: once a write returns, the store holds no WAL
-    row without ``completed_at``, every transaction of the write reads
-    completed, and each has its feed event — for the ``*_txn`` calls,
-    ``write_batch``, a collection delete and a command-stream batch."""
+    """One-phase completion: once a write returns, each of its
+    transactions reads completed and resolves to its feed event — for
+    the ``*_txn`` calls, ``write_batch``, a collection delete and a
+    command-stream batch. write_batch and stream writes return no ids,
+    so theirs are derived from each new feed event and the append key
+    it landed under."""
+    import os
+
+    import pyarrow.parquet as pq
+
     from hyper_storage_spark.plans import SortItem
-    from hyper_storage_spark.store.documents import TRANSACTIONS, transaction_id_of
+    from hyper_storage_spark.store.documents import FEED, transaction_id
     from hyper_storage_spark.streaming import run_command_stream, write_commands
 
     store = DocumentStore(str(tmp_path / "s"), spark=spark)
     store.put("c~/a", {"n": 1})
     store.create_index("c~", "by_n", [SortItem("n", "decimal", "asc")], None)
 
+    def events() -> dict:
+        """uuid → (id derived from the event's key and ts, event)."""
+        out = {}
+        for key, rel in store.storage._read_manifest()["tables"][FEED].items():
+            for e in pq.read_table(os.path.join(store.storage.root, rel)).to_pylist():
+                out[e["uuid"]] = (transaction_id(int(key[1:]), e["ts"], e["uuid"]), e)
+        return out
+
     def check(ids):
-        wal = store.storage.all_rows(TRANSACTIONS)
-        assert [t for t in wal if t["completed_at"] is None] == []
-        assert {t["uuid"] for t in wal} <= {e["uuid"] for e in store.feed_events()}
+        published = {tid: e for tid, e in events().values()}
         for tid in ids:
-            assert store.get_transaction(tid)["completed"] is True
+            t = store.get_transaction(tid)
+            e = published[tid]
+            assert t["completed"] is True and t["completedAt"] == e["ts"]
+            assert (t["revision"], t["method"]) == (e["revision"], e["method"])
+            assert t["path"] == (f"{e['document_uri']}/{e['item_id']}" if e["item_id"] else e["document_uri"])
 
     def ids_of(write) -> list:
-        before = {t["uuid"] for t in store.storage.all_rows(TRANSACTIONS)}
+        before = events()
         write()
-        return [transaction_id_of(t) for t in store.storage.all_rows(TRANSACTIONS) if t["uuid"] not in before]
+        return [
+            tid for uid, (tid, e) in events().items()
+            if uid not in before and not e["method"].startswith("feed:index")
+        ]
 
     check([store.put_txn("c~/b", {"n": 2})[2]])
     check([store.patch_txn("c~/b", {"n": 3})[2]])
@@ -2993,9 +3100,7 @@ def test_info_reports_bucket_segments(tmp_path):
     index = store.index_defs("c~")[0].storage_table
     for i in range(2):
         store.put(f"c~/y{i}", {"n": i})
-    # 3 appended WAL files for doc and 2 for c~ (its WAL bucket's own
-    # files, whichever bucket it hashes to)
-    assert store.info()["tables"]["transactions"]["bucket_segments"] == 5
+    assert "transactions" not in store.info()["tables"]
     assert store.info()["tables"]["content"]["bucket_segments"] == 0
     assert store.info()["tables"][index]["bucket_segments"] == 2  # pending delta files
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -3004,10 +3109,9 @@ def test_info_reports_bucket_segments(tmp_path):
         capture_output=True, text=True, cwd=repo, timeout=120,
     )
     assert p.returncode == 0, p.stderr[:400]
-    assert _json.loads(p.stdout)["tables"]["transactions"]["bucket_segments"] == 5
+    assert "transactions" not in _json.loads(p.stdout)["tables"]
     assert _json.loads(p.stdout)["tables"][index]["bucket_segments"] == 2
     store.compact_appends()
-    assert store.info()["tables"]["transactions"]["bucket_segments"] == 0
     assert store.info()["tables"][index]["bucket_segments"] == 0
 
 
@@ -3138,7 +3242,7 @@ def test_delta_bucket_appends_merge_by_item_id(tmp_path):
 def test_item_write_appends_index_deltas_and_folds_at_the_cap(tmp_path, monkeypatch):
     """An item write adds one delta file per index holding one row per
     touched item, whatever the index's size; the write that finds the
-    list at WAL_MAX_FILES folds it into one base file, and so does
+    list at DELTA_MAX_FILES folds it into one base file, and so does
     compact_appends(). The merged rows always equal a rebuild."""
     from hyper_storage_spark.plans import SortItem
 
@@ -3148,7 +3252,7 @@ def test_item_write_appends_index_deltas_and_folds_at_the_cap(tmp_path, monkeypa
     store.create_index("c~", "hot", [SortItem("a", "decimal", "desc")], "a > 20")
     idef = store.index_defs("c~")[0]
     assert len(store.storage.bucket_files(idef.storage_table, 0)) == 1
-    for n in range(1, store.WAL_MAX_FILES):
+    for n in range(1, store.DELTA_MAX_FILES):
         seen = _rows_written_by_table(monkeypatch, lambda: store.patch(f"c~/i{n:02d}", {"a": 30 + n}))
         index_dir = next(t for t in seen if t.startswith("index_"))
         assert seen[index_dir] == 1
@@ -3170,8 +3274,8 @@ def test_item_write_appends_index_deltas_and_folds_at_the_cap(tmp_path, monkeypa
 def test_batch_write_folds_an_index_delta_past_its_share_of_the_base(tmp_path):
     """An index-served query fetches one extra row per pending delta
     row, so a write also folds an index when the delta rows, pending
-    plus its own, would exceed both WAL_MAX_FILES and the base's rows
-    divided by WAL_MAX_FILES: write_batch into an indexed collection
+    plus its own, would exceed both DELTA_MAX_FILES and the base's rows
+    divided by DELTA_MAX_FILES: write_batch into an indexed collection
     leaves at most that many delta rows pending, while single-item
     writes still append up to the file cap."""
     import random
@@ -3182,7 +3286,7 @@ def test_batch_write_folds_an_index_delta_past_its_share_of_the_base(tmp_path):
     store.write_batch([("put", f"c~/i{i:03d}", {"a": i}) for i in range(400)])
     store.create_index("c~", "all", [SortItem("a", "decimal", "asc")])
     idef = store.index_defs("c~")[0]
-    cap = store.WAL_MAX_FILES
+    cap = store.DELTA_MAX_FILES
     assert store.storage.bucket_shape(idef.storage_table, 0) == (1, 400, 0)
     store.write_batch([("patch", f"c~/i{i:03d}", {"a": -i}) for i in range(30)])
     assert store.storage.bucket_shape(idef.storage_table, 0) == (2, 400, 30)  # 30 <= 400 // cap
@@ -3205,29 +3309,9 @@ def test_batch_write_folds_an_index_delta_past_its_share_of_the_base(tmp_path):
 
 
 def test_item_write_reads_no_wal_rows_however_many_it_keeps(tmp_path, monkeypatch):
-    """_stage_wal reads a WAL bucket only to rewrite it: after 10 or
-    2,000 prior writes (list short of WAL_MAX_FILES) the next item
-    write reads no WAL row — also on a fresh handle."""
-    from hyper_storage_spark.store.documents import TRANSACTIONS
-    from hyper_storage_spark.store.storage import Storage
-
-    real = Storage.bucket_rows
-
-    def wal_rows_read(store, write) -> int:
-        seen = []
-
-        def spy(self, table, bucket, filters=None):
-            out = real(self, table, bucket, filters)
-            if table == TRANSACTIONS:
-                seen.append(len(out))
-            return out
-
-        monkeypatch.setattr(Storage, "bucket_rows", spy)
-        try:
-            write()
-        finally:
-            monkeypatch.setattr(Storage, "bucket_rows", real)
-        return sum(seen)
+    """The transaction log is the feed, and a write only appends to it:
+    after 10 or 2,000 prior writes the next item write opens no feed
+    file — also on a fresh handle."""
 
     def after(prior: int) -> tuple:
         root = str(tmp_path / f"s{prior}")
@@ -3235,15 +3319,55 @@ def test_item_write_reads_no_wal_rows_however_many_it_keeps(tmp_path, monkeypatc
         store.put("c~/x", {"a": 0})
         for k in range(0, prior, 500):
             store.write_batch([("patch", "c~/x", {"a": i}) for i in range(k, min(prior, k + 500))])
-        b = store._bucket("c~")
-        assert len(store.storage.bucket_rows(TRANSACTIONS, b)) == prior + 1
-        assert len(store.storage.bucket_files(TRANSACTIONS, b)) < store.WAL_MAX_FILES - 2
-        warm = wal_rows_read(store, lambda: store.patch("c~/x", {"a": -1}))
+        assert len(store.feed_events()) == prior + 1
+        warm = _feed_files_opened(monkeypatch, lambda: store.patch("c~/x", {"a": -1}))
         fresh = DocumentStore(root)
-        cold = wal_rows_read(fresh, lambda: fresh.patch("c~/x", {"a": -2}))
-        return warm, cold
+        cold = _feed_files_opened(monkeypatch, lambda: fresh.patch("c~/x", {"a": -2}))
+        return len(warm), len(cold)
 
     assert after(10) == after(2000) == (0, 0)
+
+
+def test_decimal_sort_values_past_the_column_scale_agree_across_build_paths(spark, tmp_path):
+    """A decimal sort value with more than 12 fractional digits, or past
+    the column's 26 integer digits, used to fail the item write (and the
+    driver backfill) with an arrow rescaling error. Every path stores
+    what decimal(38,12) holds, as the Spark build's cast does: rounded
+    half-up to 12 places, NULL on overflow — the writes succeed, and the
+    item-write delta, the driver backfill and the Spark build give
+    identical rows."""
+    from decimal import Decimal
+
+    from hyper_storage_spark.plans import SortItem
+
+    bodies = {
+        "a": {"v": 0.1234567890123456},
+        "b": {"v": 0.1234567890126456},
+        "c": {"v": -0.1234567890125},
+        "d": {"v": 2.5e-13},
+        "e": {"v": 5e-13},
+        "f": {"v": 1.5},
+        "g": {"v": 1e30},
+        "h": {"v": 12345678901234567890123456},
+    }
+    store = DocumentStore(str(tmp_path / "dec"), spark=spark)
+    store.put("dec~/seed", {"v": 0})
+    sort = [SortItem("v", "decimal", "asc")]
+    store.create_index("dec~", "live", sort, None)
+    for k, body in bodies.items():
+        assert store.put(f"dec~/{k}", body)[0] is True
+    rows = {"delta": _index_state(store, store.index_defs("dec~")[0])}
+    store.delete_index("dec~", "live")
+    for use_spark in (False, True):
+        store.create_index("dec~", "ix", sort, None, use_spark=use_spark)
+        rows[use_spark] = _index_state(store, store.index_defs("dec~")[0])
+        store.delete_index("dec~", "ix")
+    assert rows["delta"] == rows[False] == rows[True]
+    values = {r[0]: r[3] for r in rows[True]}
+    assert values["a"] == Decimal("0.123456789012") and values["b"] == Decimal("0.123456789013")
+    assert values["c"] == Decimal("-0.123456789013") and values["f"] == Decimal("1.5")
+    assert values["d"] == 0 and values["e"] == Decimal("1E-12")
+    assert values["g"] is None and values["h"] == Decimal("12345678901234567890123456")
 
 
 def test_null_body_index_membership_agrees_across_build_paths(spark, tmp_path):

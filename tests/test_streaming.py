@@ -637,29 +637,6 @@ def test_streaming_vacuum_reclaims_crash_orphans(spark, tmp_path, monkeypatch):
     assert on_disk <= referenced, f"unreferenced files survive GC: {sorted(on_disk - referenced)[:5]}"
 
 
-def test_command_stream_prunes_expired_wal_rows_by_default(spark, tmp_path):
-    """The executor overlay stages a WAL bucket whole, so a streamed
-    write rewrites it pruned: completed entries past WAL_KEEP_MS go
-    with the default run_command_stream (no compact_appends)."""
-    from hyper_storage_spark.store.documents import TRANSACTIONS, TRANSACTIONS_SCHEMA
-
-    store = DocumentStore(str(tmp_path / "store"), spark=spark)
-    for i in range(3):
-        store.put("aged", {"n": i})
-    b = store._bucket("aged")
-    aged = store.storage.bucket_rows(TRANSACTIONS, b)
-    for t in aged:
-        t["completed_at"] -= store.WAL_KEEP_MS + 60_000
-    store.storage.commit({(TRANSACTIONS, b): aged}, {TRANSACTIONS: TRANSACTIONS_SCHEMA})
-    cmds = str(tmp_path / "commands")
-    write_commands(cmds, [{"seq": 1, "method": "put", "path": "aged", "body": {"n": 3}}])
-    run_command_stream(spark, store, cmds, str(tmp_path / "ckpt"))
-    assert store.get("aged") == ({"n": 3}, 4)
-    wal = store.storage.bucket_rows(TRANSACTIONS, b)
-    assert [(t["revision"], t["completed_at"] is not None) for t in wal] == [(4, True)]
-    assert len(store.storage.bucket_files(TRANSACTIONS, b)) == 1
-
-
 def test_serial_staged_batch_instantiates_templates(spark, tmp_path):
     """A collection-delete batch (applied as one group) that ALSO
     creates a template-matched collection must instantiate the concrete
@@ -770,7 +747,7 @@ def test_compact_appends_covers_dead_letters(spark, tmp_path):
 
 def test_feed_readstream_exactly_once_dedup(spark, tmp_path):
     """Opt-in consumer-side exactly-once: double-publish a batch of
-    feed events (the WAL's at-least-once crash-replay shape) and assert
+    feed events (the at-least-once re-delivery shape) and assert
     the deduped stream emits each (uri, item, revision) exactly once,
     while the default stream shows the duplicates."""
     from hyper_storage_spark.store.documents import FEED, FEED_SCHEMA

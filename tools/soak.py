@@ -19,9 +19,12 @@ Invariants asserted (not eyeballed):
      present in the feed at its returned revision (kills may leave
      EXTRA committed-but-unlogged ops — at-least-once — never missing
      ones).
-  4. ZERO ORPHANS — every manifest-referenced file exists on disk; the
-     WAL holds no incomplete transaction (a write's rows are written
-     completed, so one would mean a torn flip); a closing vacuum
+  4. ZERO ORPHANS, IDS RESOLVE — every manifest-referenced file exists
+     on disk; every transaction id a single-op worker logged with its
+     acknowledged put/patch/delete still resolves, after the kills,
+     compactions and vacuums, to the logged path and revision (the feed
+     is the transaction log: a torn flip, or a compaction that moved an
+     event out of the file its id names, breaks this); a closing vacuum
      removes only unreferenced files and the state re-reads intact.
   5. ROLLUP READ PARITY (round 9, needs --spark / a session) — a
      concurrent reader thread drives store.aggregate() (auto_refresh
@@ -94,9 +97,9 @@ stop = time.time() + seconds
 # merges the index's pending delta files instead of one folded base
 quiet = stop - min(10.0, seconds / 4)
 
-def record(op, path, rev):
+def record(op, path, rev, txn=None):
     with loglock:
-        log.write(json.dumps({"op": op, "path": path, "rev": rev}) + "\n")
+        log.write(json.dumps({"op": op, "path": path, "rev": rev, "txn": txn}) + "\n")
         log.flush()
         os.fsync(log.fileno())
 
@@ -113,14 +116,14 @@ def writer(tid):
         roll = rng.random()
         try:
             if roll < 0.5:
-                _, rev = store.put(path, body(rng))
-                record("put", path, rev)
+                _, rev, txn = store.put_txn(path, body(rng))
+                record("put", path, rev, txn)
             elif roll < 0.7:
-                _, rev = store.patch(path, {"a": rng.randint(100, 199)})
-                record("patch", path, rev)
+                _, rev, txn = store.patch_txn(path, {"a": rng.randint(100, 199)})
+                record("patch", path, rev, txn)
             elif roll < 0.8:
-                rev = store.delete(path)
-                record("delete", path, rev)
+                rev, txn = store.delete_txn(path)
+                record("delete", path, rev, txn)
             else:
                 ops = [("put", f"{coll}/{i}", body(rng)) for i in rng.sample(ITEMS, 3)]
                 for (m, p, _), out in zip(ops, store.write_batch(ops)):
@@ -427,7 +430,7 @@ class _RestDriver:
         self.ops += 1
         # transaction-status route (r11): every write's transactionId
         # must resolve to a 200 whose revision matches the header —
-        # the WAL point-read face under the same chaos as the writes
+        # the feed-lookup face under the same chaos as the writes
         tid = (resp.body or {}).get("transactionId")
         if tid is None:
             self.failures.append(f"write {path} returned no transactionId")
@@ -731,12 +734,20 @@ def run_soak(
             for r in rel if isinstance(rel, list) else [rel]:
                 if not os.path.exists(os.path.join(root, r)):
                     failures.append(f"manifest references missing file {r}")
-    # 4b. no incomplete WAL row, with no recovery pass run
-    from hyper_storage_spark.store.documents import TRANSACTIONS
-
-    incomplete = [t for t in store.storage.all_rows(TRANSACTIONS) if not t["completed_at"]]
-    if incomplete:
-        failures.append(f"{len(incomplete)} incomplete transactions after the kills")
+    # 4b. every logged transaction id resolves to its op
+    txns_resolved = 0
+    for e in (e for es in logged.values() for e in es if e.get("txn")):
+        try:
+            t = store.get_transaction(e["txn"])
+        except KeyError:
+            failures.append(f"logged {e['op']} {e['path']} txn {e['txn']} does not resolve")
+            continue
+        if (t["path"], t["revision"], t["method"]) != (e["path"], e["rev"], f"feed:{e['op']}"):
+            failures.append(
+                f"txn {e['txn']} resolves to {t['path']} rev {t['revision']}, "
+                f"logged {e['path']} rev {e['rev']}"
+            )
+        txns_resolved += 1
     # 5. rollup read parity: the quiesced final refresh+compare MUST
     # hold (no writer races left to excuse a skip), and every retained
     # historical answer must re-read identically — both BEFORE the
@@ -777,6 +788,7 @@ def run_soak(
     out = {
         "procs": procs, "threads": threads, "seconds": seconds, "kills": kills,
         "ops_logged": ops_logged,
+        "txns_resolved": txns_resolved,
         "revisions": {u: s["revision"] for u, s in statics.items()},
         "vacuum_removed": removed,
         "index_rows": len(merged),

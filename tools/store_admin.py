@@ -30,22 +30,15 @@ def _health(store) -> dict:
     per-collection item/tombstone/revision stats with the gapless
     feed-parity invariant CHECKED (not assumed), content bucket skew
     (hottest bucket ÷ mean — the reducer imbalance a collection scan
-    inherits), WAL rows left incomplete (every write completes in its
-    own flip, so any such row means a damaged store), and the
-    orphan-file count a vacuum pass would reclaim. No Spark session; manifest + parquet footer reads."""
+    inherits), and the orphan-file count a vacuum pass would reclaim.
+    No Spark session; manifest + parquet footer reads."""
     import os
 
-    from hyper_storage_spark.store.documents import (
-        CONTENT,
-        FEED,
-        STATICS,
-        TRANSACTIONS,
-    )
+    from hyper_storage_spark.store.documents import CONTENT, FEED, STATICS
 
     statics = store.storage.all_rows(STATICS)
     content = store.storage.all_rows(CONTENT)
     feed = store.storage.all_rows(FEED)
-    wal = store.storage.all_rows(TRANSACTIONS)
 
     colls = {}
     for s in statics:
@@ -108,14 +101,12 @@ def _health(store) -> dict:
                 on_disk.append(os.path.relpath(os.path.join(dirpath, f), store.storage.root))
     orphans = sum(1 for f in on_disk if f not in referenced)
 
-    incomplete = [t for t in wal if not t["completed_at"]]
     return {
         "version": manifest["version"],
         "collections": colls,
         "content_bucket_skew": skew,
-        "wal_incomplete": len(incomplete),
         "orphan_files": orphans,
-        "ok": all(c["feed_bounded"] for c in colls.values()) and not incomplete,
+        "ok": all(c["feed_bounded"] for c in colls.values()),
     }
 
 
@@ -153,7 +144,7 @@ def main(argv: list[str] | None = None) -> int:
     sub.add_parser(
         "health",
         help="one-shot day-2 diagnostic: per-collection stats, "
-        "revision/feed parity, bucket skew, incomplete WAL rows, orphan files",
+        "revision/feed parity, bucket skew, orphan files",
     )
     dv = sub.add_parser(
         "diff", help="item-level changes between two retained versions"
