@@ -607,6 +607,7 @@ class RestFacade:
                     {"field": f, "ascending": a} for f, a in plan.default_order
                 ],
                 "estimated_rows": plan.estimated_rows,
+                "driver": plan.driver,
             })
         except NotFoundError:
             return RestResponse(404)

@@ -80,7 +80,7 @@ from ..plans.model import (
 )
 from .idgen import create_id
 from .merge import filter_nulls, merge_patch
-from .storage import Storage, bucket_of, delta_of, delta_schema, is_delta_file, merge_delta
+from .storage import Storage, bucket_of, delta_of, is_delta_file, merge_delta
 from .storage import write_bucket_file  # noqa: F401  (perfbench's tracer wraps it here)
 
 
@@ -206,8 +206,7 @@ def _index_schema(sort_by: tuple[SortItem, ...]) -> pa.Schema:
         if name == "item_id":
             continue
         fields.append((name, DEC_ARROW if item.effective_type == DECIMAL else pa.string()))
-    # item writes append their index rows as deltas (_refresh_indexes)
-    return delta_schema(pa.schema(fields))
+    return pa.schema(fields)
 
 
 def index_spark_schema(sort_by: tuple[SortItem, ...]) -> str:

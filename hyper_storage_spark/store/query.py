@@ -4,18 +4,32 @@ HyperbusAdapter.selectCollection (HyperbusAdapter.scala:139-309).
 Planning is the ported pure-Python logic (weigh every NORMAL index plus
 the implicit id-ordered base table, pick the max; extract sargable
 conjuncts for the chosen sort key; derive the usable ORDER BY prefix).
-Execution is a DataFrame pipeline:
+Every row a query can return lives in one bucket of the chosen source:
+the index table's bucket 0, or the collection's content bucket. A fetch
+takes one of two routes, chosen by that bucket's raw row count
+(:data:`DRIVER_MAX_ROWS`):
 
-    chosen_source.filter(pushed conjuncts)      # parquet pushdown
-                 .filter(compiled residual)     # expression language → Column
-                 .orderBy(...).limit(...)       # TakeOrderedAndProject
+* bounded — on the driver, as the reference serves a page (bounded
+  index scans, residual filtering, sorting and top-N in memory): the
+  bucket's rows (delta merged) through the pushed conjuncts, a stable
+  sort, and the residual evaluated row by row until the page fills. No
+  Spark job and no py4j call;
+* above the bound — a DataFrame pipeline over the table's base files:
+
+      chosen_source.filter(pushed conjuncts)      # parquet pushdown
+                   .filter(compiled residual)     # expression language → Column
+                   .orderBy(...).limit(...)       # TakeOrderedAndProject
+
+  with the pending delta merged on the driver around the fetch.
 
 For an exact sort match the ORDER BY runs on the physical sort columns
 (typed: text lexicographic / decimal numeric — the index tables'
 clustering-key semantics, db/scheme.cql:62-108). For an inexact match
 the reference over-fetches pageSize+skipMax rows and sorts in memory
 with dynamic type semantics (HyperbusAdapter.scala:181-197,341-376);
-we do the same with the budget enforced, erroring beyond it.
+we do the same with the budget enforced, erroring beyond it, reading
+the rows in item_id order (the base rows' clustering order) so that
+ties keep one order whichever files hold them.
 
 :func:`DocumentStore.query_paged` (attached here) is the REST keyset
 pagination loop (queryUntilFetched, HyperbusAdapter.scala:268-309):
@@ -23,23 +37,25 @@ bounded number of storage selects, adaptive fetch growth, least-rows
 resume filters from the ported IndexLogic.
 
 An index table may hold a pending delta (rows item writes appended, see
-store/storage.py). The Spark scan reads its base files only — the plan
-is the same with or without a delta — and :func:`_merged_fetch` merges
-the delta on the driver around each bounded fetch.
+store/storage.py). The driver route reads it merged; the Spark scan
+reads base files only — the plan is the same with or without a delta —
+and :func:`_merged_fetch` merges the delta around each bounded fetch.
 """
 
 from __future__ import annotations
 
 import functools
+import itertools
 import json
-from dataclasses import dataclass, field
+import operator
+from dataclasses import dataclass, field, replace
 from decimal import ROUND_HALF_UP, Decimal, localcontext
 from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..expression.compiler import CompileError, apply_filter
+from ..expression.compiler import CompileError, apply_filter, compile_filter_sql, variant_resolver
 from ..expression.evaluator import EvalError, canonical_str, evaluate, is_number, to_decimal, truthy
 from ..expression.parser import parse
 from ..paths import is_collection_uri
@@ -68,7 +84,7 @@ from .documents import (
     NotFoundError,
     index_spark_schema,
 )
-from .storage import merge_delta
+from .storage import Storage, merge_delta
 
 DEFAULT_PAGE_SIZE = 100  # HyperbusAdapter.scala:35
 DEFAULT_MAX_SKIPPED_ROWS = 10000  # HyperbusAdapter.scala:33
@@ -98,6 +114,8 @@ class PlanInfo:
     # the collection is ANALYZEd — store/stats.py; a reference
     # future-work item, README «Что на будущее»)
     estimated_rows: Optional[int] = None
+    # served on the driver, not by a Spark job (DRIVER_MAX_ROWS)
+    driver: bool = False
 
 
 @dataclass
@@ -155,31 +173,39 @@ _NULL_VALUE_OK = {
 }
 # the pushed comparisons, on Spark Columns and on values held in memory
 _COMPARE = {
-    FilterOp.EQ: lambda c, v: c == v,
-    FilterOp.GT: lambda c, v: c > v,
-    FilterOp.GTEQ: lambda c, v: c >= v,
-    FilterOp.LT: lambda c, v: c < v,
-    FilterOp.LTEQ: lambda c, v: c <= v,
+    FilterOp.EQ: operator.eq,
+    FilterOp.GT: operator.gt,
+    FilterOp.GTEQ: operator.ge,
+    FilterOp.LT: operator.lt,
+    FilterOp.LTEQ: operator.le,
 }
 
 
-def _field_filters_ok(row: dict, filters: list[FieldFilter], decimal_cols: set[str]) -> bool:
-    """:func:`_apply_field_filters` on one row held in memory (an index
-    delta row): the same conditions, under SQL null semantics."""
+def _field_filters_pred(filters: list[FieldFilter], decimal_cols: set[str]) -> Callable[[dict], bool]:
+    """:func:`_apply_field_filters` as a predicate on one row held in
+    memory (a delta row, or a row the driver route reads): the same
+    conditions, under SQL null semantics. Each comparand is converted
+    once, here, not per row."""
+    tests: list[tuple[str, Callable[[Any], bool]]] = []
     for ff in filters:
-        c = row.get(ff.name)
         if ff.value is None:
-            ok = _NULL_VALUE_OK[ff.op](c)
-        else:
-            try:
-                v = _value_for(ff, ff.name in decimal_cols)
-            except EvalError:
-                ok = c is None if ff.op == FilterOp.EQ else False
-            else:
-                ok = c is not None and _COMPARE[ff.op](c, v)
-        if not ok:
-            return False
-    return True
+            tests.append((ff.name, _NULL_VALUE_OK[ff.op]))
+            continue
+        try:
+            v = _value_for(ff, ff.name in decimal_cols)
+        except EvalError:  # no typed scalar form: see _apply_field_filters
+            tests.append((ff.name, (lambda c: c is None) if ff.op == FilterOp.EQ else (lambda c: False)))
+            continue
+        cmp = _COMPARE[ff.op]
+        tests.append((ff.name, lambda c, v=v, cmp=cmp: c is not None and cmp(c, v)))
+
+    def ok(row: dict) -> bool:
+        for name, test in tests:
+            if not test(row.get(name)):
+                return False
+        return True
+
+    return ok
 
 
 def _apply_field_filters(df: DataFrame, filters: list[FieldFilter], decimal_cols: set[str]) -> DataFrame:
@@ -206,18 +232,29 @@ def _apply_field_filters(df: DataFrame, filters: list[FieldFilter], decimal_cols
 
 def _with_residual(plan: PlanInfo, src: "_Source", filter_ast) -> "_Source":
     """``src`` with the full filter applied as the residual predicate,
-    on its frame and on its delta rows; records in ``plan`` whether the
-    residual compiled. Only callers that run ``src.df`` apply it: the
-    paging loop judges fetched rows with :func:`_residual_ok` itself."""
+    on its rows and on its frame; records in ``plan`` whether the
+    residual compiled. Only callers that fetch through ``src`` apply
+    it: the paging loop judges fetched rows with :func:`_residual_ok`
+    itself. A driver-routed source decides ``compiled`` from the SQL
+    text alone and builds no frame; a Spark-routed one compiles the
+    residual into its frame here."""
     if filter_ast is None:
         return src
-    df, compiled = _apply_residual(src.df, filter_ast)
+    if src.driver:
+        try:
+            compile_filter_sql(filter_ast, variant_resolver("body"))
+            compiled = True
+        except CompileError:
+            compiled = False
+        build = lambda: (_apply_residual(src.df, filter_ast)[0], src.delta)  # noqa: E731
+    else:
+        df, compiled = _apply_residual(src.df, filter_ast)
+        build = lambda: (df, src.delta)  # noqa: E731
     plan.residual_compiled = compiled
-    pushed = src.keep
-    return _Source(
-        df,
-        src.delta,
-        lambda r: pushed(r) and _residual_ok(
+    return replace(
+        src,
+        build=build,
+        residual=lambda r: _residual_ok(
             filter_ast, json.loads(r["body"]) if r["body"] is not None else None, compiled
         ),
     )
@@ -265,49 +302,108 @@ def _residual_ok(filter_ast, body, compiled: bool = True) -> bool:
         return False
 
 
+# A source whose bucket holds at most this many raw rows (base + delta,
+# before the merge) is served on the driver. It is the reference's own
+# in-memory budget: an inexact-sort page sorts up to pageSize + skipMax
+# rows in memory (HyperbusAdapter.scala:181-197). The driver route reads,
+# filters and sorts the whole bucket on every fetch and holds it in
+# driver memory; the Spark route prunes row groups and scales out, so it
+# stays for larger sources. Measured with tools/query_routes.py on a
+# 4-core VM (bulk-loaded collection, one decimal index, 20-row pages
+# asserted identical on both routes; median ms, driver / Spark):
+#
+#     items    index range page    residual scan page
+#     2,000        6 /  422            13 /   440
+#    10,000       19 /  334            25 /   472
+#    40,000       61 /  286            66 /   868
+#   100,000      384 /  356           328 / 1,782
+#   200,000    1,636 /  454         1,519 / 3,350
+#
+# The range page crosses over near 100k items, where the bucket
+# outgrows the decoded-row cache (Storage.READ_CACHE_ROWS) and each
+# driver fetch decodes parquet again.
+DRIVER_MAX_ROWS = DEFAULT_PAGE_SIZE + DEFAULT_MAX_SKIPPED_ROWS
+
+
 @dataclass
 class _Source:
-    """A chosen source: its Spark frame (base files, pushed filters and,
-    after :func:`_with_residual`, the residual), the index table's pending delta
-    (item_id → newest delta row) and ``keep``, the frame's predicates
-    on one delta row."""
+    """A chosen source: bucket ``bucket`` of ``table``, which holds
+    every row the query can return, and its predicates on one row held
+    in memory: ``keep``, the pushed conjuncts (for the base table also
+    the collection's live items), and after :func:`_with_residual` the
+    ``residual``. ``driver`` is its route (:data:`DRIVER_MAX_ROWS`).
+    ``build`` makes the Spark face from one manifest read, only when
+    first asked for: ``df``, a frame over the table's base files
+    carrying the same predicates, and ``delta``, the pending delta
+    (item_id → newest delta row)."""
 
-    df: DataFrame
-    delta: dict = field(default_factory=dict)
-    keep: Callable[[dict], bool] = lambda r: True
+    storage: Storage
+    table: str
+    bucket: int
+    driver: bool
+    keep: Callable[[dict], bool]
+    build: Callable[[], tuple[DataFrame, dict]]
+    residual: Optional[Callable[[dict], bool]] = None
+
+    @functools.cached_property
+    def _frame(self) -> tuple[DataFrame, dict]:
+        return self.build()
+
+    @property
+    def df(self) -> DataFrame:
+        return self._frame[0]
+
+    @property
+    def delta(self) -> dict:
+        return self._frame[1]
+
+
+def _source(store: DocumentStore, table: str, bucket: int, spark_schema: str, keep, push) -> _Source:
+    """The source ``bucket`` of ``table`` with the predicates ``keep``
+    (on a row) and ``push`` (on a frame), routed by the bucket's raw
+    row count, which :meth:`Storage.bucket_shape` counts without
+    decoding a row."""
+    _, base, delta = store.storage.bucket_shape(table, bucket)
+
+    def build():
+        df, pending = store.storage.spark_df_and_delta(store.spark, table, spark_schema)
+        return push(df), pending
+
+    return _Source(store.storage, table, bucket, base + delta <= DRIVER_MAX_ROWS, keep, build)
 
 
 def _merged_fetch(src: _Source, order: list[tuple[str, bool]], limit: int) -> list:
-    """The first ``limit`` rows of the source in ``order`` ((physical
-    column, ascending) pairs; [] for scan order), the pending delta
-    merged in by the one rule (storage.merge_delta): fetch ``limit +
-    |delta|`` base rows, drop those the delta supersedes, add the live
-    delta rows ``keep`` accepts, re-sort, cut to ``limit``. Exact,
-    because at most ``|delta|`` fetched rows can be superseded. Rows
-    are Spark Rows or dicts; both index by column name."""
-    df = src.df.orderBy(*[F.col(n).asc() if a else F.col(n).desc() for n, a in order]) if order else src.df
+    """The first ``limit`` rows of the source that pass its predicates,
+    in ``order`` ((physical column, ascending) pairs) — the one router
+    of query and query_paged: ``src.driver``, which their plans and
+    explain's report, picks the route.
+
+    Driver: the bucket's rows, delta merged (Storage.bucket_rows), that
+    ``keep`` accepts, sorted, then the residual judged row by row until
+    ``limit`` rows pass. Spark: the pending delta merged in by the one
+    rule (storage.merge_delta): fetch ``limit + |delta|`` base rows,
+    drop those the delta supersedes, add the live delta rows the
+    predicates accept, re-sort, cut to ``limit``. Exact, because at
+    most ``|delta|`` fetched rows can be superseded. Rows are dicts or
+    Spark Rows; both index by column name."""
+    if src.driver:
+        rows = _sort_rows(list(filter(src.keep, src.storage.bucket_rows(src.table, src.bucket))), order)
+        return list(itertools.islice(filter(src.residual, rows) if src.residual else rows, limit))
+    df = src.df.orderBy(*[F.col(n).asc() if a else F.col(n).desc() for n, a in order])
     if not src.delta:
         return df.limit(limit).collect()
-    rows = merge_delta(df.limit(limit + len(src.delta)).collect(), src.delta, src.keep)
-    # scan order of a folded (item_id-sorted) base file when unordered
-    rows.sort(key=_order_key(order or [("item_id", True)]))
-    return rows[:limit]
+    keep = src.keep if src.residual is None else lambda r: src.keep(r) and src.residual(r)
+    rows = merge_delta(df.limit(limit + len(src.delta)).collect(), src.delta, keep)
+    return _sort_rows(rows, order)[:limit]
 
 
-def _order_key(order: list[tuple[str, bool]]):
-    """Sort key of Spark's ORDER BY over ``order``: nulls first
-    ascending, last descending."""
-
-    def cmp(a, b) -> int:
-        for name, asc in order:
-            x, y = a[name], b[name]
-            if x == y:
-                continue
-            c = -1 if x is None else 1 if y is None else -1 if x < y else 1
-            return c if asc else -c
-        return 0
-
-    return functools.cmp_to_key(cmp)
+def _sort_rows(rows: list, order: list[tuple[str, bool]]) -> list:
+    """``rows`` in Spark's ORDER BY over ``order``: nulls first
+    ascending, last descending. Stable, one pass per column from the
+    last; a pair's key never compares None with a value."""
+    for name, asc in reversed(order):
+        rows.sort(key=lambda r: (r[name] is not None, r[name]), reverse=not asc)
+    return rows
 
 
 def query(
@@ -338,7 +434,7 @@ def query(
         items = [json.loads(r["body"]) if r["body"] is not None else None for r in fetched]
     else:
         budget = size + skip_max
-        fetched = _merged_fetch(src, [], budget + 1)
+        fetched = _merged_fetch(src, [("item_id", True)], budget + 1)
         if len(fetched) > budget:
             raise QueryBudgetExceeded(f"Maximum skipped row limit is reached: {skip_max}")
         rows = _collection_ordering_sort(
@@ -386,10 +482,10 @@ def _plan(store: DocumentStore, uri: str, filter: Optional[str], sort: list[Sort
         # base scan pushes only the item_id bound (db/Db.scala:146-177)
         item_filters = [f for f in filter_fields if f.name == "item_id"]
         src = _base_source(store, uri, item_filters)
-        plan = PlanInfo(CONTENT, None, item_filters, ck_fields, reversed_, exact)
+        plan = PlanInfo(CONTENT, None, item_filters, ck_fields, reversed_, exact, driver=src.driver)
     else:
         src = _index_source(store, idef, filter_fields)
-        plan = PlanInfo(idef.table_name, idef.index_id, filter_fields, ck_fields, reversed_, exact)
+        plan = PlanInfo(idef.table_name, idef.index_id, filter_fields, ck_fields, reversed_, exact, driver=src.driver)
         # the reference returns MV rows in the index table's clustering
         # order (sort columns per DDL asc/desc, then item_id) even when
         # the query asks for no sort — record it for _order_spec
@@ -608,28 +704,33 @@ def _plan_raw(store: DocumentStore, uri: str, plan: PlanInfo, filters: list[Fiel
 
 
 def _base_source(store: DocumentStore, uri: str, filters: list[FieldFilter]) -> _Source:
-    df = store.storage.spark_df_or_empty(store.spark, CONTENT, CONTENT_SPARK)
-    df = df.filter(
-        (F.col("document_uri") == uri) & (F.col("item_id") != "") & (~F.col("is_deleted"))
+    """The collection's live items in its content bucket, ``filters``
+    pushed; the Spark frame reads the whole content table."""
+    pushed = _field_filters_pred(filters, set())
+    return _source(
+        store, CONTENT, store._bucket(uri), CONTENT_SPARK,
+        # a null cell fails each SQL condition, as in the frame's filter
+        lambda r: r["document_uri"] == uri and r["item_id"] not in ("", None) and r["is_deleted"] is False
+        and pushed(r),
+        lambda df: _apply_field_filters(
+            df.filter((F.col("document_uri") == uri) & (F.col("item_id") != "") & (~F.col("is_deleted"))),
+            filters,
+            set(),
+        ),
     )
-    return _Source(_apply_field_filters(df, filters, set()))
 
 
 def _index_source(store: DocumentStore, idef: IndexDef, filters: list[FieldFilter]) -> _Source:
-    """The index table's base files with ``filters`` pushed, and its
-    pending delta read at the same manifest."""
-    df, delta = store.storage.spark_df_and_delta(
-        store.spark, idef.storage_table, index_spark_schema(idef.sort_by)
-    )
+    """The index table, ``filters`` pushed."""
     decimal_cols = {
         name
         for i, s in enumerate(idef.sort_by)
         if (name := _field_name(idef, i)) != "item_id" and s.effective_type == DECIMAL
     }
-    return _Source(
-        _apply_field_filters(df, filters, decimal_cols),
-        delta,
-        lambda r: _field_filters_ok(r, filters, decimal_cols),
+    return _source(
+        store, idef.storage_table, 0, index_spark_schema(idef.sort_by),
+        _field_filters_pred(filters, decimal_cols),
+        lambda df: _apply_field_filters(df, filters, decimal_cols),
     )
 
 

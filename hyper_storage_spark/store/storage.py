@@ -10,17 +10,15 @@ snapshot — the same ACID role Delta's transaction log would play, with
 zero dependencies.
 
 A bucket is one file or a LIST of files read in order. Bulk paths
-register lists, and a commit's ``bucket_appends`` adds one file to the
-end of a bucket's list instead of rewriting the bucket (a read of a
-plain table simply concatenates the files). The item write path appends
-its index rows that way, as a DELTA, so most writes cost their own rows,
-not the index's: tables whose schema is marked by :func:`delta_schema`
-get their appended files named ``delta-*``, one row per touched item —
-an upsert, or a tombstone (null ``revision``) for an item that left the
-index. A bucket's list is then its BASE files followed by ordered delta
-files, and every reader applies the one merge rule,
-:func:`merge_delta`: a delta row replaces every earlier row with its
-``item_id``, and tombstones are dropped. :meth:`Storage.bucket_rows`
+register lists of base files, and a commit's ``bucket_appends`` adds one
+DELTA file (named ``delta-*``) to the end of a bucket's list instead of
+rewriting the bucket. The item write path appends its index rows that
+way, so most writes cost their own rows, not the index's: one row per
+touched item — an upsert, or a tombstone (null ``revision``) for an
+item that left the index. A bucket's list is then its BASE files
+followed by ordered delta files, and every reader applies the one merge
+rule, :func:`merge_delta`: a delta row replaces every earlier row with
+its ``item_id``, and tombstones are dropped. :meth:`Storage.bucket_rows`
 returns the merged table; a Spark scan reads only the base files
 (:meth:`Storage.spark_df_and_delta` hands the caller the pending delta
 to merge on the driver).
@@ -128,20 +126,8 @@ def write_bucket_file(rows: list[dict], schema: pa.Schema, abspath: str) -> list
 # registers it (Storage.stage_frame, Storage.staged_bucket_file)
 _STAGED = "staged-"
 
-# schema metadata marking a table whose ``bucket_appends`` are deltas
-_DELTA_META = {b"bucket_appends": b"delta"}
+# name prefix of every file a commit's ``bucket_appends`` writes
 _DELTA_PREFIX = "delta-"
-
-
-def delta_schema(schema: pa.Schema) -> pa.Schema:
-    """``schema`` marked so that :meth:`Storage.commit` writes a
-    ``bucket_appends`` file of its table as a delta (see the module
-    docstring). Rows need ``item_id`` and ``revision`` columns."""
-    return schema.with_metadata({**(schema.metadata or {}), **_DELTA_META})
-
-
-def _is_delta_schema(schema: pa.Schema) -> bool:
-    return (schema.metadata or {}).get(b"bucket_appends") == b"delta"
 
 
 def is_delta_file(path: str) -> bool:
@@ -704,12 +690,12 @@ class Storage:
         that face; manifest-based readers get exact atomicity.
 
         ``bucket_appends`` adds rows to a bucket without rewriting it:
-        each (table, bucket) gets ONE new file (schema ``schemas[table]``)
-        at the end of its file list, in the same flip — a delta file when
-        the schema is a :func:`delta_schema`. This is how an index grows
-        by a write's delta rows; the bucket's older files stay as they
-        are until a caller rewrites the bucket through ``updates``
-        (which replaces the whole list).
+        each (table, bucket) gets ONE new delta file (schema
+        ``schemas[table]``, which has ``item_id`` and ``revision``
+        columns) at the end of its file list, in the same flip. This is
+        how an index grows by a write's delta rows; the bucket's older
+        files stay as they are until a caller rewrites the bucket
+        through ``updates`` (which replaces the whole list).
 
         ``files`` registers parquet files written before the flip — a
         Spark frame staged by :meth:`stage_frame`, or bucket files an
@@ -757,8 +743,7 @@ class Storage:
                 manifest["tables"].setdefault(table, {})[str(bucket)] = list(rels)
                 lists[(table, bucket)] = rels
         for (table, bucket), rows in (bucket_appends or {}).items():
-            prefix = _DELTA_PREFIX if _is_delta_schema(schemas[table]) else ""
-            rels = (*self._bucket_rels(table, bucket, manifest), write(table, bucket, rows, prefix))
+            rels = (*self._bucket_rels(table, bucket, manifest), write(table, bucket, rows, _DELTA_PREFIX))
             manifest["tables"].setdefault(table, {})[str(bucket)] = list(rels)
             lists[(table, bucket)] = rels
         for table, (rows, schema) in (appends or {}).items():
@@ -1147,13 +1132,11 @@ class OverlayStorage(Storage):
         for key, rows in updates.items():
             self.overlay[key] = [dict(r) for r in rows]
             self.dropped.discard(key[0])  # a re-created table is live again
-        # an appended bucket is staged whole, like any other (a delta
+        # an appended bucket is staged whole, like any other (the delta
         # merged in by the one rule): the driver's flip registers one
         # file per staged bucket
         for key, rows in (bucket_appends or {}).items():
-            rows = [dict(r) for r in rows]
-            old = self.bucket_rows(*key)
-            self.overlay[key] = merge_delta(old, delta_of([rows])) if _is_delta_schema(schemas[key[0]]) else old + rows
+            self.overlay[key] = merge_delta(self.bucket_rows(*key), delta_of([[dict(r) for r in rows]]))
             self.dropped.discard(key[0])
         self.schemas.update(schemas)
         for table, (rows, schema) in (appends or {}).items():

@@ -11,6 +11,10 @@ import pytest
 from hyper_storage_spark.plans import SortBy, SortItem
 from hyper_storage_spark.store import DocumentStore, NotFoundError
 
+# every query below runs on the driver route and on the Spark route,
+# which must give the same items, plans and select traces
+pytestmark = pytest.mark.usefixtures("routes")
+
 
 @pytest.fixture()
 def store(spark, tmp_path):

@@ -16,6 +16,10 @@ import pytest
 from hyper_storage_spark.plans import FieldFilter, FilterOp, SortBy, SortItem
 from hyper_storage_spark.store import DocumentStore, NotFoundError, QueryBudgetExceeded
 
+# every query below runs on the driver route and on the Spark route,
+# which must give the same items, plans and select traces
+pytestmark = pytest.mark.usefixtures("routes")
+
 C1 = {"a": "hello", "b": 100500, "id": "item1"}
 C2 = {"a": "goodbye", "b": 1, "id": "item2"}
 C3 = {"a": "way way", "b": 12, "id": "item3"}
@@ -331,12 +335,13 @@ def test_query_paged_differential_random_bodies(spark, tmp_path):
         )
 
 
-def test_paged_exact_sort_query_compiles_no_residual(indexed, monkeypatch):
-    """The paging loop judges each fetched row itself (_residual_ok) and
-    rebuilds its source per page, so an exact-sort paged query with a
-    filter compiles no residual into a Spark frame; query() and
-    explain() still compile it, and explain still reports that it
-    compiled."""
+def test_paged_exact_sort_query_compiles_no_residual(indexed, monkeypatch, routes, spark):
+    """On the Spark route the paging loop judges each fetched row itself
+    (_residual_ok) and rebuilds its source per page, so an exact-sort
+    paged query with a filter compiles no residual into a Spark frame;
+    query() and explain() still compile it, and explain still reports
+    that it compiled. On the driver route none of them compiles a frame
+    or runs a Spark job, and explain reports the same."""
     from hyper_storage_spark.store import query as qmod
 
     compiled = []
@@ -347,6 +352,7 @@ def test_paged_exact_sort_query_compiles_no_residual(indexed, monkeypatch):
         return real(*args, **kwargs)
 
     monkeypatch.setattr(qmod, "apply_filter", spy)
+    routes.pin("spark")
     paged = indexed.query_paged("collection-1~", sort=[SortBy("a")], size=2, filter="b < 50")
     assert paged.plan.exact_sort and paged.items == [C2, C3]
     assert compiled == []
@@ -354,3 +360,79 @@ def test_paged_exact_sort_query_compiles_no_residual(indexed, monkeypatch):
     assert len(compiled) == 1
     plan = indexed.explain("collection-1~", filter="b < 50", sort=[SortBy("a")])
     assert plan.residual_compiled is True and len(compiled) == 2
+
+    routes.pin("driver")
+    compiled.clear()
+    with routes.spark_work(spark) as work:
+        paged = indexed.query_paged("collection-1~", sort=[SortBy("a")], size=2, filter="b < 50")
+        res = indexed.query("collection-1~", sort=[SortBy("a")], size=2, filter="b < 50")
+        plan = indexed.explain("collection-1~", filter="b < 50", sort=[SortBy("a")])
+    assert paged.items == res.items == [C2, C3]
+    assert paged.plan.driver and res.plan.driver and plan.driver
+    assert plan.residual_compiled is True
+    assert compiled == []
+    assert work == {"py4j": 0, "jobs": 0}
+
+
+def test_inexact_sort_page_does_not_depend_on_ingest_partitioning(spark, tmp_path):
+    """An inexact-sort page reads its rows in item_id order, so items
+    with tied sort values come out in the same order however the
+    collection's files were split: a 1-partition and a 5-partition bulk
+    ingest of the same rows give the same page."""
+    rows = [(f"k{i:04d}", i % 3) for i in range(400)]
+    pages = []
+    for n, parts in (("one", 1), ("five", 5)):
+        s = DocumentStore(str(tmp_path / n), spark=spark)
+        df = spark.createDataFrame(rows, "k string, g int")
+        s.ingest_collection(df.coalesce(1) if parts == 1 else df.repartition(parts), "t~", "k")
+        res = s.query("t~", sort=[SortBy("g")], size=6)
+        assert not res.plan.exact_sort
+        pages.append([it["id"] for it in res.items])
+    assert pages[0] == pages[1] == ["k0000", "k0003", "k0006", "k0009", "k0012", "k0015"]
+
+
+def test_routing_by_source_bound(spark, tmp_path, routes, monkeypatch):
+    """A source whose bucket holds more raw rows (base + delta) than
+    DRIVER_MAX_ROWS is served by Spark; the driver route never decodes
+    more rows than the bound."""
+    from hyper_storage_spark.store import query as qmod
+    from hyper_storage_spark.store.storage import Storage
+
+    routes.pin("driver")
+    bound = 6
+    monkeypatch.setattr(qmod, "DRIVER_MAX_ROWS", bound)
+    read = []
+    real = Storage.bucket_rows
+
+    def spy(self, table, bucket, filters=None):
+        out = real(self, table, bucket, filters)
+        read.append((table, len(out)))
+        return out
+
+    monkeypatch.setattr(Storage, "bucket_rows", spy)
+    s = DocumentStore(str(tmp_path / "rb"), spark=spark)
+    for i in range(bound):
+        s.put(f"rb~/i{i}", {"a": i})
+    s.create_index("rb~", "bya", [SortItem("a", "decimal", "asc")], None)
+    idef = s.index_defs("rb~")[0]
+    want = [{"a": i, "id": f"i{i}"} for i in range(bound)]
+
+    read.clear()
+    res = s.query("rb~", sort=[SortBy("a")], size=bound)
+    assert res.plan.index_id == "bya" and res.plan.driver and res.items == want
+    assert (idef.storage_table, bound) in read
+    assert all(n <= bound for _, n in read)
+
+    s.put("rb~/i0", {"a": 0})  # one delta row: 7 raw rows, 6 merged
+    assert sum(s.storage.bucket_shape(idef.storage_table, 0)[1:]) == bound + 1
+    read.clear()
+    res = s.query("rb~", sort=[SortBy("a")], size=bound)
+    assert res.plan.index_id == "bya" and not res.plan.driver and res.items == want
+    assert idef.storage_table not in {t for t, _ in read}
+    assert s.explain("rb~", sort=[SortBy("a")]).driver is False
+
+    # the base table routes on the collection's content bucket
+    assert s.query("rb~", filter='id = "i3"').plan.driver
+    s.put("rb~/i9", {"a": 9})
+    res = s.query("rb~", filter='id = "i3"')
+    assert res.plan.table_name == "content" and not res.plan.driver and res.items == [want[3]]

@@ -247,8 +247,9 @@ def test_explain_route_surface(spark, tmp_path):
     """GET <coll>~/_explain plans without executing: base-table route
     with pushed sargable conjuncts and the residual-compiled flag for
     a plain filter; an index route (physical table + exact sort) once
-    a matching index exists; 405 on non-GET; 404 on an unknown
-    collection; 400 on an unparsable filter."""
+    a matching index exists; the route that would serve it; 405 on
+    non-GET; 404 on an unknown collection; 400 on an unparsable
+    filter."""
     from hyper_storage_spark.plans import SortItem
 
     store = DocumentStore(str(tmp_path / "explain_rest"), spark=spark)
@@ -262,6 +263,8 @@ def test_explain_route_surface(spark, tmp_path):
     # base-table route: nothing is sargable against the id clustering,
     # the whole predicate stays residual (and compiles)
     assert r.body["pushed_filters"] == [] and r.body["residual_compiled"] is True
+    # a two-item collection is served on the driver, without a Spark job
+    assert r.body["driver"] is True
 
     store.create_index("docs~", "by_b", [SortItem("b", "text", "asc")], None)
     r2 = facade.handle("GET", "docs~/_explain", filter='b = "x"', sort="b")

@@ -3116,39 +3116,43 @@ def test_info_reports_bucket_segments(tmp_path):
 
 
 def test_bucket_appends_add_one_file_and_keep_reads_exact(tmp_path):
-    """Storage.commit(bucket_appends=) adds one file to a bucket's list.
-    The read cache grows an entry cached from the pre-flip list, drops
-    one cached from another list, and reads stay equal to parquet; the
-    executor overlay stages the whole bucket and the time-travel view
-    refuses."""
+    """Storage.commit(bucket_appends=) adds one delta file to a bucket's
+    list. The read cache grows an entry cached from the pre-flip list,
+    drops one cached from another list, and reads stay equal to parquet;
+    the executor overlay stages the whole bucket and the time-travel
+    view refuses."""
     import pyarrow as pa
 
-    from hyper_storage_spark.store.storage import OverlayStorage, Storage
+    from hyper_storage_spark.store.storage import OverlayStorage, Storage, is_delta_file
 
-    schema = pa.schema([("document_uri", pa.string()), ("v", pa.int64())])
+    schema = pa.schema([("item_id", pa.string()), ("revision", pa.int64()), ("v", pa.int64())])
+
+    def row(k, v):
+        return {"item_id": k, "revision": 1, "v": v}
+
     st = Storage(str(tmp_path / "s"))
-    st.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"document_uri": "b", "v": 1}]})
-    st.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"document_uri": "a", "v": 2}]})
-    assert len(st.bucket_files("t", 0)) == 2
+    st.commit({}, {"t": schema}, bucket_appends={("t", 0): [row("b", 1)]})
+    st.commit({}, {"t": schema}, bucket_appends={("t", 0): [row("a", 2)]})
+    assert [is_delta_file(p) for p in st.bucket_files("t", 0)] == [True, True]
     hits = st.read_cache_stats()["hits"]
-    assert st.bucket_rows("t", 0) == [{"document_uri": "b", "v": 1}, {"document_uri": "a", "v": 2}]
+    assert st.bucket_rows("t", 0) == [row("b", 1), row("a", 2)]
     assert st.read_cache_stats()["hits"] == hits + 1  # the extended entry
     assert _exact(st.bucket_rows("t", 0)) == _exact(_parquet_rows(st, "t", 0))
 
     other = Storage(st.root)
-    other.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"document_uri": "c", "v": 3}]})
+    other.commit({}, {"t": schema}, bucket_appends={("t", 0): [row("c", 3)]})
     v = st.current_version()
-    st.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"document_uri": "d", "v": 4}]})
+    st.commit({}, {"t": schema}, bucket_appends={("t", 0): [row("d", 4)]})
     assert st.current_version() == v + 1
     misses = st.read_cache_stats()["misses"]
     assert [r["v"] for r in st.bucket_rows("t", 0)] == [1, 2, 3, 4]
     assert st.read_cache_stats()["misses"] == misses + 1  # dropped, not extended
-    # a rewrite through updates replaces the whole list
+    # a rewrite through updates replaces the whole list with one base file
     st.commit({("t", 0): st.bucket_rows("t", 0)}, {"t": schema})
-    assert len(st.bucket_files("t", 0)) == 1
+    assert [is_delta_file(p) for p in st.bucket_files("t", 0)] == [False]
 
     overlay = OverlayStorage(st)
-    overlay.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"document_uri": "e", "v": 5}]})
+    overlay.commit({}, {"t": schema}, bucket_appends={("t", 0): [row("e", 5)]})
     assert [r["v"] for r in overlay.bucket_rows("t", 0)] == [2, 1, 3, 4, 5]  # the rewrite sorted a, b
     assert len(st.bucket_files("t", 0)) == 1  # the base is untouched
     with pytest.raises(RuntimeError, match="read-only"):
@@ -3203,16 +3207,14 @@ def _delta_files(store, idef):
 
 
 def test_delta_bucket_appends_merge_by_item_id(tmp_path):
-    """Storage level: a delta schema's bucket_appends files are named as
-    deltas and merged by item_id (newest row wins, a null revision is a
-    tombstone) in unfiltered and filtered reads, in the executor
-    overlay and in the Spark-side split; a plain schema's appends still
-    concatenate."""
+    """Storage level: bucket_appends files are named as deltas and
+    merged by item_id (newest row wins, a null revision is a tombstone)
+    in unfiltered and filtered reads and in the executor overlay."""
     import pyarrow as pa
 
-    from hyper_storage_spark.store.storage import OverlayStorage, Storage, delta_schema, is_delta_file
+    from hyper_storage_spark.store.storage import OverlayStorage, Storage, is_delta_file
 
-    schema = delta_schema(pa.schema([("item_id", pa.string()), ("revision", pa.int64()), ("v", pa.int64())]))
+    schema = pa.schema([("item_id", pa.string()), ("revision", pa.int64()), ("v", pa.int64())])
     st = Storage(str(tmp_path / "s"))
     st.commit({("t", 0): [{"item_id": k, "revision": 1, "v": i} for i, k in enumerate("abc")]}, {"t": schema})
     st.commit({}, {"t": schema}, bucket_appends={("t", 0): [
@@ -3231,12 +3233,6 @@ def test_delta_bucket_appends_merge_by_item_id(tmp_path):
     overlay.commit({}, {"t": schema}, bucket_appends={("t", 0): [{"item_id": "c", "revision": None}]})
     assert overlay.bucket_rows("t", 0) == want[1:]
     assert st.bucket_rows("t", 0) == want
-
-    plain = pa.schema([("item_id", pa.string()), ("revision", pa.int64())])
-    st.commit({}, {"p": plain}, bucket_appends={("p", 0): [{"item_id": "a", "revision": 1}]})
-    st.commit({}, {"p": plain}, bucket_appends={("p", 0): [{"item_id": "a", "revision": None}]})
-    assert not any(is_delta_file(p) for p in st.bucket_files("p", 0))
-    assert st.bucket_rows("p", 0) == [{"item_id": "a", "revision": 1}, {"item_id": "a", "revision": None}]
 
 
 def test_item_write_appends_index_deltas_and_folds_at_the_cap(tmp_path, monkeypatch):
@@ -3463,13 +3459,14 @@ def _answers(store, checks):
     return out
 
 
-def test_index_delta_fuzz_matches_rebuild_and_folded_copy(spark, tmp_path):
+def test_index_delta_fuzz_matches_rebuild_and_folded_copy(spark, tmp_path, routes):
     """Seeded PUT/PATCH/DELETE traffic moves items in and out of a
     filtered index, with tied and null sort values and PATCHes to null,
     across write-path folds and compact_appends(). After every op each
     index's merged rows equal a rebuild from live content; at
     checkpoints every query and query_paged answer (exact, reversed,
-    inexact with its budget, residual) equals that of a folded copy."""
+    inexact with its budget, residual) equals that of a folded copy,
+    and the driver and Spark routes give the same answers."""
     import random
 
     from hyper_storage_spark.plans import SortBy, SortItem
@@ -3527,7 +3524,7 @@ def test_index_delta_fuzz_matches_rebuild_and_folded_copy(spark, tmp_path):
     assert {k[1:] for k in kinds if isinstance(k, tuple) and k[0]} >= {(True, False), (True, True), (False, False)}
 
 
-def test_index_served_frame_reads_base_files_and_gains_no_filter(spark, tmp_path):
+def test_index_served_frame_reads_base_files_and_gains_no_filter(spark, tmp_path, routes):
     """The Spark plan of an index-served query is the same with and
     without a pending delta: its frame reads the base files only and
     carries the same filters; the delta is merged on the driver."""
@@ -3536,6 +3533,7 @@ def test_index_served_frame_reads_base_files_and_gains_no_filter(spark, tmp_path
     from hyper_storage_spark.plans import SortBy, SortItem
     from hyper_storage_spark.store.query import _plan, _with_residual
 
+    routes.pin("spark")
     store = DocumentStore(str(tmp_path / "pl"), spark=spark)
     for i in range(8):
         store.put(f"pl~/i{i}", {"a": i})
